@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query and
   * total seconds over SparkEntry.queries at SPARK_GRAFT_SF_DIR. */
 object Bench {
@@ -173,21 +171,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Engine default: object-hash aggregation (TypedImperativeAggregate
-      // sketches) keeps hash mode far past the 128-key default -- sketch
-      // buffers are ~136 B, so 64k keys/partition is ~9 MB, while the
-      // sort fallback re-sorts the full exploded input (round-1 lesson).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     // Untimed warmup: JVM/codegen/parquet-reader spin-up should not be
     // attributed to whichever query happens to run first. Profiling
     // (round 4) showed first use of each execution-machinery family
@@ -573,17 +557,18 @@ object Bench {
            "agg_approx", "agg_approx_quantile", "agg_hll_merge")
          if SparkEntry.queries.contains(name) &&
            (args.isEmpty || args.exists(name.startsWith))) {
-      spark.conf.set("spark.graft.audit", "false")
-      try (1 to trials).foreach { trial =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        detail += s"""{"q":"$name#audit_off","trial":$trial,""" +
-          s""""wall_s":${(dt * 1000).round / 1000.0},"ok":$ok}"""
-        System.err.println(f"[bench] $name#audit_off $dt%.2f s")
-      } finally spark.conf.set("spark.graft.audit", "true")
+      GraftSession.withConf(spark, "spark.graft.audit" -> "false") {
+        (1 to trials).foreach { trial =>
+          val t0 = System.nanoTime()
+          val ok =
+            try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+            catch { case _: Throwable => false }
+          val dt = (System.nanoTime() - t0) / 1e9
+          detail += s"""{"q":"$name#audit_off","trial":$trial,""" +
+            s""""wall_s":${(dt * 1000).round / 1000.0},"ok":$ok}"""
+          System.err.println(f"[bench] $name#audit_off $dt%.2f s")
+        }
+      }
     }
 
     // Standalone re-measure (r11 judge item #3): the slowest keys run

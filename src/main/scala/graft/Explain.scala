@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a query (twice — cold/warm) and dump its physical plan.
   * Usage: runMain graft.Explain <queryName> [sfDir] [explain|noexplain]
   */
@@ -11,17 +9,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.length <= 2 || args(2) != "noexplain"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     val fn = SparkEntry.queries(name)
     if (doExplain) fn(spark, sfDir).explain("formatted")
     for (i <- 1 to 2) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Spark half of the seeded differential SQL fuzz gate (round-9 judge
@@ -21,16 +20,7 @@ object FuzzRun {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, sqlDir) = (args(0), args(1), args(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     tables.foreach(n =>
       spark.read.parquet(s"$sfDir/$n.parquet").createOrReplaceTempView(n))
     // events joins the fuzz surface through its PORTABLE projection:

@@ -63,14 +63,7 @@ object GenData {
     val outDir = if (pos.length > 0) pos(0) else "target/testdata/sf1"
     val sf = if (pos.length > 1) pos(1).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local-gen")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus, "-gen")
     write(spark, outDir, sf, realism = args.contains("--real"),
       hot = args.contains("--hot"))
     spark.stop()

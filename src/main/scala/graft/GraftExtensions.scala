@@ -2,98 +2,67 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.IntegerType
+
+import graft.expr._
 
 /** SparkSessionExtensions entry point (the engine's custom-Catalyst
   * wiring surface, SURVEY.md §4): installed with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` on the
-  * session builder — the production mechanism for shipping optimizer
-  * rules AND SQL functions with a library, no Spark fork required.
-  * Any session built with the extension can call the engine's native
-  * expressions from plain `spark.sql(...)` with zero registration
-  * calls (exercised by the fn_sql_registry query). */
+  * `spark.sql.extensions=graft.GraftExtensions` ([[GraftSession]] sets
+  * it) — the production mechanism for shipping optimizer rules AND SQL
+  * functions with a library, no Spark fork required. It is the only
+  * function registry: any session built with the extension can call
+  * every native expression from plain `spark.sql(...)` with zero
+  * registration calls (exercised by the fn_sql_registry query). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CollapseSanitize)
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     e.injectOptimizerRule(_ => graft.plans.MvRewrite)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((new FunctionIdentifier("sanitize_filename"),
-      new ExpressionInfo(classOf[graft.expr.SanitizeFilename].getName,
-        "sanitize_filename"),
-      (exprs: Seq[Expression]) => graft.expr.SanitizeFilename(exprs.head)))
-    e.injectFunction((new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.expr.MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => graft.expr.MinHashSig(exprs.head)))
-    e.injectFunction((new FunctionIdentifier("minhash_sketch"),
-      new ExpressionInfo(classOf[graft.expr.MinHashSketch].getName,
-        "minhash_sketch"),
-      (exprs: Seq[Expression]) => graft.expr.MinHashSketch(exprs.head)))
-    e.injectFunction((new FunctionIdentifier("dot64"),
-      new ExpressionInfo(classOf[graft.expr.DotProductF64].getName, "dot64"),
-      (exprs: Seq[Expression]) =>
-        graft.expr.DotProductF64(exprs.head, exprs(1))))
-    e.injectFunction((new FunctionIdentifier("sqdist_i64"),
-      new ExpressionInfo(classOf[graft.expr.SqDistI64].getName, "sqdist_i64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"sqdist_i64 expects 2 arguments, got ${exprs.length}")
-        graft.expr.SqDistI64(exprs.head, exprs(1))
-      }))
-    e.injectFunction((new FunctionIdentifier("isect_count_s64"),
-      new ExpressionInfo(classOf[graft.expr.IntersectCountSorted64].getName,
-        "isect_count_s64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"isect_count_s64 expects 2 arguments, got ${exprs.length}")
-        graft.expr.IntersectCountSorted64(exprs.head, exprs(1))
-      }))
-    e.injectFunction((new FunctionIdentifier("dtw_dist"),
-      new ExpressionInfo(classOf[graft.expr.DtwDist].getName, "dtw_dist"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"dtw_dist expects 2 arguments, got ${exprs.length}")
-        graft.expr.DtwDist(exprs.head, exprs(1))
-      }))
-    e.injectFunction((new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[graft.expr.WinnowFps].getName, "winnow_fps"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"winnow_fps expects 1 argument, got ${exprs.length}")
-        graft.expr.WinnowFps(exprs.head)
-      }))
-    e.injectFunction((new FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[graft.expr.NgramHashes].getName,
-        "ngram_hashes"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"ngram_hashes expects 1 argument, got ${exprs.length}")
-        graft.expr.NgramHashes(exprs.head)
-      }))
-    e.injectFunction((new FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[graft.expr.RepetitionStats].getName,
-        "repetition_stats"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"repetition_stats expects 1 argument, got ${exprs.length}")
-        graft.expr.RepetitionStats(exprs.head)
-      }))
-    e.injectFunction((new FunctionIdentifier("ttr_stats"),
-      new ExpressionInfo(classOf[graft.expr.TtrStats].getName, "ttr_stats"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"ttr_stats expects 1 argument, got ${exprs.length}")
-        graft.expr.TtrStats(exprs.head)
-      }))
-    e.injectFunction((new FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[graft.expr.DeflateLen].getName, "deflate_len"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"deflate_len expects 1 argument, got ${exprs.length}")
-        graft.expr.DeflateLen(exprs.head)
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, arity, build) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == arity, s"$name expects $arity argument" +
+            (if (arity == 1) "" else "s") + s", got ${args.length}")
+          build(args)
+        }))
+    }
+  }
+}
+
+object GraftExtensions {
+  /** Every native SQL function: name, expression class, arity, and the
+    * builder (called with exactly `arity` arguments). */
+  val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("sanitize_filename", classOf[SanitizeFilename], 1, a => SanitizeFilename(a(0))),
+    ("minhash_sig", classOf[MinHashSig], 1, a => MinHashSig(a(0))),
+    ("minhash_sketch", classOf[MinHashSketch], 1, a => MinHashSketch(a(0))),
+    ("dot64", classOf[DotProductF64], 2, a => DotProductF64(a(0), a(1))),
+    ("sqdist_i64", classOf[SqDistI64], 2, a => SqDistI64(a(0), a(1))),
+    ("isect_count_s64", classOf[IntersectCountSorted64], 2,
+      a => IntersectCountSorted64(a(0), a(1))),
+    ("dtw_dist", classOf[DtwDist], 2, a => DtwDist(a(0), a(1))),
+    ("winnow_fps", classOf[WinnowFps], 1, a => WinnowFps(a(0))),
+    ("ngram_hashes", classOf[NgramHashes], 1, a => NgramHashes(a(0))),
+    ("repetition_stats", classOf[RepetitionStats], 1, a => RepetitionStats(a(0))),
+    ("ttr_stats", classOf[TtrStats], 1, a => TtrStats(a(0))),
+    ("deflate_len", classOf[DeflateLen], 1, a => DeflateLen(a(0))),
+    ("topk_pairs", classOf[TopKAgg], 3,
+      a => TopKAgg(a(0), a(1), positiveIntLiteral("topk_pairs k", a(2)))),
+    ("misra_gries", classOf[MisraGriesAgg], 2,
+      a => MisraGriesAgg(a(0), positiveIntLiteral("misra_gries m", a(1)))))
+
+  /** A sketch-size argument: it fixes the aggregation buffer's shape, so
+    * it must be a constant INT >= 1. */
+  private def positiveIntLiteral(what: String, e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) if v >= 1 => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an INT literal >= 1, got $other")
   }
 }
 
@@ -108,7 +77,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object CollapseSanitize extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case graft.expr.SanitizeFilename(inner @ graft.expr.SanitizeFilename(_)) =>
+      case SanitizeFilename(inner @ SanitizeFilename(_)) =>
         inner
     }
 }

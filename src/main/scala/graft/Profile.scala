@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Dev tool: run a query and print per-STAGE task-time attribution
@@ -15,17 +14,7 @@ object Profile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val trials = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     case class St(var n: Int = 0, var taskMs: Long = 0, var gcMs: Long = 0,
         var inB: Long = 0, var srB: Long = 0, var swB: Long = 0,
         var recs: Long = 0)

@@ -67,16 +67,7 @@ object ReplayFuzz {
     val seed = if (args.length > 1) args(1).toLong else 15L
     val n = if (args.length > 2) args(2).toInt else 200
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     val S = ops.Streaming
 
     val fams = Seq(

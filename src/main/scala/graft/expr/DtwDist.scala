@@ -67,15 +67,6 @@ case class DtwDist(left: Expression, right: Expression)
 object DtwDist {
   val Inf: Long = 1000000000000000L
 
-  /** Register `dtw_dist(a, t)` (idempotent — same registration the
-    * GraftExtensions injection performs, for sessions built without
-    * the extension). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("dtw_dist",
-        exprs => DtwDist(exprs.head, exprs(1)), "built-in")
-
   /** The shared kernel — ONE implementation behind both the
     * interpreted eval and the generated code, so the two paths cannot
     * drift. Two reused primitive rows, no per-cell allocation. */

@@ -2,7 +2,6 @@ package graft.expr
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -141,16 +140,4 @@ case class MinHashSketch(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "minhash_sketch"
-}
-
-object MinHashSketch {
-  /** Register both native minhash functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSig(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("minhash_sketch",
-      exprs => MinHashSketch(exprs.head), "built-in")
-  }
 }

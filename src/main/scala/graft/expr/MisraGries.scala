@@ -3,9 +3,8 @@ package graft.expr
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -164,21 +163,4 @@ case class MisraGriesAgg(
     containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "misra_gries"
-}
-
-object MisraGriesAgg {
-  /** Register `misra_gries(key, m)` (m must be an int literal). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("misra_gries",
-      exprs => {
-        val m = exprs(1) match {
-          case Literal(v: Int, IntegerType) if v >= 1 => v
-          case other => throw new IllegalArgumentException(
-            s"misra_gries m must be an INT literal >= 1, got $other")
-        }
-        MisraGriesAgg(exprs(0), m)
-      }, "built-in")
-  }
 }

@@ -26,15 +26,15 @@ object Sanitize {
   def sanitizeRegex(c: Column): Column =
     trim(regexp_replace(c, DisallowedClass, "-"), " ")
 
-  /** Register the native codegen expression (idempotent). */
+  /** Registers nothing: GraftExtensions injects `sanitize_filename`.
+    * Kept for existing callers; fails fast on a session built without
+    * the extension. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("sanitize_filename",
-        exprs => SanitizeFilename(exprs.head), "built-in")
+    require(spark.catalog.functionExists("sanitize_filename"),
+      "sanitize_filename needs spark.sql.extensions=graft.GraftExtensions")
 
-  /** Native single-pass Catalyst expression ([[SanitizeFilename]]);
-    * requires register(spark) once per session. */
+  /** Native single-pass Catalyst expression ([[SanitizeFilename]]),
+    * injected by GraftExtensions. */
   def sanitize(c: Column): Column =
     call_function("sanitize_filename", c)
 

@@ -2,9 +2,8 @@ package graft.expr
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -155,21 +154,4 @@ case class TopKAgg(
     containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "topk_pairs"
-}
-
-object TopKAgg {
-  /** Register `topk_pairs(score, id, k)` (k must be an int literal). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("topk_pairs",
-      exprs => {
-        val k = exprs(2) match {
-          case Literal(v: Int, IntegerType) if v >= 1 => v
-          case other => throw new IllegalArgumentException(
-            s"topk_pairs k must be an INT literal >= 1, got $other")
-        }
-        TopKAgg(exprs(0), exprs(1), k)
-      }, "built-in")
-  }
 }

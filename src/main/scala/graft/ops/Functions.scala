@@ -187,7 +187,6 @@ object Functions {
       lit("\"fi<le>na\\me "), col("source"), lit(".tx t  "))
 
   private def fnSanitize: Q = (s, d) => {
-    Sanitize.register(s)
     t(s, d, "documents")
       .select(col("doc_id"), sanitizeRaw.as("raw"))
       .select(col("doc_id"), col("raw"), Sanitize.sanitize(col("raw")).as("clean"))

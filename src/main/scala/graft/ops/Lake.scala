@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession.withConf
 import graft.Tables._
 import org.apache.spark.sql.functions._
 
@@ -196,18 +197,9 @@ object Lake {
       "min(l_linenumber) AS min_ln", "max(l_linenumber) AS max_ln")
 
   private[graft] def withAggPushdown[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.parquet.aggregatePushdown" -> "true",
-      "spark.sql.sources.useV1SourceList" -> "")
-    val olds = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true",
+      "spark.sql.sources.useV1SourceList" -> "")(body)
 
   private def scanAggPushdown: Q = (s, d) => withAggPushdown(s) {
     val df = aggPushdownFrame(s, d)
@@ -402,11 +394,8 @@ object Lake {
     }
     val restated = o.where(col("yr") === 1995)
       .withColumn("o_totalprice", col("o_totalprice") + 1.0d)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = s.conf.get(key)
-    s.conf.set(key, "dynamic")
-    try restated.write.mode("overwrite").partitionBy("yr").parquet(base)
-    finally s.conf.set(key, old)
+    restated.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("yr").parquet(base)
     s.read.parquet(base)
       .groupBy("yr")
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
@@ -544,12 +533,11 @@ object Lake {
     val path = s"$scratchRoot/mv/pricing_${Llm.Scratch.key(d)}"
     val mv = Llm.Scratch.table(s, path)(define)
     graft.plans.MvCatalog.register(define, mv)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+    withConf(s, "spark.graft.mv.rewrite" -> "true") {
       val q = define.orderBy("l_returnflag", "l_linestatus")
       q.queryExecution.executedPlan // force optimize with the rule on
       q
-    } finally s.conf.unset("spark.graft.mv.rewrite")
+    }
   }
 
   /** AGGREGATE-ROLLUP SUBSUMPTION ([[graft.plans.MvRewrite]] tier 2,
@@ -581,8 +569,7 @@ object Lake {
     val path = s"$scratchRoot/mv/rollup_${Llm.Scratch.key(d)}"
     val mv = Llm.Scratch.table(s, path)(define)
     graft.plans.MvCatalog.register(define, mv)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+    withConf(s, "spark.graft.mv.rewrite" -> "true") {
       val q = t(s, d, "lineitem")
         .groupBy("l_returnflag")
         .agg(sum(cents(col("l_quantity"))).as("qty_c"),
@@ -596,7 +583,7 @@ object Lake {
         .orderBy("l_returnflag")
       q.queryExecution.executedPlan // force optimize with the rule on
       q
-    } finally s.conf.unset("spark.graft.mv.rewrite")
+    }
   }
 
   /** FULL outer merge of an MV snapshot (yr, n, tot) with a signed

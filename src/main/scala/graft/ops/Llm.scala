@@ -349,26 +349,25 @@ object Llm {
       * sizing. Use for SMALL-to-medium control artifacts consumed by
       * loops, not for fan-out sources whose consumers do per-row CPU
       * work before any shuffle. */
-    /** Serializes the session-conf set/restore window below (ADVICE
-      * r16): two overlapping windows on different driver threads could
-      * each capture the other's transient "false" as `prev` and strand
-      * the conf for the rest of the session. Reentrant (same-thread
-      * nested builds are fine); a coalesced build nested inside a
-      * DIFFERENT thread's coalesced build would deadlock, a shape no
-      * call site has (plain-table nesting, the only one that exists,
-      * takes no lock). */
+    /** Serializes the session-conf window below (ADVICE r16): two
+      * overlapping windows on different driver threads could each
+      * capture the other's transient "false" as the value to restore
+      * and strand the conf for the rest of the session. Reentrant
+      * (same-thread nested builds are fine); a coalesced build nested
+      * inside a DIFFERENT thread's coalesced build would deadlock, a
+      * shape no call site has (plain-table nesting, the only one that
+      * exists, takes no lock). */
     private val confWindowLock = new Object
 
     def tableCoalesced(s: org.apache.spark.sql.SparkSession, path: String)(
         build: => org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
-      val k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
       latch(path) {
         confWindowLock.synchronized {
-          val prev = s.conf.get(k, "true")
-          s.conf.set(k, "false")
-          try build.write.mode("overwrite").parquet(path)
-          finally s.conf.set(k, prev)
+          graft.GraftSession.withConf(s,
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
+            build.write.mode("overwrite").parquet(path)
+          }
         }
       }
       s.read.parquet(path)
@@ -381,7 +380,6 @@ object Llm {
 
   private[ops] def minhashSigTable(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.expr.MinHashSketch.register(s)
     Scratch.table(s, s"$scratchRoot/minhash_sig/${Scratch.key(d)}") {
       val sh = shingles(col("text"))
       fanOut(t(s, d, "documents"))
@@ -553,7 +551,6 @@ object Llm {
     * 264 s at sf0.1; the Aggregator surface itself remains cross-checked
     * bit-for-bit in LlmSpec alongside this and the scalar path. */
   private def dedupMinhashAgg: Q = (s, d) => {
-    graft.expr.MinHashSketch.register(s)
     fanOut(t(s, d, "documents"))
       .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
       .groupBy("doc_id")
@@ -1117,7 +1114,7 @@ object Llm {
     // r14: the capped postings checkpoint to scratch (path keyed by the
     // df cap — LlmSpec's capped≡uncapped pin runs other caps through
     // the same plan); without the artifact the pair kernel re-ran the
-    // df agg + join-back lineage (NgramProfile's dedup_ngram finding,
+    // df agg + join-back lineage (the dedup_ngram stage-profile finding,
     // same family). Since r17 the kernel reads gk exactly once.
     val gk = Scratch.table(s,
       s"$scratchRoot/containment_gk_$dfCap/${Scratch.key(d)}") {
@@ -1719,7 +1716,7 @@ object Llm {
     // spillable, map-side-combined — and grams above the cap never
     // reach the join at all. Same row set by construction.
     //
-    // r14 CPU fix, two parts (NgramProfile stage attribution: the full
+    // r14 CPU fix, two parts (per-stage attribution, graft.Profile: the full
     // query cost 35 task-CPU-seconds at sf0.1 where its stages summed
     // to ~14 run once):
     // (a) the (source, lang, gram_h) key folds to ONE xxhash64 — the

@@ -81,7 +81,6 @@ object Pipeline {
   private val reservoirK = 5
 
   private def sampleReservoir: Q = (s, d) => {
-    graft.expr.TopKAgg.register(s)
     val pr = conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
       .cast("long")
     t(s, d, "documents")
@@ -177,7 +176,6 @@ object Pipeline {
   private def aggHeavyHitters: Q = (s, d) => {
     require(heavyM + 1 >= heavySupport,
       "MG guarantee must cover the support threshold")
-    graft.expr.MisraGriesAgg.register(s)
     val words = t(s, d, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
     val cands = words
@@ -1815,7 +1813,6 @@ object Pipeline {
     * the brute-force scan for the sim_ann_ivf cell route — the
     * heap/vote/tie logic is unchanged. */
   private def mlKnn: Q = (s, d) => {
-    graft.expr.TopKAgg.register(s)
     val base = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       transform(col("embedding"),
         e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
@@ -2498,7 +2495,6 @@ object Pipeline {
   private[graft] def aggThetaPlan(
       s: org.apache.spark.sql.SparkSession, d: String,
       audit: Boolean): DataFrame = {
-    graft.expr.TopKAgg.register(s)
     val k = 64
     val scale = 1L << 52
     def dist = {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession.withConf
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -173,15 +174,12 @@ object Relational {
     * shuffles but blooms. Result is bloom-independent (filters never
     * change join output), so the oracle is the plain join. */
   private def joinBloom: Q = (s, d) => {
-    val appThresh =
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    val bcThresh = "spark.sql.autoBroadcastJoinThreshold"
     val out = s"${graft.Tables.scratchRoot}/sink/join_bloom"
-    val olds = Seq(appThresh, bcThresh).map(k => k -> s.conf.get(k))
-    s.conf.set(appThresh, "0")
-    s.conf.set(bcThresh, "-1")
-    try bloomJoinFrame(s, d).write.mode("overwrite").parquet(out)
-    finally olds.foreach { case (k, v) => s.conf.set(k, v) }
+    withConf(s,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      bloomJoinFrame(s, d).write.mode("overwrite").parquet(out)
+    }
     s.read.parquet(out).orderBy("o_orderkey")
   }
 
@@ -606,7 +604,6 @@ object Relational {
     * group per partition cross the shuffle, no full-group sort. Shares
     * topk_group's oracle — results must be bit-identical. */
   private def topkGroupAgg: Q = (s, d) => {
-    graft.expr.TopKAgg.register(s)
     t(s, d, "orders")
       .groupBy("o_custkey")
       .agg(call_function("topk_pairs",
@@ -624,14 +621,12 @@ object Relational {
     * aggregate at plan time. The flag is scoped to this query by
     * forcing physical planning eagerly (QueryExecution caches it)
     * before restoring the conf. */
-  private def topkGroupRewrite: Q = (s, d) => {
-    s.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+  private def topkGroupRewrite: Q = (s, d) =>
+    withConf(s, "spark.graft.topk.rewrite" -> "true") {
       val df = topkGroup(s, d)
       df.queryExecution.executedPlan // force optimize with the rule on
       df
-    } finally s.conf.unset("spark.graft.topk.rewrite")
-  }
+    }
 
   /** ONE SQL text, TWO engines: the classic shipping-priority query
     * (TPC-H Q3 shape) runs VERBATIM through spark.sql and as the DuckDB
@@ -1981,12 +1976,10 @@ object Relational {
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
   private def joinSkewAqe: Q = (s, d) => {
-    val confs = skewAqeConfs("64KB")
-    val olds = confs.map { case (k, _) => k -> s.conf.get(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
     val out = s"${graft.Tables.scratchRoot}/sink/join_skew_aqe"
-    try skewJoinFrame(s, d).write.mode("overwrite").parquet(out)
-    finally olds.foreach { case (k, v) => s.conf.set(k, v) }
+    withConf(s, skewAqeConfs("64KB"): _*) {
+      skewJoinFrame(s, d).write.mode("overwrite").parquet(out)
+    }
     s.read.parquet(out).orderBy("grp")
   }
 
@@ -3016,9 +3009,8 @@ object Relational {
     t(s, d, "orders").createOrReplaceTempView("orders")
     // Scripts execute EAGERLY at sql() (the loop must run to produce
     // the final SELECT), so the conf window closes safely right after.
-    val prev = s.conf.getOption("spark.sql.scripting.enabled")
-    s.conf.set("spark.sql.scripting.enabled", "true")
-    try s.sql("""
+    withConf(s, "spark.sql.scripting.enabled" -> "true") {
+      s.sql("""
       BEGIN
         DECLARE thr DOUBLE DEFAULT 1000.0;
         WHILE (SELECT count(*) FROM orders WHERE o_totalprice > thr) > 1000 DO
@@ -3028,9 +3020,6 @@ object Relational {
                CAST((SELECT count(*) FROM orders WHERE o_totalprice > thr)
                     AS BIGINT) AS n_above;
       END""")
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-      case None => s.conf.unset("spark.sql.scripting.enabled")
     }
   }
 
@@ -3177,7 +3166,6 @@ object Relational {
     * list-typed seed — the tok_unigram discipline); both engines walk
     * the same integer lattice, exact-hash by construction. */
   private def tsDtw: Q = (s, d) => {
-    graft.expr.DtwDist.register(s)
     val tplSql = dtwTemplate.map(v => s"${v}L")
       .mkString("array(", ", ", ")")
     val binned = events(s, d).select(col("user_id"),

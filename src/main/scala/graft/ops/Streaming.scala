@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession.withConf
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -165,7 +166,6 @@ object Streaming {
     events(s, d).drop("ts_us").schema
 
   private def readEventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file stream source requires a directory; select the single
     // events file via glob filter.
     val schema = eventsFileSchema(s, d)
@@ -205,12 +205,8 @@ object Streaming {
   /** Plan/run `body` with the streaming state partition count, then
     * restore the session's batch shuffle sizing. */
   private def withStatePartitions[T](s: SparkSession,
-      parts: Int = statePartitions)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      parts: Int = statePartitions)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Conf window for the data-scaled foreachBatch RECOMPUTE loops
     * (stream_seq / stream_markov / stream_dedup_incremental / the
@@ -224,16 +220,9 @@ object Streaming {
     * 100 TB yields the same splits as the default — the knob only
     * matters when the bytes are tiny. State partitioning stays 8 for
     * the per-batch join width (see [[withStatePartitions]]). */
-  private def withRecomputeConf[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.files.minPartitionNum"
-    val prev = s.conf.getOption(k)
-    s.conf.set(k, "1")
-    try withStatePartitions(s, 8)(body)
-    finally prev match {
-      case Some(v) => s.conf.set(k, v)
-      case None => s.conf.unset(k)
-    }
-  }
+  private def withRecomputeConf[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.files.minPartitionNum" -> "1",
+      "spark.sql.shuffle.partitions" -> "8")(body)
 
   /** Conf window for the TINY-FOLD foreachBatch loops (state ≤ a few
     * hundred domain-bounded rows, no state stores): AQE materializes
@@ -245,17 +234,9 @@ object Streaming {
     * 2-partition shuffle width matches the state size. Data-scaled
     * streaming bodies (stream_seq / stream_markov / sdi / the corpus
     * pipeline) keep AQE — their per-batch joins are the workload. */
-  private def withFoldConf[T](s: SparkSession)(body: => T): T = {
-    val prevP = s.conf.get("spark.sql.shuffle.partitions")
-    val prevA = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevP)
-      s.conf.set("spark.sql.adaptive.enabled", prevA)
-    }
-  }
+  private def withFoldConf[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Staged-file count for the REGISTERED incremental-fold keys: 2
     * files → one seed batch + one real merge batch — the incremental
@@ -499,18 +480,17 @@ object Streaming {
   private def streamTws: Q = (s, d) => {
     val sp = s
     import sp.implicits._
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val st = readEventStream(s, d)
-      .select(col("user_id"), col("value"))
-      .as[(Long, Double)]
-    val out = st.groupByKey(_._1)
-      .transformWithState(new RunningUserTotals,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-    val res = runToMemory(s, out.toDF(), "stream_tws_t", OutputMode.Update())
-      .orderBy("user_id")
-    s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    res
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val st = readEventStream(s, d)
+        .select(col("user_id"), col("value"))
+        .as[(Long, Double)]
+      val out = st.groupByKey(_._1)
+        .transformWithState(new RunningUserTotals,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      runToMemory(s, out.toDF(), "stream_tws_t", OutputMode.Update())
+        .orderBy("user_id")
+    }
   }
 
   /** Idempotent sink + accounting: foreachBatch OVERWRITES its own
@@ -587,23 +567,17 @@ object Streaming {
     val out = streamDir("stream_sink/out")
     val st = readEventStream(s, d)
       .select("event_id", "event_type", "value")
-    val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try withStatePartitions(s) {
+    withStatePartitions(s) {
       val q = st.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id").parquet(out)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(out)
         }
         .option("checkpointLocation", streamDir("stream_sink/ckpt"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prevMode match {
-        case Some(m) => s.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     s.read.parquet(out)
       .groupBy("event_type")
@@ -1359,7 +1333,6 @@ object Streaming {
   private[graft] def runStreamDedupIncremental(s: SparkSession, d: String,
       idxApp: String, resRoot: String, ckpt: String,
       files: Int = regFiles): Unit = {
-    graft.expr.MinHashSketch.register(s)
     val sigT = Llm.minhashSigTable(s, d)
     // One-time stored artifacts (immutable per input dir): the base
     // index = band rows of the even half, and the staged new-doc
@@ -1679,7 +1652,6 @@ object Streaming {
     * file index drops zero-byte files), the remote source lists
     * empty.txt, so it flows through here. */
   private def streamIngestE2e: Q = (s, d) => {
-    graft.expr.Sanitize.register(s)
     val fixture = Ingest.buildFixture()
     val out = streamDir("stream_ingest_e2e/out")
     val st = s.readStream.format("graft.sources.RemoteFileSource")
@@ -1703,24 +1675,18 @@ object Streaming {
     // Prior-run sink manifest (R18 skip identity, as in batch ingest_e2e).
     val manifest = s.createDataFrame(Seq(("dup_two.txt", 18L)))
       .toDF("file_name", "size")
-    val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try withStatePartitions(s) {
+    withStatePartitions(s) {
       val q = cleaned.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           batch.join(broadcast(manifest), Seq("file_name", "size"), "left_anti")
             .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id").parquet(out)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(out)
         }
         .option("checkpointLocation", streamDir("stream_ingest_e2e/ckpt"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prevMode match {
-        case Some(m) => s.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     s.read.parquet(out)
       .groupBy("file_type")

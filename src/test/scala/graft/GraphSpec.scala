@@ -79,9 +79,7 @@ class GraphSpec extends AnyFunSuite {
     // the pin is that the EDGE side arrives pre-partitioned from the
     // bucketed scan — exactly one exchange for the rank table plus one
     // for the dst combine (the graph cut), never an O(E) edge shuffle.
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val step = Graph.prContribute(e2, ranks)
       step.collect()
       val p = step.queryExecution.executedPlan.toString()
@@ -90,7 +88,7 @@ class GraphSpec extends AnyFunSuite {
         "edge scan must report an exploited bucket layout: " + p)
       assert("Exchange hashpartitioning".r.findAllIn(p).size === 2,
         "only the rank table and the dst combine may shuffle: " + p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
     // dst ⊆ src invariant (ADVICE r16): graphPagerank's per-iteration
     // inner join(degN, "node") silently drops any contribution-
     // receiving node absent from the degree artifact — correctness

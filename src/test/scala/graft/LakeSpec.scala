@@ -524,12 +524,10 @@ class LakeSpec extends AnyFunSuite {
       .write.mode("overwrite").partitionBy("p").parquet(base)
     val untouchedBefore = listing(s"$base/p=1")
     val touchedBefore = listing(s"$base/p=0")
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try Seq((9L, 0)).toDF("v", "p")
-      .write.mode("overwrite").partitionBy("p").parquet(base)
-    finally spark.conf.set(key, old)
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      Seq((9L, 0)).toDF("v", "p")
+        .write.mode("overwrite").partitionBy("p").parquet(base)
+    }
     // p=1's files survive byte-for-byte (same names, never rewritten);
     // p=0 was replaced. Static mode would have truncated p=1 away.
     assert(listing(s"$base/p=1") === untouchedBefore)
@@ -668,8 +666,7 @@ class LakeSpec extends AnyFunSuite {
     val expect = define.orderBy("yr").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     // fresh consumer with the rule on
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+    GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val q = define.orderBy("yr")
       val plan = q.queryExecution.executedPlan.toString()
       assert(plan.contains("refresh_rewrite_test"),
@@ -681,7 +678,7 @@ class LakeSpec extends AnyFunSuite {
       assert(got === expect,
         "rows read through the rewrite must equal the full recompute")
       assert(got.nonEmpty)
-    } finally spark.conf.unset("spark.graft.mv.rewrite")
+    }
   }
 
   test("mv_incremental_join: bilinear delta equals recompute, deltas broadcast") {

@@ -661,7 +661,6 @@ class LlmSpec extends AnyFunSuite {
     // j≈0.96 pair can miss when its few disagreeing slots spread one
     // per band — sf0.001's (45,487) does exactly that, which is the
     // honest caveat this eval operator exists to expose.)
-    graft.expr.MinHashSketch.register(spark)
     import org.apache.spark.sql.functions._
     val toks = split(col("text"), " ")
     val sh = array_distinct(transform(

@@ -158,31 +158,24 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("join_bloom injects a runtime bloom filter on the fact side") {
-    val appThresh =
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    val bcThresh = "spark.sql.autoBroadcastJoinThreshold"
-    val olds = Seq(appThresh, bcThresh).map(k => k -> spark.conf.get(k))
-    spark.conf.set(appThresh, "0")
-    spark.conf.set(bcThresh, "-1")
-    try {
+    GraftSession.withConf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = graft.ops.Relational.bloomJoinFrame(spark, sf)
         .queryExecution.optimizedPlan.toString()
       assert(p.contains("bloom_filter_agg") || p.contains("BloomFilter"), p)
-    } finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("join_skew_aqe splits the hot shuffle partition (skew=true in the final plan)") {
-    val confs = graft.ops.Relational.skewAqeConfs("2KB")
-    val olds = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, graft.ops.Relational.skewAqeConfs("2KB"): _*) {
       val df = graft.ops.Relational.skewJoinFrame(spark, sf)
       // collect() drives THIS QueryExecution (count() would execute a
       // separate one, leaving this plan un-finalized, isFinalPlan=false)
       df.collect()
       val p = df.queryExecution.executedPlan.toString()
       assert(p.contains("skew=true"), p)
-    } finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("text_seg_dedup joins on the 8-byte segment hash, not the text") {
@@ -509,7 +502,6 @@ class PlanSpec extends AnyFunSuite {
     // inspects the BUILD plan — reconstructed identically here; the
     // audit PlanSpec test pins what the registered plan reads.
     import org.apache.spark.sql.functions._
-    graft.expr.TopKAgg.register(spark)
     val dist = Tables.t(spark, sf, "documents")
       .select(
         explode(expr("filter(array(CASE WHEN doc_id % 3 <> 0 THEN 'a' END," +
@@ -551,11 +543,10 @@ class PlanSpec extends AnyFunSuite {
           case _ => Seq.empty[String]
         }
       }.flatten
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    val (onPaths, onRows) = try {
+    val (onPaths, onRows) = GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val df = consumer
       (scanPaths(df), df.collect().map(_.toSeq))
-    } finally spark.conf.unset("spark.graft.mv.rewrite")
+    }
     assert(onPaths.exists(_.contains("/mv/pricing_")),
       s"rewritten plan must scan the MV: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
@@ -592,11 +583,10 @@ class PlanSpec extends AnyFunSuite {
           case _ => Seq.empty[String]
         }
       }.flatten
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    val (onPaths, onRows) = try {
+    val (onPaths, onRows) = GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val df = consumer
       (scanPaths(df), df.collect().map(_.toSeq))
-    } finally spark.conf.unset("spark.graft.mv.rewrite")
+    }
     assert(onPaths.exists(_.contains("/mv/rollup_")),
       s"subset consumer must scan the MV grid: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
@@ -616,13 +606,12 @@ class PlanSpec extends AnyFunSuite {
       .groupBy("l_returnflag")
       .agg(round(sum(Tables.dec(col("l_quantity"))), 2).cast("double")
         .as("sum_qty"))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+    GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
       val fp = scanPaths(floatConsumer)
       assert(fp.exists(_.contains("lineitem")),
         s"float sums must stay out of the rollup lattice: $fp")
       assert(!fp.exists(_.contains("/mv/pricing_")), fp.toString)
-    } finally spark.conf.unset("spark.graft.mv.rewrite")
+    }
   }
 
   test("ts_dtw's DP runs inside whole-stage codegen (native expression, not a HOF)") {
@@ -654,14 +643,12 @@ class PlanSpec extends AnyFunSuite {
     // and with size-estimate broadcasting off, the model join degrades
     // to a SHUFFLED join (a hard-coded hint would have survived, like
     // the totals/priors 1-row broadcasts do)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = SparkEntry.queries("ml_naive_bayes")(spark, sf)
         .queryExecution.sparkPlan.toString()
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
       assert(p.contains("BroadcastNestedLoopJoin"), p) // 1-row hints survive
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("agg_moments partial-aggregates the power sums map-side") {

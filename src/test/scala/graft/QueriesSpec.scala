@@ -38,10 +38,19 @@ class QueriesSpec extends AnyFunSuite {
   // (8 pairs at the sf0.01 gate).
   private val mayBeEmpty = Set("join_range", "join_interval")
 
+  // The one conf a query may leave set: Tables.events turns it on for
+  // the whole session on purpose — an int64-nanos events.ts reads only
+  // with it on, and sessions with no other setup (perfbench's) rely on
+  // the first events read leaving it on.
+  private val sessionWide = Set("spark.sql.legacy.parquet.nanosAsLong")
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
+      val before = spark.conf.getAll -- sessionWide
       val n = fn(spark, sf).count()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
+      assert(spark.conf.getAll -- sessionWide === before,
+        s"$name changed the session conf")
     }
   }
 

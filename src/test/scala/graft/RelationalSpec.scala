@@ -94,7 +94,6 @@ class RelationalSpec extends AnyFunSuite {
   test("TopKAgg equals the window formulation on data WITH null scores") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.expr.TopKAgg.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 300).map { j =>
       (j % 7L,
@@ -485,7 +484,6 @@ class RelationalSpec extends AnyFunSuite {
 
   test("ts_dtw: native dtw_dist equals the nested-HOF formulation on every user") {
     import org.apache.spark.sql.functions._
-    graft.expr.DtwDist.register(spark)
     val tplSql = ops.Relational.dtwTemplate.map(v => s"${v}L")
       .mkString("array(", ", ", ")")
     val ser = Tables.events(spark, sf)

@@ -299,13 +299,12 @@ class RobustnessSpec extends AnyFunSuite {
 
   test("topk_pairs rejects non-positive k at registration") {
     val sp = SharedSpark.spark
-    graft.expr.TopKAgg.register(sp)
-    val e = intercept[Exception] {
-      sp.sql("SELECT topk_pairs(CAST(1.0 AS DOUBLE), CAST(1 AS BIGINT), 0)")
-        .collect()
+    Seq("topk_pairs(CAST(1.0 AS DOUBLE), CAST(1 AS BIGINT), 0)" -> "k must be",
+      "misra_gries('w', 0)" -> "m must be").foreach { case (call, msg) =>
+      val e = intercept[Exception](sp.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains(s"$msg an INT literal >= 1")
+        || Option(e.getCause).exists(_.getMessage.contains(msg)),
+        s"$call got: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("k must be an INT literal >= 1")
-      || Option(e.getCause).exists(_.getMessage.contains("k must be")),
-      s"got: ${e.getMessage}")
   }
 }

@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference (child.py:20-33), cases mirroring tests/test_basic.py:18-80. */
 class SanitizeSpec extends AnyFunSuite {
   import SharedSpark.spark
-  Sanitize.register(spark)
 
   // (input, expected) — reference-pinned behavior.
   val cases: Seq[(String, String)] = Seq(

@@ -4,25 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole test JVM (suites run sequentially). */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Engine default: object-hash aggregation (TypedImperativeAggregate
-      // sketches) keeps hash mode far past the 128-key default -- sketch
-      // buffers are ~136 B, so 64k keys/partition is ~9 MB, while the
-      // sort fallback re-sorts the full exploded input (round-1 lesson).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local-test")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse-test")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build("8", "-test")
   val sf: String = "/root/testdata/sf0.001"
 
   /** Gate-SF testdata resolution: derived from the same env the bench

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * caps so its candidate-mass probe guards exactly the plans that will
   * run — a cap hardcoded twice is a cap silently wrong once (r10
   * ADVICE). This spec fails the suite if the Python RISK_KEYS caps
-  * drift from the Scala constants they mirror.
+  * drift from the Scala constants they mirror, or if session setup
+  * grows a second owner next to GraftSession and GraftExtensions.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -31,5 +32,35 @@ class ToolsLockstepSpec extends AnyFunSuite {
     // recall's exact-truth probe is deliberately uncapped (that key is
     // the one that OOM'd the r9 sf10 leg) — pin that it stays None.
     assert(py.contains("\"dedup_minhash_recall\": (\"shingle\", None)"))
+  }
+
+  /** (file, line number, line) for every Scala line under `dir`. */
+  private def scalaLines(dir: String): Seq[(String, Int, String)] = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .map { case (l, i) => (p.toString, i + 1, l) }
+    } finally files.close()
+  }
+
+  test("session setup has one owner: builder, function registry, conf overrides") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
+    def hits(dir: String, pattern: String, except: String => Boolean = _ => false) =
+      scalaLines(dir).collect {
+        case (f, n, l) if l.contains(pattern) && !except(f) => s"$f:$n: ${l.trim}"
+      }
+    val builders = hits("src", "SparkSession" + ".builder",
+      _.endsWith("/graft/GraftSession.scala"))
+    assert(builders.isEmpty, "build sessions with GraftSession.build:\n" +
+      builders.mkString("\n"))
+    val tempFns = hits("src/main", "createOrReplaceTempFunction")
+    assert(tempFns.isEmpty, "add native functions to GraftExtensions.functions:\n" +
+      tempFns.mkString("\n"))
+    val confWrites = Seq("conf.set(", "conf.unset(")
+      .flatMap(hits("src/main/scala/graft/ops", _))
+    assert(confWrites.isEmpty, "change conf temporarily with GraftSession.withConf:\n" +
+      confWrites.mkString("\n"))
   }
 }
