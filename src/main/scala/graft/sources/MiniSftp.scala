@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, File, IOException}
+import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, File, IOException}
 import java.math.BigInteger
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -123,12 +123,17 @@ private[graft] object SshWire {
   * re-keying (RFC 4253 §9 recommends rekey per GB/hour — sessions here
   * live for one partition read) and channel windows are opened at
   * Int.MaxValue with flow control left to TCP (both ends are ours;
-  * a general client must send CHANNEL_WINDOW_ADJUST). */
+  * a general client must send CHANNEL_WINDOW_ADJUST). A packet's
+  * ciphertext and MAC leave in one write, and both ends' sockets set
+  * TCP_NODELAY, because under Nagle's algorithm a small write behind an
+  * unacknowledged one waits for the peer's delayed ACK (~40 ms on
+  * Linux) — on every round trip, against an sshd as much as against
+  * the loopback server. */
 private[graft] final class SshTransport(sock: Socket, isClient: Boolean,
     hostKey: => KeyPair) {
   import SshWire._
 
-  private val in = new DataInputStream(sock.getInputStream)
+  private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
   private val out = new DataOutputStream(sock.getOutputStream)
   private val rnd = new SecureRandom()
   private var seqIn = 0L
@@ -342,7 +347,7 @@ private[graft] final class SshTransport(sock: Socket, isClient: Boolean,
 
   /** §6 binary packet: len‖padlen‖payload‖padding, padded to the
     * cipher block; post-NEWKEYS the whole packet is AES-CTR encrypted
-    * and HMAC(seq‖plaintext) rides behind it. */
+    * and HMAC(seq‖plaintext) rides behind it, in the same write. */
   def writePacket(payload: Array[Byte]): Unit = synchronized {
     val block = if (encOut != null) 16 else 8
     var pad = block - ((5 + payload.length) % block)
@@ -354,9 +359,10 @@ private[graft] final class SshTransport(sock: Socket, isClient: Boolean,
     if (encOut != null) {
       macOut.update(new Buf().int(seqOut.toInt).bytes)
       macOut.update(packet)
-      val tag = macOut.doFinal()
-      out.write(encOut.update(packet))
-      out.write(tag)
+      val wire = new Array[Byte](packet.length + macOut.getMacLength)
+      encOut.update(packet, 0, packet.length, wire, 0)
+      macOut.doFinal(wire, packet.length)
+      out.write(wire)
     } else out.write(packet)
     out.flush()
     seqOut += 1
@@ -485,6 +491,7 @@ class MiniSftpServer(dir: String,
   private def handle(sock: Socket): Unit = {
     try {
       sock.setSoTimeout(20000)
+      sock.setTcpNoDelay(true)
       val t = new SshTransport(sock, isClient = false, MiniSftp.hostKey)
       t.handshake()
       var authed = false
@@ -671,6 +678,7 @@ class SftpSocketClient(host: String, port: Int, dir: String,
       sock = new Socket()
       sock.connect(new java.net.InetSocketAddress(addr, p), 15000)
       sock.setSoTimeout(20000)
+      sock.setTcpNoDelay(true)
       t = new SshTransport(sock, isClient = true, null)
       t.handshake()
       // userauth (RFC 4252): request the service, then password-auth

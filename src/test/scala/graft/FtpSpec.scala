@@ -76,6 +76,16 @@ class FtpSpec extends AnyFunSuite {
     } finally client.close()
   }
 
+  test("sequential small fetches on one session do not stall per round trip") {
+    // The server answers RETR with 150 and then 226 with no client
+    // message between: under Nagle the 226 waits for the client's
+    // delayed ACK.
+    val client = new sources.FtpSocketClient("localhost", 21,
+      WireTiming.smallFileDir("ftp_rtt_fixture"))
+    try WireTiming.assertNoRoundTripStall(client)
+    finally client.close()
+  }
+
   test("the un-namespaced chaos fault-injection option is rejected loudly") {
     val fixture = ops.Ingest.buildFixture()
     val e = intercept[Exception] {

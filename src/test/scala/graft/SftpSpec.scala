@@ -154,25 +154,19 @@ class SftpSpec extends AnyFunSuite {
 
   test("a tampered ciphertext byte dies on MAC verification, not silent corruption") {
     // A real MITM flip: the client socket's output stream corrupts the
-    // last byte of the first array written after the trigger arms —
-    // that is the encrypted packet body (the 32-byte MAC rides in a
-    // separate write). The server must refuse the packet loudly.
+    // first array written after the trigger arms. That array is one
+    // whole packet, ciphertext then the 32-byte MAC, so the flipped
+    // byte is the last one before the MAC: encrypted packet body. The
+    // server must refuse the packet loudly.
     val fixture = ops.Ingest.buildFixture()
     val port = sources.MiniSftp.serve(fixture)
 
     @volatile var arm = false
-    val sock = new java.net.Socket() {
-      override def getOutputStream: java.io.OutputStream =
-        new java.io.FilterOutputStream(super.getOutputStream) {
-          override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-            if (arm && len > 0) {
-              b(off + len - 1) = (b(off + len - 1) ^ 0x01).toByte
-              arm = false
-            }
-            out.write(b, off, len)
-          }
-          override def write(i: Int): Unit = out.write(i)
-        }
+    val sock = tappedSocket { (b, off, len) =>
+      if (arm && len > 32) {
+        b(off + len - 33) = (b(off + len - 33) ^ 0x01).toByte
+        arm = false
+      }
     }
     sock.connect(new java.net.InetSocketAddress("127.0.0.1", port), 5000)
     sock.setSoTimeout(10000)
@@ -198,7 +192,8 @@ class SftpSpec extends AnyFunSuite {
 
   test("transport-level MAC check itself is the failure point on tamper") {
     // Direct transport pair over a loopback socketpair: server thread
-    // reads one packet and must report the MAC failure message.
+    // reads one packet and must report the MAC failure message. The
+    // flip hits the last ciphertext byte, just before the 32-byte MAC.
     val server = new java.net.ServerSocket(0, 1,
       java.net.InetAddress.getByName("127.0.0.1"))
     @volatile var serverErr: Throwable = null
@@ -214,18 +209,11 @@ class SftpSpec extends AnyFunSuite {
     srv.setDaemon(true)
     srv.start()
     @volatile var arm = false
-    val sock = new java.net.Socket() {
-      override def getOutputStream: java.io.OutputStream =
-        new java.io.FilterOutputStream(super.getOutputStream) {
-          override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-            if (arm && len > 0) {
-              b(off + len - 1) = (b(off + len - 1) ^ 0x01).toByte
-              arm = false
-            }
-            out.write(b, off, len)
-          }
-          override def write(i: Int): Unit = out.write(i)
-        }
+    val sock = tappedSocket { (b, off, len) =>
+      if (arm && len > 32) {
+        b(off + len - 33) = (b(off + len - 33) ^ 0x01).toByte
+        arm = false
+      }
     }
     sock.connect(new java.net.InetSocketAddress("127.0.0.1", server.getLocalPort), 5000)
     sock.setSoTimeout(10000)
@@ -238,6 +226,44 @@ class SftpSpec extends AnyFunSuite {
       assert(serverErr != null, "server must reject the tampered packet")
       assert(serverErr.getMessage.contains("MAC"), serverErr.getMessage)
     } finally { sock.close(); server.close() }
+  }
+
+  test("every encrypted packet leaves in exactly one socket write") {
+    // Ciphertext and MAC written apart make the MAC a small write behind
+    // an unacknowledged one: Nagle holds it for the peer's delayed ACK.
+    val fixture = ops.Ingest.buildFixture()
+    val port = sources.MiniSftp.serve(fixture)
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sock = tappedSocket((_, _, _) => writes.incrementAndGet())
+    sock.connect(new java.net.InetSocketAddress("127.0.0.1", port), 5000)
+    sock.setSoTimeout(10000)
+    try {
+      val t = new sources.SshTransport(sock, isClient = true, null)
+      t.handshake()
+      def writesOf(payload: Array[Byte]): Int = {
+        writes.set(0); t.writePacket(payload); writes.get()
+      }
+      assert(writesOf(Array[Byte](5) ++ sshStr("ssh-userauth")) === 1)
+      t.readExpect(6)
+      assert(writesOf(Array[Byte](50) ++ sshStr("graft") ++
+        sshStr("ssh-connection") ++ sshStr("password") ++ Array[Byte](0) ++
+        sshStr("graft")) === 1)
+      t.readExpect(52)
+      // IGNORE packets, from one block to larger than a 32 KB SFTP READ
+      Seq(0, 11, 100, 40000).foreach { n =>
+        assert(writesOf(Array[Byte](2) ++ sshStr("x" * n)) === 1, s"IGNORE of $n bytes")
+      }
+    } finally sock.close()
+  }
+
+  test("sequential small fetches on one session do not stall per round trip") {
+    // A fetch is four round trips (OPEN, READ, READ to EOF, CLOSE), each
+    // a packet whose MAC would wait on the peer's delayed ACK if it left
+    // in a write of its own.
+    val client = new sources.SftpSocketClient("localhost", 22,
+      WireTiming.smallFileDir("sftp_rtt_fixture"))
+    try WireTiming.assertNoRoundTripStall(client)
+    finally client.close()
   }
 
   test("SshWire Buf/Reader round-trip fuzz: ints, longs, strings, mpints") {
@@ -262,6 +288,19 @@ class SftpSpec extends AnyFunSuite {
       assert(r.byte() === 0xab)
     }
   }
+
+  /** A client socket that passes every array it writes, before sending
+    * it, to `tap` (which may change it in place). */
+  private def tappedSocket(tap: (Array[Byte], Int, Int) => Unit): java.net.Socket =
+    new java.net.Socket() {
+      override def getOutputStream: java.io.OutputStream =
+        new java.io.FilterOutputStream(super.getOutputStream) {
+          override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+            tap(b, off, len); out.write(b, off, len)
+          }
+          override def write(i: Int): Unit = { tap(Array(i.toByte), 0, 1); out.write(i) }
+        }
+    }
 
   private def int32(v: Int): Array[Byte] =
     Array(((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
