@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.udf
   * cross-validates it entry-for-entry against commons-compress's
   * `TarArchiveInputStream` on commons-compress-WRITTEN bytes — proving
   * it reads real-world tars, not a private dialect — and pins that a
-  * corrupted header checksum fails loudly.
+  * corrupted header checksum or a member cut short fails loudly.
   *
   * Nested `.tar` / `.tar.gz` members are exploded recursively (the
   * reference re-enters handle_file per member, child.py:114), bounded
@@ -82,7 +82,10 @@ object TarEntries {
         val isFile = (typeflag == '0' || typeflag == 0.toChar) &&
           !rawName.endsWith("/")
         val dataEnd = off + 512 + size.toInt
-        if (isFile && dataEnd <= bytes.length) {
+        require(dataEnd <= bytes.length,
+          s"tar member '$rawName' at offset $off truncated: needs bytes " +
+            s"up to $dataEnd, archive has ${bytes.length}")
+        if (isFile) {
           val content = java.util.Arrays.copyOfRange(bytes, off + 512, dataEnd)
           val base = rawName.split('/').last
           val lower = base.toLowerCase

@@ -573,16 +573,23 @@ object Ingest {
       .orderBy("file_name", "win_idx")
   }
 
-  /** Custom DataSource V2 scan ([[graft.sources.FileMetaSource]]): file
-    * METADATA rows over the deterministic fixture — catalog queries that
-    * read zero payload bytes (R9/R10 HEAD-only probes). Includes the
-    * zero-byte file that Spark's own file index drops. */
+  /** Custom DataSource V2 scan ([[graft.sources.RemoteFileSource]] over
+    * `file://`): file METADATA rows over the deterministic fixture —
+    * `content` is pruned, so the catalog query reads zero payload bytes
+    * (R9/R10 HEAD-only probes). Includes the zero-byte file that Spark's
+    * own file index drops. `ext` is the lowercase text after the last
+    * `.` when that dot is neither the first nor the last character. */
   private def scanDsv2: Q = (s, d) => {
     val fixture = buildFixture()
-    s.read.format("graft.sources.FileMetaSource")
-      .option("path", fixture)
+    val name = col("file_name")
+    val dotFromEnd = locate(".", reverse(name)) // 1-based, 0 if none
+    s.read.format("graft.sources.RemoteFileSource")
+      .option("urls", s"file://localhost$fixture")
       .option("numPartitions", "4")
       .load()
+      .select(graft.expr.Sanitize.sanitize(name).as("clean_name"),
+        when(dotFromEnd > 1 && dotFromEnd < length(name),
+          lower(substring_index(name, ".", -1))).otherwise("none").as("ext"))
       .groupBy("ext")
       .agg(count(lit(1)).as("n"),
         array_join(array_sort(collect_list(col("clean_name"))), "|").as("names"))

@@ -251,6 +251,140 @@ object Streaming {
     * independent by the shared batch oracle. */
   private val regFiles = 2
 
+  /** THE micro-batch driver: run `stream` through `step` (foreachBatch)
+    * under AvailableNow against `ckpt` until the source is drained, and
+    * return the highest batch id THIS invocation ran (−1 if none). Every
+    * foreachBatch loop in this module goes through here, so the
+    * checkpoint/trigger/termination contract lives in one place. A step
+    * that throws fails the query before its batch commits, so a restart
+    * on the same `ckpt` replays that batch id. */
+  private def drain(stream: DataFrame, ckpt: String)(
+      step: (DataFrame, Long) => Unit): Long = {
+    val last = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val q = stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        step(batch, batchId)
+        last.accumulateAndGet(batchId, (a, b) => math.max(a, b)): Unit
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    last.get
+  }
+
+  /** A parquet file stream over a staged source dir, `perTrigger` files
+    * per micro-batch (the staged files ARE the batch boundaries). */
+  private def fileStream(s: SparkSession, src: String, schema: StructType,
+      perTrigger: Int = 1): DataFrame =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", perTrigger.toString)
+      .parquet(src)
+
+  /** Stage `df` once per input dir and file count as `files`
+    * round-robin parquet files under `<name>_src` — a fold runner's
+    * replayable source. Returns the dir. */
+  private def staged(name: String, d: String, files: Int)(
+      df: => DataFrame): String = {
+    val src = s"$scratchRoot/${name}_src/${Llm.Scratch.key(d)}_f$files"
+    Llm.Scratch.once(src) {
+      df.repartition(files).write.mode("overwrite").parquet(src)
+    }
+    src
+  }
+
+  /** The ONE exactly-once fold step every algebraic streaming key
+    * shares: v(b) = merge(v(b−1) ∪ part(batch)), v(0) = part(batch0),
+    * written to `root/v<b>` as one file (state is domain- or k-bounded),
+    * then the replay seam (fault point `<tag>:<b>`). The previous
+    * version is DERIVED FROM the batch id, never from driver memory: a
+    * replayed batch (commit-log failure, query restart) re-reads
+    * v(b−1) and overwrites its own v(b) — same inputs, same output. A
+    * remembered "current" pointer would double-fold on replay (or drop
+    * all history after a restart). */
+  private def foldStep(s: SparkSession, root: String, tag: String)(
+      part: DataFrame => DataFrame,
+      merge: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+    (batch, b) => {
+      val p = part(batch)
+      val merged =
+        if (b == 0L) p
+        else merge(s.read.parquet(s"$root/v${b - 1}").unionByName(p))
+      merged.coalesce(1).write.mode("overwrite").parquet(s"$root/v$b")
+      // v<b> is on disk, the batch is NOT yet committed — a crash here
+      // must be invisible after resume
+      Faults.maybeFail(s"$tag:$b")
+    }
+
+  /** The ONE changed-keys-only recompute step (stream_seq /
+    * stream_markov): for aggregates that are NOT algebraic under
+    * out-of-order arrival, each batch re-derives only the users it
+    * touches. Per batch:
+    *   - its `cols` are appended to `root/ev/batch=<b>` (event state is
+    *     APPEND-ONLY: bytes written per batch ∝ batch size, every event
+    *     stored once), sub-partitioned by user-hash bucket
+    *     `ub = pmod(user_id, evBuckets)` and clustered on `ub` first
+    *     (else every task writes a sliver into every bucket dir);
+    *   - replay seam (fault point `<tag>:<b>`): event dir written,
+    *     MV not — a replay overwrites its own event dir;
+    *   - the touched buckets are LISTED off that write (one `ub=X` dir
+    *     per touched bucket; an Observation on the write stalled
+    *     ~5 s/batch on the listener bus), and the history is read
+    *     pruned to `batch <= b` AND those buckets — scan bytes ∝
+    *     touched-bucket volume, and a replayed batch sees exactly its
+    *     own epoch even if later dirs exist;
+    *   - `derive` runs on the touched users' full history, and every
+    *     untouched user's row of `mv_v<b−1>` carries forward
+    *     (anti-join) into `mv_v<b>`. */
+  private def recomputeStep(s: SparkSession, root: String, tag: String,
+      cols: Seq[String],
+      derive: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+    (batch, b) => {
+      val bev = batch.select(cols.map(col): _*)
+      val touched = bev.select("user_id").distinct()
+      bev.withColumn("ub", pmod(col("user_id"), lit(evBuckets)))
+        .repartition(evBuckets.toInt, col("ub"))
+        .write.mode("overwrite").partitionBy("ub")
+        .parquet(s"$root/ev/batch=$b")
+      Faults.maybeFail(s"$tag:$b")
+      val tb = Option(new java.io.File(s"$root/ev/batch=$b")
+          .listFiles(f => f.isDirectory && f.getName.startsWith("ub=")))
+        .fold(Seq.empty[Long])(_.map(_.getName.stripPrefix("ub=").toLong).toSeq)
+      val changed = derive(s.read.parquet(s"$root/ev")
+        .where(col("batch") <= b && col("ub").isin(tb: _*))
+        .join(touched, Seq("user_id"), "left_semi"))
+      val mv =
+        if (b == 0L) changed
+        else s.read.parquet(s"$root/mv_v${b - 1}")
+          .join(touched, Seq("user_id"), "left_anti").unionByName(changed)
+      mv.write.mode("overwrite").parquet(s"$root/mv_v$b")
+    }
+
+  /** Stage `df` once into `dir` as `files` single-file parquet batches
+    * split by ntile over doc_id, named `batchNN.parquet` with strictly
+    * increasing mtimes — the file source drains by modification time,
+    * so batches arrive in doc_id order. */
+  private def stageIdOrdered(dir: String, files: Int, df: => DataFrame): Unit =
+    Llm.Scratch.once(dir) {
+      val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
+      val bucketed = df.withColumn("bucket", ntile(files).over(w))
+      new java.io.File(dir).mkdirs()
+      for (b <- 1 to files) {
+        val tmp = s"$dir.tmp$b"
+        bucketed.where(col("bucket") === b).drop("bucket")
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get.toPath
+        val dst = java.nio.file.Paths.get(dir, f"batch$b%02d.parquet")
+        java.nio.file.Files.move(part, dst,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(
+            1700000000000L + b * 60000L))
+        graft.Tables.deleteRecursively(new java.io.File(tmp))
+      }
+    }
+
   /** Run a streaming DF to completion into an in-memory table and return
     * the final result (AvailableNow = the reference's cron-batch shape). */
   private def runToMemory(s: SparkSession, df: DataFrame, name: String,
@@ -345,53 +479,48 @@ object Streaming {
           .isin(mods.map(m => java.lang.Long.valueOf(m.toLong)): _*))
         .repartition(mods.size)
         .write.mode("append").parquet(src)
-      val staged = nFiles - before
-      require(staged == mods.size,
-        s"stream_resume staging: expected ${mods.size} files, got $staged")
+      val added = nFiles - before
+      require(added == mods.size,
+        s"stream_resume staging: expected ${mods.size} files, got $added")
     }
-    val mvRoot = s"$root/versions"
-    @volatile var lastBatch = -1L
-    def drain(runName: String): Unit = withStatePartitions(s) {
+    // Each run folds into the same versions with the stream_mv step,
+    // continuing the batch id sequence across the restart.
+    val step = foldStep(s, s"$root/versions", "stream_resume")(
+      _.groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("tot")),
+      sumCountTotal)
+    def run(runName: String): Long = withStatePartitions(s) {
       @volatile var processed = 0L
-      val q = s.readStream
-        .schema(new StructType()
-          .add("event_id", org.apache.spark.sql.types.LongType)
-          .add("event_type", org.apache.spark.sql.types.StringType)
-          .add("v", org.apache.spark.sql.types.DataTypes
-            .createDecimalType(18, 4)))
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processed += batch.count()
-          val part = batch.groupBy("event_type")
-            .agg(count(lit(1)).as("n"), sum(col("v")).as("tot"))
-          val merged =
-            if (batchId == 0L) part
-            else s.read.parquet(s"$mvRoot/v${batchId - 1}")
-              .unionByName(part)
-              .groupBy("event_type")
-              .agg(sum(col("n")).as("n"), sum(col("tot")).as("tot"))
-          merged.write.mode("overwrite").parquet(s"$mvRoot/v$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", s"$root/ckpt") // SHARED across runs
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val stream = fileStream(s, src, StructType.fromDDL(
+        "event_id BIGINT, event_type STRING, v DECIMAL(18,4)"), perTrigger = 2)
+      // the checkpoint is SHARED across runs
+      val last = drain(stream, s"$root/ckpt") { (batch, b) =>
+        processed += batch.count()
+        step(batch, b)
+      }
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$root/audit_$runName"),
         processed.toString)
+      last
     }
     stage(0 to 3)
-    drain("run1")
+    run("run1")
     stage(4 to 5)
-    drain("run2")
-    s.read.parquet(s"$mvRoot/v$lastBatch")
+    mvResult(s, s"$root/versions/v${run("run2")}")
+  }
+
+  /** stream_mv / stream_resume state merge: counts and exact totals
+    * add per event type. */
+  private val sumCountTotal: DataFrame => DataFrame =
+    _.groupBy("event_type").agg(sum(col("n")).as("n"), sum(col("tot")).as("tot"))
+
+  /** stream_mv / stream_resume output: the folded state as
+    * (event_type, n, total_value). */
+  private def mvResult(s: SparkSession, version: String): DataFrame =
+    s.read.parquet(version)
       .select(col("event_type"), col("n"),
         round(col("tot"), 2).cast("double").as("total_value"))
       .orderBy("event_type")
-  }
 
   /** STATE-STORE INTROSPECTION — Spark 4's `statestore` data source
     * pointed at a finished streaming checkpoint: the ops/debugging
@@ -493,12 +622,6 @@ object Streaming {
     }
   }
 
-  /** Idempotent sink + accounting: foreachBatch OVERWRITES its own
-    * batch_id partition (dynamic partition overwrite), so a retried
-    * micro-batch replaces its previous attempt instead of double-writing
-    * — exactly-once output from an at-least-once trigger (R19 sink +
-    * R20 read-back verification; append mode here would be at-least-once
-    * only, ADVICE r1). */
   /** Stream-stream inner join: view→purchase conversion within 10
     * minutes per user. Both sides carry watermarks and the join has a
     * time-range bound — that pair is what lets Spark EVICT join state
@@ -563,21 +686,22 @@ object Streaming {
       .orderBy("category")
   }
 
+  /** Idempotent sink + accounting: foreachBatch OVERWRITES its own
+    * batch_id partition (dynamic partition overwrite), so a retried
+    * micro-batch replaces its previous attempt instead of double-writing
+    * — exactly-once output from an at-least-once trigger (R19 sink +
+    * R20 read-back verification; append mode here would be at-least-once
+    * only, ADVICE r1). */
   private def streamSink: Q = (s, d) => {
     val out = streamDir("stream_sink/out")
     val st = readEventStream(s, d)
       .select("event_id", "event_type", "value")
     withStatePartitions(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(out)
-        }
-        .option("checkpointLocation", streamDir("stream_sink/ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(st, streamDir("stream_sink/ckpt")) { (batch, b) =>
+        batch.withColumn("batch_id", lit(b))
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(out)
+      }
     }
     s.read.parquet(out)
       .groupBy("event_type")
@@ -602,10 +726,7 @@ object Streaming {
   private def streamMv: Q = (s, d) => {
     val mvRoot = streamDir("stream_mv/versions")
     val last = runStreamMv(s, d, mvRoot, streamDir("stream_mv/ckpt"))
-    s.read.parquet(s"$mvRoot/v$last")
-      .select(col("event_type"), col("n"),
-        round(col("tot"), 2).cast("double").as("total_value"))
-      .orderBy("event_type")
+    mvResult(s, s"$mvRoot/v$last")
   }
 
   /** The stream_mv run loop with caller-owned dirs: the registered
@@ -616,47 +737,17 @@ object Streaming {
       mvRoot: String, ckpt: String, files: Int = 4): Long = {
     // files defaults to 4 here (not regFiles): QueriesSpec pins the
     // registered stream_mv at ≥4 versions.
-    val src = s"$scratchRoot/stream_mv_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = staged("stream_mv", d, files) {
       events(s, d).select(col("event_type"), col("value"))
-        .repartition(files).write.mode("overwrite").parquet(src)
     }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("event_type", org.apache.spark.sql.types.StringType)
-        .add("value", org.apache.spark.sql.types.DoubleType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
     withFoldConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val part = batch.groupBy("event_type")
-            .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("tot"))
-          // The previous version is DERIVED FROM batchId, never from
-          // driver memory: a replayed batch (commit-log failure, query
-          // restart) re-reads v(batchId−1) and overwrites its own
-          // v(batchId) — same inputs, same output, exactly-once. A
-          // remembered "current" pointer would double-fold on replay
-          // (or drop all history after a restart).
-          val merged =
-            if (batchId == 0L) part
-            else s.read.parquet(s"$mvRoot/v${batchId - 1}")
-              .unionByName(part)
-              .groupBy("event_type")
-              .agg(sum(col("n")).as("n"), sum(col("tot")).as("tot"))
-          merged.write.mode("overwrite").parquet(s"$mvRoot/v$batchId")
-          // replay-spec seam: v$batchId is on disk, the batch is NOT
-          // yet committed — a crash here must be invisible after resume
-          Faults.maybeFail(s"stream_mv:$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, StructType.fromDDL(
+          "event_type STRING, value DOUBLE")), ckpt)(
+        foldStep(s, mvRoot, "stream_mv")(
+          _.groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("tot")),
+          sumCountTotal))
     }
-    lastBatch
   }
 
   /** STREAMING KMV/THETA SKETCH maintenance — agg_theta's streaming
@@ -700,40 +791,18 @@ object Streaming {
   private[graft] def runStreamTheta(s: SparkSession, d: String,
       root: String, ckpt: String, files: Int = regFiles): Long = {
     val k = 64
-    val src = s"$scratchRoot/stream_theta_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = staged("stream_theta", d, files) {
       events(s, d).select(col("user_id"))
-        .repartition(files).write.mode("overwrite").parquet(src)
     }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("user_id", org.apache.spark.sql.types.LongType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
     withFoldConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val part = batch.select(col("user_id")).distinct()
+      drain(fileStream(s, src, StructType.fromDDL("user_id BIGINT")), ckpt)(
+        foldStep(s, root, "stream_theta")(
+          _.select(col("user_id")).distinct()
             .select(conv(substring(md5(col("user_id").cast("string")),
               1, 13), 16, 10).cast("long").as("h"))
-            .orderBy("h").limit(k)
-          val merged =
-            if (batchId == 0L) part
-            else s.read.parquet(s"$root/v${batchId - 1}")
-              .unionByName(part).select("h").distinct()
-              .orderBy("h").limit(k)
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$root/v$batchId")
-          Faults.maybeFail(s"stream_theta:$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+            .orderBy("h").limit(k),
+          _.select("h").distinct().orderBy("h").limit(k)))
     }
-    lastBatch
   }
 
   /** STREAMING SKYLINE maintenance — the Pareto frontier over an
@@ -762,39 +831,13 @@ object Streaming {
   private[graft] def runStreamSkyline(s: SparkSession, d: String,
       root: String, ckpt: String, files: Int = 4): Long = {
     // files defaults to 4 (not regFiles): QueriesSpec pins ≥4 versions.
-    val src = s"$scratchRoot/stream_skyline_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
-      Relational.skylineInput(s, d)
-        .repartition(files).write.mode("overwrite").parquet(src)
-    }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("p_brand", org.apache.spark.sql.types.StringType)
-        .add("p_partkey", org.apache.spark.sql.types.LongType)
-        .add("cents", org.apache.spark.sql.types.LongType)
-        .add("size", org.apache.spark.sql.types.LongType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+    val src = staged("stream_skyline", d, files)(Relational.skylineInput(s, d))
     withFoldConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val part = Relational.skylineOf(batch)
-          val merged =
-            if (batchId == 0L) part
-            else Relational.skylineOf(
-              s.read.parquet(s"$root/v${batchId - 1}").unionByName(part))
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$root/v$batchId")
-          Faults.maybeFail(s"stream_skyline:$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, StructType.fromDDL(
+          "p_brand STRING, p_partkey BIGINT, cents BIGINT, size BIGINT")), ckpt)(
+        foldStep(s, root, "stream_skyline")(
+          Relational.skylineOf, Relational.skylineOf))
     }
-    lastBatch
   }
 
   /** STREAMING BOUNDED TOP-K maintenance — the leaderboard shape over
@@ -820,40 +863,16 @@ object Streaming {
     * [[runStreamMv]]). Returns the last batch id of this invocation. */
   private[graft] def runStreamTopk(s: SparkSession, d: String,
       root: String, ckpt: String, files: Int = regFiles): Long = {
-    val k = 25
-    val src = s"$scratchRoot/stream_topk_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = staged("stream_topk", d, files) {
       t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-        .repartition(files).write.mode("overwrite").parquet(src)
     }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("doc_id", org.apache.spark.sql.types.LongType)
-        .add("n_chars", org.apache.spark.sql.types.LongType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+    val topk: DataFrame => DataFrame =
+      _.orderBy(col("n_chars").desc, col("doc_id")).limit(25)
     withFoldConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val part = batch.orderBy(col("n_chars").desc, col("doc_id"))
-            .limit(k)
-          val merged =
-            if (batchId == 0L) part
-            else s.read.parquet(s"$root/v${batchId - 1}")
-              .unionByName(part)
-              .orderBy(col("n_chars").desc, col("doc_id")).limit(k)
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$root/v$batchId")
-          Faults.maybeFail(s"stream_topk:$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, StructType.fromDDL(
+          "doc_id BIGINT, n_chars BIGINT")), ckpt)(
+        foldStep(s, root, "stream_topk")(topk, topk))
     }
-    lastBatch
   }
 
   /** STREAMING MODE maintenance — agg_mode's streaming twin and the
@@ -891,65 +910,36 @@ object Streaming {
       .orderBy("l_returnflag")
   }
 
-  /** The ONE mergeable-count fold loop every algebraic streaming twin
+  /** The mergeable-count fold every histogram-shaped streaming twin
     * shares (stream_mode/stream_winsorized via [[runStreamHist]],
     * stream_rsi/stream_drawdown via [[runStreamHourly]],
-    * stream_chisq/stream_cramersv via [[runStreamCells]]) — the
-    * exactly-once replay seam (state write → fault point → commit)
-    * lives in exactly one place. Per batch: state' = state ⊎
-    * counts(batch), a count-sum merge on the caller's DOMAIN-BOUNDED
-    * key (map-side combined; per-batch shuffle rows bounded by the
-    * domain, state frozen at domain size — which is why the
-    * state-write coalesce(1) is the O(1)-row exempt class, not the
-    * graph-checkpoint hazard). Returns the last batch id of this
-    * invocation. */
+    * stream_chisq/stream_cramersv via [[runStreamCells]]): the
+    * [[foldStep]] with state' = state ⊎ counts(batch), a count-sum
+    * merge on the caller's DOMAIN-BOUNDED key (map-side combined;
+    * per-batch shuffle rows bounded by the domain, state frozen at
+    * domain size — which is why the state-write coalesce(1) is the
+    * O(1)-row exempt class, not the graph-checkpoint hazard). Returns
+    * the last batch id of this invocation. */
   private[graft] def runStreamFold(s: SparkSession, root: String,
       ckpt: String, tag: String, src: String, schema: StructType,
-      keys: Seq[String], cnt: String): Long = {
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+      keys: Seq[String], cnt: String): Long =
     withFoldConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val part = batch.groupBy(keys.head, keys.tail: _*)
-            .agg(count(lit(1)).as(cnt))
-          val merged =
-            if (batchId == 0L) part
-            else s.read.parquet(s"$root/v${batchId - 1}")
-              .unionByName(part)
-              .groupBy(keys.head, keys.tail: _*)
-              .agg(sum(col(cnt)).as(cnt))
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$root/v$batchId")
-          Faults.maybeFail(s"$tag:$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, schema), ckpt)(foldStep(s, root, tag)(
+        _.groupBy(keys.map(col): _*).agg(count(lit(1)).as(cnt)),
+        _.groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))))
     }
-    lastBatch
-  }
 
   /** [[runStreamFold]] on the bounded (l_returnflag, q) value
     * histogram — stream_mode/stream_winsorized's pre-image. */
   private[graft] def runStreamHist(s: SparkSession, d: String,
       root: String, ckpt: String, tag: String,
       files: Int = regFiles): Long = {
-    val src = s"$scratchRoot/stream_hist_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = staged("stream_hist", d, files) {
       t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
-        .repartition(files).write.mode("overwrite").parquet(src)
     }
     runStreamFold(s, root, ckpt, tag, src,
-      new StructType()
-        .add("l_returnflag", org.apache.spark.sql.types.StringType)
-        .add("q", org.apache.spark.sql.types.LongType),
+      StructType.fromDDL("l_returnflag STRING, q BIGINT"),
       Seq("l_returnflag", "q"), "c")
   }
 
@@ -1010,9 +1000,7 @@ object Streaming {
       }
     }
     runStreamFold(s, root, ckpt, tag, src,
-      new StructType()
-        .add("event_type", org.apache.spark.sql.types.StringType)
-        .add("hr", org.apache.spark.sql.types.LongType),
+      StructType.fromDDL("event_type STRING, hr BIGINT"),
       Seq("event_type", "hr"), "cnt")
   }
 
@@ -1051,16 +1039,11 @@ object Streaming {
   private[graft] def runStreamCells(s: SparkSession, d: String,
       root: String, ckpt: String, tag: String,
       files: Int = regFiles): Long = {
-    val src = s"$scratchRoot/stream_cells_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
-      t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .repartition(files).write.mode("overwrite").parquet(src)
+    val src = staged("stream_cells", d, files) {
+      t(s, d, "lineitem").select(col("l_returnflag"), col("l_linestatus"))
     }
     runStreamFold(s, root, ckpt, tag, src,
-      new StructType()
-        .add("l_returnflag", org.apache.spark.sql.types.StringType)
-        .add("l_linestatus", org.apache.spark.sql.types.StringType),
+      StructType.fromDDL("l_returnflag STRING, l_linestatus STRING"),
       Seq("l_returnflag", "l_linestatus"), "o")
   }
 
@@ -1080,22 +1063,12 @@ object Streaming {
     * and sorts at recompute; the final MV is row-identical to batch
     * seq_pattern and SHARES ITS ORACLE.
     *
-    * Event state is APPEND-ONLY (the round-7 `weak` fix): each batch
-    * writes ONLY its own events to `ev/batch=<id>` — never a cumulative
-    * rewrite — so bytes written per batch ∝ batch size and total event
-    * I/O over the run is O(corpus), not O(batches × corpus). Each batch
-    * dir is further partitioned by user-hash bucket
-    * (`ub = pmod(user_id, evBuckets)`, the r10 judge fix): recompute
-    * reads the partition-discovered union pruned to `batch <= id` AND
-    * the touched buckets, so per-batch scan bytes are bounded by
-    * touched-bucket volume instead of O(history) — over a long stream
-    * the old full-history re-scan was O(B²). A replayed batch still
-    * sees exactly the state as of its own epoch even if later dirs
-    * exist. Exactly-once: the per-batch event dir and the MV
-    * version are both keyed by batchId (replay overwrites its own
-    * output, the stream_mv discipline). QueriesSpec pins the
-    * append-only law (Σ rows across batch dirs = corpus rows exactly —
-    * every event stored once) and the bucket-pruned scan. */
+    * The per-batch mechanics (append-only, user-bucketed event dirs;
+    * bucket-pruned history reads; batchId-keyed event dir and MV
+    * version, so a replay overwrites its own output) are
+    * [[recomputeStep]]'s. QueriesSpec pins the append-only law (Σ rows
+    * across batch dirs = corpus rows exactly) and the bucket-pruned
+    * scan. */
   private def streamSeq: Q = (s, d) => {
     val root = streamDir("stream_seq/versions")
     val last = runStreamSeq(s, d, root, streamDir("stream_seq/ckpt"))
@@ -1108,23 +1081,11 @@ object Streaming {
       root: String, ckpt: String, files: Int = 4): Long = {
     // files defaults to 4 (not regFiles): QueriesSpec pins the
     // registered stream_seq at ≥4 MV versions and ≥4 batch dirs.
-    val src = s"$scratchRoot/stream_seq_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
-      events(s, d)
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          substring(col("event_type"), 1, 1).as("ch"))
-        .repartition(files) // round-robin: arrival order ≠ time order
-        .write.mode("overwrite").parquet(src)
+    // round-robin staging: arrival order ≠ time order
+    val src = staged("stream_seq", d, files) {
+      events(s, d).select(col("event_id"), col("user_id"), col("ts_us"),
+        substring(col("event_type"), 1, 1).as("ch"))
     }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("event_id", org.apache.spark.sql.types.LongType)
-        .add("user_id", org.apache.spark.sql.types.LongType)
-        .add("ts_us", org.apache.spark.sql.types.LongType)
-        .add("ch", org.apache.spark.sql.types.StringType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
     def mvOf(ev: DataFrame): DataFrame = ev.groupBy("user_id")
       .agg(count(lit(1)).as("path_len"),
         array_join(transform(
@@ -1134,64 +1095,10 @@ object Streaming {
         regexp_count(col("path"), lit("sv+c+p")).cast("long").as("n_runs"),
         (regexp_count(col("path"), lit("sv+c+p")) > 0).as("converted"))
     withRecomputeConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bev = batch.select("user_id", "ts_us", "ch")
-          val touched = bev.select("user_id").distinct()
-          // User-bucketed event layout (r10 judge item #5): each batch
-          // dir is sub-partitioned by pmod(user_id, B), so recompute
-          // reads ONLY the buckets its touched users hash into —
-          // per-batch input bytes ∝ touched-bucket size, not O(full
-          // history) (the O(B²)-over-a-long-stream scan the r10 plan
-          // audit flagged). The touched-bucket set is ≤ evBuckets
-          // values — a bounded control-plane collect.
-          // repartition ON ub before partitionBy: without it every one
-          // of the micro-batch's tasks writes a sliver into every
-          // bucket dir (tasks × buckets small files); clustered, file
-          // count per batch is ~buckets.
-          bev.withColumn("ub", pmod(col("user_id"), lit(evBuckets)))
-            .repartition(evBuckets.toInt, col("ub"))
-            .write.mode("overwrite").partitionBy("ub")
-            .parquet(s"$root/ev/batch=$batchId")
-          // replay-spec seam: the event dir is written, the MV is not —
-          // the judge's exact scenario. Replay must overwrite its own
-          // ev/batch dir (Σ-rows law) and produce the identical MV.
-          Faults.maybeFail(s"stream_seq:$batchId")
-          val prevMv =
-            if (batchId == 0L) None
-            else Some(s.read.parquet(s"$root/mv_v${batchId - 1}"))
-          // Touched-bucket set read OFF THE WRITE JUST MADE (r17): the
-          // partitionBy layout materializes exactly one ub=X dir per
-          // touched bucket, so listing the batch dir IS the set — the
-          // old touched.pmod.distinct().collect() re-read the batch
-          // source and paid ~2 more jobs of pure floor per batch.
-          // Replay-safe: the dir was overwritten by THIS attempt two
-          // statements up. (An Observation on the write was tried and
-          // measured WORSE — obs.get stalls ~5 s/batch inside
-          // foreachBatch waiting on the async listener bus.)
-          val tb = Option(new java.io.File(s"$root/ev/batch=$batchId")
-              .listFiles(f => f.isDirectory && f.getName.startsWith("ub=")))
-            .fold(Seq.empty[Long])(_.map(_.getName.stripPrefix("ub=")
-              .toLong).toSeq)
-          val evNow = s.read.parquet(s"$root/ev")
-            .where(col("batch") <= batchId && col("ub").isin(tb: _*))
-          val changed = mvOf(
-            evNow.join(touched, Seq("user_id"), "left_semi"))
-          val mv = prevMv match {
-            case None => changed
-            case Some(prev) =>
-              prev.join(touched, Seq("user_id"), "left_anti")
-                .unionByName(changed)
-          }
-          mv.write.mode("overwrite").parquet(s"$root/mv_v$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, StructType.fromDDL(
+          "event_id BIGINT, user_id BIGINT, ts_us BIGINT, ch STRING")), ckpt)(
+        recomputeStep(s, root, "stream_seq", Seq("user_id", "ts_us", "ch"), mvOf))
     }
-    lastBatch
   }
 
   /** STREAMING MARKOV TRANSITION-MATRIX maintenance — seq_markov's
@@ -1230,23 +1137,11 @@ object Streaming {
     * [[runStreamMv]]). Returns the last batch id of this invocation. */
   private[graft] def runStreamMarkov(s: SparkSession, d: String,
       root: String, ckpt: String, files: Int = regFiles): Long = {
-    val src = s"$scratchRoot/stream_markov_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
-      events(s, d)
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("event_type"))
-        .repartition(files) // round-robin: arrival order ≠ time order
-        .write.mode("overwrite").parquet(src)
+    val cols = Seq("event_id", "user_id", "ts_us", "event_type")
+    // round-robin staging: arrival order ≠ time order
+    val src = staged("stream_markov", d, files) {
+      events(s, d).select(cols.map(col): _*)
     }
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("event_id", org.apache.spark.sql.types.LongType)
-        .add("user_id", org.apache.spark.sql.types.LongType)
-        .add("ts_us", org.apache.spark.sql.types.LongType)
-        .add("event_type", org.apache.spark.sql.types.StringType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
     // per-user transition counts from this user's full sorted history
     def countsOf(ev: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
@@ -1258,48 +1153,10 @@ object Streaming {
         .agg(count(lit(1)).as("n"))
     }
     withRecomputeConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bev = batch.select("event_id", "user_id", "ts_us",
-            "event_type")
-          val touched = bev.select("user_id").distinct()
-          // User-bucketed event layout (r10 judge item #5; see
-          // [[runStreamSeq]]): recompute reads only the partitions the
-          // touched users hash into, never the full history.
-          bev.withColumn("ub", pmod(col("user_id"), lit(evBuckets)))
-            .repartition(evBuckets.toInt, col("ub"))
-            .write.mode("overwrite").partitionBy("ub")
-            .parquet(s"$root/ev/batch=$batchId")
-          // replay seam: event dir written, MV not yet
-          Faults.maybeFail(s"stream_markov:$batchId")
-          val prevMv =
-            if (batchId == 0L) None
-            else Some(s.read.parquet(s"$root/mv_v${batchId - 1}"))
-          // Touched buckets listed off the write just made — one fewer
-          // control-plane job per batch (see [[runStreamSeq]]).
-          val tb = Option(new java.io.File(s"$root/ev/batch=$batchId")
-              .listFiles(f => f.isDirectory && f.getName.startsWith("ub=")))
-            .fold(Seq.empty[Long])(_.map(_.getName.stripPrefix("ub=")
-              .toLong).toSeq)
-          val evNow = s.read.parquet(s"$root/ev")
-            .where(col("batch") <= batchId && col("ub").isin(tb: _*))
-          val changed = countsOf(
-            evNow.join(touched, Seq("user_id"), "left_semi"))
-          val mv = prevMv match {
-            case None => changed
-            case Some(prev) =>
-              prev.join(touched, Seq("user_id"), "left_anti")
-                .unionByName(changed)
-          }
-          mv.write.mode("overwrite").parquet(s"$root/mv_v$batchId")
-          if (batchId > lastBatch) lastBatch = batchId
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(fileStream(s, src, StructType.fromDDL("event_id BIGINT, " +
+          "user_id BIGINT, ts_us BIGINT, event_type STRING")), ckpt)(
+        recomputeStep(s, root, "stream_markov", cols, countsOf))
     }
-    lastBatch
   }
 
   /** STREAMING incremental near-dup dedup — dedup_incremental's
@@ -1344,47 +1201,22 @@ object Streaming {
         .write.mode("overwrite").parquet(baseIdx)
     }
     val srcDir = s"$scratchRoot/sdi_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(srcDir) {
-      val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
-      val odd = t(s, d, "documents").where(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("text"))
-        .withColumn("bucket", ntile(files).over(w))
-      new java.io.File(srcDir).mkdirs()
-      for (b <- 1 to files) {
-        val tmp = s"$srcDir.tmp$b"
-        odd.where(col("bucket") === b).drop("bucket")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get.toPath
-        val dst = java.nio.file.Paths.get(srcDir, f"batch$b%02d.parquet")
-        java.nio.file.Files.move(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + b * 60000L))
-        val t2 = new java.io.File(tmp)
-        t2.listFiles().foreach(_.delete()); t2.delete()
-      }
-    }
-    val st = s.readStream
-      .schema(new StructType()
-        .add("doc_id", org.apache.spark.sql.types.LongType)
-        .add("text", org.apache.spark.sql.types.StringType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    stageIdOrdered(srcDir, files, t(s, d, "documents")
+      .where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")))
+    val st = fileStream(s, srcDir,
+      StructType.fromDDL("doc_id BIGINT, text STRING"))
     withRecomputeConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val sh = Llm.shingles(col("text"))
-          // The signature subtree feeds three consumers (band rows,
-          // the est join's b-side, the decision projection) — cache it
-          // for the batch so shingling runs once per doc, not three
-          // times; released before the batch commits.
-          val sigs = batch.select(col("doc_id"),
-            call_function("minhash_sig", sh).as("sig"),
-            size(sh).cast("long").as("n_shingles"))
-            .persist()
-          try {
+      drain(st, ckpt) { (batch, batchId) =>
+        val sh = Llm.shingles(col("text"))
+        // The signature subtree feeds three consumers (band rows,
+        // the est join's b-side, the decision projection) — cache it
+        // for the batch so shingling runs once per doc, not three
+        // times; released before the batch commits.
+        val sigs = batch.select(col("doc_id"),
+          call_function("minhash_sig", sh).as("sig"),
+          size(sh).cast("long").as("n_shingles"))
+          .persist()
+        try {
           val newBands = Llm.bandRows(sigs)
           val prior = (0L until batchId).foldLeft(s.read.parquet(baseIdx)) {
             (acc, i) => acc.unionByName(s.read.parquet(s"$idxApp/b$i"))
@@ -1408,12 +1240,8 @@ object Streaming {
           Faults.maybeFail(s"sdi:$batchId")
           newBands.coalesce(1)
             .write.mode("overwrite").parquet(s"$idxApp/b$batchId")
-          } finally sigs.unpersist()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        } finally sigs.unpersist()
+      }
     }
   }
 
@@ -1441,126 +1269,94 @@ object Streaming {
     * with corpus size except the index itself. */
   private def streamPipelineCorpus: Q = (s, d) => {
     val srcDir = s"$scratchRoot/spc_src/${Llm.Scratch.key(d)}_f$regFiles"
-    Llm.Scratch.once(srcDir) {
-      val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("lang"), col("text"))
-        .withColumn("bucket", ntile(regFiles).over(w))
-      new java.io.File(srcDir).mkdirs()
-      for (b <- 1 to regFiles) {
-        val tmp = s"$srcDir.tmp$b"
-        docs.where(col("bucket") === b).drop("bucket")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get.toPath
-        val dst = java.nio.file.Paths.get(srcDir, f"batch$b%02d.parquet")
-        java.nio.file.Files.move(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + b * 60000L))
-        val t2 = new java.io.File(tmp)
-        t2.listFiles().foreach(_.delete()); t2.delete()
-      }
-    }
+    stageIdOrdered(srcDir, regFiles, t(s, d, "documents")
+      .select(col("doc_id"), col("source"), col("lang"), col("text")))
     val digRoot = streamDir("spc/dig")
     val stRoot = streamDir("spc/state")
-    @volatile var lastBatch = -1L
-    val st = s.readStream
-      .schema(new StructType()
-        .add("doc_id", org.apache.spark.sql.types.LongType)
-        .add("source", org.apache.spark.sql.types.StringType)
-        .add("lang", org.apache.spark.sql.types.StringType)
-        .add("text", org.apache.spark.sql.types.StringType))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withRecomputeConf(s) {
-      val q = st.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val toks = Pipeline.corpusToks(batch).persist()
+    val st = fileStream(s, srcDir,
+      StructType.fromDDL("doc_id BIGINT, source STRING, lang STRING, " +
+        "text STRING"))
+    val last = withRecomputeConf(s) {
+      drain(st, streamDir("spc/ckpt")) { (batch, batchId) =>
+        val toks = Pipeline.corpusToks(batch).persist()
+        try {
+          val funnelB = toks.groupBy("source").agg(
+            count(lit(1)).as("n_raw_b"),
+            sum(when(Pipeline.corpusQualCond, 1L).otherwise(0L))
+              .as("n_quality_b"))
+          val qual = toks.where(Pipeline.corpusQualCond)
+            .withColumn("dig", sha2(col("text"), 256))
+          // Dedup: drop digests already kept in earlier batches, then
+          // keep the lowest id within this batch.
+          val prior = (0L until batchId).foldLeft(
+            qual.select(col("dig")).limit(0)) { (acc, i) =>
+            acc.unionByName(s.read.parquet(s"$digRoot/b$i"))
+          }
+          val bw = org.apache.spark.sql.expressions.Window
+            .partitionBy("dig").orderBy("doc_id")
+          val kept = qual
+            .join(prior, Seq("dig"), "left_anti")
+            .withColumn("rn", row_number().over(bw))
+            .where(col("rn") === 1)
+            .select(col("doc_id"), col("source"), col("n_tok"), col("dig"))
+            .persist()
           try {
-            val funnelB = toks.groupBy("source").agg(
-              count(lit(1)).as("n_raw_b"),
-              sum(when(Pipeline.corpusQualCond, 1L).otherwise(0L))
-                .as("n_quality_b"))
-            val qual = toks.where(Pipeline.corpusQualCond)
-              .withColumn("dig", sha2(col("text"), 256))
-            // Dedup: drop digests already kept in earlier batches, then
-            // keep the lowest id within this batch.
-            val prior = (0L until batchId).foldLeft(
-              qual.select(col("dig")).limit(0)) { (acc, i) =>
-              acc.unionByName(s.read.parquet(s"$digRoot/b$i"))
-            }
-            val bw = org.apache.spark.sql.expressions.Window
-              .partitionBy("dig").orderBy("doc_id")
-            val kept = qual
-              .join(prior, Seq("dig"), "left_anti")
-              .withColumn("rn", row_number().over(bw))
-              .where(col("rn") === 1)
-              .select(col("doc_id"), col("source"), col("n_tok"), col("dig"))
-              .persist()
-            try {
-              kept.select("dig").coalesce(1)
-                .write.mode("overwrite").parquet(s"$digRoot/b$batchId")
-              val prevState =
-                if (batchId == 0L)
-                  s.createDataFrame(
-                    Seq.empty[(String, Long, Long, Long, Long, Long, Long, Long)])
-                    .toDF("source", "n_raw", "n_quality", "n_docs",
-                      "total_tokens", "cum", "n_packs", "last_pack")
-                else s.read.parquet(s"$stRoot/b${batchId - 1}")
-              val prev = prevState
-                .select(col("source"), col("n_raw"), col("n_quality"),
-                  col("n_docs"), col("total_tokens"), col("cum"),
-                  col("n_packs"), col("last_pack"))
-              // Per-doc pack id: carried per-source offset + exclusive
-              // within-batch cumsum, div 2048 (the batch plan's rule).
-              val pw = org.apache.spark.sql.expressions.Window
-                .partitionBy("source").orderBy("doc_id")
-              val packedB = kept
-                .join(broadcast(prev.select(col("source"),
-                  col("cum").as("cum0"), col("last_pack").as("lp0"))),
-                  Seq("source"), "left")
-                .na.fill(Map("cum0" -> 0L, "lp0" -> -1L))
-                .withColumn("bcum", sum(col("n_tok")).over(pw))
-                .withColumn("pack_id",
-                  expr("(cum0 + bcum - n_tok) div 2048"))
-                .groupBy("source")
-                .agg(count(lit(1)).as("n_docs_b"),
-                  sum(col("n_tok")).as("tokens_b"),
-                  max(col("pack_id")).as("max_pack_b"),
-                  countDistinct(when(col("pack_id") > col("lp0"),
-                    col("pack_id"))).as("new_packs_b"))
-              val merged = prev
-                .join(funnelB, Seq("source"), "full_outer")
-                .join(packedB, Seq("source"), "full_outer")
-                .select(col("source"),
-                  (coalesce(col("n_raw"), lit(0L)) +
-                    coalesce(col("n_raw_b"), lit(0L))).as("n_raw"),
-                  (coalesce(col("n_quality"), lit(0L)) +
-                    coalesce(col("n_quality_b"), lit(0L))).as("n_quality"),
-                  (coalesce(col("n_docs"), lit(0L)) +
-                    coalesce(col("n_docs_b"), lit(0L))).as("n_docs"),
-                  (coalesce(col("total_tokens"), lit(0L)) +
-                    coalesce(col("tokens_b"), lit(0L))).as("total_tokens"),
-                  (coalesce(col("cum"), lit(0L)) +
-                    coalesce(col("tokens_b"), lit(0L))).as("cum"),
-                  (coalesce(col("n_packs"), lit(0L)) +
-                    coalesce(col("new_packs_b"), lit(0L))).as("n_packs"),
-                  coalesce(col("max_pack_b"), col("last_pack"), lit(-1L))
-                    .as("last_pack"))
-              merged.coalesce(1)
-                .write.mode("overwrite").parquet(s"$stRoot/b$batchId")
-              if (batchId > lastBatch) lastBatch = batchId
-            } finally kept.unpersist()
-          } finally toks.unpersist()
-        }
-        .option("checkpointLocation", streamDir("spc/ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+            kept.select("dig").coalesce(1)
+              .write.mode("overwrite").parquet(s"$digRoot/b$batchId")
+            val prevState =
+              if (batchId == 0L)
+                s.createDataFrame(
+                  Seq.empty[(String, Long, Long, Long, Long, Long, Long, Long)])
+                  .toDF("source", "n_raw", "n_quality", "n_docs",
+                    "total_tokens", "cum", "n_packs", "last_pack")
+              else s.read.parquet(s"$stRoot/b${batchId - 1}")
+            val prev = prevState
+              .select(col("source"), col("n_raw"), col("n_quality"),
+                col("n_docs"), col("total_tokens"), col("cum"),
+                col("n_packs"), col("last_pack"))
+            // Per-doc pack id: carried per-source offset + exclusive
+            // within-batch cumsum, div 2048 (the batch plan's rule).
+            val pw = org.apache.spark.sql.expressions.Window
+              .partitionBy("source").orderBy("doc_id")
+            val packedB = kept
+              .join(broadcast(prev.select(col("source"),
+                col("cum").as("cum0"), col("last_pack").as("lp0"))),
+                Seq("source"), "left")
+              .na.fill(Map("cum0" -> 0L, "lp0" -> -1L))
+              .withColumn("bcum", sum(col("n_tok")).over(pw))
+              .withColumn("pack_id",
+                expr("(cum0 + bcum - n_tok) div 2048"))
+              .groupBy("source")
+              .agg(count(lit(1)).as("n_docs_b"),
+                sum(col("n_tok")).as("tokens_b"),
+                max(col("pack_id")).as("max_pack_b"),
+                countDistinct(when(col("pack_id") > col("lp0"),
+                  col("pack_id"))).as("new_packs_b"))
+            val merged = prev
+              .join(funnelB, Seq("source"), "full_outer")
+              .join(packedB, Seq("source"), "full_outer")
+              .select(col("source"),
+                (coalesce(col("n_raw"), lit(0L)) +
+                  coalesce(col("n_raw_b"), lit(0L))).as("n_raw"),
+                (coalesce(col("n_quality"), lit(0L)) +
+                  coalesce(col("n_quality_b"), lit(0L))).as("n_quality"),
+                (coalesce(col("n_docs"), lit(0L)) +
+                  coalesce(col("n_docs_b"), lit(0L))).as("n_docs"),
+                (coalesce(col("total_tokens"), lit(0L)) +
+                  coalesce(col("tokens_b"), lit(0L))).as("total_tokens"),
+                (coalesce(col("cum"), lit(0L)) +
+                  coalesce(col("tokens_b"), lit(0L))).as("cum"),
+                (coalesce(col("n_packs"), lit(0L)) +
+                  coalesce(col("new_packs_b"), lit(0L))).as("n_packs"),
+                coalesce(col("max_pack_b"), col("last_pack"), lit(-1L))
+                  .as("last_pack"))
+            merged.coalesce(1)
+              .write.mode("overwrite").parquet(s"$stRoot/b$batchId")
+          } finally kept.unpersist()
+        } finally toks.unpersist()
+      }
     }
-    s.read.parquet(s"$stRoot/b$lastBatch")
+    s.read.parquet(s"$stRoot/b$last")
       // The batch plan inner-joins funnel with the packed aggregate, so
       // a source with no kept docs drops there — match it.
       .where(col("n_docs") > 0)
@@ -1676,17 +1472,12 @@ object Streaming {
     val manifest = s.createDataFrame(Seq(("dup_two.txt", 18L)))
       .toDF("file_name", "size")
     withStatePartitions(s) {
-      val q = cleaned.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.join(broadcast(manifest), Seq("file_name", "size"), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(out)
-        }
-        .option("checkpointLocation", streamDir("stream_ingest_e2e/ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(cleaned, streamDir("stream_ingest_e2e/ckpt")) { (batch, b) =>
+        batch.join(broadcast(manifest), Seq("file_name", "size"), "left_anti")
+          .withColumn("batch_id", lit(b))
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(out)
+      }
     }
     s.read.parquet(out)
       .groupBy("file_type")

@@ -90,8 +90,7 @@ object RemoteUrl {
 /** DataSource V2 source serving file PAYLOADS from remote-protocol URLs
   * — the reference's entire input side (pycurl download child.py:67-80,
   * protocol dispatch scrap/child_otherftp.py:129-162, remote stat
-  * child.py:35-65) as a first-class Spark source. Complements
-  * [[FileMetaSource]] (metadata-only catalog scans).
+  * child.py:35-65) as a first-class Spark source.
   *
   * Usage: spark.read.format("graft.sources.RemoteFileSource")
   *          .option("urls", "ftp://host:21/dir,sftp://host2:2222/dir2")
@@ -231,11 +230,14 @@ case class RemoteOffset(n: Long) extends Offset {
   * design: when a batch is admitted (latestOffset), a record
   * `start → (end, file keys)` is persisted BEFORE Spark writes its
   * offset WAL. Every future instance derives "already ingested" from
-  * the union of recorded keys, so a cron-style re-trigger processes
-  * only new files; a WAL-replayed batch reads its own record back and
-  * re-plans the IDENTICAL file set (exactly-once per file together with
-  * the sink's batch-id dedup), even if the remote listing changed in
-  * between. A commit-time log would lag one batch — Spark never calls
+  * the union of recorded keys (url, name, size, mtime), so a
+  * cron-style re-trigger processes only new or rewritten files; a
+  * WAL-replayed batch reads its own record back and re-plans the
+  * IDENTICAL file set (exactly-once per file together with the sink's
+  * batch-id dedup), even if new files were listed in between (a file
+  * rewritten in between is no longer listed under its recorded key, so
+  * the replay skips it and a later batch admits the new version). A
+  * commit-time log would lag one batch — Spark never calls
   * commit() for the final batch of an AvailableNow run — which is why
   * admission time is the only sound write point. */
 class RemoteMicroBatchStream(urls: Seq[String], numPartitions: Int,
@@ -250,7 +252,11 @@ class RemoteMicroBatchStream(urls: Seq[String], numPartitions: Int,
     dir
   }
 
-  private def taskKey(t: RemoteTask): String = s"${t.url}|${t.ref.name}"
+  /** A file's identity is its path, size and mtime (child.py:183-184):
+    * a file rewritten under the same name is a new file and is admitted
+    * again; an unchanged one never is. */
+  private def taskKey(t: RemoteTask): String =
+    s"${t.url}|${t.ref.name}|${t.ref.size}|${t.ref.mtimeS}"
 
   /** Batch records persisted by earlier instances: start → (end, keys).
     * Record file = <start offset>, line 1 = end offset, rest = keys. */

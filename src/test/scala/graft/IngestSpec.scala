@@ -190,14 +190,27 @@ class IngestSpec extends AnyFunSuite {
     }
     runOnce()
     assert(spark.read.parquet(s"$base/out").count() === 8)
-    // a new file arrives between two cron-style runs
-    val f = new java.io.FileOutputStream(new java.io.File(fixture, "late.txt"))
-    f.write("late arrival".getBytes("UTF-8")); f.close()
+    // between two cron-style runs a new file arrives, and b.log is
+    // rewritten under the same name with a new size and a later mtime
+    def put(name: String, text: String): java.io.File = {
+      val f = new java.io.File(fixture, name)
+      val o = new java.io.FileOutputStream(f)
+      o.write(text.getBytes("UTF-8")); o.close()
+      f
+    }
+    put("late.txt", "late arrival")
+    val oldSize = new java.io.File(fixture, "b.log").length()
+    put("b.log", "top-level log, rewritten").setLastModified(1700000600000L)
     runOnce()
     import org.apache.spark.sql.functions.col
     val out = spark.read.parquet(s"$base/out")
-    assert(out.count() === 9, "second run must ingest ONLY the new file")
+    assert(out.count() === 10,
+      "second run must ingest ONLY the new file and the rewritten one")
     assert(out.where(col("file_name") === "late.txt").count() === 1)
+    assert(out.where(col("file_name") === "b.log").select("size")
+      .collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(oldSize, "top-level log, rewritten".length.toLong).sorted,
+      "the rewritten b.log must be ingested once more, as its new version")
   }
 
   test("sink_compact merges the shattered input into target-size files") {
@@ -285,5 +298,30 @@ class IngestSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.expr.TarEntries.extract(bad)
     }
+  }
+
+  test("tar cut inside its last member fails loudly, naming the member") {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    val bos = new ByteArrayOutputStream()
+    val tos = new TarArchiveOutputStream(bos)
+    Seq("a.txt" -> 100, "b.txt" -> 100, "c.txt" -> 2000).foreach { case (n, len) =>
+      val e = new TarArchiveEntry(n)
+      e.setSize(len.toLong)
+      tos.putArchiveEntry(e)
+      tos.write(Array.fill[Byte](len)('x'.toByte))
+      tos.closeArchiveEntry()
+    }
+    tos.close()
+    val whole = bos.toByteArray
+    assert(graft.expr.TarEntries.extract(whole).map(_.name) ===
+      Seq("a.txt", "b.txt", "c.txt"))
+    // a.txt and b.txt take one header and one data block each, so c.txt's
+    // header sits at 2048 and its data at 2560 until 4560; cut at 3000
+    val cut = java.util.Arrays.copyOf(whole, 3000)
+    val ex = intercept[IllegalArgumentException] {
+      graft.expr.TarEntries.extract(cut)
+    }
+    assert(ex.getMessage.contains("c.txt") && ex.getMessage.contains("offset 2048"),
+      ex.getMessage)
   }
 }

@@ -97,6 +97,24 @@ class ReplaySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/v$last").count() <= 25L)
   }
 
+  test("stream_skyline replay: crash after frontier-write before commit; resume is invisible") {
+    val clean = rows(SparkEntry.queries("stream_skyline")(spark, sf))
+    val root = fresh("skyline/versions")
+    val ckpt = fresh("skyline/ckpt")
+    ops.Streaming.Faults.arm("stream_skyline:2")
+    val ex = intercept[Exception] {
+      ops.Streaming.runStreamSkyline(spark, sf, root, ckpt, files = 4)
+    }
+    assert(injected(ex), ex.toString)
+    assert(new java.io.File(s"$root/v2").exists())
+    assert(!new java.io.File(s"$root/v3").exists())
+    val last = ops.Streaming.runStreamSkyline(spark, sf, root, ckpt, files = 4)
+    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
+    val resumed = rows(spark.read.parquet(s"$root/v$last")
+      .orderBy("p_brand", "cents", "p_partkey"))
+    assert(resumed === clean)
+  }
+
   test("stream_mode/stream_winsorized replay: crash after hist-write before commit") {
     // One fold, two finalizers: the shared histogram state must resume
     // to the exact batch histogram, so BOTH keys' outputs equal their

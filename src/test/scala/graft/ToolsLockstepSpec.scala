@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * caps so its candidate-mass probe guards exactly the plans that will
   * run — a cap hardcoded twice is a cap silently wrong once (r10
   * ADVICE). This spec fails the suite if the Python RISK_KEYS caps
-  * drift from the Scala constants they mirror, or if session setup
-  * grows a second owner next to GraftSession and GraftExtensions.
+  * drift from the Scala constants they mirror, if session setup grows
+  * a second owner next to GraftSession and GraftExtensions, or if a
+  * foreachBatch loop appears outside Streaming.drain.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -44,13 +45,17 @@ class ToolsLockstepSpec extends AnyFunSuite {
     } finally files.close()
   }
 
+  /** "file:line: text" for every Scala line under `dir` containing
+    * `pattern`, in files `except` does not exclude. */
+  private def hits(dir: String, pattern: String,
+      except: String => Boolean = _ => false): Seq[String] =
+    scalaLines(dir).collect {
+      case (f, n, l) if l.contains(pattern) && !except(f) => s"$f:$n: ${l.trim}"
+    }
+
   test("session setup has one owner: builder, function registry, conf overrides") {
     assume(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
-    def hits(dir: String, pattern: String, except: String => Boolean = _ => false) =
-      scalaLines(dir).collect {
-        case (f, n, l) if l.contains(pattern) && !except(f) => s"$f:$n: ${l.trim}"
-      }
     val builders = hits("src", "SparkSession" + ".builder",
       _.endsWith("/graft/GraftSession.scala"))
     assert(builders.isEmpty, "build sessions with GraftSession.build:\n" +
@@ -62,5 +67,14 @@ class ToolsLockstepSpec extends AnyFunSuite {
       .flatMap(hits("src/main/scala/graft/ops", _))
     assert(confWrites.isEmpty, "change conf temporarily with GraftSession.withConf:\n" +
       confWrites.mkString("\n"))
+  }
+
+  test("micro-batch loops have one owner: Streaming.drain") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    // the one call is drain's own; every other loop must go through it
+    val loops = hits("src/main/scala/graft/ops", ".foreachBatch")
+    assert(loops.size === 1, "run micro-batch steps through Streaming.drain:\n" +
+      loops.mkString("\n"))
   }
 }
