@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -16,9 +17,17 @@ import graft.expr._
   * functions with a library, no Spark fork required. It is the only
   * function registry: any session built with the extension can call
   * every native expression from plain `spark.sql(...)` with zero
-  * registration calls (exercised by the fn_sql_registry query). */
+  * registration calls (exercised by the fn_sql_registry query).
+  *
+  * It also makes the live context resolve `file:` to
+  * [[graft.fs.GraftLocalFileSystem]] and [[graft.fs.GraftLocalFs]]
+  * unless the user set those keys: `apply` runs before the session's
+  * SharedState copies the context's Hadoop conf, so checkpoints, file
+  * writers and executors all get them. It never starts a context. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    if (SparkEnv.get != null)
+      graft.fs.GraftLocalFileSystem.install(SparkContext.getOrCreate().hadoopConfiguration)
     e.injectOptimizerRule(_ => CollapseSanitize)
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     e.injectOptimizerRule(_ => graft.plans.MvRewrite)

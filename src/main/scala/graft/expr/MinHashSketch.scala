@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Shared MinHash kernel. The per-slot hash is IDENTICAL to the builtin
   * `xxhash64(lit(i), shingle)` (XXH64 seed 42 over the int i, then the
   * UTF-8 bytes), so every formulation — builtin min-aggregates, the
-  * [[MinHashAgg]] Aggregator UDAF, the [[MinHashSketch]] native
+  * test-side `MinHashAgg` Aggregator UDAF, the [[MinHashSketch]] native
   * aggregate, and the [[MinHashSig]] scalar — cross-validates
   * bit-for-bit (LlmSpec).
   */

@@ -283,15 +283,25 @@ object Streaming {
 
   /** Stage `df` once per input dir and file count as `files`
     * round-robin parquet files under `<name>_src` — a fold runner's
-    * replayable source. Returns the dir. */
-  private def staged(name: String, d: String, files: Int)(
+    * replayable source. Part i gets the i-th mtime, so batches arrive in
+    * part order, not in the order the write tasks finished. Returns the
+    * dir. */
+  private[graft] def staged(name: String, d: String, files: Int)(
       df: => DataFrame): String = {
     val src = s"$scratchRoot/${name}_src/${Llm.Scratch.key(d)}_f$files"
     Llm.Scratch.once(src) {
       df.repartition(files).write.mode("overwrite").parquet(src)
+      for (f <- new java.io.File(src).listFiles() if f.getName.startsWith("part-"))
+        setBatchMtime(f.toPath, f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt)
     }
     src
   }
+
+  /** The file source drains by modification time: staged batch `i`
+    * gets a fixed mtime that increases with `i`. */
+  private def setBatchMtime(f: java.nio.file.Path, i: Int): Unit =
+    java.nio.file.Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
 
   /** The ONE exactly-once fold step every algebraic streaming key
     * shares: v(b) = merge(v(b−1) ∪ part(batch)), v(0) = part(batch0),
@@ -378,9 +388,7 @@ object Streaming {
         val dst = java.nio.file.Paths.get(dir, f"batch$b%02d.parquet")
         java.nio.file.Files.move(part, dst,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + b * 60000L))
+        setBatchMtime(dst, b)
         graft.Tables.deleteRecursively(new java.io.File(tmp))
       }
     }

@@ -285,4 +285,18 @@ class ReplaySpec extends AnyFunSuite {
     (0 to 3).foreach(b =>
       assert(new java.io.File(s"$idx/b$b").exists(), s"missing idx b$b"))
   }
+
+  test("staged sources drain in part order, the same on every staging") {
+    val df = spark.range(0, 400).selectExpr("id", "id % 7 AS k")
+    val batches = Seq("a", "b").map { n =>
+      val src = new java.io.File(ops.Streaming.staged(s"staged_order_$n", sf, 4)(df))
+      // the file source takes files in modification-time order
+      val parts = src.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.lastModified)
+      assert(parts.map(_.getName.take(10)).toSeq ===
+        parts.indices.map(i => f"part-$i%05d"), "mtime order is not part order")
+      assert(parts.map(_.lastModified).distinct.length === parts.length)
+      parts.toSeq.map(p => rows(spark.read.parquet(p.getPath)).sorted)
+    }
+    assert(batches(0) === batches(1))
+  }
 }
