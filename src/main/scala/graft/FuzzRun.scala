@@ -19,7 +19,7 @@ object FuzzRun {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, sqlDir) = (args(0), args(1), args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", GraftSession.DefaultCpus)
     val spark = GraftSession.build(cpus)
     tables.foreach(n =>
       spark.read.parquet(s"$sfDir/$n.parquet").createOrReplaceTempView(n))

@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.extensions=graft.GraftExtensions`; nothing else is
   * required — there is no per-session function registration. */
 object GraftSession {
+  /** Local cores (`SPARK_GRAFT_CPUS`) when the environment sets none. */
+  val DefaultCpus = "4"
+
   /** A local session on `cpus` cores (also the shuffle width) with the
     * engine's settings. `scratch` suffixes the local and warehouse dirs
     * under [[Tables.scratchRoot]], so different kinds of JVM never share

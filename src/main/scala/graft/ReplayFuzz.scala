@@ -66,7 +66,7 @@ object ReplayFuzz {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val seed = if (args.length > 1) args(1).toLong else 15L
     val n = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", GraftSession.DefaultCpus)
     val spark = GraftSession.build(cpus)
     val S = ops.Streaming
 

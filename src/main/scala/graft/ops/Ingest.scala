@@ -380,6 +380,19 @@ object Ingest {
       .orderBy("name", "crc")
   }
 
+  /** The lower-cased text after the last '.' of a file name (the whole
+    * name when it has none). */
+  private def lastDotPart(name: Column): Column =
+    lower(element_at(split(name, "\\."), -1))
+
+  /** A file name the ingest keys explode as a zip archive. */
+  private[ops] def isZip(name: Column): Column = lastDotPart(name) === "zip"
+
+  /** The ingest keys' `file_type`: the lower-cased extension, or "none"
+    * for a name with no '.'. */
+  private[ops] def fileType(name: Column): Column =
+    when(name.contains("."), lastDotPart(name)).otherwise("none")
+
   /** End-to-end ingest pipeline over the fixture:
     * scan → derive → zip-explode (flat union, R15 dispatch) → sanitize →
     * manifest anti-join (R18 skip) → collision rename (R17, rank-derived
@@ -395,9 +408,8 @@ object Ingest {
         (unix_millis(col("modificationTime")) / 1000).cast("long").as("mtime"),
         col("length").as("size"), col("content"))
 
-    val isZip = lower(element_at(split(col("file_name"), "\\."), -1)) === "zip"
-    val plain = raw.where(!isZip)
-    val members = raw.where(isZip)
+    val plain = raw.where(!isZip(col("file_name")))
+    val members = raw.where(isZip(col("file_name")))
       .select(explode(ZipEntries.zip_entries(col("content"))).as("m"))
       .select(col("m.name").as("file_name"), col("m.mtime").as("mtime"),
         col("m.size").as("size"), col("m.content").as("content"))
@@ -406,9 +418,7 @@ object Ingest {
       .select(
         Sanitize.sanitize(col("file_name")).as("file_name"),
         col("mtime"), col("size"), col("content"))
-      .withColumn("file_type",
-        when(col("file_name").contains("."),
-          lower(element_at(split(col("file_name"), "\\."), -1))).otherwise("none"))
+      .withColumn("file_type", fileType(col("file_name")))
 
     // Prior-run manifest: (name,size) identity — child.py:183-184 uses
     // (path,size,mtime); mtime is excluded here because zip-member clock

@@ -1462,20 +1462,16 @@ object Streaming {
       .option("urls", s"ftp://localhost:21$fixture")
       .option("batchSize", "3")
       .load()
-    val isZip = lower(element_at(split(col("file_name"), "\\."), -1)) === "zip"
-    val plain = st.where(!isZip)
+    val plain = st.where(!Ingest.isZip(col("file_name")))
       .select(col("file_name"), col("size"), col("content"))
-    val members = st.where(isZip)
+    val members = st.where(Ingest.isZip(col("file_name")))
       .select(explode(graft.expr.ZipEntries.zip_entries(col("content"))).as("m"))
       .select(col("m.name").as("file_name"), col("m.size").as("size"),
         col("m.content").as("content"))
     val cleaned = plain.unionByName(members)
       .select(graft.expr.Sanitize.sanitize(col("file_name")).as("file_name"),
         col("size"), col("content"))
-      .withColumn("file_type",
-        when(col("file_name").contains("."),
-          lower(element_at(split(col("file_name"), "\\."), -1)))
-          .otherwise("none"))
+      .withColumn("file_type", Ingest.fileType(col("file_name")))
     // Prior-run sink manifest (R18 skip identity, as in batch ingest_e2e).
     val manifest = s.createDataFrame(Seq(("dup_two.txt", 18L)))
       .toDF("file_name", "size")

@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for Bench's interval-merge coverage (the algorithm behind every
-  * detail row's job_cover_ms/gap_ms): wall ≡ driver + cover + gap only
+/** Pins for the interval-merge coverage behind every measured window's
+  * job_cover_ms/gap_ms (`Metrics.mergedCoverage`, reported by Bench): wall ≡ driver + cover + gap only
   * holds if the merge handles overlap, nesting, clipping and
   * still-running jobs exactly. Pure function — no Spark session. */
 class BenchSpec extends AnyFunSuite {
   private def cov(ivs: (Long, Long)*)(lo: Long, hi: Long): Long =
-    Bench.mergedCoverage(ivs, lo, hi)
+    Metrics.mergedCoverage(ivs, lo, hi)
 
   test("disjoint intervals sum; the gap between them is not covered") {
     assert(cov((0L, 10L), (20L, 30L))(0, 30) === 20L)
@@ -47,6 +47,6 @@ class BenchSpec extends AnyFunSuite {
 
   test("coverage never exceeds the span (gap_ms stays non-negative)") {
     val ivs = Seq((0L, 100L), (-50L, 200L), (10L, -1L))
-    assert(Bench.mergedCoverage(ivs, 0, 60) === 60L)
+    assert(Metrics.mergedCoverage(ivs, 0, 60) === 60L)
   }
 }

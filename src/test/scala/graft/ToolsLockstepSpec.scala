@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * run — a cap hardcoded twice is a cap silently wrong once (r10
   * ADVICE). This spec fails the suite if the Python RISK_KEYS caps
   * drift from the Scala constants they mirror, if session setup grows
-  * a second owner next to GraftSession and GraftExtensions, or if a
-  * foreachBatch loop appears outside Streaming.drain.
+  * a second owner next to GraftSession and GraftExtensions, if a
+  * foreachBatch loop appears outside Streaming.drain, or if a listener
+  * is registered outside graft.Metrics.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -76,5 +77,14 @@ class ToolsLockstepSpec extends AnyFunSuite {
     val loops = hits("src/main/scala/graft/ops", ".foreachBatch")
     assert(loops.size === 1, "run micro-batch steps through Streaming.drain:\n" +
       loops.mkString("\n"))
+  }
+
+  test("listeners have one owner: graft.Metrics") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
+    val regs = Seq("addSparkListener(", "listenerManager.register(", "streams.addListener(")
+      .flatMap(hits("src/main", _, _.endsWith("/graft/Metrics.scala")))
+    assert(regs.isEmpty, "measure through graft.Metrics; register no listener elsewhere:\n" +
+      regs.mkString("\n"))
   }
 }
