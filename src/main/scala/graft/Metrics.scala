@@ -243,9 +243,11 @@ object Metrics {
       p match {
         case a: AdaptiveSparkPlanExec => fingerprint(a.executedPlan, out)
         case q: QueryStageExec =>
+          // unknown runtime statistics (a ResultQueryStage's) read as
+          // r? and b?, not as a Long.MaxValue byte count
           val st = q.getRuntimeStatistics
           out += q.nodeName + ":r" + st.rowCount.map(_.toString).getOrElse("?") +
-            ":b" + st.sizeInBytes
+            ":b" + (if (st.sizeInBytes >= Long.MaxValue) "?" else st.sizeInBytes)
           fingerprint(q.plan, out)
         case r: AQEShuffleReadExec =>
           out += "AQERead:p" + r.partitionSpecs.length

@@ -55,6 +55,18 @@ object Tables {
     f.delete(): Unit
   }
 
+  /** Row count of a parquet-backed DataFrame, summed from its files'
+    * footers: no Spark job, for sizing a write from a scratch artifact. */
+  def parquetRows(s: SparkSession, df: DataFrame): Long = {
+    val conf = s.sparkContext.hadoopConfiguration
+    df.inputFiles.iterator.map { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try rd.getRecordCount finally rd.close()
+    }.sum
+  }
+
   val scratchRoot: String = {
     val base = new java.io.File(
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft"

@@ -1,8 +1,11 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Graph analytics over derived relationship tables (round 4).
   *
@@ -51,40 +54,18 @@ object Graph {
   private val Scale = 1000000000L
   private val Base = 150000000L // (1 − 0.85) × Scale, exact
   private val Iters = 3
-  /** Per-invocation disambiguator for iterative round paths. */
-  private val runToken = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Final-round dir of the MOST RECENT completed run per (op,
-    * dataset). Scratch stays bounded at one surviving dir per (op,
-    * dataset): the intra-run delete at round commit handles every
-    * non-final round, and publishing a new final dir deletes exactly
-    * the dir it replaces (ADVICE r8: the old reap-at-start both
-    * invalidated a prior run's lazily-held DataFrame the moment a new
-    * run STARTED, and let two concurrent finishers orphan a dir via a
-    * lost put). With delete-on-replace, a prior run's result stays
-    * readable until a LATER run has fully completed, and the
-    * ConcurrentHashMap.put returning the replaced value makes the
-    * concurrent-finisher case leak-free. */
-  private val lastFinal =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def publishFinal(tag: String, path: String): Unit = {
-    val prev = lastFinal.put(tag, path)
-    if (prev != null && prev != path)
-      graft.Tables.deleteRecursively(new java.io.File(prev))
-  }
-
-  /** Rows per write task for an iterative-state checkpoint (r11 judge
-    * item #1). 4M longs-rows ≈ a few tens of MB of parquet per task —
-    * a healthy file size that keeps small-state writes at one file
-    * while letting the task count GROW LINEARLY with state rows: a
-    * 200M-node rank table checkpoints through ~50 tasks, not one.
-    * The old `coalesce(1)` was worse than a single-task WRITE — coalesce
-    * propagates upstream past the last shuffle, so the per-iteration
-    * aggregate itself ran at parallelism 1. */
+  /** Rows per write task for an iterative-state checkpoint. 4M
+    * long-rows ≈ a few tens of MB of parquet per task — a healthy file
+    * size that keeps small-state writes at one file while letting the
+    * task count GROW LINEARLY with state rows: a 200M-node rank table
+    * checkpoints through ~50 tasks, not one. A `coalesce(1)` would be
+    * worse than a single-task WRITE — coalesce propagates upstream past
+    * the last shuffle, so the round's aggregate itself would run at
+    * parallelism 1. */
   private[graft] val ckptRowsPerTask = 4000000L
-  /** Backstop against a wild row estimate (counts are sometimes one
-    * round stale — see call sites); 20k tasks covers ~80G state rows. */
+  /** Backstop against a wild row estimate (the count is one round
+    * stale — see [[fixpoint]]); 20k tasks covers ~80G state rows. */
   private[graft] val ckptMaxTasks = 20000
 
   /** Write-task count for `rows` of iterative state: ceil(rows/4M),
@@ -97,28 +78,93 @@ object Graph {
     math.min(ckptMaxTasks.toLong, math.max(1L, ceil)).toInt
   }
 
-  /** Per-iteration state checkpoint: truncate lineage by materializing
+  /** Per-round state checkpoint: truncate lineage by materializing
     * `df` to parquet and re-reading it. The write runs at a task count
     * scaled to the state volume ([[ckptParts]]); `rows` may be one
     * round stale (an estimate sizes partitions, it never gates
     * correctness). repartition — not coalesce — so the upstream
     * aggregate keeps its full parallelism and only the final
-    * kilobytes-at-test-scale exchange narrows. */
-  private[graft] def ckpt(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame, path: String,
-      rows: Long): org.apache.spark.sql.DataFrame = {
-    df.repartition(ckptParts(rows)).write.mode("overwrite").parquet(path)
+    * kilobytes-at-test-scale exchange narrows. `observe` wraps the plan
+    * above that exchange, so metrics it attaches are computed in the
+    * write's own (result) stage, once per committed task. */
+  private[graft] def ckpt(s: SparkSession, df: DataFrame, path: String,
+      rows: Long, observe: DataFrame => DataFrame = identity): DataFrame = {
+    observe(df.repartition(ckptParts(rows)))
+      .write.mode("overwrite").parquet(path)
     s.read.parquet(path)
   }
 
-  /** Collapse a SMALL final aggregate (a per-hop histogram, never
-    * per-node data) into a LocalRelation so the returned DataFrame no
-    * longer depends on scratch files at all — the strongest fix for
-    * the stale-lazy-DataFrame exposure, valid only where the result is
-    * provably O(rounds) rows. */
-  private def localize(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+  /** Logical clock stamping each [[fixpoint]] call's start (the run id
+    * in its round directories' names) and each [[publishFinal]]. */
+  private val runToken = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Published final-round dirs per (tag, dataset), with their publish
+    * stamps. */
+  private val finals =
+    new java.util.concurrent.ConcurrentHashMap[String, List[(String, Long)]]()
+
+  /** Publishes `path` as the final round of a call on `owner` that
+    * started at stamp `started`, and deletes the finals published
+    * before that start. A result therefore stays readable until a call
+    * that started after it was published has completed, so a call that
+    * overlaps another never deletes the other's result; sequential
+    * calls keep one final dir per (tag, dataset). */
+  private def publishFinal(owner: String, path: String, started: Long): Unit = {
+    var stale = List.empty[(String, Long)]
+    finals.compute(owner, (_, cur) => {
+      val (old, live) = Option(cur).getOrElse(Nil).partition(_._2 < started)
+      stale = old
+      (path, runToken.incrementAndGet()) :: live
+    })
+    stale.foreach(f => graft.Tables.deleteRecursively(new java.io.File(f._1)))
+  }
+
+  /** What [[fixpoint]] returns: the last round's state, the number of
+    * rounds run, and the last round's stats row (its row count, then
+    * the caller's aggregates in order). */
+  private[graft] final case class Fixpoint(state: DataFrame, rounds: Int,
+      stats: Row)
+
+  /** The round loop behind every iterative operator. Round i (from 1)
+    * computes `step(state, i)` from round i−1's state (round 0 is
+    * `init`) and checkpoints it ([[ckpt]]) to a directory no other
+    * call shares, sized by round i−1's row count (`rows0` for round 1).
+    * The write carries count(*) and `stats` as an Observation, so the
+    * stop test and the next round's sizing cost no job of their own.
+    * Once round i has committed, round i−1's directory is deleted; the
+    * last round's directory is published ([[publishFinal]]) and
+    * outlives the call, so the returned state can be read lazily.
+    * `stop(prev, cur, i)` ends the loop after round i, where `prev` is
+    * round i−1's stats row — before round 1, `rows0` and then nulls.
+    * Caps are the caller's: `require` one in `step`, or stop at it. A
+    * failed round deletes this call's round directories and rethrows. */
+  private[graft] def fixpoint(s: SparkSession, tag: String, d: String,
+      init: DataFrame, rows0: Long)(step: (DataFrame, Int) => DataFrame)(
+      stats: Column*)(stop: (Row, Row, Int) => Boolean): Fixpoint = {
+    val owner = s"${tag}_${Llm.Scratch.key(d)}"
+    val started = runToken.incrementAndGet()
+    val run = s"$scratchRoot/graph/${owner}_r$started"
+    def drop(i: Int): Unit =
+      graft.Tables.deleteRecursively(new java.io.File(s"${run}_i$i"))
+    var state = init
+    var prev = Row.fromSeq(rows0 +: Seq.fill(stats.size)(null))
+    var i = 0
+    var done = false
+    try while (!done) {
+      i += 1
+      val obs = Observation()
+      state = ckpt(s, step(state, i), s"${run}_i$i", prev.getLong(0),
+        _.observe(obs, count(lit(1)).as("rows"), stats: _*))
+      val cur = Await.result(obs.future, Duration.Inf)
+      if (i > 1) drop(i - 1)
+      done = stop(prev, cur, i)
+      prev = cur
+    } catch {
+      case e: Throwable => drop(i - 1); drop(i); throw e
+    }
+    publishFinal(owner, s"${run}_i$i", started)
+    Fixpoint(state, i, prev)
+  }
 
   /** Directed co-purchase edges with out-degree: (src, dst, outdeg),
     * distinct pairs, both directions. Checkpointed one-time artifact
@@ -136,15 +182,15 @@ object Graph {
       e.join(deg, "src")
     }
 
-  /** Bucketed-by-src copy of [[copurchaseEdges]] (r12 judge item #6):
-    * the PageRank loop joins edges ⋈ ranks on src EVERY iteration, and
-    * with a plain-parquet artifact each of those joins re-shuffles the
-    * full O(E) edge set — at sf10 that is 3 × 240M-edge exchanges for
-    * a table that never changes between iterations, the dominant mover
-    * in the 92.9 s r12 wall. Written ONCE bucketed (Murmur3 on src,
-    * `spark.sql.shuffle.partitions` buckets, repartition-then-sortBy →
-    * exactly one sorted file per bucket, so the scan reports both
-    * hashpartitioning(src) AND per-bucket sort order), the
+  /** Bucketed-by-src copy of [[copurchaseEdges]]: the PageRank loop
+    * joins edges ⋈ ranks on src EVERY iteration, and with a
+    * plain-parquet artifact each of those joins re-shuffles the full
+    * O(E) edge set — at sf10 that is 3 × 240M-edge exchanges for a
+    * table that never changes between iterations. Written ONCE
+    * bucketed (Murmur3 on src, `spark.sql.shuffle.partitions` buckets,
+    * repartition-then-sortBy → exactly one sorted file per bucket, so
+    * the scan reports both hashpartitioning(src) AND per-bucket sort
+    * order), the
     * per-iteration sort-merge join exchanges and sorts ONLY the O(V)
     * rank table — the join_bucketed co-location discipline applied to
     * an iterative loop. The remaining per-iteration exchange is the
@@ -165,8 +211,8 @@ object Graph {
     // inside another's computeIfAbsent throws IllegalStateException
     // ("Recursive update") WHENEVER the two keys land in a colliding
     // bin — a map-capacity-dependent transient that surfaced only
-    // under full-suite entry counts (round-13 lesson; ScratchSpec pins
-    // the nested shape directly).
+    // under full-suite entry counts (ScratchSpec pins the nested shape
+    // directly).
     val plain = copurchaseEdges(s, d)
     // Layout is an OPTIMIZATION, rows are the contract: if the
     // bucketed build or catalog lookup fails for any environmental
@@ -184,10 +230,9 @@ object Graph {
         val loc = new java.io.File(s"$warehouse/graft_graph.db/$name")
         if (loc.exists()) graft.Tables.deleteRecursively(loc)
         val nb = s.conf.get("spark.sql.shuffle.partitions").toInt
-        // (src, dst) ONLY (r16): outdeg repeated on every edge row was
-        // a third of the per-iteration scan bytes for a value that is
-        // a function of src — the rank table carries it instead
-        // (guide §2.3 narrower types / project before the join).
+        // (src, dst) ONLY: outdeg repeated on every edge row would be a
+        // third of the per-iteration scan bytes for a value that is a
+        // function of src — the rank table carries it instead.
         plain.select(col("src"), col("dst"))
           .repartition(nb, col("src"))
           .write.bucketBy(nb, "src").sortBy("src")
@@ -206,7 +251,7 @@ object Graph {
 
   /** One contribute step over a (src, dst) edge table joined to a
     * rank table carrying (node, pr, outdeg) — outdeg rides the O(V)
-    * rank side, not the O(E) edge rows (r16). Shared by the loop and
+    * rank side, not the O(E) edge rows. Shared by the loop and
     * the GraphSpec plan pin (which asserts the edge side of this join
     * arrives bucketed: no exchange, no sort). */
   private[graft] def prContribute(e2: org.apache.spark.sql.DataFrame,
@@ -226,42 +271,30 @@ object Graph {
     // The degree table is O(V) and invariant — its own scratch
     // artifact, so the count, the rank init and the final report read
     // 20k-row parquet instead of each re-running a distinct over the
-    // full O(E) edge table (r16: the stage profile showed 3 of the 6
-    // per-run edge scans were deg recomputations — guide §2.4).
+    // full O(E) edge table.
     val deg = Llm.Scratch.tableCoalesced(s,
         s"$scratchRoot/graph/copurchase_deg_${Llm.Scratch.key(d)}") {
-      // from the PLAIN artifact — the bucketed layout is (src, dst)
-      // only since the r16 narrow rewrite
+      // from the PLAIN artifact — the bucketed layout is (src, dst) only
       copurchaseEdges(s, d).select(col("src"), col("outdeg")).distinct()
     }
-    // Node count sizes every iteration's checkpoint write (the rank
-    // table is one row per node, invariant across iterations) — one
-    // cheap count over the scratch-backed artifact, reused 3×.
-    val nNodes = deg.count()
     val degN = deg.select(col("src").as("node"), col("outdeg"))
-    var ranks = deg.select(col("src").as("node"), lit(Scale).as("pr"),
-      col("outdeg"))
-    for (i <- 1 to Iters) {
+    val init = degN.select(col("node"), lit(Scale).as("pr"), col("outdeg"))
+    // Every iteration is checkpointed (one row per node): without that
+    // the lineage nests, and iteration N's plan RE-RUNS iterations
+    // 1..N−1 (measured 6 s → sub-second at sf0.1). Round 1's write is
+    // sized by the node count, one cheap count over the scratch-backed
+    // degree artifact.
+    val pr = fixpoint(s, "pr", d, init, deg.count()) { (ranks, _) =>
       // Re-attach outdeg to the new rank rows via the O(V) degree
       // artifact (broadcast at test scale): every dst is also a src
       // (symmetric distinct pairs), so the inner join keeps exactly
-      // the mass-receiving node set the r15 shape produced.
-      val next = prContribute(e2, ranks)
+      // the mass-receiving node set.
+      prContribute(e2, ranks)
         .select(col("dst").as("node"),
           (lit(Base) + expr("(85 * s) div 100")).as("pr"))
         .join(degN, "node")
-      // Materialize each iteration (one row per node) — without this
-      // the loop's lineage nests, and iteration N's plan RE-RUNS
-      // iterations 1..N−1 (measured 6 s → sub-second at sf0.1). Same
-      // checkpoint discipline as dedup_cluster's label propagation; on
-      // a cluster this is the per-iteration reliable checkpoint. Write
-      // tasks scale with the node count (r11 judge item #1: the old
-      // coalesce(1) was a parallelism-1 wall — ~200M rank rows at the
-      // 100× target funneled through ONE task every iteration).
-      val path = s"$scratchRoot/graph/pr_${Llm.Scratch.key(d)}_i$i"
-      ranks = ckpt(s, next, path, nNodes)
-    }
-    ranks
+    }() { (_, _, i) => i == Iters }
+    pr.state
       .select(col("node"), col("outdeg").as("n_co"), col("pr"))
       .orderBy(col("pr").desc, col("node"))
       .limit(20)
@@ -290,9 +323,8 @@ object Graph {
       .unionAll(und.select(col("pb").as("src"), col("pa").as("dst")))
     // deg and the degree-annotated edge table are invariant inputs to
     // every iteration AND the seed/count/init/final control reads —
-    // materialize once like the pagerank artifacts (r16: the stage
-    // profile showed the union+degree shuffle re-ran per consumer;
-    // guide §2.4).
+    // materialize once like the pagerank artifacts, so the union+degree
+    // shuffle does not re-run per consumer.
     val deg = Llm.Scratch.tableCoalesced(s,
         s"$scratchRoot/graph/ppr_deg_${Llm.Scratch.key(d)}") {
       e.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -303,23 +335,18 @@ object Graph {
     }
     val seed = deg.orderBy(col("outdeg").desc, col("src"))
       .limit(1).collect()(0).getLong(0)
-    // Node count for checkpoint-write sizing (invariant across
-    // iterations, same as graphPagerank).
-    val nNodes = deg.count()
-    var ranks = deg.select(col("src").as("node"),
+    val init = deg.select(col("src").as("node"),
       when(col("src") === seed, lit(Scale)).otherwise(lit(0L)).as("pr"))
-    for (i <- 1 to Iters) {
-      val next = e2.join(ranks, col("src") === col("node"))
+    val ppr = fixpoint(s, "ppr", d, init, deg.count()) { (ranks, _) =>
+      e2.join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("pr div outdeg").as("contrib"))
         .groupBy("dst")
         .agg(sum(col("contrib")).as("s"))
         .select(col("dst").as("node"),
           (when(col("dst") === seed, lit(Base)).otherwise(lit(0L)) +
             expr("(85 * s) div 100")).as("pr"))
-      val path = s"$scratchRoot/graph/ppr_${Llm.Scratch.key(d)}_i$i"
-      ranks = ckpt(s, next, path, nNodes)
-    }
-    ranks.join(deg, col("node") === col("src"))
+    }() { (_, _, i) => i == Iters }
+    ppr.state.join(deg, col("node") === col("src"))
       .where(col("pr") > 0)
       .select(col("node"), col("outdeg").as("n_co"), col("pr"))
       .orderBy(col("pr").desc, col("node"))
@@ -602,33 +629,25 @@ object Graph {
     * needed = graph diameter, a property of the data, not its size —
     * at 100 TB the loop is as deep as the longest item-family chain.
     * Per-round label materialization truncates lineage (the pagerank
-    * lesson); the changed-count is coordinator metadata (one long).
+    * lesson); the changed-label count rides the round's checkpoint
+    * write as an observed metric.
     * The oracle computes true components INDEPENDENTLY via a recursive
     * transitive closure — algorithm-level cross-validation, not a
     * re-run; GraphSpec adds a third implementation (driver union-find). */
   private def graphCc: Q = (s, d) => {
     val e = frequentEdges(s, d)
-    var labels = e.select(col("src").as("node")).distinct()
+    val init = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    // Label-table row count (one row per node, invariant across
-    // rounds) sizes every round's checkpoint write.
-    val nNodes = labels.count()
-    var changed = 1L
-    var i = 0
-    while (changed > 0) {
-      i += 1
+    // Round 1's write is sized by the node count (one row per node).
+    val cc = fixpoint(s, "cc", d, init, init.count()) { (labels, _) =>
       val prop = e.join(labels, col("src") === col("node"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-      val next = labels.join(prop, col("node") === col("dst"), "left")
+      labels.join(prop, col("node") === col("dst"), "left")
         .select(col("node"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
           (coalesce(col("nlbl"), col("lbl")) < col("lbl")).as("chg"))
-      val path = s"$scratchRoot/graph/cc_${Llm.Scratch.key(d)}_i$i"
-      val cur = ckpt(s, next, path, nNodes)
-      changed = cur.where(col("chg")).count()
-      labels = cur.select("node", "lbl")
-    }
-    labels.groupBy(col("lbl").as("component"))
+    }(count_if(col("chg")).as("changed")) { (_, cur, _) => cur.getLong(1) == 0 }
+    cc.state.groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(col("node")).as("id_digest"),
         max(col("node")).as("max_node"))
@@ -680,37 +699,21 @@ object Graph {
     val e = frequentEdges(s, d)
     val landmarks = e.select(col("src").as("node")).distinct()
       .orderBy("node").limit(8)
-    var dist = landmarks
+    val init = landmarks
       .select(col("node").as("lm"), col("node"), lit(0L).as("dd"))
-    var digest = (-1L, -1L)
-    var done = false
-    var i = 0
-    // Checkpoint-write sizing: the convergence digest already counts
-    // the state each round, so round i's write is sized by round i−1's
-    // count — one round stale, which sizes partitions fine (state grows
-    // by at most one frontier ring per round) and never gates
-    // correctness. Initial state is ≤ 8 landmark rows.
-    var stateRows = 8L
-    while (!done && i < 32) {
-      i += 1
-      val next = dist.join(e, dist("node") === e("src"))
+    // The digest is (rows, Σdd); 32 hops is the oracle's walk depth.
+    // coalesce: a VACUOUS graph (no c≥3 repeat pairs — the sf1
+    // uniform-draw degeneracy, SCALING §5) leaves dist empty and a
+    // bare sum returns NULL.
+    val close = fixpoint(s, "close", d, init, 8L) { (dist, _) =>
+      dist.join(e, dist("node") === e("src"))
         .select(col("lm"), col("dst").as("node"), (col("dd") + 1L).as("dd"))
         .unionAll(dist.select(col("lm"), col("node"), col("dd")))
         .groupBy("lm", "node").agg(min(col("dd")).as("dd"))
-      val path = s"$scratchRoot/graph/close_${Llm.Scratch.key(d)}_i$i"
-      val cur = ckpt(s, next, path, stateRows)
-      // coalesce: a VACUOUS graph (no c≥3 repeat pairs — the sf1
-      // uniform-draw degeneracy, SCALING §5) leaves dist empty and a
-      // bare sum returns NULL
-      val row = cur.agg(count(lit(1)),
-        coalesce(sum(col("dd")), lit(0L))).collect()(0)
-      val dg = (row.getLong(0), row.getLong(1))
-      done = dg == digest
-      digest = dg
-      stateRows = row.getLong(0)
-      dist = cur
+    }(coalesce(sum(col("dd")), lit(0L)).as("sum_d")) { (prev, cur, i) =>
+      i == 32 || cur == prev
     }
-    dist.groupBy("node")
+    close.state.groupBy("node")
       .agg(count(lit(1)).as("n_lm"), sum(col("dd")).as("sum_d"))
       .select(col("node"), col("n_lm"), col("sum_d"),
         when(col("sum_d") > 0L,
@@ -773,7 +776,7 @@ object Graph {
     * Shuffle key is the node id EVERY round (bucket the edges once on a
     * cluster and the expansion is exchange-free); the visited set is
     * materialized per round (lineage truncation, the pagerank lesson)
-    * and the frontier-empty test is coordinator metadata. Output is the
+    * and the frontier-empty test is its observed max hop. Output is the
     * per-hop profile (n_nodes, id_digest) — O(diameter) rows; nodes in
     * other components are correctly absent (the oracle's walk reaches
     * exactly the same set). */
@@ -782,52 +785,24 @@ object Graph {
     val e = und.select(col("pa").as("src"), col("pb").as("dst"))
       .unionAll(und.select(col("pb").as("src"), col("pa").as("dst")))
     val src0 = e.agg(min(col("src"))).head().getLong(0)
-    var dist = e.select(col("src").as("node")).distinct()
+    val init = e.select(col("src").as("node")).distinct()
       .where(col("node") === src0)
       .select(col("node"), lit(0L).as("hop"))
-    var frontier = dist
-    var i = 0
-    var more = true
-    // Unique run token (ADVICE r7): concurrent executions on the same
-    // dataset must not interleave overwrites of shared round paths;
-    // round i-1 is deleted once round i is committed, so scratch holds
-    // at most two rounds instead of the whole walk.
-    val run = runToken.incrementAndGet()
-    def roundPath(j: Int) =
-      s"$scratchRoot/graph/bfs_${Llm.Scratch.key(d)}_r${run}_i$j"
-    // Checkpoint-write sizing (one round stale, like graphCloseness:
-    // the visited set can grow by one frontier×degree ring between the
-    // estimate and the write — partition sizing, not correctness).
-    var visitedRows = 1L
-    while (more) {
-      i += 1
+    // Round i expands the hop i−1 frontier; the walk has converged
+    // when round i added no node at hop i.
+    val bfs = fixpoint(s, "bfs", d, init, 1L) { (dist, i) =>
       require(i <= bfsMaxHops,
         s"BFS still expanding after $bfsMaxHops hops — widen the oracle cap")
+      val frontier = dist.where(col("hop") === i - 1)
       val cand = e.join(frontier.select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
-      val next = cand.join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(i.toLong).as("hop"))
-      val cur = ckpt(s, dist.unionAll(next), roundPath(i), visitedRows)
-      frontier = cur.where(col("hop") === i)
-      // One aggregate yields both the new visited count (next round's
-      // write sizing) and the frontier-empty test.
-      val row = cur.agg(count(lit(1)),
-        sum(when(col("hop") === i, 1L).otherwise(0L))).collect()(0)
-      visitedRows = row.getLong(0)
-      more = !row.isNullAt(1) && row.getLong(1) > 0
-      dist = cur
-      if (i > 1)
-        graft.Tables.deleteRecursively(new java.io.File(roundPath(i - 1)))
-    }
-    // The hop histogram is O(hops) rows — localize it and free the
-    // final round dir immediately: the returned DataFrame never
-    // depends on scratch, so no later run can invalidate it.
-    val res = localize(s, dist.groupBy("hop")
+      dist.unionAll(cand.join(dist, Seq("node"), "left_anti")
+        .select(col("node"), lit(i.toLong).as("hop")))
+    }(max(col("hop")).as("max_hop")) { (_, cur, i) => cur.getLong(1) < i }
+    bfs.state.groupBy("hop")
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("id_digest"),
         min(col("node")).as("min_node"), max(col("node")).as("max_node"))
-      .orderBy("hop"))
-    graft.Tables.deleteRecursively(new java.io.File(roundPath(i)))
-    res
+      .orderBy("hop")
   }
 
   /** k-CORE decomposition (k=3) over the repeat co-purchase graph —
@@ -840,58 +815,34 @@ object Graph {
     * on a cluster and rounds are exchange-free). Round count is the
     * peel depth — a degeneracy property of the data, not its size.
     * Per-round materialization truncates lineage (the pagerank
-    * lesson); the removed-edge count is coordinator metadata. The
-    * oracle peels the IDENTICAL recurrence unrolled [[kcoreRounds]]
-    * deep (GraphSpec pins convergence within that depth, and a
-    * driver-side independent peeler agrees). 16 → 32 in r12: the
-    * generated sf0.01 graph peels 18 rounds deep (measured with an
-    * iterative DuckDB probe — thin support structures peel one layer
-    * per round), tripping the old cap; rounds past the fixpoint are
-    * IDENTITY in both engines (keep = all nodes once every degree
-    * ≥ k), so the wider unroll costs CTE boilerplate, never
+    * lesson); the peel has converged when a round's observed edge count
+    * equals the previous round's. The oracle peels the IDENTICAL
+    * recurrence unrolled [[kcoreRounds]] deep (GraphSpec pins
+    * convergence within that depth, and a driver-side independent
+    * peeler agrees). Thin support structures peel one layer per round,
+    * so the generated graphs peel up to ~18 rounds deep; rounds past
+    * the fixpoint are IDENTITY in both engines (keep = all nodes once
+    * every degree ≥ k), so a wide unroll costs CTE boilerplate, never
     * correctness. */
   private[graft] val kcoreRounds = 32
   private def graphKcore: Q = (s, d) => {
     val und = repeatCopurchaseEdges(s, d)
-    var edges = und.select(col("pa").as("src"), col("pb").as("dst"))
+    val init = und.select(col("pa").as("src"), col("pb").as("dst"))
       .unionAll(und.select(col("pb").as("src"), col("pa").as("dst")))
-    var nEdges = edges.count()
-    var removed = 1L
-    var i = 0
-    // Unique run token + delete-previous-round (ADVICE r7, the BFS
-    // discipline): no cross-execution path sharing, bounded scratch.
-    val run = runToken.incrementAndGet()
-    def roundPath(j: Int) =
-      s"$scratchRoot/graph/kcore_${Llm.Scratch.key(d)}_r${run}_i$j"
-    while (removed > 0) {
-      i += 1
+    // The previous round's edge count upper-bounds this round's rows
+    // (edges only leave the multiset), so it sizes the write: this is
+    // the largest state in the family, the whole surviving EDGE multiset.
+    val core = fixpoint(s, "kcore", d, init, init.count()) { (edges, i) =>
       require(i <= kcoreRounds,
         s"k-core peel exceeded $kcoreRounds rounds — widen the oracle unroll")
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= 3).select(col("src").as("node"))
-      val pruned = edges
+      edges
         .join(keep.select(col("node").as("src")), "src")
         .join(keep.select(col("node").as("dst")), "dst")
         .select("src", "dst")
-      // nEdges (the previous round's count) upper-bounds pruned's rows
-      // — edges only leave the multiset — so it sizes the write without
-      // an extra pre-count. This is the largest-state checkpoint in the
-      // family (the whole surviving EDGE multiset, up to kcoreRounds
-      // times), exactly where the old coalesce(1) hurt most.
-      val cur = ckpt(s, pruned, roundPath(i), nEdges)
-      val m = cur.count()
-      removed = nEdges - m
-      nEdges = m
-      edges = cur
-      if (i > 1)
-        graft.Tables.deleteRecursively(new java.io.File(roundPath(i - 1)))
-    }
-    // The k-core result is O(core nodes) — data-sized, so it stays a
-    // parquet-backed DataFrame (localizing would be a driver-side
-    // collect of node data). Its dir survives until a LATER run fully
-    // completes and replaces it (delete-on-replace, not reap-at-start).
-    if (i > 0) publishFinal(s"kcore_${Llm.Scratch.key(d)}", roundPath(i))
-    edges.groupBy(col("src").as("node"))
+    }() { (prev, cur, _) => cur.getLong(0) == prev.getLong(0) }
+    core.state.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
       .orderBy("node")
   }

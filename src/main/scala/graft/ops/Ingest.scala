@@ -260,11 +260,7 @@ object Ingest {
     * contents, a same-name collision, extension-less and empty files. */
   def buildFixture(): String = {
     val dir = new File(s"$scratchRoot/fixture")
-    def del(f: File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(): Unit
-    }
-    if (dir.exists()) del(dir)
+    deleteRecursively(dir)
     dir.mkdirs()
     def write(name: String, bytes: Array[Byte]): Unit = {
       val f = new File(dir, name)
@@ -784,14 +780,10 @@ object Ingest {
     s.sql("DROP TABLE IF EXISTS graft_sink.documents")
     // The in-memory catalog is per-session but the warehouse dir
     // persists; clear a stale location left by a previous process.
-    def del(f: File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(): Unit
-    }
     val warehouse = s.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
     val loc = new File(s"$warehouse/graft_sink.db/documents")
-    if (loc.exists()) del(loc)
+    deleteRecursively(loc)
     t(s, d, "documents")
       .write.mode("overwrite").format("parquet")
       .saveAsTable("graft_sink.documents")

@@ -569,14 +569,14 @@ object Llm {
     * bound the component diameter reachable (near-dup clusters are
     * shallow in practice — every member is similar to the pivot).
     * Scale shape: per round one edges⋈labels join + one min-aggregate,
-    * the standard iterative-dataflow component algorithm (at cluster
-    * scale each round would localCheckpoint to cut lineage).
+    * the standard iterative-dataflow component algorithm; each round is
+    * checkpointed through [[Graph.fixpoint]] to cut lineage.
     * Representative = lowest doc_id of the cluster (keep-lowest policy,
     * consistent with dedup_exact / dedup_minhash). */
   private def dedupCluster: Q = (s, d) => {
-    // Upper bound only — the sum-convergence early exit below stops at
-    // actual-diameter + 1 rounds, so a generous bound costs nothing on
-    // converged corpora while covering long chains.
+    // Upper bound only — the loop stops at the first round that lowers
+    // no label (actual diameter + 1 rounds), so a generous bound costs
+    // nothing on converged corpora while covering long chains.
     val rounds = 16
     val sigT = minhashSigTable(s, d)
     val pairs = minhashPairsTable(s, d, sigT)
@@ -590,44 +590,33 @@ object Llm {
     val edges = pairs
       .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .toDF("src", "dst")
-    val labelsPath = s"$scratchRoot/minhash_labels/${Scratch.key(d)}"
     // Round 0 needs no materialization of its own: it is a pure
-    // projection of the signature scratch parquet, so each round-1 read
-    // re-derives it for free instead of paying a write job.
-    var labels = sigT.select(col("doc_id"), col("doc_id").as("label"))
-    // Early exit: min-propagation strictly decreases sum(label) every
-    // round until converged, so an unchanged sum means done — the
-    // common no-near-dups corpus stops after one round instead of
-    // paying all `rounds` shuffle stages. The sum rides the round's
-    // write job as an `Observation` metric (batch `observe()`), so
-    // convergence detection costs zero extra jobs per round.
-    var prevSum = labels.agg(sum(col("label"))).head.getLong(0)
-    var converged = false
-    var r = 0
-    while (r < rounds && !converged) {
-      r += 1
+    // projection of the signature scratch parquet, so round 1 re-derives
+    // it for free instead of paying a write job.
+    val init = sigT.select(col("doc_id"), col("doc_id").as("label"))
+    // Early exit: the common no-near-dups corpus stops after one round
+    // instead of paying all `rounds` shuffle stages. Round 1's write is
+    // sized by the document count, read from the signature footers.
+    val cl = Graph.fixpoint(s, "cluster", d, init, parquetRows(s, sigT)) { (labels, _) =>
       val prop = edges
         .join(labels.select(col("doc_id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("doc_id"))
         .agg(min(col("label")).as("nlabel"))
-      val obs = org.apache.spark.sql.Observation(s"labels_r$r")
       labels.join(prop, Seq("doc_id"), "left")
         .select(col("doc_id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .observe(obs, sum(col("label")).as("label_sum"))
-        .write.mode("overwrite").parquet(labelsPath + s"/$r")
-      labels = s.read.parquet(labelsPath + s"/$r")
-      val sumNow = obs.get("label_sum").asInstanceOf[Long]
-      converged = sumNow == prevSum
-      prevSum = sumNow
+          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
+          (coalesce(col("nlabel"), col("label")) < col("label")).as("chg"))
+    }(count_if(col("chg")).as("changed")) { (_, cur, r) =>
+      r == rounds || cur.getLong(1) == 0
     }
     // A component with diameter > `rounds` would exit unconverged and be
     // silently split into several clusters — surface it on the error
-    // stream so mis-clustering is detectable (ADVICE r2).
-    if (!converged)
+    // stream so mis-clustering is detectable.
+    if (cl.stats.getLong(1) > 0)
       graft.GraftLog.error(
         s"dedup_cluster: label propagation NOT converged after $rounds " +
           s"rounds on $d — components wider than $rounds hops are split")
+    val labels = cl.state
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("label"))
       .select(col("doc_id"), col("label").as("cluster"), col("cluster_size"),

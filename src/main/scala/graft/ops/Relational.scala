@@ -2016,14 +2016,10 @@ object Relational {
       if (!present) Llm.Scratch.timedBuild {
         bucketedBuiltFor = null // a failed rebuild must not leave a memo
         s.sql("CREATE DATABASE IF NOT EXISTS graft_bucketed")
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
         Seq("orders_b", "customer_b").foreach { tb =>
           s.sql(s"DROP TABLE IF EXISTS graft_bucketed.$tb")
           val loc = new java.io.File(s"$warehouse/graft_bucketed.db/$tb")
-          if (loc.exists()) del(loc)
+          deleteRecursively(loc)
         }
         t(s, d, "orders")
           .write.bucketBy(buckets, "o_custkey").sortBy("o_custkey")

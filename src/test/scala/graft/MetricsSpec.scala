@@ -66,6 +66,17 @@ class MetricsSpec extends AnyFunSuite {
     assert(s.stream.exists(_.triggers >= 1))
   }
 
+  test("plan fingerprints print unknown stage statistics as ?, not Long.MaxValue") {
+    val rs = withMetrics { m =>
+      Seq(m.measure(spark.range(0, 100, 1, 4).groupBy((col("id") % 3).as("k")).count()),
+        m.measure(streamed()))
+    }
+    assert(rs.forall(_.ok))
+    // the final (result) stage has no runtime statistics yet
+    assert(rs.head.plan.contains(":r?:b?"), rs.head.plan)
+    assert(rs.forall(!_.plan.contains(Long.MaxValue.toString)), rs.map(_.plan))
+  }
+
   test("back-to-back windows do not leak counters into each other") {
     val (a1, b, a2) = withMetrics { m =>
       val a1 = m.measure(streamed())

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ADVICE). This spec fails the suite if the Python RISK_KEYS caps
   * drift from the Scala constants they mirror, if session setup grows
   * a second owner next to GraftSession and GraftExtensions, if a
-  * foreachBatch loop appears outside Streaming.drain, or if a listener
-  * is registered outside graft.Metrics.
+  * foreachBatch loop appears outside Streaming.drain, if a round
+  * checkpoint is written outside Graph.fixpoint, or if a listener is
+  * registered outside graft.Metrics.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -77,6 +78,16 @@ class ToolsLockstepSpec extends AnyFunSuite {
     val loops = hits("src/main/scala/graft/ops", ".foreachBatch")
     assert(loops.size === 1, "run micro-batch steps through Streaming.drain:\n" +
       loops.mkString("\n"))
+  }
+
+  test("iterative loops have one owner: Graph.fixpoint") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    // ckpt's definition and fixpoint's one call; every round loop
+    // must be a step function handed to fixpoint
+    val uses = hits("src/main/scala/graft/ops", "ckpt(")
+    assert(uses.size === 2 && uses.count(_.contains("def ckpt(")) === 1,
+      "checkpoint rounds through Graph.fixpoint:\n" + uses.mkString("\n"))
   }
 
   test("listeners have one owner: graft.Metrics") {
