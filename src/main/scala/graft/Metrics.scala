@@ -117,7 +117,7 @@ final class Metrics private (spark: SparkSession) {
     drain()
     synchronized { w = new Window }
     val gc0 = driverGcMs()
-    val scratch0 = ops.Llm.Scratch.buildMs.get
+    val scratch0 = Scratch.buildMs.get
     val t0 = System.nanoTime()
     var buildNs = -1L
     val failure =
@@ -137,7 +137,7 @@ final class Metrics private (spark: SparkSession) {
       Record(wallS = wallNs / 1e9, buildMs = (if (buildNs < 0) wallNs else buildNs) / 1000000,
         catalystMs = w.catalystMs, jobs = w.jobs,
         driverMs = math.max(0L, wallNs / 1000000 - span), jobCoverMs = cover, gapMs = span - cover,
-        scratchMs = ops.Llm.Scratch.buildMs.get - scratch0, driverGcMs = driverGcMs() - gc0,
+        scratchMs = Scratch.buildMs.get - scratch0, driverGcMs = driverGcMs() - gc0,
         heapMb = (rt.totalMemory() - rt.freeMemory()) >> 20,
         stages = w.stages.values.toSeq,
         stream = Option.when(w.queries > 0 || w.triggers > 0)(
@@ -198,7 +198,7 @@ object Metrics {
     *    flight; gap_ms: the rest of the span, the machinery between jobs
     *    (trigger waits, micro-batch scheduling). wall = driver_ms +
     *    job_cover_ms + gap_ms.
-    *  - scratch_ms: time spent in one-time `Llm.Scratch` artifact builds.
+    *  - scratch_ms: time spent in one-time `graft.Scratch` artifact builds.
     *  - driver_gc_ms: driver-JVM GC time; heap_mb: used heap at the end.
     *  - stream: present when a streaming query started or reported
     *    progress in the window.

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Scratch
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,7 +32,7 @@ import scala.concurrent.duration.Duration
   *   you'd cap per-key fanout before the join (same df-cap discipline
   *   as dedup_ngram). The built graph is a reusable artifact shared by
   *   every downstream algorithm, so it is checkpointed once per
-  *   (process, input) through [[Llm.Scratch]] like the other one-time
+  *   (process, input) through [[graft.Scratch]] like the other one-time
   *   layout/model artifacts — the measured operator is the iteration.
   * - Each PageRank iteration is contribute (join ranks⋈edges on src,
   *   shuffle on dst) + combine (sum per dst) — partial aggregation is
@@ -141,9 +142,9 @@ object Graph {
   private[graft] def fixpoint(s: SparkSession, tag: String, d: String,
       init: DataFrame, rows0: Long)(step: (DataFrame, Int) => DataFrame)(
       stats: Column*)(stop: (Row, Row, Int) => Boolean): Fixpoint = {
-    val owner = s"${tag}_${Llm.Scratch.key(d)}"
+    val owner = Scratch.path(s"graph/$tag", d)
     val started = runToken.incrementAndGet()
-    val run = s"$scratchRoot/graph/${owner}_r$started"
+    val run = s"${owner}_r$started"
     def drop(i: Int): Unit =
       graft.Tables.deleteRecursively(new java.io.File(s"${run}_i$i"))
     var state = init
@@ -171,7 +172,7 @@ object Graph {
     * (see class doc). */
   private[graft] def copurchaseEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Llm.Scratch.table(s, s"$scratchRoot/graph/copurchase_${Llm.Scratch.key(d)}") {
+    Scratch.table(s, Scratch.path("graph/copurchase", d)) {
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val e = li.as("a").join(li.as("b"),
@@ -200,19 +201,12 @@ object Graph {
     * reduces them to ≤ |dst-per-partition| rows map-side. At 100 TB
     * the bucket count scales with the edge volume (here it tracks the
     * session's shuffle parallelism); the one-time layout write is the
-    * same O(E) pass the Scratch build already paid. */
+    * same O(E) pass the plain artifact's build already paid. */
   private[graft] def copurchaseEdgesBucketed(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    val name = s"copurchase_b_${Llm.Scratch.key(d)}"
-    val tbl = s"graft_graph.$name"
-    // Resolve the PLAIN artifact BEFORE entering the once-latch: both
-    // latches live in one ConcurrentHashMap, and a Scratch call nested
-    // inside another's computeIfAbsent throws IllegalStateException
-    // ("Recursive update") WHENEVER the two keys land in a colliding
-    // bin — a map-capacity-dependent transient that surfaced only
-    // under full-suite entry counts (ScratchSpec pins the nested shape
-    // directly).
+    // The plain artifact is the layout's input and the fallback's
+    // result; it is a separate store entry, built (once) first.
     val plain = copurchaseEdges(s, d)
     // Layout is an OPTIMIZATION, rows are the contract: if the
     // bucketed build or catalog lookup fails for any environmental
@@ -221,31 +215,22 @@ object Graph {
     // the query — the GraphSpec plan pin still fails the build on a
     // persistent breakage.
     try {
-      Llm.Scratch.once(
-          s"$scratchRoot/graph/copurchase_bkt_${Llm.Scratch.key(d)}") {
-        s.sql("CREATE DATABASE IF NOT EXISTS graft_graph")
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val warehouse = s.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        val loc = new java.io.File(s"$warehouse/graft_graph.db/$name")
-        if (loc.exists()) graft.Tables.deleteRecursively(loc)
-        val nb = s.conf.get("spark.sql.shuffle.partitions").toInt
-        // (src, dst) ONLY: outdeg repeated on every edge row would be a
-        // third of the per-iteration scan bytes for a value that is a
-        // function of src — the rank table carries it instead.
+      val nb = s.conf.get("spark.sql.shuffle.partitions").toInt
+      // (src, dst) ONLY: outdeg repeated on every edge row would be a
+      // third of the per-iteration scan bytes for a value that is a
+      // function of src — the rank table carries it instead.
+      Scratch.bucketed(s, "graft_graph", "copurchase_b", d) {
         plain.select(col("src"), col("dst"))
           .repartition(nb, col("src"))
           .write.bucketBy(nb, "src").sortBy("src")
-          .saveAsTable(tbl)
       }
-      s.table(tbl)
     } catch {
       case e: Throwable =>
         System.err.println(
-          s"[graft] bucketed edge layout unavailable ($tbl): " +
+          "[graft] bucketed edge layout graft_graph.copurchase_b unavailable: " +
             s"${e.getClass.getSimpleName}: ${e.getMessage} — " +
             "falling back to the plain edge artifact")
-        copurchaseEdges(s, d).select(col("src"), col("dst"))
+        plain.select(col("src"), col("dst"))
     }
   }
 
@@ -272,8 +257,7 @@ object Graph {
     // artifact, so the count, the rank init and the final report read
     // 20k-row parquet instead of each re-running a distinct over the
     // full O(E) edge table.
-    val deg = Llm.Scratch.tableCoalesced(s,
-        s"$scratchRoot/graph/copurchase_deg_${Llm.Scratch.key(d)}") {
+    val deg = Scratch.tableCoalesced(s, Scratch.path("graph/copurchase_deg", d)) {
       // from the PLAIN artifact — the bucketed layout is (src, dst) only
       copurchaseEdges(s, d).select(col("src"), col("outdeg")).distinct()
     }
@@ -325,12 +309,10 @@ object Graph {
     // every iteration AND the seed/count/init/final control reads —
     // materialize once like the pagerank artifacts, so the union+degree
     // shuffle does not re-run per consumer.
-    val deg = Llm.Scratch.tableCoalesced(s,
-        s"$scratchRoot/graph/ppr_deg_${Llm.Scratch.key(d)}") {
+    val deg = Scratch.tableCoalesced(s, Scratch.path("graph/ppr_deg", d)) {
       e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     }
-    val e2 = Llm.Scratch.tableCoalesced(s,
-        s"$scratchRoot/graph/ppr_e2_${Llm.Scratch.key(d)}") {
+    val e2 = Scratch.tableCoalesced(s, Scratch.path("graph/ppr_e2", d)) {
       e.join(deg, "src")
     }
     val seed = deg.orderBy(col("outdeg").desc, col("src"))
@@ -413,7 +395,7 @@ object Graph {
   private[graft] def repeatCopurchaseEdges(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Llm.Scratch.tableCoalesced(s, s"$scratchRoot/graph/repeat_${Llm.Scratch.key(d)}") {
+    Scratch.tableCoalesced(s, Scratch.path("graph/repeat", d)) {
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a").join(li.as("b"),
@@ -526,7 +508,7 @@ object Graph {
   private[graft] def weightedRepeatEdges(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Llm.Scratch.tableCoalesced(s, s"$scratchRoot/graph/wrepeat_${Llm.Scratch.key(d)}") {
+    Scratch.tableCoalesced(s, Scratch.path("graph/wrepeat", d)) {
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a").join(li.as("b"),
@@ -605,7 +587,7 @@ object Graph {
     * like [[copurchaseEdges]]. */
   private[graft] def frequentEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Llm.Scratch.tableCoalesced(s, s"$scratchRoot/graph/freqedges_${Llm.Scratch.key(d)}") {
+    Scratch.tableCoalesced(s, Scratch.path("graph/freqedges", d)) {
       val li = t(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()

@@ -3,6 +3,7 @@ package graft.ops
 import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.Scratch
 import graft.Tables._
 import graft.expr.{Sanitize, ZipEntries}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -58,9 +59,9 @@ object Ingest {
     * the file-count drop is pinned in IngestSpec. */
   private val compactTargetBytes = 8L << 20
   private[graft] def compactSmallDir(d: String): String =
-    s"$scratchRoot/compact/small_${Llm.Scratch.key(d)}"
+    Scratch.path("compact/small", d)
   private[graft] def compactOutDir(d: String): String =
-    s"$scratchRoot/compact/out_${Llm.Scratch.key(d)}"
+    Scratch.path("compact/out", d)
   private def sinkCompact: Q = (s, d) => {
     val smallDir = compactSmallDir(d)
     // outDir keyed like smallDir — a shared out dir would let two
@@ -70,7 +71,7 @@ object Ingest {
     // emissions already on disk), not the operator under test — build
     // it once per (process, input dir) through the Scratch registry so
     // repeated executions measure the COMPACTION, not fixture creation.
-    Llm.Scratch.table(s, smallDir) {
+    Scratch.table(s, smallDir) {
       t(s, d, "lineitem").repartition(64)
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -776,17 +777,9 @@ object Ingest {
   private def catalogOps: Q = (s, d) => {
     // warehouse dir is a static conf — set in the session builders
     // (Verify/Bench/Explain/tests point it at scratch).
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_sink")
-    s.sql("DROP TABLE IF EXISTS graft_sink.documents")
-    // The in-memory catalog is per-session but the warehouse dir
-    // persists; clear a stale location left by a previous process.
-    val warehouse = s.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val loc = new File(s"$warehouse/graft_sink.db/documents")
-    deleteRecursively(loc)
-    t(s, d, "documents")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable("graft_sink.documents")
+    Scratch.replaceTable(s, "graft_sink", "documents") {
+      t(s, d, "documents").write.mode("overwrite").format("parquet")
+    }
     // listTables also returns session temp views (e.g. streaming memory
     // sinks) — count only persistent catalog tables.
     val tables = s.catalog.listTables("graft_sink")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftSession.withConf
+import graft.Scratch
 import graft.Tables._
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object Lake {
     * skipped. LakeSpec pins that files ARE skipped. */
   private[graft] val manifestLoHi = (1000L, 3000L)
   private[graft] def manifestLayoutPath(d: String): String =
-    s"$scratchRoot/manifest_layout/${Llm.Scratch.key(d)}"
+    Scratch.path("manifest_layout", d)
   private[graft] def manifestSelect(s: org.apache.spark.sql.SparkSession,
       d: String): (Int, Seq[String]) = {
     // The clustered layout is a one-time maintenance artifact (you
@@ -43,7 +44,7 @@ object Lake {
     // minhash family uses, so repeated queries measure the MANIFEST
     // path (footer stats + pruned read), not the layout rewrite.
     val out = manifestLayoutPath(d)
-    Llm.Scratch.table(s, out) {
+    Scratch.table(s, out) {
       t(s, d, "lineitem")
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
@@ -226,14 +227,15 @@ object Lake {
     * (files never relocate), and concurrent writers serialize on the
     * single HEAD swap exactly as in Iceberg's optimistic protocol. */
   private[graft] def wapBase(d: String): String =
-    s"$scratchRoot/wap/${Llm.Scratch.key(d)}"
+    Scratch.path("wap", d)
 
-  /** Run the full 3-commit WAP protocol from scratch; idempotent
-    * (fixed content per input dir), so every execution re-measures the
-    * protocol like sink_scd2. Returns the base dir. */
+  /** Run the full 3-commit WAP protocol from scratch into `base`;
+    * idempotent (fixed content per input dir), so every execution
+    * re-measures the protocol like sink_scd2. Each key runs it in a
+    * directory of its own, so one key's rebuild never deletes the
+    * tables another key reads. Returns `base`. */
   private[graft] def wapRun(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val base = wapBase(d)
+      d: String, base: String): String = {
     val bf = new java.io.File(base)
     if (bf.exists()) graft.Tables.deleteRecursively(bf)
     new java.io.File(s"$base/manifests").mkdirs()
@@ -288,7 +290,7 @@ object Lake {
   }
 
   private def sinkWap: Q = (s, d) => {
-    val base = wapRun(s, d)
+    val base = wapRun(s, d, wapBase(d))
     s.read.parquet(wapResolve(base, None): _*)
       .orderBy("o_orderkey")
   }
@@ -296,11 +298,12 @@ object Lake {
   /** Time travel over the WAP manifests: manifests are immutable, so
     * reading AS OF v1 is just resolving the v1 file list — no data
     * copies, no log replay. The protocol run is a once-per-process
-    * precondition here (sink_wap is the key that measures the commit
-    * path itself). */
+    * precondition here, in its own directory (sink_wap is the key that
+    * measures the commit path itself, rebuilding on every call). */
   private def scanSnapshot: Q = (s, d) => {
-    Llm.Scratch.once(wapBase(d))(wapRun(s, d): Unit)
-    s.read.parquet(wapResolve(wapBase(d), Some(1)): _*)
+    val base = Scratch.path("wap_snapshot", d)
+    Scratch.once(base)(wapRun(s, d, base): Unit)
+    s.read.parquet(wapResolve(base, Some(1)): _*)
       .orderBy("o_orderkey")
   }
 
@@ -315,7 +318,7 @@ object Lake {
     * nothing data-sized is read. Emitted paths are RELATIVE to the
     * table root (scratch roots are per-process). */
   private def sinkVacuum: Q = (s, d) => {
-    val base = wapRun(s, d)
+    val base = wapRun(s, d, Scratch.path("wap_vacuum", d))
     val referenced = wapResolve(base, None).toSet
     val filesRoot = new java.io.File(s"$base/files")
     val rows = filesRoot.listFiles().filter(_.isDirectory).sortBy(_.getName)
@@ -381,7 +384,7 @@ object Lake {
     * Audit: per-year totals — 1995 carries the +1 restatement, other
     * years prove their survival. */
   private def sinkOverwriteDynamic: Q = (s, d) => {
-    val base = s"$scratchRoot/dynover/orders_${Llm.Scratch.key(d)}"
+    val base = Scratch.path("dynover/orders", d)
     val o = t(s, d, "orders")
       .select(col("o_orderkey"), col("o_totalprice"),
         year(col("o_orderdate")).as("yr"))
@@ -389,7 +392,7 @@ object Lake {
     // exists before any restatement) — build once per (process, input);
     // the measured operator is the dynamic overwrite below, which is
     // idempotent (same restated content every execution).
-    Llm.Scratch.once(base) {
+    Scratch.once(base) {
       o.write.mode("overwrite").partitionBy("yr").parquet(base)
     }
     val restated = o.where(col("yr") === 1995)
@@ -459,8 +462,7 @@ object Lake {
     // The standing MV (yesterday's snapshot) is the PRECONDITION —
     // built once per (process, input); the measured operator is the
     // delta aggregation + merge below.
-    val mv0 = Llm.Scratch.table(s,
-      s"$scratchRoot/mv/orders_by_yr_${Llm.Scratch.key(d)}") {
+    val mv0 = Scratch.table(s, Scratch.path("mv/orders_by_yr", d)) {
       o.groupBy("yr")
         .agg(count(lit(1)).as("n"), sum(dec(col("o_totalprice"))).as("tot"))
     }
@@ -500,8 +502,7 @@ object Lake {
       a.join(b, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("c_custkey"),
           col("c_mktsegment"), col("cents"))
-    val mv0 = Llm.Scratch.table(s,
-      s"$scratchRoot/mv/join_${Llm.Scratch.key(d)}")(j(o0, c0))
+    val mv0 = Scratch.table(s, Scratch.path("mv/join", d))(j(o0, c0))
     val delta = j(broadcast(dO), c0)
       .unionByName(j(o0, broadcast(dC)))
       .unionByName(j(broadcast(dO), broadcast(dC)))
@@ -530,8 +531,8 @@ object Lake {
         round(sum(dec(col("l_extendedprice"))), 2).cast("double")
           .as("sum_price"),
         count(lit(1)).as("n"))
-    val path = s"$scratchRoot/mv/pricing_${Llm.Scratch.key(d)}"
-    val mv = Llm.Scratch.table(s, path)(define)
+    val path = Scratch.path("mv/pricing", d)
+    val mv = Scratch.table(s, path)(define)
     graft.plans.MvCatalog.register(define, mv)
     withConf(s, "spark.graft.mv.rewrite" -> "true") {
       val q = define.orderBy("l_returnflag", "l_linestatus")
@@ -566,8 +567,8 @@ object Lake {
       .agg(sum(cents(col("l_quantity"))).as("qty_c"),
         max(cents(col("l_extendedprice"))).as("max_price_c"),
         count(lit(1)).as("n"))
-    val path = s"$scratchRoot/mv/rollup_${Llm.Scratch.key(d)}"
-    val mv = Llm.Scratch.table(s, path)(define)
+    val path = Scratch.path("mv/rollup", d)
+    val mv = Scratch.table(s, path)(define)
     graft.plans.MvCatalog.register(define, mv)
     withConf(s, "spark.graft.mv.rewrite" -> "true") {
       val q = t(s, d, "lineitem")
@@ -872,21 +873,14 @@ object Lake {
     * valid shards' rows — which hold the full table, so the oracle is
     * the plain aggregate over the source. */
   private def scanCorruptSkip: Q = (s, d) => {
-    val out = s"$scratchRoot/formats/corrupt_skip_${Llm.Scratch.key(d)}"
-    // Scratch.once + build-to-temp + atomic rename (ADVICE r7): a
-    // crashed or concurrent partial build must never be observable as
-    // a complete fixture — the rename is the only commit point.
-    Llm.Scratch.once(out) {
-      val tmp = s"$out.build"
+    // The junk file is planted before the commit, so the fixture is
+    // never readable without it.
+    val out = Scratch.committed(Scratch.path("formats/corrupt_skip", d)) { tmp =>
       t(s, d, "documents").select("doc_id", "lang", "n_chars")
         .repartition(4).write.mode("overwrite").parquet(tmp)
       java.nio.file.Files.write(
         new java.io.File(tmp, "part-99999-junk.parquet").toPath,
         Array.fill[Byte](4096)(0x5a))
-      graft.Tables.deleteRecursively(new java.io.File(out))
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(out),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     s.read.option("ignoreCorruptFiles", "true").parquet(out)
       .groupBy("lang")
@@ -946,16 +940,10 @@ object Lake {
     * driver collect. */
   private[graft] def buildAvroFixture(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val out = s"$scratchRoot/formats/documents_avro_${Llm.Scratch.key(d)}"
-    // Scratch.once + build-to-temp + atomic rename (ADVICE r7): the
-    // executor-side container writers target the temp dir; the rename
-    // after the job commits is the only point the fixture becomes
-    // visible, so a half-written build can never be read.
-    Llm.Scratch.once(out) {
-      val tmp = s"$out.build"
-      val dir = new java.io.File(tmp)
-      graft.Tables.deleteRecursively(dir)
-      dir.mkdirs()
+    // The executor-side container writers target the store's temp
+    // dir; the commit after the job is the only point the fixture
+    // becomes visible.
+    Scratch.committed(Scratch.path("formats/documents_avro", d)) { tmp =>
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("text"))
@@ -984,12 +972,7 @@ object Lake {
           }
           w.close()
         }
-      graft.Tables.deleteRecursively(new java.io.File(out))
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(out),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
-    out
   }
 
   /** Avro container scan — the ROW-interchange format next to the

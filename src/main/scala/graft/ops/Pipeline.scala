@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Scratch
 import graft.Tables._
 import graft.ops.Llm.{dot, norm, duckCosOf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1209,8 +1210,7 @@ object Pipeline {
   private def pqCodebookCached(s: SparkSession, d: String, tag: String,
       sv: => DataFrame): Seq[(Long, Int, Seq[Long])] = {
     import s.implicits._
-    val t = Llm.Scratch.table(s,
-      s"$scratchRoot/ml/pq_cb_${tag}_${Llm.Scratch.key(d)}") {
+    val t = Scratch.table(s, Scratch.path(s"ml/pq_cb_$tag", d)) {
       pqTrainCodebook(s, sv).toDF("cid", "sub", "cv")
     }
     t.collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
@@ -1341,12 +1341,10 @@ object Pipeline {
     // once when the index is built, reused by every query) — they
     // materialize like any index, which also gives the later
     // cells⋈probes self-join clean independent lineage.
-    val cells = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/ivfpq_cells_${Llm.Scratch.key(d)}") {
+    val cells = Scratch.table(s, Scratch.path("ml/ivfpq_cells", d)) {
       e.select(col("vec_id"), element_at(scored, 1)("cid").as("cell"))
     }
-    val probes = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/ivfpq_probes_${Llm.Scratch.key(d)}") {
+    val probes = Scratch.table(s, Scratch.path("ml/ivfpq_probes", d)) {
       e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"),
           explode(transform(slice(scored, 1, ivfNprobe), x => x("cid")))
@@ -2257,8 +2255,7 @@ object Pipeline {
     val eps = 175L
     def jit(axis: String) = pmod(conv(substring(md5(concat_ws("_",
       lit(axis), col("id"))), 1, 8), 16, 10).cast("long"), lit(2000L))
-    val pts = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_pts_${Llm.Scratch.key(d)}") {
+    val pts = Scratch.table(s, Scratch.path("ml/dbscan_pts", d)) {
       t(s, d, "customer").select(col("c_custkey").as("id"))
         .withColumn("x", pmod(col("id"), lit(5)) * 10000L + jit("x"))
         .withColumn("y", jit("y"))
@@ -2273,8 +2270,7 @@ object Pipeline {
           .as("c"))
       .select(col("id2"), col("x2"), col("y2"),
         col("c.cx").as("cx"), col("c.cy").as("cy"))
-    val nbr = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_nbr_${Llm.Scratch.key(d)}") {
+    val nbr = Scratch.table(s, Scratch.path("ml/dbscan_nbr", d)) {
       build.join(probe, Seq("cx", "cy"))
         .where(col("id") =!= col("id2") &&
           greatest(abs(col("x") - col("x2")),
@@ -2284,13 +2280,11 @@ object Pipeline {
     // core and the core-core edge list feed EVERY propagation round
     // (and the border pass): materialize once, like nbr, so rounds
     // re-read a parquet instead of re-running the degree aggregate.
-    val core = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_core_${Llm.Scratch.key(d)}") {
+    val core = Scratch.table(s, Scratch.path("ml/dbscan_core", d)) {
       nbr.groupBy("id").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= 4).select("id")
     }
-    val ce = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_ce_${Llm.Scratch.key(d)}") {
+    val ce = Scratch.table(s, Scratch.path("ml/dbscan_ce", d)) {
       nbr.join(core, Seq("id"))
         .join(core.select(col("id").as("id2")), Seq("id2"))
     }
@@ -2306,12 +2300,10 @@ object Pipeline {
     // component's min core id.
     val cellOf = pts.select(col("id"),
       expr(s"x div $eps").as("kx"), expr(s"y div $eps").as("ky"))
-    val coreCell = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_corecell_${Llm.Scratch.key(d)}") {
+    val coreCell = Scratch.table(s, Scratch.path("ml/dbscan_corecell", d)) {
       core.join(cellOf, Seq("id"))
     }
-    val cellEdges = Llm.Scratch.table(s,
-        s"$scratchRoot/ml/dbscan_celledges_${Llm.Scratch.key(d)}") {
+    val cellEdges = Scratch.table(s, Scratch.path("ml/dbscan_celledges", d)) {
       ce.join(coreCell.select(col("id"), col("kx").as("ax"),
           col("ky").as("ay")), Seq("id"))
         .join(coreCell.select(col("id").as("id2"), col("kx").as("bx"),
@@ -2329,8 +2321,7 @@ object Pipeline {
     // still certifies per-component constancy because hop ⊇ E). Size
     // stays cell-bounded: ≤ (2·8+1)² = 289 neighbors per occupied
     // cell. One-time scratch artifact, like nbr/cellEdges.
-    val hop = Llm.Scratch.tableCoalesced(s,
-        s"$scratchRoot/ml/dbscan_hop8_${Llm.Scratch.key(d)}") {
+    val hop = Scratch.tableCoalesced(s, Scratch.path("ml/dbscan_hop8", d)) {
       def sq(e: DataFrame): DataFrame = e.as("p")
         .join(e.as("q"),
           col("p.bx") === col("q.ax") && col("p.by") === col("q.ay"))
@@ -2516,8 +2507,7 @@ object Pipeline {
     // build keeps its single streaming pass and the query reads only
     // the ≤128-row sk table (PlanSpec pins both plans).
     val distSrc =
-      if (audit) Llm.Scratch.table(s,
-        s"$scratchRoot/theta_dist/${Llm.Scratch.key(d)}")(dist)
+      if (audit) Scratch.table(s, Scratch.path("theta_dist", d))(dist)
       else dist
     // Train-once artifact (the minhashSigTable discipline): the raw
     // sketch build is the ONLY pass over the corpus — materialized to
@@ -2525,8 +2515,7 @@ object Pipeline {
     // (each references sk twice) read 64-long parquet, not the corpus.
     // Without it each branch re-derived the full distinct-shingle
     // sub-DAG: 7 corpus scans where 100 TB affords exactly one.
-    val sk = Llm.Scratch.table(s,
-        s"$scratchRoot/theta_sk/${Llm.Scratch.key(d)}") {
+    val sk = Scratch.table(s, Scratch.path("theta_sk", d)) {
       val hashed = distSrc.select(col("corpus"),
         conv(substring(md5(col("g")), 1, 13), 16, 10).cast("long").as("h"))
       hashed.groupBy("corpus")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftSession.withConf
+import graft.Scratch
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -288,8 +289,8 @@ object Streaming {
     * dir. */
   private[graft] def staged(name: String, d: String, files: Int)(
       df: => DataFrame): String = {
-    val src = s"$scratchRoot/${name}_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = Scratch.path(s"${name}_src/f$files", d)
+    Scratch.once(src) {
       df.repartition(files).write.mode("overwrite").parquet(src)
       for (f <- new java.io.File(src).listFiles() if f.getName.startsWith("part-"))
         setBatchMtime(f.toPath, f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt)
@@ -375,7 +376,7 @@ object Streaming {
     * increasing mtimes — the file source drains by modification time,
     * so batches arrive in doc_id order. */
   private def stageIdOrdered(dir: String, files: Int, df: => DataFrame): Unit =
-    Llm.Scratch.once(dir) {
+    Scratch.once(dir) {
       val w = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
       val bucketed = df.withColumn("bucket", ntile(files).over(w))
       new java.io.File(dir).mkdirs()
@@ -997,8 +998,8 @@ object Streaming {
   private[graft] def runStreamHourly(s: SparkSession, d: String,
       root: String, ckpt: String, tag: String,
       files: Int = regFiles): Long = {
-    val src = s"$scratchRoot/stream_hourly_src/${Llm.Scratch.key(d)}_f$files"
-    Llm.Scratch.once(src) {
+    val src = Scratch.path(s"stream_hourly_src/f$files", d)
+    Scratch.once(src) {
       val ev = events(s, d)
         .select(col("event_type"), expr("ts_us DIV 3600000000").as("hr"),
           pmod(col("event_id"), lit(files)).cast("int").as("part"))
@@ -1203,12 +1204,12 @@ object Streaming {
     // index = band rows of the even half, and the staged new-doc
     // files. Strictly increasing mtimes pin the file source's drain
     // order to doc_id order (it sorts by modification time).
-    val baseIdx = s"$scratchRoot/sdi_base/${Llm.Scratch.key(d)}"
-    Llm.Scratch.once(baseIdx) {
+    val baseIdx = Scratch.path("sdi_base", d)
+    Scratch.once(baseIdx) {
       Llm.bandRows(sigT.where(col("doc_id") % 2 === 0))
         .write.mode("overwrite").parquet(baseIdx)
     }
-    val srcDir = s"$scratchRoot/sdi_src/${Llm.Scratch.key(d)}_f$files"
+    val srcDir = Scratch.path(s"sdi_src/f$files", d)
     stageIdOrdered(srcDir, files, t(s, d, "documents")
       .where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")))
     val st = fileStream(s, srcDir,
@@ -1276,7 +1277,7 @@ object Streaming {
     * O(batch), the digest index is append-only, and no state grows
     * with corpus size except the index itself. */
   private def streamPipelineCorpus: Q = (s, d) => {
-    val srcDir = s"$scratchRoot/spc_src/${Llm.Scratch.key(d)}_f$regFiles"
+    val srcDir = Scratch.path(s"spc_src/f$regFiles", d)
     stageIdOrdered(srcDir, regFiles, t(s, d, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("text")))
     val digRoot = streamDir("spc/dig")

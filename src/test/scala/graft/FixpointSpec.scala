@@ -12,13 +12,15 @@ class FixpointSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dataset = "fixpoint-spec"
 
-  /** Round directories in scratch `graph/` left by runs of `owner`
-    * (`<tag>_<dataset key>`). */
-  private def roundDirs(owner: String): Seq[String] =
-    Option(new java.io.File(s"${Tables.scratchRoot}/graph").list()).toSeq
-      .flatten.filter(_.matches(java.util.regex.Pattern.quote(owner) + "_r\\d+_i\\d+"))
+  /** Round directories left by runs of `owner`, the artifact path
+    * `graph/<tag>/<dataset key>`: its siblings `<dataset key>_r<run>_i<round>`. */
+  private def roundDirs(owner: String): Seq[String] = {
+    val o = new java.io.File(owner)
+    Option(o.getParentFile.list()).toSeq
+      .flatten.filter(_.matches(java.util.regex.Pattern.quote(o.getName) + "_r\\d+_i\\d+"))
+  }
 
-  private def owner(tag: String, d: String) = s"${tag}_${ops.Llm.Scratch.key(d)}"
+  private def owner(tag: String, d: String) = Scratch.path(s"graph/$tag", d)
 
   /** v_i = v_(i−1) div 2 over four ids from v_0 = 100: 50, 25, 12, 6,
     * 3, 1, 0, so the stats row (rows, max v) reaches (4, 0) in round 7. */

@@ -129,7 +129,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("scan_corrupt_skip: junk is really planted; the default read dies on it") {
     SparkEntry.queries("scan_corrupt_skip")(spark, sf).collect()
-    val dir = s"${Tables.scratchRoot}/formats/corrupt_skip_${ops.Llm.Scratch.key(sf)}"
+    val dir = Scratch.path("formats/corrupt_skip", sf)
     val junk = new java.io.File(dir, "part-99999-junk.parquet")
     assert(junk.exists() && junk.length() === 4096)
     // without the option the garbage file is a hard failure — the skip

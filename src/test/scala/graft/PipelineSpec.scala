@@ -375,11 +375,9 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(ivfpq.length === 50) // 5 queries × top-10
     // every returned candidate lives in a cell the query probed
-    val scratch = s"${Tables.scratchRoot}/ml"
-    val key = ops.Llm.Scratch.key(sf)
-    val cells = spark.read.parquet(s"$scratch/ivfpq_cells_$key")
+    val cells = spark.read.parquet(Scratch.path("ml/ivfpq_cells", sf))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probed = spark.read.parquet(s"$scratch/ivfpq_probes_$key")
+    val probed = spark.read.parquet(Scratch.path("ml/ivfpq_probes", sf))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(1)).toSet).toMap
     ivfpq.foreach { case (qid, vid, _) =>

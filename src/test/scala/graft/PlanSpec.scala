@@ -547,7 +547,7 @@ class PlanSpec extends AnyFunSuite {
       val df = consumer
       (scanPaths(df), df.collect().map(_.toSeq))
     }
-    assert(onPaths.exists(_.contains("/mv/pricing_")),
+    assert(onPaths.exists(_.contains(Scratch.path("mv/pricing", sf))),
       s"rewritten plan must scan the MV: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
       s"rewritten plan must NOT scan the base table: $onPaths")
@@ -555,7 +555,7 @@ class PlanSpec extends AnyFunSuite {
     val offPaths = scanPaths(off)
     assert(offPaths.exists(_.contains("lineitem")),
       s"with the rule off the base table must be scanned: $offPaths")
-    assert(!offPaths.exists(_.contains("/mv/pricing_")), offPaths.toString)
+    assert(!offPaths.exists(_.contains(Scratch.path("mv/pricing", sf))), offPaths.toString)
     // the rewrite is result-INVISIBLE
     assert(onRows.toSeq === off.collect().map(_.toSeq).toSeq)
   }
@@ -587,7 +587,7 @@ class PlanSpec extends AnyFunSuite {
       val df = consumer
       (scanPaths(df), df.collect().map(_.toSeq))
     }
-    assert(onPaths.exists(_.contains("/mv/rollup_")),
+    assert(onPaths.exists(_.contains(Scratch.path("mv/rollup", sf))),
       s"subset consumer must scan the MV grid: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
       s"subset consumer must NOT scan the base table: $onPaths")
@@ -595,7 +595,7 @@ class PlanSpec extends AnyFunSuite {
     val offPaths = scanPaths(off)
     assert(offPaths.exists(_.contains("lineitem")),
       s"with the rule off the base table must be scanned: $offPaths")
-    assert(!offPaths.exists(_.contains("/mv/rollup_")), offPaths.toString)
+    assert(!offPaths.exists(_.contains(Scratch.path("mv/rollup", sf))), offPaths.toString)
     // the rollup is result-INVISIBLE (exact integer algebra both ways)
     assert(onRows.toSeq === off.collect().map(_.toSeq).toSeq)
     // a FLOAT-sum definition must NOT join the lattice: the mv_rewrite
@@ -610,7 +610,7 @@ class PlanSpec extends AnyFunSuite {
       val fp = scanPaths(floatConsumer)
       assert(fp.exists(_.contains("lineitem")),
         s"float sums must stay out of the rollup lattice: $fp")
-      assert(!fp.exists(_.contains("/mv/pricing_")), fp.toString)
+      assert(!fp.exists(_.contains(Scratch.path("mv/pricing", sf))), fp.toString)
     }
   }
 

@@ -10,12 +10,32 @@ class RelationalSpec extends AnyFunSuite {
     SparkEntry.queries("join_bucketed")(spark, sf).count()
     // ShuffleExchangeExec prints as bare "Exchange hashpartitioning";
     // matching the class simple name is vacuous (ADVICE r1).
-    val plan = ops.Relational.bucketedJoinPlan(spark)
+    val plan = ops.Relational.bucketedJoinPlan(spark, sf)
       .queryExecution.executedPlan.toString()
     assert(!plan.contains("Exchange hashpartitioning"),
       s"bucketed join must not shuffle:\n$plan")
     assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
       s"bucketed join should still be a non-broadcast join:\n$plan")
+  }
+
+  test("join_bucketed on two datasets from two threads matches sequential runs") {
+    val other = SharedSpark.sfDir("0.01")
+    assume(other.isDefined, "testdata sf0.01 absent on this machine")
+    val dirs = Seq(sf, other.get)
+    def rows(d: String): Seq[org.apache.spark.sql.Row] =
+      SparkEntry.queries("join_bucketed")(spark, d).collect().toSeq
+    val sequential = dirs.map(d => d -> rows(d)).toMap
+    assert(sequential(dirs(0)) !== sequential(dirs(1)), "the two datasets must differ")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(dirs.size)
+    try {
+      val runs = dirs.map { d =>
+        d -> pool.submit(() => { start.await(); Seq.fill(3)(rows(d)) })
+      }
+      start.countDown()
+      for ((d, f) <- runs; got <- f.get(10, java.util.concurrent.TimeUnit.MINUTES))
+        assert(got === sequential(d), d)
+    } finally pool.shutdownNow(): Unit
   }
 
   test("topk_group_agg is bit-identical to the window formulation") {

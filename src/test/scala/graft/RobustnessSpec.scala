@@ -50,12 +50,12 @@ class RobustnessSpec extends AnyFunSuite {
   }
 
   test("scratch checkpoint keys survive String.hashCode collisions") {
-    // "Aa" and "BB" collide under String.hashCode (2112) — the round-2
-    // keying would have silently shared these two datasets' checkpoints.
+    // "Aa" and "BB" collide under String.hashCode (2112) — a hashCode
+    // key would silently share these two datasets' checkpoints.
     assert("/data/Aa".hashCode === "/data/BB".hashCode)
-    assert(ops.Llm.Scratch.key("/data/Aa") !== ops.Llm.Scratch.key("/data/BB"))
+    assert(Scratch.key("/data/Aa") !== Scratch.key("/data/BB"))
     // and the key is stable (pure function of the path)
-    assert(ops.Llm.Scratch.key("/data/Aa") === ops.Llm.Scratch.key("/data/Aa"))
+    assert(Scratch.key("/data/Aa") === Scratch.key("/data/Aa"))
   }
 
   test("agg_approx_quantile: approx percentiles within 1% of spec-side exact") {

@@ -2,18 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Llm.Scratch latch semantics — the properties the whole train-once
-  * artifact discipline rests on. The nested-build pin exists because
-  * ConcurrentHashMap.computeIfAbsent holds the bin lock during the
-  * build, so a Scratch build that itself touches Scratch (a DERIVED
-  * artifact built from a base artifact — the bucketed pagerank edge
-  * table over the plain edge artifact) threw
-  * IllegalStateException("Recursive update") whenever the two paths
-  * collided in a bin: a map-capacity-dependent TRANSIENT that failed
-  * one full Verify in five in round 13. The putIfAbsent+future latch
-  * builds outside any map lock, making nesting legal at any depth.  */
+/** [[Scratch]] semantics — the properties every one-time artifact
+  * rests on: the latch (nesting at any depth, failure retry, waiter
+  * retry, reentrant fail-fast, one build under concurrency), the
+  * catalog-table step's one invalidation, and the temp-and-rename
+  * commit. The nested-build pin guards the latch's shape: a build that
+  * held a map lock while it ran (`computeIfAbsent`) would fail a
+  * derived artifact built from a base one whenever the two locations
+  * shared a hash bin. */
 class ScratchSpec extends AnyFunSuite {
-  import graft.ops.Llm.Scratch
 
   private def tmp(): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory("graft-scratch").toFile
@@ -109,6 +106,46 @@ class ScratchSpec extends AnyFunSuite {
       started.countDown()
       threads.foreach(_.join(10000))
       assert(builds.get() === 1)
+    } finally Tables.deleteRecursively(dir)
+  }
+
+  test("the bucketed step rebuilds a table dropped from the catalog, and only then") {
+    val spark = SharedSpark.spark
+    val d = "scratch-spec-bucketed"
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def table() = Scratch.bucketed(spark, "graft_scratch_spec", "ids", d) {
+      builds.incrementAndGet()
+      spark.range(0, 10, 1, 2).toDF().write.bucketBy(2, "id").sortBy("id")
+    }
+    def ids() = table().collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids() === (0L until 10L))
+    assert(ids() === (0L until 10L))
+    assert(builds.get() === 1)
+    spark.sql(s"DROP TABLE graft_scratch_spec.ids_${Scratch.key(d)}")
+    assert(ids() === (0L until 10L))
+    assert(builds.get() === 2)
+    assert(ids() === (0L until 10L))
+    assert(builds.get() === 2)
+  }
+
+  test("a temp-and-rename build that throws leaves nothing at the path; a retry commits") {
+    val dir = tmp()
+    try {
+      val p = s"${dir.getPath}/committed"
+      intercept[RuntimeException] {
+        Scratch.committed(p) { t =>
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(t, "part-0"), "half")
+          sys.error("boom")
+        }
+      }
+      assert(!new java.io.File(p).exists())
+      assert(dir.list().isEmpty, "the failed build's temp dir is removed")
+      val out = Scratch.committed(p) { t =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(t, "part-0"), "whole"): Unit
+      }
+      assert(out === p)
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(p, "part-0")) === "whole")
+      assert(dir.list().toSeq === Seq("committed"))
     } finally Tables.deleteRecursively(dir)
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * drift from the Scala constants they mirror, if session setup grows
   * a second owner next to GraftSession and GraftExtensions, if a
   * foreachBatch loop appears outside Streaming.drain, if a round
-  * checkpoint is written outside Graph.fixpoint, or if a listener is
-  * registered outside graft.Metrics.
+  * checkpoint is written outside Graph.fixpoint, if a listener is
+  * registered outside graft.Metrics, or if a one-time artifact is keyed
+  * or a catalog table saved outside graft.Scratch.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -97,5 +98,16 @@ class ToolsLockstepSpec extends AnyFunSuite {
       .flatMap(hits("src/main", _, _.endsWith("/graft/Metrics.scala")))
     assert(regs.isEmpty, "measure through graft.Metrics; register no listener elsewhere:\n" +
       regs.mkString("\n"))
+  }
+
+  test("one-time artifacts have one owner: graft.Scratch") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
+    // artifact paths come from Scratch.path and catalog tables from
+    // Scratch.replaceTable / Scratch.bucketed
+    val uses = Seq("Scratch.key(", "saveAsTable(")
+      .flatMap(hits("src/main", _, _.endsWith("/graft/Scratch.scala")))
+    assert(uses.isEmpty, "name and build one-time artifacts through graft.Scratch:\n" +
+      uses.mkString("\n"))
   }
 }
