@@ -11,8 +11,8 @@ object Bench {
     * mistaken for a full-fan-out one). */
   @volatile private var calibMemEffCount: Int = 0
 
-  /** Fixed single-thread CPU calibration (round-9 judge item): round-8
-    * attribution proved identical plans cost 2–7× in per-task CPU
+  /** Fixed single-thread CPU calibration: per-key
+    * attribution shows identical plans cost 2–7× in per-task CPU
     * across boxes (same job/task counts, different wall), so raw bench
     * wall times are NOT comparable between machines. This measures one
     * fixed unit of register-only work — 2²⁶ xorshift64 steps, no
@@ -106,7 +106,7 @@ object Bench {
     * 21 ms on the BENCH_r14 box of record). The r14 variance analysis
     * proved core speed and loaded bandwidth are INDEPENDENT axes
     * (equal calib_ms, 3–5× calib_mem_ms across windows), so the
-    * headline normalization is two-axis (r14 judge item #4):
+    * headline normalization is two-axis:
     * memory-bound keys (the plan-probe set — the inverted-index dedup
     * family + pagerank, the keys the bimodality analysis attributed
     * to bandwidth contention) normalize by the calib_mem ratio,
@@ -121,7 +121,7 @@ object Bench {
     val spark = GraftSession.build(cpus)
     // Untimed warmup: JVM/codegen/parquet-reader spin-up should not be
     // attributed to whichever query happens to run first. Profiling
-    // (round 4) showed first use of each execution-machinery family
+    // shows first use of each execution-machinery family
     // costs 2-6 s of pure classloading — window exec, the
     // dynamic-partition commit protocol, the binaryFile source, the
     // streaming engine — billed to arbitrary queries (ingest_e2e read
@@ -151,9 +151,9 @@ object Bench {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     wq.awaitTermination()
-    // Fixture fingerprint (r10 judge item #3): the 2026-08-14 testdata
-    // regen silently broke r9↔r10 per-query comparability — BENCH files
-    // carried no record of WHAT data they measured. Per-table row counts
+    // Fixture fingerprint: a testdata regeneration silently breaks
+    // per-query comparability unless a BENCH file records WHAT data it
+    // measured. Per-table row counts
     // plus total on-disk bytes let the next round attribute a per-query
     // delta to data vs code mechanically. Counting also pre-warms the
     // page cache uniformly (part of the warmup story above).
@@ -268,8 +268,7 @@ object Bench {
       .mkString("[", ",", "]")
     val total = results.map { case (_, v) => math.abs(v) }.sum
 
-    // Production (audit-OFF) timings for the sketch pair (r10 judge
-    // item #4): the headline keys bench the audit-ON gate plan by
+    // Production (audit-OFF) timings for the sketch pair: the headline keys bench the audit-ON gate plan by
     // design (oracle text unchanged); the conf-off plan is the 100 TB
     // production shape — sketch-only, zero corpus re-scans,
     // PlanSpec-pinned. Emit it as extra detail rows so both numbers
@@ -289,7 +288,7 @@ object Bench {
       }
     }
 
-    // Standalone re-measure (r11 judge item #3): the slowest keys run
+    // Standalone re-measure: the slowest keys run
     // again in a FRESH JVM (same flags, classpath, env; a suite of
     // one), so the in-suite vs standalone divergence the r10/r11
     // verdicts hand-attributed (stream_tws: 13.5 s in a 301-query JVM
@@ -312,7 +311,7 @@ object Bench {
         val cmd = Seq(javaBin) ++ jvmArgs ++
           Seq("-cp", System.getProperty("java.class.path"),
             "graft.Bench", key)
-        // r12 judge item #4: the child writes its full-detail file to a
+        // The child writes its full-detail file to a
         // per-key path; its per-trial attribution rows (task_ms /
         // task_gc_ms / driver_ms / scratch_ms / …) are folded into THIS
         // run's detail under the #standalone name, so an in-suite vs
@@ -320,7 +319,7 @@ object Bench {
         // alone vs 5.2 s in-suite) is attributable from one BENCH file.
         val childFull = s"target/bench_standalone_$key.json"
         // A stale per-key file from a PRIOR run must never be folded in
-        // as this run's attribution rows (r13 ADVICE): delete first,
+        // as this run's attribution rows: delete first,
         // and skip the fold entirely when the child failed.
         try java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(childFull)): Unit
@@ -381,7 +380,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, fmt, Double.box(v))
     // mean over an empty filtered run would be NaN — invalid JSON.
     val mean = if (results.isEmpty) 0.0 else total / results.size
-    // Two-axis normalization (r14 judge item #4): memory-bound keys by
+    // Two-axis normalization: memory-bound keys by
     // the bandwidth ratio, the rest by the core ratio — see
     // [[CalibMemRefMs]]. planProbe IS the memory-bound set (that is
     // why those keys carry plan fingerprints in the first place).

@@ -1,8 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Spark half of the seeded differential SQL fuzz gate (round-9 judge
-  * item): tools/fuzz.py deterministically generates shared-text ANSI
+/** Spark half of the seeded differential SQL fuzz gate:
+  * tools/fuzz.py deterministically generates shared-text ANSI
   * SELECTs over the 10-table schema, this main executes every .sql
   * file under sqlDir through spark.sql over temp views of the shared
   * parquet tables and dumps one parquet dir per query; fuzz.py then

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.GenData <outDir> <sf> (e.g. target/testdata/sf1 1.0)
   */
 object GenData {
-  /** `--real` realism mode (round-8): the default mode mirrors the
+  /** `--real` realism mode: the default mode mirrors the
     * driver data's measured distributions EXACTLY (uniform part draws,
     * 30-word closed vocabulary) — right for oracle cross-checks, but
     * it understates two structures real corpora have: Zipf-tailed
@@ -88,7 +88,7 @@ object GenData {
     Tables.deleteRecursively(new java.io.File(tmp))
   }
 
-  /** `--hot` adversarial mode (round-12 judge item #7): deliberately
+  /** `--hot` adversarial mode: deliberately
     * DEGENERATE key distributions that the gen/real legs never draw,
     * for worst-case slope legs of the skew-sensitive operators.
     * - part: HALF of all parts carry ONE brand at ONE price point —
@@ -172,7 +172,7 @@ object GenData {
       // support≥2 repeat graph has no 3-core and no 2-shared-neighbor
       // pairs at ANY size (uniform and even u²-head draws spread pair
       // support too thin), leaving graph_kcore/graph_jaccard vacuous
-      // in the sf1 evidence runs (SCALING.md §3 round-8 caveat).
+      // in the sf1 evidence runs (SCALING.md §3 caveat).
       // 1/64 (not denser): at 1/8 each hot part rode in ~12% of
       // orders and co-occurred ≥2× with most of the u² head — 6 K-hub
       // nodes and 181 M wedge pairs at sf1, the hub-quadratic regime;

@@ -52,7 +52,7 @@ object MinHash {
   * no shuffle — the 100 TB shape for per-document sketches (a pure map;
   * signatures are partition-local and the document body never leaves the
   * scan). Single expression node, so Catalyst's projection collapse
-  * cannot duplicate the shingle computation (the round-1 16× pitfall).
+  * cannot duplicate the shingle computation (a 16× cost).
   */
 case class MinHashSig(child: Expression, k: Int = MinHash.DefaultK)
     extends UnaryExpression {

@@ -145,9 +145,9 @@ case class SqDistI64(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val d = ctx.freshName("sqdResult")
-      // Primitive static call (r13 ADVICE: the old helper returned a
-      // boxed java.lang.Long to signal null — one allocation per
-      // candidate pair in ml_knn's hottest loop). −1 is a safe NULL
+      // Primitive static call: a boxed java.lang.Long to signal null
+      // would be one allocation per candidate pair in ml_knn's
+      // hottest loop. −1 is a safe NULL
       // sentinel: see the helper's proof of non-negativity.
       s"""
         long $d = graft.expr.SqDistI64.dist($a, $b);
@@ -173,8 +173,8 @@ object SqDistI64 {
     * a real distance: every term is a non-negative product
     * (multiplyExact(d,d) either throws or is ≥ 0) and addExact of two
     * non-negatives either throws or stays ≥ 0, so the accumulator is
-    * ≥ 0 on every exit — a primitive return with no per-pair boxing
-    * (r13 ADVICE). Called from generated code. */
+    * ≥ 0 on every exit — a primitive return with no per-pair boxing.
+    * Called from generated code. */
   def dist(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     if (n != b.numElements()) return -1L

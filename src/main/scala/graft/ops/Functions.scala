@@ -39,8 +39,7 @@ object Functions {
         concat_ws("_", parse_url(col("url"), lit("HOST")),
           regexp_extract(col("url"), "://[^:/]+:([0-9]+)/", 1)).as("server_folder"),
         fileName.as("file_name"),
-        when(fileName.contains("."),
-          element_at(split(fileName, "\\."), -1)).otherwise("none").as("file_type"))
+        Ingest.fileType(fileName).as("file_type"))
       .orderBy("doc_id")
   }
 

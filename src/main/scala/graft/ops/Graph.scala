@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-/** Graph analytics over derived relationship tables (round 4).
+/** Graph analytics over derived relationship tables.
   *
   * A corpus-curation pipeline at 100 TB routinely needs graph
   * signals — domain authority for quality weighting (CCNet/RefinedWeb
@@ -127,16 +127,16 @@ object Graph {
       stats: Row)
 
   /** The round loop behind every iterative operator. Round i (from 1)
-    * computes `step(state, i)` from round i−1's state (round 0 is
-    * `init`) and checkpoints it ([[ckpt]]) to a directory no other
-    * call shares, sized by round i−1's row count (`rows0` for round 1).
+    * computes `step(state, i)` from round i−1's state (the state
+    * before the first round is `init`) and checkpoints it ([[ckpt]]) to a directory no other
+    * call shares, sized by round i−1's row count (`rows0` for the first round).
     * The write carries count(*) and `stats` as an Observation, so the
     * stop test and the next round's sizing cost no job of their own.
     * Once round i has committed, round i−1's directory is deleted; the
     * last round's directory is published ([[publishFinal]]) and
     * outlives the call, so the returned state can be read lazily.
     * `stop(prev, cur, i)` ends the loop after round i, where `prev` is
-    * round i−1's stats row — before round 1, `rows0` and then nulls.
+    * round i−1's stats row — before the first round, `rows0` and then nulls.
     * Caps are the caller's: `require` one in `step`, or stop at it. A
     * failed round deletes this call's round directories and rethrows. */
   private[graft] def fixpoint(s: SparkSession, tag: String, d: String,

@@ -5,17 +5,18 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.Scratch
 import graft.Tables._
-import graft.expr.{Sanitize, ZipEntries}
+import graft.expr.{Sanitize, TarEntries, ZipEntries}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Ingestion domain (SURVEY.md §2a → M4): the reference's whole pipeline
-  * re-expressed Spark-first — binaryFile scan (R11), name/type derivation
-  * (R6–R8), zip explode (R14), manifest anti-join dedup (R18) with the
-  * rename policy (R17) as a window variant, partitioned sink + read-back
-  * audit (R19/R20), per-file error isolation by construction (each stage
-  * is a pure DataFrame transform).
+  * re-expressed Spark-first — binaryFile scan (R11), one archive explode
+  * over one dispatch (R14/R15, [[members]]), name sanitize and type
+  * derivation (R6–R8), manifest anti-join dedup (R18) — together
+  * [[pipeline]] — with the rename policy (R17) as a window variant,
+  * partitioned sink + read-back audit (R19/R20), per-file error
+  * isolation by construction (each stage is a pure DataFrame transform).
   *
   * Payload discipline at scale: bytes ride inside rows from scan to sink
   * and are never shuffled on their own; only name/size/mtime metadata
@@ -369,77 +370,88 @@ object Ingest {
     * member bytes never shuffle — downstream keys are name + digest. */
   private def ingestTar: Q = (s, _) => {
     val dir = buildTarFixture()
-    s.read.format("binaryFile").load(s"$dir/bundle.tar.gz")
-      .select(explode(graft.expr.TarEntries.tar_entries(col("content")))
-        .as("m"))
-      .select(col("m.name").as("name"), col("m.mtime").as("mtime"),
-        col("m.size").as("size"), crc32(col("m.content")).as("crc"))
+    members(fileRows(s, s"$dir/bundle.tar.gz"))
+      .select(col("file_name").as("name"), col("mtime"), col("size"),
+        crc32(col("content")).as("crc"))
       .orderBy("name", "crc")
   }
 
-  /** The lower-cased text after the last '.' of a file name (the whole
-    * name when it has none). */
-  private def lastDotPart(name: Column): Column =
-    lower(element_at(split(name, "\\."), -1))
-
-  /** A file name the ingest keys explode as a zip archive. */
-  private[ops] def isZip(name: Column): Column = lastDotPart(name) === "zip"
-
-  /** The ingest keys' `file_type`: the lower-cased extension, or "none"
-    * for a name with no '.'. */
-  private[ops] def fileType(name: Column): Column =
-    when(name.contains("."), lastDotPart(name)).otherwise("none")
-
-  /** End-to-end ingest pipeline over the fixture:
-    * scan → derive → zip-explode (flat union, R15 dispatch) → sanitize →
-    * manifest anti-join (R18 skip) → collision rename (R17, rank-derived
-    * suffix, deterministic unlike the reference's wall-clock epoch) →
-    * partitioned sink → read-back audit. Output is pinned by a VALUES
-    * oracle — the fixture is deterministic. */
-  private def ingestE2e: Q = (s, d) => {
-    graft.GraftLog.monitor("ingest_e2e: pipeline started")
-    val fixture = buildFixture()
-    val raw = s.read.format("binaryFile").load(fixture)
+  /** binaryFile rows under `path` as the (file_name, mtime, size,
+    * content) frame [[members]] takes; mtime in epoch seconds. */
+  private def fileRows(s: SparkSession, path: String): DataFrame =
+    s.read.format("binaryFile").load(path)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         (unix_millis(col("modificationTime")) / 1000).cast("long").as("mtime"),
         col("length").as("size"), col("content"))
 
-    val plain = raw.where(!isZip(col("file_name")))
-    val members = raw.where(isZip(col("file_name")))
-      .select(explode(ZipEntries.zip_entries(col("content"))).as("m"))
-      .select(col("m.name").as("file_name"), col("m.mtime").as("mtime"),
-        col("m.size").as("size"), col("m.content").as("content"))
+  /** The ingest keys' `file_type`: the lower-cased extension, or "none"
+    * for a name with no '.'. */
+  private[ops] def fileType(name: Column): Column =
+    when(name.contains("."), lower(element_at(split(name, "\\."), -1)))
+      .otherwise("none")
 
-    val sanitized = plain.unionByName(members)
-      .select(
-        Sanitize.sanitize(col("file_name")).as("file_name"),
-        col("mtime"), col("size"), col("content"))
+  /** Archive members and plain files of a (file_name, mtime, size,
+    * content) frame, in the same four columns: the reference's per-file
+    * dispatch (child.py:142-146, R15) as ONE explode over one case, so
+    * the source is scanned once. A name ending in `.zip` goes through
+    * [[graft.expr.ZipEntries]], one ending in `.tar`, `.tar.gz` or `.tgz`
+    * through [[graft.expr.TarEntries]] (both compared in lower case, both
+    * recursive into nested archives, R14), and any other file stands for
+    * itself. Member names are the archives' own, unsanitized. */
+  def members(files: DataFrame): DataFrame = {
+    val name = lower(col("file_name"))
+    val entries =
+      when(name.endsWith(".zip"), ZipEntries.zip_entries(col("content")))
+        .when(name.endsWith(".tar") || name.endsWith(".tar.gz") ||
+          name.endsWith(".tgz"), TarEntries.tar_entries(col("content")))
+        .otherwise(array(struct(col("file_name").as("name"), col("mtime"),
+          col("size"), col("content"))))
+    files.select(explode(entries).as("m")).select("m.*")
+      .withColumnRenamed("name", "file_name")
+  }
+
+  /** The reference's ingest chain (child.py:128-206) over a (file_name,
+    * mtime, size, content) frame, batch or streaming: [[members]], then
+    * the sanitized name (R7) and its `file_type` (R8), then a left-anti
+    * join on (file_name, size) against the `prior` run's manifest (R18
+    * skip-if-present). child.py:183-184 keys on (path, size, mtime);
+    * mtime is left out because zip-member clock recovery makes it
+    * environment-dependent. */
+  def pipeline(files: DataFrame, prior: DataFrame): DataFrame =
+    members(files)
+      .withColumn("file_name", Sanitize.sanitize(col("file_name")))
       .withColumn("file_type", fileType(col("file_name")))
+      .join(prior, Seq("file_name", "size"), "left_anti")
 
-    // Prior-run manifest: (name,size) identity — child.py:183-184 uses
-    // (path,size,mtime); mtime is excluded here because zip-member clock
-    // recovery makes it environment-dependent.
-    val manifest = s.createDataFrame(Seq(
-      ("dup_two.txt", 18L),
-      ("stale_entry.txt", 999L),
-    )).toDF("file_name", "size")
-    val fresh = sanitized.join(manifest, Seq("file_name", "size"), "left_anti")
-
-    // Collision rename: same sanitized name → deterministic rank suffix.
+  /** Collision rename (R17): among files of one sanitized name, ordered
+    * by (mtime, size), the n-th (n > 1) gets `_n` before its extension —
+    * a rank-derived suffix, deterministic unlike the reference's
+    * wall-clock epoch. */
+  private def renameCollisions(files: DataFrame): DataFrame = {
     val w = Window.partitionBy("file_name").orderBy("mtime", "size")
-    val renamed = fresh
+    val name = col("file_name")
+    files
       .withColumn("rn", row_number().over(w))
-      .withColumn("final_name",
-        when(col("rn") === 1, col("file_name"))
+      .withColumn("file_name",
+        when(col("rn") === 1, name)
           .otherwise(concat(
-            regexp_replace(col("file_name"), "\\.[^.]*$", ""),
+            regexp_replace(name, "\\.[^.]*$", ""),
             lit("_"), col("rn"),
-            regexp_extract(col("file_name"), "(\\.[^.]*)$", 1))))
+            regexp_extract(name, "(\\.[^.]*)$", 1))))
+      .drop("rn")
+  }
 
+  /** End-to-end ingest over the fixture: binaryFile scan → [[pipeline]]
+    * → collision rename → partitioned sink → read-back audit. Output is
+    * pinned by a VALUES oracle — the fixture is deterministic. */
+  private def ingestE2e: Q = (s, _) => {
+    graft.GraftLog.monitor("ingest_e2e: pipeline started")
+    val manifest = s.createDataFrame(Seq(("dup_two.txt", 18L),
+      ("stale_entry.txt", 999L))).toDF("file_name", "size")
     val sink = s"$scratchRoot/sink/e2e"
-    renamed
-      .select(col("final_name").as("file_name"), col("file_type"),
+    renameCollisions(pipeline(fileRows(s, buildFixture()), manifest))
+      .select(col("file_name"), col("file_type"),
         col("size"), col("mtime"), col("content"))
       .write.mode("overwrite").partitionBy("file_type").parquet(sink)
     graft.GraftLog.monitor(s"ingest_e2e: sink written at $sink")

@@ -5,7 +5,7 @@ import graft.Scratch
 import graft.Tables._
 import org.apache.spark.sql.functions._
 
-/** Lake-format surface beyond parquet (round 4): text-format
+/** Lake-format surface beyond parquet: text-format
   * interchange scans (CSV/JSON — the reference's sources are opaque
   * files on remote servers, but a complete engine must ingest the
   * standard interchange formats too), dynamic-partition-pruned scans
@@ -541,8 +541,8 @@ object Lake {
     }
   }
 
-  /** AGGREGATE-ROLLUP SUBSUMPTION ([[graft.plans.MvRewrite]] tier 2,
-    * r15 judge item #6) — the MV-lattice step beyond exact plan
+  /** AGGREGATE-ROLLUP SUBSUMPTION ([[graft.plans.MvRewrite]] tier 2)
+    * — the MV-lattice step beyond exact plan
     * identity: the MV materializes the (returnflag × linestatus) grid
     * of EXACT integer-cent aggregates; the consumer — which knows
     * nothing about the MV — groups by returnflag ALONE, and the rule
@@ -629,7 +629,7 @@ object Lake {
     * the algebraic property that makes 100 TB distinct counts cheap and
     * lets sketches be persisted per-partition and re-merged across
     * days/tables without rescanning (agg_approx is the one-shot form).
-    * r14 judge item #6 (no_oracle → checked row): under
+    * So that the oracle checks a row: under
     * [[Tables.auditOn]] (default ON, the gate plan) the output is the
     * EXACT distinct per group plus a corridor boolean
     * (|approx − exact|/exact ≤ 5%), so the driver hash-verifies the
@@ -992,7 +992,7 @@ object Lake {
     * shuffle — only the O(langs) aggregate does. */
   private def scanAvro: Q = (s, d) => {
     val dir = buildAvroFixture(s, d)
-    s.read.format("binaryFile").load(s"$dir/*.avro")
+    s.read.format("binaryFile").option("pathGlobFilter", "*.avro").load(dir)
       .select(explode(graft.expr.AvroRows.avro_docs(col("content"))).as("r"))
       .select(col("r.doc_id").as("doc_id"), col("r.lang").as("lang"),
         col("r.n_chars").as("n_chars"), col("r.text").as("text"))

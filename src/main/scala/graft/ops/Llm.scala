@@ -37,9 +37,6 @@ object Llm {
     * (sqrt of the identical fold). */
   private[ops] def norm(x: Column): Column = sqrt(dot(x, x))
 
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
   /** Exact dedup via content hash: keep lowest doc_id per sha256(text)
     * (R16/R18 duplicate identity, generalized from (path,size,mtime) to
     * content). At 100 TB the shuffle key is the 32-byte digest. */
@@ -185,7 +182,7 @@ object Llm {
     * oracles use). zip_with over three shifted slices rather than
     * transform+element_at: slice pads missing tail elements with null
     * (concat_ws then skips them) where ANSI element_at THROWS on
-    * out-of-bounds — the round-8 fix that makes every shingle-family op
+    * out-of-bounds — which makes every shingle-family op
     * safe on degenerate short docs — and each slice evaluates the split
     * once per row instead of per element. */
   private[graft] def shingles(text: Column): Column = {
@@ -211,7 +208,7 @@ object Llm {
     * the scan), CHECKPOINTED to scratch parquet (16 longs + 2 ids per
     * doc) so the multi-branch DAG below reads the tiny signature table
     * instead of recomputing shingles per branch (and nothing stays
-    * cache-pinned after the query, unlike round 1). The band self-join
+    * cache-pinned after the query). The band self-join
     * shuffles only (band_idx, band_hash, doc_id) triples; candidate
     * verification joins 16-long signatures on bounded pair sets. */
   private[ops] val minhashNSig = 16
@@ -392,8 +389,8 @@ object Llm {
     * TypedImperativeAggregate over exploded shingles — the
     * map-side-combinable aggregation formulation (raw Array[Long] buffer
     * in the hash map, serialized only on spill/shuffle; 16 longs per doc
-    * on the wire). The round-1 udaf(Aggregator) variant re-encoded the
-    * buffer per input row and hit ObjectHashAggregate's sort fallback —
+    * on the wire). A udaf(Aggregator) formulation re-encodes the
+    * buffer per input row and hits ObjectHashAggregate's sort fallback —
     * 264 s at sf0.1; the Aggregator surface itself remains cross-checked
     * bit-for-bit in LlmSpec alongside this and the scalar path. */
   private def dedupMinhashAgg: Q = (s, d) => {
@@ -437,7 +434,7 @@ object Llm {
       .unionAll(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .toDF("src", "dst")
     // Round 0 needs no materialization of its own: it is a pure
-    // projection of the signature scratch parquet, so round 1 re-derives
+    // projection of the signature scratch parquet, so the first round re-derives
     // it for free instead of paying a write job.
     val init = sigT.select(col("doc_id"), col("doc_id").as("label"))
     // Early exit: the common no-near-dups corpus stops after one round
@@ -649,7 +646,7 @@ object Llm {
       .orderBy("doc_id")
   }
 
-  /** Substring-dedup REMOVAL semantics (r13 judge item #4 — Lee et al.
+  /** Substring-dedup REMOVAL semantics (Lee et al.
     * 2022 produce a CLEANED corpus, not just flags): every token
     * covered by a duplicated k=20 window (fingerprint occurring ≥2
     * times corpus-wide, the exact [[dedupSubstring]] rule) is excised
@@ -888,7 +885,7 @@ object Llm {
     * are exact integers, containment ONE IEEE division, and the excerpt
     * flag (≥ 0.8) is integer cross-multiplication (5·inter ≥ 4·min).
     *
-    * Scale shape (the round-7 `weak` fix, now IN the registered plan):
+    * Scale shape (in the registered plan):
     * raw inverted-index work is ∝ Σ shingle-df², so the plan (a) joins
     * on the 64-bit xxhash64 of the shingle, not the string — long
     * compares and 8-byte shuffle rows (the [[dedupNgram]] argument);
@@ -933,7 +930,7 @@ object Llm {
     val sizes = Scratch.table(s, Scratch.path("containment_sizes", d)) {
       sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     }
-    // Bounded-memory df (r10 judge item #1): hash-aggregate per shingle,
+    // Bounded-memory df: hash-aggregate per shingle,
     // filter to the [2, dfCap] band, join back. The previous windowed
     // form (count over Window.partitionBy(sh_h)) shared one exchange
     // with the self-join but WindowExec materializes each sh_h group in
@@ -1244,7 +1241,7 @@ object Llm {
     * false-positive liveness (the filter is actually being exercised,
     * not sized into triviality).
     *
-    * Wall-vs-task attribution (r11 judge item #4): nothing here is a
+    * Wall-vs-task attribution: nothing here is a
     * driver-side collect — the 64-row bitmap is an ordinary broadcast
     * exchange built by executors. The ~0.6 s standalone wall against
     * ~60 ms of task time (BENCH detail: 4 jobs, 4 tasks) is the
@@ -1500,8 +1497,8 @@ object Llm {
   /** dedup_ngram's per-block gram-df cap (see the dfCap comment inside
     * [[dedupNgram]]). A named field (not a local) so the scaling
     * preflight's Python mirror (tools/scaling.py RISK_KEYS) can be
-    * lockstep-pinned against it by ToolsLockstepSpec — the r10 ADVICE
-    * duplication hazard. */
+    * lockstep-pinned against it by ToolsLockstepSpec (a cap written
+    * twice drifts). */
   private[graft] val ngramDfCap = 16L
 
   private def dedupNgram: Q = (s, d) => {
@@ -1514,8 +1511,8 @@ object Llm {
     // join-back side) — checkpointing to scratch parquet keeps the
     // explode+hash a single pass (measured at sf10 in r11: the double
     // compute held the old wall while GC stayed).
-    // The gram kernel is the native [[graft.expr.NgramHashes]] pass
-    // (r11 judge item #2): the old
+    // The gram kernel is the native [[graft.expr.NgramHashes]] pass:
+    // the old
     // explode(array_distinct(transform(…substring…))) + xxhash64 chain
     // allocated one UTF8String + byte[] PER GRAM before the explode —
     // 563 s of task GC at the heap ceiling in BENCH_r11's trial-1
@@ -1540,7 +1537,7 @@ object Llm {
     // 12.2M rows (10.6 s); at 16 the same join is 1.2M rows — and the
     // cap stays a no-op at the sf0.01 gate (max block = exactly 16).
     val dfCap = ngramDfCap
-    // Bounded-memory df (r10 judge item #1): hash-aggregate per
+    // Bounded-memory df: hash-aggregate per
     // (block, gram), cap, join back. The earlier windowed form shared
     // an exchange with the self-join, but WindowExec buffers each gram
     // group whole BEFORE the cap can filter it — 153 s of task GC at
@@ -1666,7 +1663,7 @@ object Llm {
       // size(array_intersect(ghs_a, ghs_b)) — IntersectCountSpec pins
       // the equivalence — without ArrayIntersect's per-pair hash set +
       // materialized intersection array (53% task GC on the r12 build
-      // trial under a fat suite heap; r12 judge item #2).
+      // trial under a fat suite heap).
       cand
         .join(docArr.select(col("doc_id").as("a_id"),
           col("ghss").as("ghs_a")), Seq("a_id"))
@@ -2215,7 +2212,7 @@ object Llm {
     * the [[containmentDfCap]] / dedupNgram dfCap discipline applied to
     * the variant buckets: a bounded-memory hash-agg df pass over `vh`
     * (one counter per distinct variant — spillable, map-side-combined;
-    * the r10 judge retired the windowed form because WindowExec buffers
+    * not a windowed form, because WindowExec buffers
     * each vh group whole BEFORE the cap filters it, so the mega-bucket
     * the cap exists for would still OOM the window pass), drop df=1
     * buckets (provably lossless, a singleton
@@ -2308,7 +2305,7 @@ object Llm {
     // NULL-text docs are dropped, matching the exploded twin and the
     // oracle (string_split→unnest emits nothing for NULL): without the
     // filter the native kernel would keep the row with NULL stats
-    // (r10 ADVICE). No-op on the fixtures (text is non-null there).
+    // No-op on the fixtures (text is non-null there).
     fanOut(t(s, d, "documents"))
       .where(col("text").isNotNull)
       .select(col("doc_id"), st.as("st"))
@@ -2840,7 +2837,7 @@ object Llm {
          FROM g LEFT JOIN f ON g.lang = f.lang
          ORDER BY g.lang""",
     // Sequential rank-ordered folds (list_reduce ↔ Spark aggregate),
-    // natural-log discounts, round-6 on the ln-derived outputs.
+    // natural-log discounts, 6-place rounding on the ln-derived outputs.
     "rank_ndcg" ->
       """WITH ranked AS (
            SELECT doc_id, lang, (text LIKE '%dup%') AS rel,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Training-data pipeline assembly operators (SURVEY.md §2b north-star
-  * extension, round 3): deterministic corpus sampling, dataset mixture
+  * extension): deterministic corpus sampling, dataset mixture
   * weighting, context-window sequence packing, vocabulary building,
   * IVF-style ANN, and the SQL-registry surface.
   *
@@ -532,7 +532,7 @@ object Pipeline {
       .orderBy("w")
   }
 
-  /** END-TO-END CURATION PIPELINE — the round-8 capstone composition a
+  /** END-TO-END CURATION PIPELINE — the capstone composition a
     * real pre-training data team runs as ONE job: Gopher rule filter
     * (text_gopher's keep law) → exact dedup (keep-lowest-id per text,
     * dedup_exact's law, applied to the surviving docs) → DSIR target-
@@ -1169,8 +1169,7 @@ object Pipeline {
     * before the single exchange (r16 guide §2.4/§2.3: the r15 shape
     * paid 3 exchanges + a broadcast build per iteration to re-derive
     * state that was driver-collected anyway). */
-  private def pqTrainCodebook(
-      s: SparkSession, sv: DataFrame): Seq[(Long, Int, Seq[Long])] = {
+  private def pqTrainCodebook(sv: DataFrame): Seq[(Long, Int, Seq[Long])] = {
     var cb: Seq[(Long, Int, Seq[Long])] = sv
       .where(col("vec_id").isin(pqSeedIds: _*))
       .select(col("vec_id"), col("sub"), col("v"))
@@ -1211,7 +1210,7 @@ object Pipeline {
       sv: => DataFrame): Seq[(Long, Int, Seq[Long])] = {
     import s.implicits._
     val t = Scratch.table(s, Scratch.path(s"ml/pq_cb_$tag", d)) {
-      pqTrainCodebook(s, sv).toDF("cid", "sub", "cv")
+      pqTrainCodebook(sv).toDF("cid", "sub", "cv")
     }
     t.collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
       .sortBy(x => (x._2, x._1)).toSeq
@@ -1388,7 +1387,7 @@ object Pipeline {
 
   /** ANN RECALL AUDIT — the "measure, don't guess" discipline of
     * dedup_minhash_recall applied to the ANN family, now over TWO
-    * regimes (r15 judge item #1):
+    * regimes:
     *   - `uniform`   — the corpus embeddings as-is: uniform-random,
     *     the distance-concentration WORST case for any compressed
     *     index; reported honestly, not cherry-picked away;
@@ -1942,7 +1941,7 @@ object Pipeline {
     * per-dim update reduces MAP-SIDE (posexplode → partial sum over
     * 64 keys), and the driver folds exactly 64 longs per round
     * (control-plane, the embed_pca discipline). Exactness: vectors on
-    * the 1e-6 grid, w₀ = 0 makes round 1 engine-invariant by
+    * the 1e-6 grid, w₀ = 0 makes the first update engine-invariant by
     * construction (y·0 ≤ 0 — every vector is in M₀), so each w_r is
     * an exact integer function of the data; zero floats anywhere. A
     * loud guard bounds |⟨w,x⟩| against Long overflow (binds ~sf30 at
@@ -1981,7 +1980,7 @@ object Pipeline {
       .orderBy("dim")
   }
 
-  /** DECISION STUMP under 0-1 loss — the AdaBoost/GBDT round-1 weak
+  /** DECISION STUMP under 0-1 loss — the AdaBoost/GBDT first-round weak
     * learner (Freund & Schapire '97) over the embeddings table: per
     * dimension, the threshold split of y = [label ≥ 5] minimizing
     * misclassifications on a FIXED 16-bucket grid over the 1e-6
@@ -2090,7 +2089,7 @@ object Pipeline {
   }
 
   /** 1e-6 quantized bucket of embedding dim `j` (0-based), as the SQL
-    * text both second-pass scans inline against the collected round-1
+    * text both second-pass scans inline against the collected first-round
     * literal. */
   private def bucketSql(j: Long): String =
     s"(CAST(floor(embedding[$j] * 1e6 + 0.5) AS LONG) + 1000000L)" +
@@ -2143,24 +2142,24 @@ object Pipeline {
 
   /** TWO-ROUND BOOSTING over histogram stumps — the AdaBoost loop
     * structure (Freund & Schapire '97) with a DETERMINISTIC INTEGER
-    * reweighting: round 1 fits [[mlStump]]'s global best stump; rows it
+    * reweighting: the first round fits [[mlStump]]'s global best stump; rows it
     * misclassifies get weight 3 (everyone else 1 — a fixed-factor
     * surrogate for exp(2α), chosen integer so both engines' weighted
     * histograms stay in exact BIGINT arithmetic, no exp/ln anywhere);
-    * round 2 re-fits the best stump under those weights (weighted
+    * the second round re-fits the best stump under those weights (weighted
     * counts wpos = Σw·y, wtot = Σw — same dense grid, same total-order
-    * (correct DESC, dim ASC, split ASC) tie-break). Round 2 may
-    * legitimately RE-PICK round 1's split when no other dim wins on the
+    * (correct DESC, dim ASC, split ASC) tie-break). The second round may
+    * legitimately RE-PICK the first round's split when no other dim wins on the
     * reweighted mass (observed at the gate SF) — the weighted counts
-    * prove the reweighting is live either way. Scale shape: round 1's
+    * prove the reweighting is live either way. Scale shape: the first round's
     * winning row (plus its leaf majorities) collects to the driver
-    * (ONE row — control-plane), round 2 re-scans computing each row's
+    * (ONE row — control-plane), the second round re-scans computing each row's
     * weight from the root LITERAL (prediction = collected leaf
     * majority), and both scans partial-aggregate MAP-SIDE into ≤ 1024
     * groups per partition — the classic "T passes over the data, grid-
     * sized state" boosting layout, no per-row weight table ever
-    * materialized or joined. Output: 2 BIGINT rows (round 1 = the
-    * plain stump, round 2 = the weighted re-fit). */
+    * materialized or joined. Output: 2 BIGINT rows (the first round's
+    * plain stump, then the second round's weighted re-fit). */
   private def mlBoost: Q = (s, d) => {
     val dim = 64
     val buckets = 16
@@ -2497,7 +2496,7 @@ object Pipeline {
         explode(Llm.shingles(col("text"))).as("g"))
         .select("corpus", "g").distinct()
     }
-    // Train-once artifact #2 (r12 judge item #3): in AUDIT mode the
+    // Train-once artifact: in AUDIT mode the
     // three exact-truth legs below each re-derived the full
     // distinct-shingle sub-DAG — 3 corpus scans in the gate plan the
     // headline benches. Scratch the distinct ONCE and feed both the
@@ -3744,8 +3743,7 @@ object Pipeline {
       s"$head,\n$loops\n SELECT k, cid, radius FROM cen8 ORDER BY k"
     },
     // Pinned from tools/ann_recall_oracle.py (independent pure-python
-    // IEEE/integer/Lloyd mirror, sf0.01), two regimes per r15 judge
-    // item #1. uniform: ivf recall@10 climbs 0.30 -> 0.42 -> 0.72 ->
+    // IEEE/integer/Lloyd mirror, sf0.01), two regimes. uniform: ivf recall@10 climbs 0.30 -> 0.42 -> 0.72 ->
     // 1.00 over nprobe 1/2/4/8 (every miss is the probe-set boundary)
     // while ivfpq sits at 0.06-0.12 even with trained codebooks --
     // uniform-random embeddings are the distance-concentration regime

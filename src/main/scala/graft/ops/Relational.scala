@@ -382,8 +382,8 @@ object Relational {
   /** HLL sketch distinct — the 100 TB answer to COUNT(DISTINCT): no
     * exact shuffle of the key space, and no multi-distinct Expand
     * either (PlanSpec pins the audit-OFF plan Expand-free, same as
-    * agg_bitmap — the round-5 in-plan audit had reintroduced exactly
-    * that shape). r14 judge item #6 (no_oracle → checked row): under
+    * agg_bitmap — an in-plan audit that counts distincts exactly would
+    * reintroduce that shape). To give the oracle a checked row: under
     * [[Tables.auditOn]] (default ON, the gate plan) the output is the
     * EXACT distincts plus corridor booleans — |approx − exact|/exact ≤
     * 3×rsd per sketch (rsd=0.01 ⇒ 0.03; a pin AT the rsd would be a
@@ -435,8 +435,8 @@ object Relational {
 
   /** Approximate quantiles (Greenwald-Khanna sketch) — the 100 TB
     * answer to exact percentiles: fixed-size mergeable sketch per
-    * group, no per-group sort. r14 judge item #6 (no_oracle → checked
-    * row): under [[Tables.auditOn]] (default ON, the gate plan) the
+    * group, no per-group sort. To give the oracle a checked
+    * row: under [[Tables.auditOn]] (default ON, the gate plan) the
     * exact interpolated percentiles ride the same plan and the output
     * is corridor booleans — |approx − exact| ≤ 1% of |exact| per
     * quantile (GK's deterministic rank-error bound at accuracy 10⁴ is
@@ -2127,8 +2127,8 @@ object Relational {
     lineageOf(s, q)
   }
 
-  /** obs_lineage over a pipeline with the two node kinds the round-8
-    * judge flagged as falling through to '(literal)': a Generate
+  /** obs_lineage over a pipeline with the two node kinds a naive walk
+    * lets fall through to '(literal)': a Generate
     * (explode of the split text — its output attribute is NOT an
     * Alias) and a Window (row_number whose value is determined by the
     * partition AND order keys). Same VALUES-pinned static oracle
@@ -2149,7 +2149,7 @@ object Relational {
     lineageOf(s, q)
   }
 
-  /** obs_lineage over the two governance gaps the round-9 judge named:
+  /** obs_lineage over two governance gaps:
     * a UNION (whose output attributes borrow the first branch's
     * exprIds, so a naive walk reports only one branch — here `tot_bal`
     * must cite customer.c_acctbal AND supplier.s_acctbal) and
@@ -2810,7 +2810,7 @@ object Relational {
       .orderBy("status")
     // The output is an O(statuses) audit summary (2 rows): materialize
     // it so the cache can be released HERE instead of leaking past the
-    // operator (the one unpaired cache() in src/main through round 5).
+    // operator.
     val rows = audit.collect()
     parsed.unpersist()
     s.createDataFrame(java.util.Arrays.asList(rows: _*), audit.schema)
@@ -4049,8 +4049,7 @@ object Relational {
     // witness + corridor booleans: DuckDB independently recomputes the
     // exact side, and the TRUE pins assert each sketch landed inside
     // its tolerance corridor (3×rsd / 1%) — a drifting sketch flips a
-    // boolean and fails the hash (r14 judge item #6: no_oracle →
-    // checked). The numeric audits stay in RobustnessSpec on the
+    // boolean and fails the hash. The numeric audits stay in RobustnessSpec on the
     // conf-OFF sketch values.
     "agg_approx" ->
       """SELECT l_returnflag,

@@ -133,11 +133,10 @@ object Streaming {
     dir
   }
 
-  /** Test-only fault injection for the exactly-once replay specs
-    * (round-9 judge item: the batchId-keyed idempotent-replay claims
-    * must be PINNED by killing a foreachBatch mid-write and
-    * restarting, not just documented). Arm with "<op>:<batchId>"; the
-    * matching maybeFail site throws ONCE — after the batch's first
+  /** Test-only fault injection for the exactly-once replay specs:
+    * the batchId-keyed idempotent replay is pinned by killing a
+    * foreachBatch mid-write and restarting. Arm with
+    * "<op>:<batchId>"; the matching maybeFail site throws ONCE — after the batch's first
     * artifact write, before its last — then disarms, so the restarted
     * query replays that batch cleanly over its own partial output. */
   private[graft] object Faults {
@@ -1448,38 +1447,31 @@ object Streaming {
   /** The ENTIRE reference pipeline as one streaming query (EP1,
     * main.py:58-109 → child.py:128-221): remote source (scheme
     * dispatch, executor-side fetch, 3 files per micro-batch =
-    * BATCH_SIZE) → recursive zip explode (R14) → filename sanitize (R7)
-    * → manifest dedup-skip (R18, anti-join per batch) → idempotent
+    * BATCH_SIZE) → [[Ingest.pipeline]]: recursive archive explode
+    * (R14), filename sanitize (R7), manifest dedup-skip (R18, a
+    * stream-static anti-join) → idempotent
     * partitioned sink (R19, per-batch dynamic overwrite) → read-back
     * audit (R20). Pinned VALUES oracle over the deterministic fixture;
     * member contents are deterministic even though the archive's own
     * deflate bytes are not. Note: unlike the batch ingest_e2e (Spark's
     * file index drops zero-byte files), the remote source lists
     * empty.txt, so it flows through here. */
-  private def streamIngestE2e: Q = (s, d) => {
+  private def streamIngestE2e: Q = (s, _) => {
     val fixture = Ingest.buildFixture()
     val out = streamDir("stream_ingest_e2e/out")
-    val st = s.readStream.format("graft.sources.RemoteFileSource")
+    val files = s.readStream.format("graft.sources.RemoteFileSource")
       .option("urls", s"ftp://localhost:21$fixture")
       .option("batchSize", "3")
       .load()
-    val plain = st.where(!Ingest.isZip(col("file_name")))
-      .select(col("file_name"), col("size"), col("content"))
-    val members = st.where(Ingest.isZip(col("file_name")))
-      .select(explode(graft.expr.ZipEntries.zip_entries(col("content"))).as("m"))
-      .select(col("m.name").as("file_name"), col("m.size").as("size"),
-        col("m.content").as("content"))
-    val cleaned = plain.unionByName(members)
-      .select(graft.expr.Sanitize.sanitize(col("file_name")).as("file_name"),
-        col("size"), col("content"))
-      .withColumn("file_type", Ingest.fileType(col("file_name")))
+      .select(col("file_name"), col("mtime_s").as("mtime"), col("size"),
+        col("content"))
     // Prior-run sink manifest (R18 skip identity, as in batch ingest_e2e).
     val manifest = s.createDataFrame(Seq(("dup_two.txt", 18L)))
       .toDF("file_name", "size")
     withStatePartitions(s) {
-      drain(cleaned, streamDir("stream_ingest_e2e/ckpt")) { (batch, b) =>
-        batch.join(broadcast(manifest), Seq("file_name", "size"), "left_anti")
-          .withColumn("batch_id", lit(b))
+      drain(Ingest.pipeline(files, broadcast(manifest)),
+          streamDir("stream_ingest_e2e/ckpt")) { (batch, b) =>
+        batch.withColumn("batch_id", lit(b))
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id").parquet(out)
       }

@@ -30,8 +30,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    each MV column back to the matched subtree's exprIds so every
   *    downstream reference stays bound.
   *
-  * 2. AGGREGATE-ROLLUP SUBSUMPTION (r15 judge item #6 — the standard
-  *    MV-lattice step): a consumer that aggregates the SAME base
+  * 2. AGGREGATE-ROLLUP SUBSUMPTION (the standard MV-lattice step): a consumer that aggregates the SAME base
   *    relation by a SUBSET of the MV's grouping grid re-aggregates
   *    the MV's grid instead of the base — sum rolls up as sum, count
   *    as sum-of-counts, min/max as min/max. Eligibility is decided at

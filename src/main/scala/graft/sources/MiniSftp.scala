@@ -4,7 +4,6 @@ import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, File, IO
 import java.math.BigInteger
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.security.{KeyFactory, KeyPair, KeyPairGenerator, MessageDigest, SecureRandom, Signature}
 import java.security.interfaces.RSAPublicKey
 import java.security.spec.RSAPublicKeySpec

@@ -80,6 +80,88 @@ class IngestSpec extends AnyFunSuite {
       ("txt", 5L, 68L, "a.txt|data--.txt|deep.txt|dup_one.txt|report final.txt")))
   }
 
+  test("Ingest.members explodes zip, tar and .TGZ members in one scan of the source") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.functions._
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    def tarOf(members: (String, String)*): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val tos = new TarArchiveOutputStream(bos)
+      members.foreach { case (name, text) =>
+        val bytes = text.getBytes("UTF-8")
+        val e = new TarArchiveEntry(name)
+        e.setSize(bytes.length.toLong)
+        e.setModTime(1650000000000L)
+        tos.putArchiveEntry(e)
+        tos.write(bytes)
+        tos.closeArchiveEntry()
+      }
+      tos.close()
+      bos.toByteArray
+    }
+    def gzip(bytes: Array[Byte]): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(bytes); gz.close()
+      bos.toByteArray
+    }
+    val dir = new java.io.File(s"${Tables.scratchRoot}/members_fixture")
+    Tables.deleteRecursively(dir)
+    dir.mkdirs()
+    Seq(
+      "archive.zip" -> zipOf(("in/z1.txt", "zip member one", 1600000000000L),
+        ("z2.log", "zip member two", 1600000100000L)),
+      "BUNDLE.TGZ" -> gzip(tarOf("g/t1.txt" -> "tgz member", "t2.bin" -> "tgz bin")),
+      "plain.tar" -> tarOf("p1.txt" -> "tar member"),
+      "notes.txt" -> "plain text file".getBytes("UTF-8"),
+      "noext" -> "no extension".getBytes("UTF-8"),
+    ).foreach { case (name, bytes) =>
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath, bytes): Unit
+    }
+    val files = spark.read.format("graft.sources.RemoteFileSource")
+      .option("urls", s"ftp://localhost:21${dir.getAbsolutePath}")
+      .option("numPartitions", "2")
+      .load()
+      .select(col("file_name"), col("mtime_s").as("mtime"), col("size"),
+        col("content"))
+    // The union of filtered branches the dispatch replaced, one branch
+    // per archive kind, written out as a reference.
+    val name = lower(col("file_name"))
+    val isZip = name.endsWith(".zip")
+    val isTar = name.endsWith(".tar") || name.endsWith(".tar.gz") ||
+      name.endsWith(".tgz")
+    def branch(archives: DataFrame, entries: org.apache.spark.sql.Column): DataFrame =
+      archives.select(explode(entries).as("m"))
+        .select(col("m.name").as("file_name"), col("m.mtime").as("mtime"),
+          col("m.size").as("size"), col("m.content").as("content"))
+    val reference = files.where(!isZip && !isTar)
+      .unionByName(branch(files.where(isZip),
+        graft.expr.ZipEntries.zip_entries(col("content"))))
+      .unionByName(branch(files.where(isTar),
+        graft.expr.TarEntries.tar_entries(col("content"))))
+    def rows(df: DataFrame): Seq[(String, Long, Long, Long)] =
+      df.select(col("file_name"), col("mtime"), col("size"),
+          crc32(col("content")).as("crc"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq.sorted
+    def scans(df: DataFrame): Int = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }.size
+    val got = ops.Ingest.members(files)
+    val gotRows = rows(got)
+    assert(gotRows === rows(reference))
+    assert(gotRows.map(_._1).sorted === Seq("noext", "notes.txt", "p1.txt",
+      "t1.txt", "t2.bin", "z1.txt", "z2.log"))
+    val plain = got.where(col("file_name") === "notes.txt")
+      .select("size", "content").head()
+    assert(plain.getLong(0) === 15L &&
+      new String(plain.getAs[Array[Byte]](1), "UTF-8") === "plain text file")
+    assert(scans(got) === 1,
+      s"one scan of the source:\n${got.queryExecution.executedPlan}")
+    assert(scans(reference) === 3, "the branch union scans once per branch")
+  }
+
   test("partition-pruned scan reads only the lang=en partition") {
     SparkEntry.queries("scan_partition_pruned")(spark, sf).count()
     val plan = ops.Ingest.partitionPrunedPlan(spark)

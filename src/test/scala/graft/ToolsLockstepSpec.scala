@@ -4,14 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The scaling preflight (tools/scaling.py) mirrors the registered df
   * caps so its candidate-mass probe guards exactly the plans that will
-  * run — a cap hardcoded twice is a cap silently wrong once (r10
-  * ADVICE). This spec fails the suite if the Python RISK_KEYS caps
-  * drift from the Scala constants they mirror, if session setup grows
-  * a second owner next to GraftSession and GraftExtensions, if a
-  * foreachBatch loop appears outside Streaming.drain, if a round
-  * checkpoint is written outside Graph.fixpoint, if a listener is
-  * registered outside graft.Metrics, or if a one-time artifact is keyed
-  * or a catalog table saved outside graft.Scratch.
+  * run — a cap hardcoded twice is a cap silently wrong once. This spec
+  * fails the suite if the Python RISK_KEYS caps drift from the Scala
+  * constants they mirror, if session setup grows a second owner next to
+  * GraftSession and GraftExtensions, if a foreachBatch loop appears
+  * outside Streaming.drain, if a round checkpoint is written outside
+  * Graph.fixpoint, if a listener is registered outside graft.Metrics,
+  * if a one-time artifact is keyed or a catalog table saved outside
+  * graft.Scratch, if an archive is exploded outside Ingest.members, or
+  * if a comment under src/main narrates a past review round.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -109,5 +110,26 @@ class ToolsLockstepSpec extends AnyFunSuite {
       .flatMap(hits("src/main", _, _.endsWith("/graft/Scratch.scala")))
     assert(uses.isEmpty, "name and build one-time artifacts through graft.Scratch:\n" +
       uses.mkString("\n"))
+  }
+
+  test("archive explode has one owner: Ingest.members") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    for (fn <- Seq("zip_entries(", "tar_entries(")) {
+      val uses = hits("src/main/scala/graft/ops", fn)
+      assert(uses.size === 1, s"explode archives through Ingest.members:\n" +
+        uses.mkString("\n"))
+    }
+  }
+
+  test("comments under src/main give reasons, not review-round history") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
+    val history = "round[- ][0-9]+|r[0-9]+ (ADVICE|judge)".r
+    val found = scalaLines("src/main").collect {
+      case (f, n, l) if history.findFirstIn(l).isDefined => s"$f:$n: ${l.trim}"
+    }
+    assert(found.isEmpty, "say what holds now, not which round asked for it:\n" +
+      found.mkString("\n"))
   }
 }
