@@ -30,7 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.fs.GraftLocalFileSystem.install(SparkContext.getOrCreate().hadoopConfiguration)
     e.injectOptimizerRule(_ => CollapseSanitize)
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    e.injectOptimizerRule(_ => graft.plans.MvRewrite)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     GraftExtensions.functions.foreach { case (name, cls, arity, build) =>
       e.injectFunction((new FunctionIdentifier(name),

@@ -40,8 +40,10 @@ object GraftSession {
   /** Runs `body` with `confs` set on `s`, then puts every key back
     * exactly as it was: its previous value, or unset if it was unset.
     *
-    * Plans are optimized at action time, so a body that returns a
-    * DataFrame must plan or materialize it inside the window. No lock is
+    * Plans are optimized at action time, and every action on a frame
+    * (a noop write, `coalesce(1).write`) optimizes again, so a body must
+    * MATERIALIZE what it computes inside the window: a frame planned
+    * there and acted on later runs without the conf. No lock is
     * held across `body` (bodies start streams whose `foreachBatch` runs
     * on another thread); the conf is session-global, so callers that
     * need mutual exclusion lock around the call. */

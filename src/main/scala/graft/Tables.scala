@@ -20,30 +20,6 @@ object Tables {
   /** Driver-contract query shape: (session, sf-dir) => result. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** Scratch root for sinks/checkpoints/fixtures: tmpfs when available —
-    * streaming state stores fsync many small files per micro-batch, and
-    * on a disk-backed /tmp those fsyncs dominate (and destabilize) every
-    * streaming benchmark.
-    *
-    * Per-PROCESS (`p<pid>`): the sink/compact/zorder queries write and
-    * re-read fixed relative paths, so two JVMs sharing one root (a
-    * bench and a verify run overlapping, a straggler test JVM) race on
-    * overwrite-vs-read and the read-back sees mixed content — observed
-    * as rows-match/hash-mismatch on exactly the slowest sink queries.
-    * Scratch from dead JVMs (and pre-pid legacy layouts) is reaped at
-    * init so the tmpfs doesn't accumulate across rounds; live sibling
-    * processes are left alone. */
-  /** Audit switch for sketch operators (agg_theta / stream_theta):
-    * ON (the default — so the gate-SF oracle text is unchanged) keeps
-    * the exact-truth columns in the output, which cost precisely the
-    * full-distinct work the sketch exists to avoid; OFF is the 100 TB
-    * production plan — sketch-only, each corpus scanned once, no
-    * distinct self-join (pinned in PlanSpec). The
-    * dedup_minhash_recall discipline: truth is for audits, not for
-    * every run. */
-  def auditOn(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.audit", "true").toBoolean
-
   /** Recursive delete, null-safe on racing listFiles — the one shared
     * rm -rf used by scratch reaping, streamDir resets, and the WAP
     * protocol (keep fixes here, not in per-site clones). */
@@ -67,6 +43,19 @@ object Tables {
     }.sum
   }
 
+  /** Scratch root for sinks/checkpoints/fixtures: tmpfs when available —
+    * streaming state stores fsync many small files per micro-batch, and
+    * on a disk-backed /tmp those fsyncs dominate (and destabilize) every
+    * streaming benchmark.
+    *
+    * Per-PROCESS (`p<pid>`): the sink/compact/zorder queries write and
+    * re-read fixed relative paths, so two JVMs sharing one root (a
+    * bench and a verify run overlapping, a straggler test JVM) race on
+    * overwrite-vs-read and the read-back sees mixed content — observed
+    * as rows-match/hash-mismatch on exactly the slowest sink queries.
+    * Scratch from dead JVMs (and pre-pid legacy layouts) is reaped at
+    * init so the tmpfs doesn't accumulate across rounds; live sibling
+    * processes are left alone. */
   val scratchRoot: String = {
     val base = new java.io.File(
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft"

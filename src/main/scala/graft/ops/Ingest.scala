@@ -477,7 +477,8 @@ object Ingest {
   private def mmDecode: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").load(s"${Media.dir}/img_*")
+    s.read.format("binaryFile").option("pathGlobFilter", "img_*")
+      .load(Media.dir)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         col("content"))
@@ -532,7 +533,8 @@ object Ingest {
   private def mmFrames: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").load(s"${Media.dir}/vid_*")
+    s.read.format("binaryFile").option("pathGlobFilter", "vid_*")
+      .load(Media.dir)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         col("content"))
@@ -567,7 +569,8 @@ object Ingest {
   private def mmAudio: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").load(s"${Media.dir}/aud_*")
+    s.read.format("binaryFile").option("pathGlobFilter", "aud_*")
+      .load(Media.dir)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         col("content"))
@@ -625,7 +628,8 @@ object Ingest {
   private def mmResize: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").load(s"${Media.dir}/img_*")
+    s.read.format("binaryFile").option("pathGlobFilter", "img_*")
+      .load(Media.dir)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         col("content"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftSession.withConf
 import graft.Scratch
+import graft.plans.MvRewrite
 import graft.Tables._
 import org.apache.spark.sql.functions._
 
@@ -183,13 +184,15 @@ object Lake {
     * FOOTER STATISTICS: the scan reads metadata pages only, zero data
     * pages, so a whole-table min/max/count over 100 TB touches
     * O(row-groups) bytes instead of O(table). Needs the DSv2 parquet
-    * path (useV1SourceList cleared) + the pushdown flag, both scoped to
-    * a conf window with EAGER planning inside it (the documented
-    * conf-window discipline — optimization happens at action time).
-    * Falls back transparently when a column/agg isn't footer-answerable
-    * (doubles with NaNs, filters, non-partition group-bys), so the
-    * result is conf-independent — the oracle is the plain aggregate;
-    * LakeSpec pins PushedAggregation in the scan. */
+    * path (useV1SourceList cleared) + the pushdown flag, both Spark
+    * confs with no plan-local form, so the key materializes its one
+    * row INSIDE the conf window: any later action on a frame optimizes
+    * again, outside it, and would lose the pushdown. Falls back
+    * transparently when a column/agg isn't footer-answerable (doubles
+    * with NaNs, filters, non-partition group-bys), so the result is
+    * conf-independent — the oracle is the plain aggregate; LakeSpec
+    * pins PushedAggregation in the scan, RewriteActionSpec in the
+    * plans the key's actions run. */
   private[graft] def aggPushdownFrame(
       s: org.apache.spark.sql.SparkSession, d: String) =
     t(s, d, "lineitem").selectExpr(
@@ -204,8 +207,7 @@ object Lake {
 
   private def scanAggPushdown: Q = (s, d) => withAggPushdown(s) {
     val df = aggPushdownFrame(s, d)
-    df.queryExecution.executedPlan // plan eagerly inside the conf window
-    df
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
   /** WRITE-AUDIT-PUBLISH with atomic manifest commits — the lakehouse
@@ -511,18 +513,15 @@ object Lake {
 
   /** TRANSPARENT MV REWRITE ([[graft.plans.MvRewrite]]) — the consumer
     * half of the MV pair ([[mvIncremental]] is the refresh half): the
-    * pricing-summary aggregate over lineitem is materialized once and
-    * REGISTERED; a freshly constructed identical query — which knows
-    * nothing about the MV — is then optimized with the conf-gated rule
-    * on, and Catalyst swaps the whole aggregate subtree for a scan of
-    * the MV parquet (PlanSpec pins: MV path scanned, lineitem NOT
-    * scanned, vs both inverted with the rule off). Decimal sums are
-    * rounded to DOUBLE inside the DEFINITION (the shared-text
-    * discipline) so the parquet round-trip is type-identical and the
-    * registered output matches the consumer's position-wise. The
-    * eager `executedPlan` force inside the conf window is the
-    * documented conf-window materialization rule — optimization
-    * happens at action time. */
+    * pricing-summary aggregate over lineitem is materialized once; a
+    * freshly constructed identical query — which knows nothing about
+    * the MV — goes through `MvRewrite.rewrite` with the view, which
+    * swaps the whole aggregate subtree for a scan of the MV parquet
+    * (PlanSpec pins: MV path scanned, lineitem NOT scanned, vs both
+    * inverted without the rewrite). Decimal sums are rounded to DOUBLE
+    * inside the DEFINITION (the shared-text discipline) so the parquet
+    * round-trip is type-identical and the materialized output matches
+    * the consumer's position-wise. */
   private def mvRewrite: Q = (s, d) => {
     def define = t(s, d, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
@@ -531,32 +530,28 @@ object Lake {
         round(sum(dec(col("l_extendedprice"))), 2).cast("double")
           .as("sum_price"),
         count(lit(1)).as("n"))
-    val path = Scratch.path("mv/pricing", d)
-    val mv = Scratch.table(s, path)(define)
-    graft.plans.MvCatalog.register(define, mv)
-    withConf(s, "spark.graft.mv.rewrite" -> "true") {
-      val q = define.orderBy("l_returnflag", "l_linestatus")
-      q.queryExecution.executedPlan // force optimize with the rule on
-      q
-    }
+    val mv = Scratch.table(s, Scratch.path("mv/pricing", d))(define)
+    MvRewrite.rewrite(define.orderBy("l_returnflag", "l_linestatus"),
+      define -> mv)
   }
 
   /** AGGREGATE-ROLLUP SUBSUMPTION ([[graft.plans.MvRewrite]] tier 2)
-    * — the MV-lattice step beyond exact plan
-    * identity: the MV materializes the (returnflag × linestatus) grid
-    * of EXACT integer-cent aggregates; the consumer — which knows
-    * nothing about the MV — groups by returnflag ALONE, and the rule
+    * — the MV-lattice step beyond exact plan identity: the MV
+    * materializes the (returnflag × linestatus) grid of EXACT
+    * integer-cent aggregates; the consumer — which knows nothing about
+    * the MV — groups by returnflag ALONE, and `MvRewrite.rewrite`
     * re-aggregates the MV's grid instead of lineitem (sum→sum of
     * partial sums, count→sum of partial counts, max→max of partial
     * maxes). Exactness is why the definition aggregates CENTS: integer
     * sums re-associate freely, so the rolled-up result is provably
     * bit-identical to the direct plan and the rewrite stays invisible
     * — the oracle is simply the consumer's own SQL over lineitem
-    * (float sums are excluded from the lattice at registration for
+    * (float sums are excluded from the lattice for
     * precisely this reason). The /100 presentation division happens
-    * ABOVE the rewritten aggregate, outside the matched subtree.
-    * PlanSpec pins MV-scanned / lineitem-NOT-scanned for the subset
-    * consumer under the conf, and both inverted with the rule off. At
+    * in the consumer's projection, which the optimizer folds into the
+    * Aggregate; the rollup carries it over the re-aggregated grid.
+    * PlanSpec pins MV-scanned / lineitem-NOT-scanned for a subset
+    * consumer, and both inverted without the rewrite. At
     * 100 TB this is every dashboard rollup sharing one grid-sized
     * file instead of each re-scanning the fact table. */
   private def mvRewriteRollup: Q = (s, d) => {
@@ -567,24 +562,19 @@ object Lake {
       .agg(sum(cents(col("l_quantity"))).as("qty_c"),
         max(cents(col("l_extendedprice"))).as("max_price_c"),
         count(lit(1)).as("n"))
-    val path = Scratch.path("mv/rollup", d)
-    val mv = Scratch.table(s, path)(define)
-    graft.plans.MvCatalog.register(define, mv)
-    withConf(s, "spark.graft.mv.rewrite" -> "true") {
-      val q = t(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(sum(cents(col("l_quantity"))).as("qty_c"),
-          max(cents(col("l_extendedprice"))).as("max_price_c"),
-          count(lit(1)).as("n"))
-        .select(col("l_returnflag"),
-          (col("qty_c").cast("double") / lit(100.0d)).as("sum_qty"),
-          (col("max_price_c").cast("double") / lit(100.0d))
-            .as("max_price"),
-          col("n"))
-        .orderBy("l_returnflag")
-      q.queryExecution.executedPlan // force optimize with the rule on
-      q
-    }
+    val mv = Scratch.table(s, Scratch.path("mv/rollup", d))(define)
+    val q = t(s, d, "lineitem")
+      .groupBy("l_returnflag")
+      .agg(sum(cents(col("l_quantity"))).as("qty_c"),
+        max(cents(col("l_extendedprice"))).as("max_price_c"),
+        count(lit(1)).as("n"))
+      .select(col("l_returnflag"),
+        (col("qty_c").cast("double") / lit(100.0d)).as("sum_qty"),
+        (col("max_price_c").cast("double") / lit(100.0d))
+          .as("max_price"),
+        col("n"))
+      .orderBy("l_returnflag")
+    MvRewrite.rewrite(q, define -> mv)
   }
 
   /** FULL outer merge of an MV snapshot (yr, n, tot) with a signed
@@ -629,17 +619,17 @@ object Lake {
     * the algebraic property that makes 100 TB distinct counts cheap and
     * lets sketches be persisted per-partition and re-merged across
     * days/tables without rescanning (agg_approx is the one-shot form).
-    * So that the oracle checks a row: under
-    * [[Tables.auditOn]] (default ON, the gate plan) the output is the
+    * So that the oracle checks a row: with
+    * `audit = true` (the registry key, the gate plan) the output is the
     * EXACT distinct per group plus a corridor boolean
     * (|approx − exact|/exact ≤ 5%), so the driver hash-verifies the
     * exact witness against DuckDB's independent count(DISTINCT) AND
-    * the merged sketch's corridor membership. Conf OFF is the
+    * the merged sketch's corridor membership. `audit = false` is the
     * production plan — sketch shards unioned, NO exact distinct
     * anywhere (that column is the one you drop at 100 TB). LakeSpec
-    * keeps the numeric rel_err ≤ 5% audit on the conf-OFF estimates
+    * keeps the numeric rel_err ≤ 5% audit on the audit-off estimates
     * and the sharded==direct merge-equality law. */
-  private def aggHllMerge: Q = (s, d) => aggHllMergePlan(s, d, auditOn(s))
+  private def aggHllMerge: Q = (s, d) => aggHllMergePlan(s, d, audit = true)
 
   private[graft] def aggHllMergePlan(
       s: org.apache.spark.sql.SparkSession, d: String,
@@ -1401,7 +1391,7 @@ object Lake {
     // the TRUE pin asserts the merged sketch landed within 5% of it —
     // a drifting sketch flips the boolean and fails the hash (r14
     // judge item #6: no_oracle → checked). Numeric tolerance + merge
-    // equality stay pinned in LakeSpec on the conf-OFF estimates.
+    // equality stay pinned in LakeSpec on the audit-off estimates.
     "agg_hll_merge" ->
       """SELECT o_orderpriority,
                 count(DISTINCT o_custkey)::BIGINT AS exact_customers,

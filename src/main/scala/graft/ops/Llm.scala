@@ -24,13 +24,6 @@ object Llm {
   private[ops] def dot(x: Column, y: Column): Column =
     call_function("dot64", x, y)
 
-  /** The higher-order-function formulation [[dot]] replaced (kept for
-    * VectorOpsSpec's bit-exactness cross-check): zip_with + aggregate
-    * fold — same IEEE order, but interpreted per element and outside
-    * whole-stage codegen. */
-  private[graft] def dotHof(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-
   /** Per-vector norm — precompute ONCE per side before a pairwise join;
     * recomputing norms inside the pair loop triples the flops
     * (O(pairs·3d) → O(pairs·d + n·d)) without changing a bit of output
@@ -722,7 +715,8 @@ object Llm {
   private def dedupPhash: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    val hashes = s.read.format("binaryFile").load(s"${graft.ops.Media.dir}/img_*")
+    val hashes = s.read.format("binaryFile").option("pathGlobFilter", "img_*")
+      .load(graft.ops.Media.dir)
       .select(element_at(split(col("path"), "/"), -1).as("img_id"),
         col("content"))
       .as[(String, Array[Byte])]
@@ -1870,25 +1864,6 @@ object Llm {
     * DuckDB twin hash-matches. Scale shape: per-row HOFs (no
     * cross-row work) → explode of ~len/w 8-byte fingerprints →
     * df-aggregate + join back on the fingerprint; text never shuffles. */
-  /** The nested-HOF formulation of the winnow fingerprint chain — kept
-    * ONLY for LlmSpec's bit-identity cross-check against the native
-    * expression. Interpreted lambdas re-evaluate referenced subtrees
-    * per element, so this is O(len³)/row — never put it on a hot path
-    * (it is why WinnowFps exists). */
-  private[graft] def winnowFpsHof: Column = {
-    val k = 8
-    val w = 4
-    val p = 1000000007L
-    val chars = transform(split(col("text"), ""), c => ascii(c).cast("long"))
-    val grams = transform(
-      sequence(lit(1), greatest(size(chars) - (k - 1), lit(1))),
-      i => aggregate(slice(chars, i, lit(k)), lit(0L),
-        (acc, c) => (acc * 31 + c) % p))
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(grams) - (w - 1), lit(1))),
-      j => array_min(slice(grams, j, lit(w)))))
-  }
-
   private def textWinnow: Q = (s, d) => {
     val fps = call_function("winnow_fps", col("text"))
     val docFps = fanOut(t(s, d, "documents"))
@@ -2149,29 +2124,6 @@ object Llm {
     * the explode + groupBy(doc, bigram) + top-1 alternative, which
     * pays two full-corpus shuffles to compute the same per-doc scalar.
     * All counts are integers; each fraction is ONE IEEE division. */
-  /** The HOF formulation of the repetition counts — kept ONLY for
-    * LlmSpec's bit-identity cross-check against RepetitionStats.
-    * O(words³)/row (lambdas re-evaluate referenced subtrees per
-    * element); never put it on a hot path. */
-  private[graft] def repetitionHof: Column = {
-    val words = split(col("text"), " ")
-    val n = size(words)
-    val nDistinct = size(array_distinct(words))
-    // sequence(1, 0) DESCENDS — guard single-word docs.
-    val bigrams = when(n > 1,
-      transform(sequence(lit(1), n - 1),
-        i => concat(element_at(words, i), lit(" "),
-          element_at(words, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val topBigram = coalesce(
-      array_max(transform(array_distinct(bigrams),
-        b => size(filter(bigrams, x => x === b)))),
-      lit(0))
-    struct(n.cast("long").as("n_words"),
-      nDistinct.cast("long").as("n_distinct_words"),
-      topBigram.cast("long").as("top_bigram_n"))
-  }
-
   private def textRepetition: Q = (s, d) => {
     val st = call_function("repetition_stats", col("text"))
     val n = col("st.n_words")

@@ -2473,14 +2473,14 @@ object Pipeline {
     * partition cross the wire); everything after runs on ≤ 128
     * entries. The EXACT truth columns (the dedup_minhash_recall
     * discipline) cost a full distinct + self-join — the expensive
-    * plan the sketch replaces — so they are gated behind
-    * [[Tables.auditOn]] (`spark.graft.audit`, default ON so the
-    * gate-SF oracle text is unchanged): conf OFF is the registered
-    * 100 TB plan — sketch-only, one documents scan, no shingle
-    * self-join (PlanSpec pins both). Assumes ≥ k distinct shingles
-    * per corpus (thousands at every gate SF; below k the estimator
-    * degenerates to exact). Output: ONE row. */
-  private def aggTheta: Q = (s, d) => aggThetaPlan(s, d, auditOn(s))
+    * plan the sketch replaces — so they sit behind the `audit`
+    * argument (`true` for the registry key, so the gate-SF oracle
+    * checks them): `audit = false` is the 100 TB plan — sketch-only,
+    * one documents scan, no shingle self-join (PlanSpec pins both).
+    * Assumes ≥ k distinct shingles per corpus (thousands at every gate
+    * SF; below k the estimator degenerates to exact). Output: ONE
+    * row. */
+  private def aggTheta: Q = (s, d) => aggThetaPlan(s, d, audit = true)
 
   private[graft] def aggThetaPlan(
       s: org.apache.spark.sql.SparkSession, d: String,

@@ -383,19 +383,19 @@ object Relational {
     * exact shuffle of the key space, and no multi-distinct Expand
     * either (PlanSpec pins the audit-OFF plan Expand-free, same as
     * agg_bitmap — an in-plan audit that counts distincts exactly would
-    * reintroduce that shape). To give the oracle a checked row: under
-    * [[Tables.auditOn]] (default ON, the gate plan) the output is the
+    * reintroduce that shape). To give the oracle a checked row: with
+    * `audit = true` (the registry key, the gate plan) the output is the
     * EXACT distincts plus corridor booleans — |approx − exact|/exact ≤
     * 3×rsd per sketch (rsd=0.01 ⇒ 0.03; a pin AT the rsd would be a
     * coin flip on the sketch's own standard error) — so the driver
     * hash-verifies the exact witness against DuckDB's independent
     * count(DISTINCT) AND the sketch's corridor membership (a drifting
-    * sketch flips a boolean and fails the hash). Conf OFF is the
-    * production plan: sketch estimates only, no exact distinct
+    * sketch flips a boolean and fails the hash). `audit = false` is
+    * the production plan: sketch estimates only, no exact distinct
     * anywhere (that column is the one you drop at 100 TB).
-    * RobustnessSpec keeps the numeric-tolerance audit on the conf-OFF
-    * estimates. */
-  private def aggApprox: Q = (s, d) => aggApproxPlan(s, d, auditOn(s))
+    * RobustnessSpec keeps the numeric-tolerance audit on the
+    * audit-off estimates. */
+  private def aggApprox: Q = (s, d) => aggApproxPlan(s, d, audit = true)
 
   private[graft] def aggApproxPlan(
       s: SparkSession, d: String, audit: Boolean): DataFrame = {
@@ -436,18 +436,18 @@ object Relational {
   /** Approximate quantiles (Greenwald-Khanna sketch) — the 100 TB
     * answer to exact percentiles: fixed-size mergeable sketch per
     * group, no per-group sort. To give the oracle a checked
-    * row: under [[Tables.auditOn]] (default ON, the gate plan) the
+    * row: with `audit = true` (the registry key, the gate plan) the
     * exact interpolated percentiles ride the same plan and the output
     * is corridor booleans — |approx − exact| ≤ 1% of |exact| per
     * quantile (GK's deterministic rank-error bound at accuracy 10⁴ is
     * far inside it) — hash-verified with the group counts, so a
     * sketch outside tolerance fails the driver gate instead of
-    * passing rows-only. Conf OFF is the production plan: flat q25/
-    * q50/q90 sketch scalars, NO exact `percentile` sort anywhere
+    * passing rows-only. `audit = false` is the production plan: flat
+    * q25/q50/q90 sketch scalars, NO exact `percentile` sort anywhere
     * (PlanSpec pins that plan). RobustnessSpec keeps the numeric 1%
-    * audit on the conf-OFF values. */
+    * audit on the audit-off values. */
   private def aggApproxQuantile: Q = (s, d) =>
-    aggApproxQuantilePlan(s, d, auditOn(s))
+    aggApproxQuantilePlan(s, d, audit = true)
 
   private[graft] def aggApproxQuantilePlan(
       s: SparkSession, d: String, audit: Boolean): DataFrame = {
@@ -616,18 +616,20 @@ object Relational {
       .orderBy("o_custkey", "rn")
   }
 
-  /** The WINDOW formulation of topk_group optimized through
-    * [[graft.plans.TopKRewrite]]: the rule replaces the
-    * shuffle-everything-and-sort window plan with the bounded-heap
-    * aggregate at plan time. The flag is scoped to this query by
-    * forcing physical planning eagerly (QueryExecution caches it)
-    * before restoring the conf. */
+  /** topk_group written as user SQL text: the window top-k that
+    * [[graft.plans.TopKRewrite]] (always on, like every graft rule)
+    * replaces at plan time with the bounded-heap aggregate, so plain
+    * `spark.sql` gets the k-rows-per-group shuffle too. Shares
+    * topk_group's oracle. */
   private def topkGroupRewrite: Q = (s, d) =>
-    withConf(s, "spark.graft.topk.rewrite" -> "true") {
-      val df = topkGroup(s, d)
-      df.queryExecution.executedPlan // force optimize with the rule on
-      df
-    }
+    s.sql(s"""
+      SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+        SELECT o_custkey, o_orderkey, o_totalprice,
+               row_number() OVER (PARTITION BY o_custkey
+                                  ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        FROM parquet.`$d/orders.parquet`)
+      WHERE rn <= 3
+      ORDER BY o_custkey, rn""")
 
   /** ONE SQL text, TWO engines: the classic shipping-priority query
     * (TPC-H Q3 shape) runs VERBATIM through spark.sql and as the DuckDB
@@ -2969,23 +2971,20 @@ object Relational {
     * stays a Spark plan. Doubling keeps the threshold IEEE-exact at
     * every step, so the loop exit — and therefore the result — is
     * engine-independent; the oracle re-derives the same fixpoint
-    * closed-form (first k with count(> 1000·2^k) ≤ 1000). */
+    * closed-form (first k with count(> 1000·2^k) ≤ 1000). Scripting
+    * is on by default in Spark 4.1 (`spark.sql.scripting.enabled`). */
   private def sqlScripting: Q = (s, d) => {
     t(s, d, "orders").createOrReplaceTempView("orders")
-    // Scripts execute EAGERLY at sql() (the loop must run to produce
-    // the final SELECT), so the conf window closes safely right after.
-    withConf(s, "spark.sql.scripting.enabled" -> "true") {
-      s.sql("""
-      BEGIN
-        DECLARE thr DOUBLE DEFAULT 1000.0;
-        WHILE (SELECT count(*) FROM orders WHERE o_totalprice > thr) > 1000 DO
-          SET thr = thr * 2;
-        END WHILE;
-        SELECT thr AS threshold,
-               CAST((SELECT count(*) FROM orders WHERE o_totalprice > thr)
-                    AS BIGINT) AS n_above;
-      END""")
-    }
+    s.sql("""
+    BEGIN
+      DECLARE thr DOUBLE DEFAULT 1000.0;
+      WHILE (SELECT count(*) FROM orders WHERE o_totalprice > thr) > 1000 DO
+        SET thr = thr * 2;
+      END WHILE;
+      SELECT thr AS threshold,
+             CAST((SELECT count(*) FROM orders WHERE o_totalprice > thr)
+                  AS BIGINT) AS n_above;
+    END""")
   }
 
   /** SQL PIPE SYNTAX (Spark 4's `|>` operators, the SQL:2023-era
@@ -4050,7 +4049,7 @@ object Relational {
     // exact side, and the TRUE pins assert each sketch landed inside
     // its tolerance corridor (3×rsd / 1%) — a drifting sketch flips a
     // boolean and fails the hash. The numeric audits stay in RobustnessSpec on the
-    // conf-OFF sketch values.
+    // audit-off sketch values.
     "agg_approx" ->
       """SELECT l_returnflag,
                 count(DISTINCT l_partkey)::BIGINT AS exact_parts,

@@ -772,11 +772,15 @@ object Streaming {
     * batchId−1 (the [[streamMv]] exactly-once discipline: a replayed
     * batch re-reads its own predecessor and overwrites its own
     * output). Output: one row — estimate, k-th hash, sketch size, and
-    * (only under [[Tables.auditOn]], default ON so the gate-SF oracle
-    * text is unchanged) the exact distinct count — the full-corpus
-    * distinct the sketch replaces; conf OFF is the production plan,
-    * which touches nothing but the 64-row sketch after the fold. */
-  private def streamTheta: Q = (s, d) => {
+    * (only with `audit = true`, the registry key, so the gate-SF
+    * oracle checks it) the exact distinct count — the full-corpus
+    * distinct the sketch replaces; `audit = false` is the production
+    * plan, which touches nothing but the 64-row sketch after the
+    * fold. */
+  private def streamTheta: Q = (s, d) => streamThetaPlan(s, d, audit = true)
+
+  private[graft] def streamThetaPlan(s: SparkSession, d: String,
+      audit: Boolean): DataFrame = {
     val root = streamDir("stream_theta/versions")
     val last = runStreamTheta(s, d, root, streamDir("stream_theta/ckpt"))
     val k = 64
@@ -785,7 +789,7 @@ object Streaming {
     val base = sk.agg(max("h").as("kth"), count(lit(1)).as("n_sketch"))
     val est =
       (lit((k - 1) * scale).cast("double") / col("kth")).as("est_users")
-    if (!auditOn(s)) base.select(est, col("kth"), col("n_sketch"))
+    if (!audit) base.select(est, col("kth"), col("n_sketch"))
     else {
       val exact = events(s, d).select(col("user_id")).distinct()
         .agg(count(lit(1)).as("exact_users"))

@@ -33,15 +33,12 @@ import graft.expr.TopKAgg
   * NaN/-0.0 follow Spark's sort semantics inside [[TopKAgg]]'s buffer
   * (DESC NULLS LAST / ASC NULLS FIRST, Double.compare with -0.0
   * collapsed), so the rewrite stays bit-exact on any input, not just
-  * null-free columns. Gated off by default behind
-  * `spark.graft.topk.rewrite` (the topk_group_rewrite query and
-  * ExtensionsSpec turn it on) so the window formulation stays
-  * independently testable. */
+  * null-free columns. Always on, like [[graft.CollapseSanitize]]; Spark's
+  * own `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite`
+  * switches it off (the tests build the window formulation that way). */
 object TopKRewrite extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.topk.rewrite", "false").toBoolean)
-      return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case Filter(
             LessThanOrEqual(rnRef: AttributeReference,
@@ -62,7 +59,6 @@ object TopKRewrite extends Rule[LogicalPlan] {
             child.outputSet.subsetOf(AttributeSet(Seq(p, s, i))) =>
         rewrite(p, s, i, rnAlias, k, child)
     }
-  }
 
   private def rewrite(
       p: AttributeReference, s: AttributeReference, i: AttributeReference,

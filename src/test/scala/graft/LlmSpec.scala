@@ -8,6 +8,46 @@ import org.scalatest.funsuite.AnyFunSuite
 class LlmSpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
 
+  /** The nested-HOF formulation of the winnow fingerprint chain that
+    * the native winnow_fps replaced. Interpreted lambdas re-evaluate
+    * referenced subtrees per element, so this is O(len³)/row. */
+  private def winnowFpsHof: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    val k = 8
+    val w = 4
+    val p = 1000000007L
+    val chars = transform(split(col("text"), ""), c => ascii(c).cast("long"))
+    val grams = transform(
+      sequence(lit(1), greatest(size(chars) - (k - 1), lit(1))),
+      i => aggregate(slice(chars, i, lit(k)), lit(0L),
+        (acc, c) => (acc * 31 + c) % p))
+    array_distinct(transform(
+      sequence(lit(1), greatest(size(grams) - (w - 1), lit(1))),
+      j => array_min(slice(grams, j, lit(w)))))
+  }
+
+  /** The HOF formulation of the repetition counts that the native
+    * repetition_stats replaced. O(words³)/row. */
+  private def repetitionHof: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    val words = split(col("text"), " ")
+    val n = size(words)
+    val nDistinct = size(array_distinct(words))
+    // sequence(1, 0) DESCENDS — guard single-word docs.
+    val bigrams = when(n > 1,
+      transform(sequence(lit(1), n - 1),
+        i => concat(element_at(words, i), lit(" "),
+          element_at(words, i + 1))))
+      .otherwise(array().cast("array<string>"))
+    val topBigram = coalesce(
+      array_max(transform(array_distinct(bigrams),
+        b => size(filter(bigrams, x => x === b)))),
+      lit(0))
+    struct(n.cast("long").as("n_words"),
+      nDistinct.cast("long").as("n_distinct_words"),
+      topBigram.cast("long").as("top_bigram_n"))
+  }
+
   /** Fixture dir with documents+embeddings parquet: doc/vec 0 and 1 are
     * near-duplicates, the rest are unrelated. */
   private lazy val dir: String = {
@@ -288,7 +328,7 @@ class LlmSpec extends AnyFunSuite {
       call_function("winnow_fps", col("text")).as("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val hof = docs.select(col("doc_id"),
-      graft.ops.Llm.winnowFpsHof.as("fps")).collect()
+      winnowFpsHof.as("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native.keySet === hof.keySet)
     // Same distinct fingerprints in the same first-occurrence order.
@@ -303,7 +343,7 @@ class LlmSpec extends AnyFunSuite {
       call_function("winnow_fps", col("text")).as("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val eh = edge.select(col("doc_id"),
-      graft.ops.Llm.winnowFpsHof.as("fps")).collect()
+      winnowFpsHof.as("fps")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     en.foreach { case (id, fps) => assert(fps === eh(id), s"edge doc $id") }
   }
@@ -438,7 +478,7 @@ class LlmSpec extends AnyFunSuite {
     val native = asMap(docs.select(col("doc_id"),
       call_function("repetition_stats", col("text")).as("st")).collect())
     val hof = asMap(docs.select(col("doc_id"),
-      graft.ops.Llm.repetitionHof.as("st")).collect())
+      repetitionHof.as("st")).collect())
     assert(native === hof)
     val edge = spark.createDataFrame(Seq(
       (0L, ""), (1L, "word"), (2L, "a a a a a"), (3L, "x y x y x y"),
@@ -447,7 +487,7 @@ class LlmSpec extends AnyFunSuite {
     val en = asMap(edge.select(col("doc_id"),
       call_function("repetition_stats", col("text")).as("st")).collect())
     val eh = asMap(edge.select(col("doc_id"),
-      graft.ops.Llm.repetitionHof.as("st")).collect())
+      repetitionHof.as("st")).collect())
     assert(en === eh)
   }
 

@@ -520,14 +520,20 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), "no window sort may build the sketch: " + p)
   }
 
-  test("mv_rewrite: a fresh consumer query swaps to the MV scan; conf-gated; result-invisible") {
+  private def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation match {
+        case f: HadoopFsRelation => f.location.rootPaths.map(_.toString)
+        case _ => Seq.empty[String]
+      }
+    }.flatten
+  }
+
+  /** mv_rewrite's view definition, freshly constructed. */
+  private def pricingDefine = {
     import org.apache.spark.sql.functions._
-    // registers the MV (and pins correctness via the oracle gate)
-    SparkEntry.queries("mv_rewrite")(spark, sf).collect()
-    // a consumer that knows NOTHING about the MV: same definition,
-    // freshly constructed (different exprIds — canonical match only)
-    def consumer = Tables.t(spark, sf, "lineitem")
+    Tables.t(spark, sf, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         round(sum(Tables.dec(col("l_quantity"))), 2).cast("double")
@@ -535,18 +541,18 @@ class PlanSpec extends AnyFunSuite {
         round(sum(Tables.dec(col("l_extendedprice"))), 2).cast("double")
           .as("sum_price"),
         count(lit(1)).as("n"))
-      .orderBy("l_returnflag", "l_linestatus")
-    def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collect {
-        case l: LogicalRelation => l.relation match {
-          case f: HadoopFsRelation => f.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-      }.flatten
-    val (onPaths, onRows) = GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
-      val df = consumer
-      (scanPaths(df), df.collect().map(_.toSeq))
-    }
+  }
+
+  test("mv_rewrite: a fresh consumer query swaps to the MV scan; result-invisible") {
+    // builds the MV (and pins correctness via the oracle gate)
+    SparkEntry.queries("mv_rewrite")(spark, sf).collect()
+    val mv = spark.read.parquet(Scratch.path("mv/pricing", sf))
+    // a consumer that knows NOTHING about the MV: same definition,
+    // freshly constructed (different exprIds — canonical match only)
+    def consumer = pricingDefine.orderBy("l_returnflag", "l_linestatus")
+    val on = graft.plans.MvRewrite.rewrite(consumer, pricingDefine -> mv)
+    val onPaths = scanPaths(on)
+    val onRows = on.collect().map(_.toSeq)
     assert(onPaths.exists(_.contains(Scratch.path("mv/pricing", sf))),
       s"rewritten plan must scan the MV: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
@@ -554,20 +560,25 @@ class PlanSpec extends AnyFunSuite {
     val off = consumer
     val offPaths = scanPaths(off)
     assert(offPaths.exists(_.contains("lineitem")),
-      s"with the rule off the base table must be scanned: $offPaths")
+      s"without the rewrite the base table must be scanned: $offPaths")
     assert(!offPaths.exists(_.contains(Scratch.path("mv/pricing", sf))), offPaths.toString)
     // the rewrite is result-INVISIBLE
     assert(onRows.toSeq === off.collect().map(_.toSeq).toSeq)
   }
 
   test("mv_rewrite_rollup: a SUBSET-group consumer re-aggregates the MV " +
-      "grid; conf-gated; result-invisible") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      "grid; result-invisible") {
     import org.apache.spark.sql.functions._
-    // registers the grid MV (and pins correctness via the oracle gate)
+    // builds the grid MV (and pins correctness via the oracle gate)
     SparkEntry.queries("mv_rewrite_rollup")(spark, sf).collect()
+    val mv = spark.read.parquet(Scratch.path("mv/rollup", sf))
     def cents(c: org.apache.spark.sql.Column) =
       (Tables.dec(c) * 100).cast("long")
+    def define = Tables.t(spark, sf, "lineitem")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(cents(col("l_quantity"))).as("qty_c"),
+        max(cents(col("l_extendedprice"))).as("max_price_c"),
+        count(lit(1)).as("n"))
     // a consumer that knows NOTHING about the MV and groups by a
     // SUBSET of its grid — only the rollup lattice can match it
     def consumer = Tables.t(spark, sf, "lineitem")
@@ -576,17 +587,9 @@ class PlanSpec extends AnyFunSuite {
         max(cents(col("l_extendedprice"))).as("max_price_c"),
         count(lit(1)).as("n"))
       .orderBy("l_linestatus")
-    def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collect {
-        case l: LogicalRelation => l.relation match {
-          case f: HadoopFsRelation => f.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-      }.flatten
-    val (onPaths, onRows) = GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
-      val df = consumer
-      (scanPaths(df), df.collect().map(_.toSeq))
-    }
+    val on = graft.plans.MvRewrite.rewrite(consumer, define -> mv)
+    val onPaths = scanPaths(on)
+    val onRows = on.collect().map(_.toSeq)
     assert(onPaths.exists(_.contains(Scratch.path("mv/rollup", sf))),
       s"subset consumer must scan the MV grid: $onPaths")
     assert(!onPaths.exists(_.contains("lineitem")),
@@ -594,24 +597,24 @@ class PlanSpec extends AnyFunSuite {
     val off = consumer
     val offPaths = scanPaths(off)
     assert(offPaths.exists(_.contains("lineitem")),
-      s"with the rule off the base table must be scanned: $offPaths")
+      s"without the rewrite the base table must be scanned: $offPaths")
     assert(!offPaths.exists(_.contains(Scratch.path("mv/rollup", sf))), offPaths.toString)
     // the rollup is result-INVISIBLE (exact integer algebra both ways)
     assert(onRows.toSeq === off.collect().map(_.toSeq).toSeq)
-    // a FLOAT-sum definition must NOT join the lattice: the mv_rewrite
-    // MV (rounded double sums) is registered too, but a subset
-    // consumer of ITS grid keeps scanning lineitem
+    // a FLOAT-sum definition must NOT join the lattice: a subset
+    // consumer of the mv_rewrite MV's (rounded double sums) grid keeps
+    // scanning lineitem
     SparkEntry.queries("mv_rewrite")(spark, sf).collect()
+    val pricing = spark.read.parquet(Scratch.path("mv/pricing", sf))
     def floatConsumer = Tables.t(spark, sf, "lineitem")
       .groupBy("l_returnflag")
       .agg(round(sum(Tables.dec(col("l_quantity"))), 2).cast("double")
         .as("sum_qty"))
-    GraftSession.withConf(spark, "spark.graft.mv.rewrite" -> "true") {
-      val fp = scanPaths(floatConsumer)
-      assert(fp.exists(_.contains("lineitem")),
-        s"float sums must stay out of the rollup lattice: $fp")
-      assert(!fp.exists(_.contains(Scratch.path("mv/pricing", sf))), fp.toString)
-    }
+    val fp = scanPaths(
+      graft.plans.MvRewrite.rewrite(floatConsumer, pricingDefine -> pricing))
+    assert(fp.exists(_.contains("lineitem")),
+      s"float sums must stay out of the rollup lattice: $fp")
+    assert(!fp.exists(_.contains(Scratch.path("mv/pricing", sf))), fp.toString)
   }
 
   test("ts_dtw's DP runs inside whole-stage codegen (native expression, not a HOF)") {

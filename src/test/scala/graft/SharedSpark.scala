@@ -18,4 +18,11 @@ object SharedSpark {
     val d = s"$sfRoot/sf$scale"
     if (new java.io.File(d).isDirectory) Some(d) else None
   }
+
+  /** `body` with the always-on [[graft.plans.TopKRewrite]] excluded
+    * through Spark's own `excludedRules`: the window formulation a
+    * rewrite is checked against. Plan or collect inside `body`. */
+  def withoutTopKRewrite[T](body: => T): T =
+    GraftSession.withConf(spark,
+      "spark.sql.optimizer.excludedRules" -> "graft.plans.TopKRewrite")(body)
 }

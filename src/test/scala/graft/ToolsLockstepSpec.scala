@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * outside Streaming.drain, if a round checkpoint is written outside
   * Graph.fixpoint, if a listener is registered outside graft.Metrics,
   * if a one-time artifact is keyed or a catalog table saved outside
-  * graft.Scratch, if an archive is exploded outside Ingest.members, or
-  * if a comment under src/main narrates a past review round.
+  * graft.Scratch, if an archive is exploded outside Ingest.members, if
+  * main code reads a graft conf key or an operator plans a frame
+  * eagerly instead of materializing it, or if a comment under src/main
+  * narrates a past review round.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -120,6 +122,22 @@ class ToolsLockstepSpec extends AnyFunSuite {
       assert(uses.size === 1, s"explode archives through Ingest.members:\n" +
         uses.mkString("\n"))
     }
+  }
+
+  test("no graft behaviour depends on session conf or a dropped plan") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    // rules are always on (Spark's excludedRules switches them off),
+    // the MV rewrite is a function of its caller, and the audit is an
+    // argument: there is no conf key of graft's own to read
+    val keys = hits("src/main", "spark." + "graft.")
+    assert(keys.isEmpty, "pass an argument instead of reading a graft conf key:\n" +
+      keys.mkString("\n"))
+    // a plan forced inside a conf window is re-optimized by every later
+    // action on the frame, outside it: materialize inside the window
+    val eager = hits("src/main/scala/graft/ops", "queryExecution.executedPlan")
+    assert(eager.isEmpty, "materialize inside GraftSession.withConf; a planned frame loses the conf:\n" +
+      eager.mkString("\n"))
   }
 
   test("comments under src/main give reasons, not review-round history") {

@@ -10,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class VectorOpsSpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
 
-  private def hof = graft.ops.Llm.dotHof _
+  /** The higher-order-function formulation dot64 replaced: zip_with +
+    * aggregate fold — same IEEE order, but interpreted per element and
+    * outside whole-stage codegen. */
+  private def hof(x: org.apache.spark.sql.Column,
+      y: org.apache.spark.sql.Column) =
+    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
   private def native(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) = call_function("dot64", a, b)
 
