@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** The one place a graft SparkSession is configured, and the one way
-  * graft code changes that configuration temporarily ([[withConf]]).
+  * graft code gives a frame conf values of its own ([[scoped]]).
   *
   * Sessions built elsewhere (e.g. by an embedding application) get the
   * engine's rules and SQL functions by setting
@@ -37,24 +37,19 @@ object GraftSession {
     s
   }
 
-  /** Runs `body` with `confs` set on `s`, then puts every key back
-    * exactly as it was: its previous value, or unset if it was unset.
-    *
-    * Plans are optimized at action time, and every action on a frame
-    * (a noop write, `coalesce(1).write`) optimizes again, so a body must
-    * MATERIALIZE what it computes inside the window: a frame planned
-    * there and acted on later runs without the conf. No lock is
-    * held across `body` (bodies start streams whose `foreachBatch` runs
-    * on another thread); the conf is session-global, so callers that
-    * need mutual exclusion lock around the call. */
-  def withConf[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
-    val explicit = s.conf.getAll
-    val prev = confs.map { case (k, _) => k -> explicit.get(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+  /** A clone of `s` with `confs` set: the session a frame or stream is
+    * built on when it needs Spark conf values of its own. `s` is left
+    * unchanged, so nothing is restored and other threads never see the
+    * values. Every action on a frame built here (a noop write,
+    * `coalesce(1).write`) optimizes under these values, and a stream
+    * started here runs its micro-batches under them. The clone starts
+    * from `s`'s conf, temp views, functions and QueryExecutionListeners;
+    * Spark does not copy StreamingQueryListeners, so they are copied
+    * here, and a stream started on the clone reports to them. */
+  def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = GraftSqlBridge.cloned(s)
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    s.streams.listListeners().foreach(l => c.streams.addListener(l))
+    c
   }
 }

@@ -88,27 +88,21 @@ object Scratch {
     s.read.parquet(path)
   }
 
-  /** Serializes the conf window of [[tableCoalesced]]: two overlapping
-    * windows on different threads could each capture the other's
-    * transient value as the one to restore. Reentrant on one thread. */
-  private val confWindowLock = new Object
-
   /** [[table]] with byte-based AQE partition coalescing for the build's
-    * final shuffle (`parallelismFirst=false`). A loop that re-scans a
-    * small artifact many times otherwise pays the per-task floor once
-    * per near-empty file of the parallelism-first default; at scale the
-    * same conf gives advisory-sized partitions. For small-to-medium
-    * control artifacts read by loops, not for fan-out sources whose
-    * readers do per-row work before any shuffle. */
+    * final shuffle (`parallelismFirst=false`): `build` gets a
+    * [[GraftSession.scoped]] session with that conf and builds its frame
+    * on it. A loop that re-scans a small artifact many times otherwise
+    * pays the per-task floor once per near-empty file of the
+    * parallelism-first default; at scale the same conf gives
+    * advisory-sized partitions. For small-to-medium control artifacts
+    * read by loops, not for fan-out sources whose readers do per-row
+    * work before any shuffle. */
   def tableCoalesced(s: SparkSession, path: String)(
-      build: => DataFrame): DataFrame = {
+      build: SparkSession => DataFrame): DataFrame = {
     latch(path) {
-      confWindowLock.synchronized {
-        GraftSession.withConf(s,
-          "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
-          build.write.mode("overwrite").parquet(path)
-        }
-      }
+      build(GraftSession.scoped(s,
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))
+        .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }

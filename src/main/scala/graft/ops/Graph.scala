@@ -254,21 +254,20 @@ object Graph {
   private def graphPagerank: Q = (s, d) => {
     val e2 = copurchaseEdgesBucketed(s, d)
     // The degree table is O(V) and invariant — its own scratch
-    // artifact, so the count, the rank init and the final report read
-    // 20k-row parquet instead of each re-running a distinct over the
-    // full O(E) edge table.
+    // artifact, so the first round's sizing, the rank init and the final
+    // report read 20k-row parquet instead of each re-running a distinct
+    // over the full O(E) edge table.
     val deg = Scratch.tableCoalesced(s, Scratch.path("graph/copurchase_deg", d)) {
       // from the PLAIN artifact — the bucketed layout is (src, dst) only
-      copurchaseEdges(s, d).select(col("src"), col("outdeg")).distinct()
+      copurchaseEdges(_, d).select(col("src"), col("outdeg")).distinct()
     }
     val degN = deg.select(col("src").as("node"), col("outdeg"))
     val init = degN.select(col("node"), lit(Scale).as("pr"), col("outdeg"))
     // Every iteration is checkpointed (one row per node): without that
     // the lineage nests, and iteration N's plan RE-RUNS iterations
     // 1..N−1 (measured 6 s → sub-second at sf0.1). Round 1's write is
-    // sized by the node count, one cheap count over the scratch-backed
-    // degree artifact.
-    val pr = fixpoint(s, "pr", d, init, deg.count()) { (ranks, _) =>
+    // sized by the node count, read from the degree artifact's footers.
+    val pr = fixpoint(s, "pr", d, init, parquetRows(s, deg)) { (ranks, _) =>
       // Re-attach outdeg to the new rank rows via the O(V) degree
       // artifact (broadcast at test scale): every dst is also a src
       // (symmetric distinct pairs), so the inner join keeps exactly
@@ -302,24 +301,27 @@ object Graph {
     * per-iteration materialization (lineage reset), same 3 unrolled
     * iterations in the oracle. */
   private def graphPpr: Q = (s, d) => {
-    val und = repeatCopurchaseEdges(s, d)
-    val e = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(und.select(col("pb").as("src"), col("pa").as("dst")))
+    def directed(ss: SparkSession): DataFrame = {
+      val und = repeatCopurchaseEdges(ss, d)
+      und.select(col("pa").as("src"), col("pb").as("dst"))
+        .unionAll(und.select(col("pb").as("src"), col("pa").as("dst")))
+    }
     // deg and the degree-annotated edge table are invariant inputs to
-    // every iteration AND the seed/count/init/final control reads —
+    // every iteration AND the seed/init/final control reads —
     // materialize once like the pagerank artifacts, so the union+degree
     // shuffle does not re-run per consumer.
-    val deg = Scratch.tableCoalesced(s, Scratch.path("graph/ppr_deg", d)) {
-      e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val degPath = Scratch.path("graph/ppr_deg", d)
+    val deg = Scratch.tableCoalesced(s, degPath) {
+      directed(_).groupBy("src").agg(count(lit(1)).as("outdeg"))
     }
-    val e2 = Scratch.tableCoalesced(s, Scratch.path("graph/ppr_e2", d)) {
-      e.join(deg, "src")
+    val e2 = Scratch.tableCoalesced(s, Scratch.path("graph/ppr_e2", d)) { cs =>
+      directed(cs).join(cs.read.parquet(degPath), "src")
     }
     val seed = deg.orderBy(col("outdeg").desc, col("src"))
       .limit(1).collect()(0).getLong(0)
     val init = deg.select(col("src").as("node"),
       when(col("src") === seed, lit(Scale)).otherwise(lit(0L)).as("pr"))
-    val ppr = fixpoint(s, "ppr", d, init, deg.count()) { (ranks, _) =>
+    val ppr = fixpoint(s, "ppr", d, init, parquetRows(s, deg)) { (ranks, _) =>
       e2.join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("pr div outdeg").as("contrib"))
         .groupBy("dst")
@@ -395,8 +397,8 @@ object Graph {
   private[graft] def repeatCopurchaseEdges(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Scratch.tableCoalesced(s, Scratch.path("graph/repeat", d)) {
-      val li = t(s, d, "lineitem")
+    Scratch.tableCoalesced(s, Scratch.path("graph/repeat", d)) { cs =>
+      val li = t(cs, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a").join(li.as("b"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
@@ -508,8 +510,8 @@ object Graph {
   private[graft] def weightedRepeatEdges(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Scratch.tableCoalesced(s, Scratch.path("graph/wrepeat", d)) {
-      val li = t(s, d, "lineitem")
+    Scratch.tableCoalesced(s, Scratch.path("graph/wrepeat", d)) { cs =>
+      val li = t(cs, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a").join(li.as("b"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
@@ -587,8 +589,8 @@ object Graph {
     * like [[copurchaseEdges]]. */
   private[graft] def frequentEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Scratch.tableCoalesced(s, Scratch.path("graph/freqedges", d)) {
-      val li = t(s, d, "lineitem")
+    Scratch.tableCoalesced(s, Scratch.path("graph/freqedges", d)) { cs =>
+      val li = t(cs, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
       val p = li.as("a").join(li.as("b"),
@@ -620,8 +622,10 @@ object Graph {
     val e = frequentEdges(s, d)
     val init = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    // Round 1's write is sized by the node count (one row per node).
-    val cc = fixpoint(s, "cc", d, init, init.count()) { (labels, _) =>
+    // Round 1's write is sized by the edge count, read from the edge
+    // artifact's footers: an upper bound on the node count (one row per
+    // node) that costs no job. The stop test reads only the current round.
+    val cc = fixpoint(s, "cc", d, init, parquetRows(s, e)) { (labels, _) =>
       val prop = e.join(labels, col("src") === col("node"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
       labels.join(prop, col("node") === col("dst"), "left")
@@ -814,7 +818,10 @@ object Graph {
     // The previous round's edge count upper-bounds this round's rows
     // (edges only leave the multiset), so it sizes the write: this is
     // the largest state in the family, the whole surviving EDGE multiset.
-    val core = fixpoint(s, "kcore", d, init, init.count()) { (edges, i) =>
+    // The init is `und` and its mirror, so its count is exactly twice
+    // the artifact's footer count; the stop test compares the first
+    // round with it.
+    val core = fixpoint(s, "kcore", d, init, 2 * parquetRows(s, und)) { (edges, i) =>
       require(i <= kcoreRounds,
         s"k-core peel exceeded $kcoreRounds rounds — widen the oracle unroll")
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.GraftSession.withConf
+import graft.GraftSession.scoped
 import graft.Scratch
 import graft.plans.MvRewrite
 import graft.Tables._
@@ -185,9 +185,9 @@ object Lake {
     * pages, so a whole-table min/max/count over 100 TB touches
     * O(row-groups) bytes instead of O(table). Needs the DSv2 parquet
     * path (useV1SourceList cleared) + the pushdown flag, both Spark
-    * confs with no plan-local form, so the key materializes its one
-    * row INSIDE the conf window: any later action on a frame optimizes
-    * again, outside it, and would lose the pushdown. Falls back
+    * confs with no plan-local form, so the frame is built on a
+    * [[graft.GraftSession.scoped]] session that sets them: every action
+    * on it optimizes under them and keeps the pushdown. Falls back
     * transparently when a column/agg isn't footer-answerable (doubles
     * with NaNs, filters, non-partition group-bys), so the result is
     * conf-independent — the oracle is the plain aggregate; LakeSpec
@@ -195,20 +195,13 @@ object Lake {
     * plans the key's actions run. */
   private[graft] def aggPushdownFrame(
       s: org.apache.spark.sql.SparkSession, d: String) =
-    t(s, d, "lineitem").selectExpr(
+    t(scoped(s, "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> ""), d, "lineitem").selectExpr(
       "count(*) AS n",
       "min(l_orderkey) AS min_key", "max(l_orderkey) AS max_key",
       "min(l_linenumber) AS min_ln", "max(l_linenumber) AS max_ln")
 
-  private[graft] def withAggPushdown[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    withConf(s, "spark.sql.parquet.aggregatePushdown" -> "true",
-      "spark.sql.sources.useV1SourceList" -> "")(body)
-
-  private def scanAggPushdown: Q = (s, d) => withAggPushdown(s) {
-    val df = aggPushdownFrame(s, d)
-    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-  }
+  private def scanAggPushdown: Q = aggPushdownFrame
 
   /** WRITE-AUDIT-PUBLISH with atomic manifest commits — the lakehouse
     * table-format transaction pattern (Iceberg/Delta commit protocol)

@@ -2302,16 +2302,16 @@ object Pipeline {
     val coreCell = Scratch.table(s, Scratch.path("ml/dbscan_corecell", d)) {
       core.join(cellOf, Seq("id"))
     }
-    val cellEdges = Scratch.table(s, Scratch.path("ml/dbscan_celledges", d)) {
+    val cellEdgesPath = Scratch.path("ml/dbscan_celledges", d)
+    Scratch.table(s, cellEdgesPath) {
       ce.join(coreCell.select(col("id"), col("kx").as("ax"),
           col("ky").as("ay")), Seq("id"))
         .join(coreCell.select(col("id").as("id2"), col("kx").as("bx"),
           col("ky").as("by")), Seq("id2"))
         .select("ax", "ay", "bx", "by").distinct()
     }
-    // 8-HOP EDGE CLOSURE before the loop (r16 squared twice; r17 a
-    // third time): each propagation round is a fixed ~3-job floor
-    // (join + checkpoint + changed-count) over a kilobyte label table,
+    // 8-HOP EDGE CLOSURE before the loop: each propagation round is a
+    // fixed job floor (join + checkpoint) over a kilobyte label table,
     // so ROUND COUNT is the whole cost — and 1-hop min-label
     // propagation needs O(cluster diameter in cells) rounds (~12 at
     // the gate fixture; 3 at 4 hops, 2 at 8). Squaring the symmetric
@@ -2319,42 +2319,41 @@ object Pipeline {
     // same fixpoint (reachability unchanged — E⁸ ⊆ E*, and chg=0
     // still certifies per-component constancy because hop ⊇ E). Size
     // stays cell-bounded: ≤ (2·8+1)² = 289 neighbors per occupied
-    // cell. One-time scratch artifact, like nbr/cellEdges.
-    val hop = Scratch.tableCoalesced(s, Scratch.path("ml/dbscan_hop8", d)) {
+    // cell. One-time scratch artifact, like nbr and the cell edges.
+    val hop = Scratch.tableCoalesced(s, Scratch.path("ml/dbscan_hop8", d)) { cs =>
       def sq(e: DataFrame): DataFrame = e.as("p")
         .join(e.as("q"),
           col("p.bx") === col("q.ax") && col("p.by") === col("q.ay"))
         .select(col("p.ax").as("ax"), col("p.ay").as("ay"),
           col("q.bx").as("bx"), col("q.by").as("by"))
         .unionByName(e).distinct()
-      sq(sq(sq(cellEdges)))
+      sq(sq(sq(cs.read.parquet(cellEdgesPath))))
     }
-    var labels = coreCell.groupBy("kx", "ky").agg(min(col("id")).as("lbl"))
-    var changed = 1L
-    var i = 0
-    while (changed > 0) {
-      i += 1
+    // Min-label propagation on Graph.fixpoint: the changed-label count
+    // rides each round's checkpoint write, and the loop stops at the
+    // first round that lowers no label. Round 1 is sized by the core
+    // point count, an upper bound on the occupied core cells.
+    val labels = Graph.fixpoint(s, "dbscan", d,
+        coreCell.groupBy("kx", "ky").agg(min(col("id")).as("lbl")),
+        parquetRows(s, coreCell)) { (state, i) =>
       require(i <= 32, s"dbscan label propagation past 32 rounds on $d")
+      val cur = state.select("kx", "ky", "lbl")
       // Both loop joins carry O(occupied cells) state — broadcast-hint
       // them so a round's only exchange is the tiny neighbor-min
-      // groupBy (r16: AQE planned both as shuffle joins, and each
-      // extra exchange is an extra per-round job — guide §2.4/§3.1;
-      // at scale the label table is the rank-table analog and would
-      // shuffle, but its volume is cell-bounded, not row-bounded).
-      val prop = hop.join(broadcast(labels),
+      // groupBy (AQE would plan both as shuffle joins, and each extra
+      // exchange is an extra per-round job — guide §2.4/§3.1; at scale
+      // the label table is the rank-table analog and would shuffle,
+      // but its volume is cell-bounded, not row-bounded).
+      val prop = hop.join(broadcast(cur),
           col("ax") === col("kx") && col("ay") === col("ky"))
         .groupBy(col("bx"), col("by")).agg(min(col("lbl")).as("nlbl"))
-      // the label table is O(occupied cells) — an eager localCheckpoint
-      // truncates lineage without a parquet round trip per round
-      val cur = labels.join(broadcast(prop),
+      cur.join(broadcast(prop),
           col("kx") === col("bx") && col("ky") === col("by"), "left")
         .select(col("kx"), col("ky"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
           (coalesce(col("nlbl"), col("lbl")) < col("lbl")).as("chg"))
-        .coalesce(1).localCheckpoint()
-      changed = cur.where(col("chg")).count()
-      labels = cur.select("kx", "ky", "lbl")
-    }
+    }(count_if(col("chg")).as("changed")) { (_, cur, _) => cur.getLong(1) == 0 }
+      .state.select("kx", "ky", "lbl")
     val coreLab = coreCell.join(labels, Seq("kx", "ky"))
       .select(col("id").as("node"), col("lbl"))
     val borderLab = nbr

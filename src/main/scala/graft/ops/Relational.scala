@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.GraftSession.withConf
+import graft.GraftSession.scoped
 import graft.Scratch
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -167,28 +167,23 @@ object Relational {
     * shuffle — at 100 TB this is the difference between shuffling the
     * whole fact table and shuffling only the ~matching fraction. Spark's
     * default thresholds target cluster scale (app side > 10 GB), so the
-    * query lowers them for the demonstration and restores them after
-    * materializing (optimization happens at action time, hence the
-    * eager write-to-scratch inside the conf window). Broadcast is
-    * disabled within the window because a broadcastable dim makes the
-    * bloom moot — the interesting regime is the 100M-row dim that
-    * shuffles but blooms. Result is bloom-independent (filters never
-    * change join output), so the oracle is the plain join. */
-  private def joinBloom: Q = (s, d) => {
-    val out = s"${graft.Tables.scratchRoot}/sink/join_bloom"
-    withConf(s,
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      bloomJoinFrame(s, d).write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(out).orderBy("o_orderkey")
-  }
+    * frame is built on a [[graft.GraftSession.scoped]] session that
+    * lowers them for the demonstration; every action on it optimizes
+    * under that conf. Broadcast is disabled there because a
+    * broadcastable dim makes the bloom moot — the interesting regime is
+    * the 100M-row dim that shuffles but blooms. Result is
+    * bloom-independent (filters never change join output), so the
+    * oracle is the plain join. */
+  private def joinBloom: Q = (s, d) => bloomJoinFrame(s, d).orderBy("o_orderkey")
 
-  /** The join under joinBloom's conf window, also used by PlanSpec to
-    * pin BloomFilterMightContain in the optimized plan. */
+  /** joinBloom's join on its own scoped session, also used by PlanSpec
+    * to pin BloomFilterMightContain in the optimized plan. */
   private[graft] def bloomJoinFrame(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders").where(col("o_totalprice") > 450000)
-    val l = t(s, d, "lineitem")
+    val bs = scoped(s,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val o = t(bs, d, "orders").where(col("o_totalprice") > 450000)
+    val l = t(bs, d, "lineitem")
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .groupBy(col("o_orderkey"))
       .agg(count(lit(1)).as("n_items"),
@@ -1948,22 +1943,26 @@ object Relational {
     * same synthetic hot key (half the fact rows collapse onto key 0),
     * and Adaptive Query Execution detects the oversized shuffle
     * partition at runtime and splits it across tasks (plan shows
-    * `skew=true`). Thresholds are lowered inside an eager-materialize
-    * conf window (AQE decides at execution time) — at cluster scale the
-    * defaults (256 MB partitions) do this unprompted. Salting remains
-    * the portable fallback; AQE is the zero-code-change path. Bloom/
-    * broadcast are disabled in-window so the join actually shuffles. */
-  private[graft] def skewJoinFrame(s: SparkSession, d: String): DataFrame = {
+    * `skew=true`). The frame is built on a [[graft.GraftSession.scoped]]
+    * session with lowered thresholds ([[skewAqeConfs]]; AQE decides at
+    * execution time, so every action on the frame runs under them) — at
+    * cluster scale the defaults (256 MB partitions) do this unprompted.
+    * Salting remains the portable fallback; AQE is the zero-code-change
+    * path. Broadcast is disabled on that session so the join actually
+    * shuffles. */
+  private[graft] def skewJoinFrame(s: SparkSession, d: String,
+      threshold: String = "64KB"): DataFrame = {
+    val ks = scoped(s, skewAqeConfs(threshold): _*)
     // fanOut matters for the MECHANISM here, not just CPU: AQE splits a
     // skewed reduce partition at map-output-block granularity, so a
     // single-split parquet file (one mapper) makes the hot partition one
     // indivisible block and the rule silently no-ops. Real tables arrive
     // in thousands of splits; the helper recreates that shape.
-    val big = fanOut(t(s, d, "orders")).select(
+    val big = fanOut(t(ks, d, "orders")).select(
       when(pmod(col("o_custkey"), lit(100)) < 50, 0L)
         .otherwise(pmod(col("o_custkey"), lit(100))).as("hot_key"),
       col("o_totalprice"))
-    val dim = s.range(100).select(col("id").as("hot_key"),
+    val dim = ks.range(100).select(col("id").as("hot_key"),
       concat(lit("grp_"), lpad(col("id").cast("string"), 3, "0")).as("grp"))
     big.join(dim, Seq("hot_key"))
       .groupBy("grp")
@@ -1973,18 +1972,12 @@ object Relational {
     * dirs the driver runs; the PlanSpec mechanism pin at sf0.001 passes
     * "2KB". (Cluster defaults are 256MB / 64MB — the demonstration only
     * shrinks the numbers, not the rule.) */
-  private[graft] def skewAqeConfs(bytes: String) = Seq(
+  private def skewAqeConfs(bytes: String) = Seq(
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> bytes,
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> bytes,
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-  private def joinSkewAqe: Q = (s, d) => {
-    val out = s"${graft.Tables.scratchRoot}/sink/join_skew_aqe"
-    withConf(s, skewAqeConfs("64KB"): _*) {
-      skewJoinFrame(s, d).write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(out).orderBy("grp")
-  }
+  private def joinSkewAqe: Q = (s, d) => skewJoinFrame(s, d).orderBy("grp")
 
   /** Bucketed co-located join: both sides are written bucketed by the
     * join key, so the join itself needs NO exchange (RelationalSpec

@@ -15,6 +15,12 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new session sharing `spark`'s context, catalog and cached data,
+    * starting from a copy of its conf, temp views, functions and
+    * QueryExecutionListeners. */
+  def cloned(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Waits up to `timeoutMs` until every posted listener event has been
     * delivered; false if the bus was still busy at the deadline. */
   def waitForListeners(sc: SparkContext, timeoutMs: Long): Boolean =

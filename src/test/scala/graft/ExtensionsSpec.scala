@@ -52,10 +52,8 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(!p.contains("RunningWindowFunction") && !p.contains("Window "),
       s"window operator must be gone:\n$p")
     // Spark's own excludedRules switches the always-on rule off
-    val p2 = SharedSpark.withoutTopKRewrite {
-      SparkEntry.queries("topk_group")(spark, sf)
-        .queryExecution.executedPlan.toString()
-    }
+    val p2 = SparkEntry.queries("topk_group")(SharedSpark.withoutTopKRewrite, sf)
+      .queryExecution.executedPlan.toString()
     assert(p2.contains("Window") && !p2.contains("topk_pairs"),
       s"excluded rule still fired — topk_group was rewritten:\n$p2")
   }
@@ -63,9 +61,8 @@ class ExtensionsSpec extends AnyFunSuite {
   test("TopKRewrite is bit-exact vs the window formulation") {
     val rewritten = SparkEntry.queries("topk_group_rewrite")(spark, sf)
       .collect().map(_.toSeq)
-    val window = SharedSpark.withoutTopKRewrite {
-      SparkEntry.queries("topk_group")(spark, sf).collect().map(_.toSeq)
-    }
+    val window = SparkEntry.queries("topk_group")(SharedSpark.withoutTopKRewrite, sf)
+      .collect().map(_.toSeq)
     assert(rewritten === window)
   }
 

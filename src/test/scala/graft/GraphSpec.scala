@@ -68,27 +68,26 @@ class GraphSpec extends AnyFunSuite {
   test("pagerank's contribute join reads bucketed edges: no exchange, no sort on the edge side (r12 item #6)") {
     import ops.Graph
     import org.apache.spark.sql.functions._
-    val e2 = Graph.copurchaseEdgesBucketed(spark, SharedSpark.sf)
+    // Force the at-scale join (ranks too big to broadcast at 100 TB):
+    // the pin is that the EDGE side arrives pre-partitioned from the
+    // bucketed scan — exactly one exchange for the rank table plus one
+    // for the dst combine (the graph cut), never an O(E) edge shuffle.
+    val noBroadcast = GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val e2 = Graph.copurchaseEdgesBucketed(noBroadcast, SharedSpark.sf)
     // the bucketed artifact IS the plain artifact, co-located
     assert(e2.count() === Graph.copurchaseEdges(spark, SharedSpark.sf).count())
     val ranks = e2.select(col("src").as("node")).distinct()
       .withColumn("pr", lit(1000000000L))
       // outdeg rides the rank side since the r16 narrow edge layout
       .withColumn("outdeg", lit(4L))
-    // Force the at-scale join (ranks too big to broadcast at 100 TB):
-    // the pin is that the EDGE side arrives pre-partitioned from the
-    // bucketed scan — exactly one exchange for the rank table plus one
-    // for the dst combine (the graph cut), never an O(E) edge shuffle.
-    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val step = Graph.prContribute(e2, ranks)
-      step.collect()
-      val p = step.queryExecution.executedPlan.toString()
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-      assert(p.contains("Bucketed: true"),
-        "edge scan must report an exploited bucket layout: " + p)
-      assert("Exchange hashpartitioning".r.findAllIn(p).size === 2,
-        "only the rank table and the dst combine may shuffle: " + p)
-    }
+    val step = Graph.prContribute(e2, ranks)
+    step.collect()
+    val p = step.queryExecution.executedPlan.toString()
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
+    assert(p.contains("Bucketed: true"),
+      "edge scan must report an exploited bucket layout: " + p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).size === 2,
+      "only the rank table and the dst combine may shuffle: " + p)
     // dst ⊆ src invariant (ADVICE r16): graphPagerank's per-iteration
     // inner join(degN, "node") silently drops any contribution-
     // receiving node absent from the degree artifact — correctness

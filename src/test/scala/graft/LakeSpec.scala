@@ -524,10 +524,9 @@ class LakeSpec extends AnyFunSuite {
       .write.mode("overwrite").partitionBy("p").parquet(base)
     val untouchedBefore = listing(s"$base/p=1")
     val touchedBefore = listing(s"$base/p=0")
-    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      Seq((9L, 0)).toDF("v", "p")
-        .write.mode("overwrite").partitionBy("p").parquet(base)
-    }
+    Seq((9L, 0)).toDF("v", "p")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("p").parquet(base)
     // p=1's files survive byte-for-byte (same names, never rewritten);
     // p=0 was replaced. Static mode would have truncated p=1 away.
     assert(listing(s"$base/p=1") === untouchedBefore)
@@ -582,15 +581,14 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("scan_agg_pushdown answers min/max/count from parquet footers") {
-    ops.Lake.withAggPushdown(spark) {
-      val df = ops.Lake.aggPushdownFrame(spark, SharedSpark.sf)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedAggregation: [COUNT(*)"),
-        s"aggregate not pushed to the scan:\n${plan.take(600)}")
-      assert(plan.contains("MIN(l_orderkey)") && plan.contains("MAX(l_orderkey)"),
-        "min/max must be footer-answered")
-    }
+    // the frame is built on its own scoped session
+    val df = ops.Lake.aggPushdownFrame(spark, SharedSpark.sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation: [COUNT(*)"),
+      s"aggregate not pushed to the scan:\n${plan.take(600)}")
+    assert(plan.contains("MIN(l_orderkey)") && plan.contains("MAX(l_orderkey)"),
+      "min/max must be footer-answered")
   }
 
   test("sink_wap: failed audit publishes nothing, commits are atomic and immutable") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,18 +16,19 @@ class MetricsSpec extends AnyFunSuite {
     try body(m) finally m.close()
   }
 
-  /** Builds a table through an AvailableNow query into a memory sink. */
-  private def streamed(): DataFrame = {
+  /** Builds a table through an AvailableNow query on `ss` into a
+    * memory sink. */
+  private def streamed(ss: SparkSession = spark): DataFrame = {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(Tables.scratchRoot), "metrics").toString
     (0 until 20).toDF("id").coalesce(1).write.parquet(s"$d/in")
-    spark.readStream.schema("id INT").parquet(s"$d/in")
+    ss.readStream.schema("id INT").parquet(s"$d/in")
       .writeStream.format("memory").queryName("metrics_spec_t")
       .option("checkpointLocation", s"$d/ckpt")
       .trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    spark.table("metrics_spec_t")
+    ss.table("metrics_spec_t")
   }
 
   test("the timed action computes every projected column") {
@@ -91,5 +92,15 @@ class MetricsSpec extends AnyFunSuite {
     assert(a2.stream.map(_.queries) === Some(1L))
     assert(a2.stream.map(_.triggers) === a1.stream.map(_.triggers))
     assert((a2.jobs, a2.tasks) === ((a1.jobs, a1.tasks)))
+  }
+
+  test("a stream started on a scoped session reports to the window") {
+    // Spark does not copy stream listeners into a cloned session;
+    // GraftSession.scoped does, so the window still sees the query
+    val r = withMetrics(_.measure(
+      streamed(GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "2"))))
+    assert(r.ok, r.failure)
+    assert(r.stream.map(_.queries) === Some(1L))
+    assert(r.stream.exists(_.triggers >= 1))
   }
 }

@@ -158,24 +158,19 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("join_bloom injects a runtime bloom filter on the fact side") {
-    GraftSession.withConf(spark,
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = graft.ops.Relational.bloomJoinFrame(spark, sf)
-        .queryExecution.optimizedPlan.toString()
-      assert(p.contains("bloom_filter_agg") || p.contains("BloomFilter"), p)
-    }
+    // the frame carries its own conf: it is built on a scoped session
+    val p = graft.ops.Relational.bloomJoinFrame(spark, sf)
+      .queryExecution.optimizedPlan.toString()
+    assert(p.contains("bloom_filter_agg") || p.contains("BloomFilter"), p)
   }
 
   test("join_skew_aqe splits the hot shuffle partition (skew=true in the final plan)") {
-    GraftSession.withConf(spark, graft.ops.Relational.skewAqeConfs("2KB"): _*) {
-      val df = graft.ops.Relational.skewJoinFrame(spark, sf)
-      // collect() drives THIS QueryExecution (count() would execute a
-      // separate one, leaving this plan un-finalized, isFinalPlan=false)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString()
-      assert(p.contains("skew=true"), p)
-    }
+    val df = graft.ops.Relational.skewJoinFrame(spark, sf, "2KB")
+    // collect() drives THIS QueryExecution (count() would execute a
+    // separate one, leaving this plan un-finalized, isFinalPlan=false)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString()
+    assert(p.contains("skew=true"), p)
   }
 
   test("text_seg_dedup joins on the 8-byte segment hash, not the text") {
@@ -646,12 +641,11 @@ class PlanSpec extends AnyFunSuite {
     // and with size-estimate broadcasting off, the model join degrades
     // to a SHUFFLED join (a hard-coded hint would have survived, like
     // the totals/priors 1-row broadcasts do)
-    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = SparkEntry.queries("ml_naive_bayes")(spark, sf)
-        .queryExecution.sparkPlan.toString()
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-      assert(p.contains("BroadcastNestedLoopJoin"), p) // 1-row hints survive
-    }
+    val noBroadcast = GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val p = SparkEntry.queries("ml_naive_bayes")(noBroadcast, sf)
+      .queryExecution.sparkPlan.toString()
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
+    assert(p.contains("BroadcastNestedLoopJoin"), p) // 1-row hints survive
   }
 
   test("agg_moments partial-aggregates the power sums map-side") {

@@ -41,9 +41,8 @@ class RelationalSpec extends AnyFunSuite {
   test("topk_group_agg is bit-identical to the window formulation") {
     val agg = SparkEntry.queries("topk_group_agg")(spark, sf)
       .collect().map(_.toSeq)
-    val win = SharedSpark.withoutTopKRewrite {
-      SparkEntry.queries("topk_group")(spark, sf).collect().map(_.toSeq)
-    }
+    val win = SparkEntry.queries("topk_group")(SharedSpark.withoutTopKRewrite, sf)
+      .collect().map(_.toSeq)
     assert(agg.length === win.length)
     assert(agg === win)
   }
@@ -124,13 +123,12 @@ class RelationalSpec extends AnyFunSuite {
     }
     val df = spark.createDataFrame(rows).toDF("g", "score", "id")
     val w = Window.partitionBy("g").orderBy(col("score").desc, col("id"))
-    val win = SharedSpark.withoutTopKRewrite {
-      df.select(col("g"), col("id"), col("score"),
-          row_number().over(w).as("rn"))
-        .where(col("rn") <= 3)
-        .orderBy("g", "rn")
-        .collect().map(_.toSeq)
-    }
+    val win = SharedSpark.withoutTopKRewrite.createDataFrame(rows).toDF("g", "score", "id")
+      .select(col("g"), col("id"), col("score"),
+        row_number().over(w).as("rn"))
+      .where(col("rn") <= 3)
+      .orderBy("g", "rn")
+      .collect().map(_.toSeq)
     val agg = df.groupBy("g")
       .agg(call_function("topk_pairs", col("score"), col("id"), lit(3)).as("top"))
       .select(col("g"), posexplode(col("top")).as(Seq("pos", "p")))

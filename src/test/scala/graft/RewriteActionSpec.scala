@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A key that shows a plan rewrite must show it in the plans its actions
   * execute: the noop write [[Metrics.measure]] times and the
   * `coalesce(1).write` Verify hands to the oracle. Both optimize the
-  * returned frame again, so a rewrite that lived only in a plan built
-  * and dropped inside the key (or inside a conf window) never reaches
-  * them. Each check captures every query the key's build and the
+  * returned frame again, under the conf of the session the frame was
+  * built on, so a rewrite that lived only in a plan built and dropped
+  * inside the key never reaches them. Each check captures every query the key's build and the
   * action run. */
 class RewriteActionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SharedSpark.{spark, sf}
@@ -93,6 +93,20 @@ class RewriteActionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // list means nothing was pushed
     reaches("scan_agg_pushdown", "lineitem.parquet")(
       _.toString.contains("PushedAggregation: [COUNT(*)"))
+  }
+
+  test("join_bloom's actions run the runtime bloom filter") {
+    // the fact side's filter probes a bloom_filter_agg subquery
+    reaches("join_bloom", "lineitem.parquet")(_.toString.contains("might_contain"))
+  }
+
+  test("join_skew_aqe's frame keeps its skew thresholds through a noop write") {
+    // the thresholds sized for this fixture, as PlanSpec's pin uses
+    val plans = executed(actions.head._2(
+      ops.Relational.skewJoinFrame(spark, sf, "2KB").orderBy("grp")))
+    assert(plans.exists(_.toString.contains("skew=true")),
+      "no plan executed by the noop write split a skewed partition:\n" +
+        plans.mkString("\n"))
   }
 
   test("a key's MV never rewrites another key's plan") {

@@ -19,10 +19,9 @@ object SharedSpark {
     if (new java.io.File(d).isDirectory) Some(d) else None
   }
 
-  /** `body` with the always-on [[graft.plans.TopKRewrite]] excluded
-    * through Spark's own `excludedRules`: the window formulation a
-    * rewrite is checked against. Plan or collect inside `body`. */
-  def withoutTopKRewrite[T](body: => T): T =
-    GraftSession.withConf(spark,
-      "spark.sql.optimizer.excludedRules" -> "graft.plans.TopKRewrite")(body)
+  /** A session with the always-on [[graft.plans.TopKRewrite]] excluded
+    * through Spark's own `excludedRules`: frames built on it give the
+    * window formulation a rewrite is checked against. */
+  lazy val withoutTopKRewrite: SparkSession = GraftSession.scoped(spark,
+    "spark.sql.optimizer.excludedRules" -> "graft.plans.TopKRewrite")
 }

@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Graph.fixpoint, if a listener is registered outside graft.Metrics,
   * if a one-time artifact is keyed or a catalog table saved outside
   * graft.Scratch, if an archive is exploded outside Ingest.members, if
-  * main code reads a graft conf key or an operator plans a frame
-  * eagerly instead of materializing it, or if a comment under src/main
-  * narrates a past review round.
+  * main code sets session conf outside GraftSession.scoped, reads a
+  * graft conf key or plans a frame eagerly, or if a comment under
+  * src/main narrates a past review round.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -69,10 +69,26 @@ class ToolsLockstepSpec extends AnyFunSuite {
     val tempFns = hits("src/main", "createOrReplaceTempFunction")
     assert(tempFns.isEmpty, "add native functions to GraftExtensions.functions:\n" +
       tempFns.mkString("\n"))
-    val confWrites = Seq("conf.set(", "conf.unset(")
-      .flatMap(hits("src/main/scala/graft/ops", _))
-    assert(confWrites.isEmpty, "change conf temporarily with GraftSession.withConf:\n" +
-      confWrites.mkString("\n"))
+    // GraftSession sets conf on the sessions it builds and scopes;
+    // Tables.events sets the session-wide nanosAsLong read flag; fs/
+    // sets Hadoop conf
+    val confWrites = Seq("conf.set(", "conf.unset(").flatMap(hits("src/main", _, f =>
+      f.endsWith("/graft/GraftSession.scala") || f.contains("/graft/fs/")))
+    assert(confWrites.size === 1 && confWrites.head.contains("/graft/Tables.scala:") &&
+      confWrites.head.contains("nanosAsLong"),
+      "give a frame its own conf with GraftSession.scoped:\n" + confWrites.mkString("\n"))
+  }
+
+  test("a frame's conf has one owner: GraftSession.scoped") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
+    // no window sets and restores conf on a shared session
+    val windows = hits("src", "with" + "Conf")
+    assert(windows.isEmpty, "build on a GraftSession.scoped session:\n" +
+      windows.mkString("\n"))
+    val clones = hits("src", "clone" + "Session", _.endsWith("/GraftSqlBridge.scala"))
+    assert(clones.isEmpty, "clone sessions with GraftSession.scoped:\n" +
+      clones.mkString("\n"))
   }
 
   test("micro-batch loops have one owner: Streaming.drain") {
@@ -99,7 +115,11 @@ class ToolsLockstepSpec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
     val regs = Seq("addSparkListener(", "listenerManager.register(", "streams.addListener(")
       .flatMap(hits("src/main", _, _.endsWith("/graft/Metrics.scala")))
-    assert(regs.isEmpty, "measure through graft.Metrics; register no listener elsewhere:\n" +
+    // the one exception: GraftSession.scoped copies the parent's stream
+    // listeners into its clone, which Spark does not do
+    assert(regs.size === 1 && regs.head.contains("/graft/GraftSession.scala:") &&
+      regs.head.contains("s.streams.listListeners().foreach(l => c.streams.addListener(l))"),
+      "measure through graft.Metrics; register no listener elsewhere:\n" +
       regs.mkString("\n"))
   }
 
@@ -133,10 +153,10 @@ class ToolsLockstepSpec extends AnyFunSuite {
     val keys = hits("src/main", "spark." + "graft.")
     assert(keys.isEmpty, "pass an argument instead of reading a graft conf key:\n" +
       keys.mkString("\n"))
-    // a plan forced inside a conf window is re-optimized by every later
-    // action on the frame, outside it: materialize inside the window
+    // a forced plan is dropped: every later action on the frame
+    // optimizes again, under the conf of the session the frame is on
     val eager = hits("src/main/scala/graft/ops", "queryExecution.executedPlan")
-    assert(eager.isEmpty, "materialize inside GraftSession.withConf; a planned frame loses the conf:\n" +
+    assert(eager.isEmpty, "build the frame on a GraftSession.scoped session; a forced plan is dropped:\n" +
       eager.mkString("\n"))
   }
 
