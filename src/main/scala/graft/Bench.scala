@@ -249,7 +249,7 @@ object Bench {
         GraftSqlBridge.unloadStateStores()
         if (r.ok) r.wallS else -r.wallS
       }
-      // A crashed query must not masquerade as a fast one (ADVICE r1):
+      // A crashed query must not masquerade as a fast one:
       // its time is emitted negative and its name listed under "failed".
       // min over successful trials; all-failed keeps the negative mark.
       val best = times.filter(_ >= 0) match {

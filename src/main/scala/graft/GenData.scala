@@ -35,7 +35,7 @@ object GenData {
     * text and draws l_partkey with a u² head so SCALING.md can measure
     * the shingle and graph families on data shaped like production. */
 
-  /** Per-table hash domain (ADVICE r8): without it, customer and
+  /** Per-table hash domain: without it, customer and
     * supplier drew nationkey/acctbal from the SAME (id, salt) stream,
     * so row id k carried identical values in both tables — an
     * unintended cross-table correlation in the generated data.

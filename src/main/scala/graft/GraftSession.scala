@@ -43,13 +43,12 @@ object GraftSession {
     * values. Every action on a frame built here (a noop write,
     * `coalesce(1).write`) optimizes under these values, and a stream
     * started here runs its micro-batches under them. The clone starts
-    * from `s`'s conf, temp views, functions and QueryExecutionListeners;
-    * Spark does not copy StreamingQueryListeners, so they are copied
-    * here, and a stream started on the clone reports to them. */
+    * from `s`'s conf, temp views, functions and QueryExecutionListeners.
+    * Spark does not copy StreamingQueryListeners; a stream's session
+    * comes from `ops.Streaming.streamSession`, which copies them. */
   def scoped(s: SparkSession, confs: (String, String)*): SparkSession = {
     val c = GraftSqlBridge.cloned(s)
     confs.foreach { case (k, v) => c.conf.set(k, v) }
-    s.streams.listListeners().foreach(l => c.streams.addListener(l))
     c
   }
 }

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Seeded crash-replay fuzz over the exactly-once streaming keys (r14
-  * judge item #8): ReplaySpec pins ONE scenario per key (crash at
-  * batch 2 of a 4-file drain); this main randomizes the whole space —
+/** Seeded crash-replay fuzz over the exactly-once streaming keys.
+  * ReplaySpec pins ONE scenario per key (crash at batch 2 of a 4-file
+  * drain), which leaves the other crash points, file counts and double
+  * crashes unchecked; this main randomizes the whole space —
   * key family × staged-file count (2–5) × fault batch (any, including
   * batch 0 and the final batch) × an optional SECOND crash on the
   * resumed run (at the same batch — a replay of the replay — or any
@@ -16,9 +17,10 @@ import org.apache.spark.sql.functions._
   * append-only law holds (Σ event rows across batch dirs = corpus —
   * nothing written twice even across two crashes).
   *
-  * Scenarios run serially in one session against the SAME runner
-  * entry points the registered keys use (ops.Streaming.runStream*,
-  * private[graft]); faults are armed through the same
+  * Scenarios run serially in one session against the SAME runners the
+  * registered keys use (`Streaming.runFold` over every row of
+  * `Streaming.folds`, and the seq, markov and sdi runners); faults are
+  * armed through the same
   * [[graft.ops.Streaming.Faults]] seam ReplaySpec uses — after the
   * batch's first artifact write, before its commit.
   *
@@ -40,21 +42,14 @@ object ReplayFuzz {
     dir
   }
 
-  /** One exactly-once key family: run the runner against dirs under
-    * `base`, the Faults tag, and the final-state reader. */
+  /** One exactly-once key family: its Faults tag, the runner over a
+    * root dir, and the reader of the state the runner's last batch
+    * left under that root. */
   private case class Fam(
-      name: String,
       tag: String,
       run: (SparkSession, String, String, Int) => Long,
       rows: (SparkSession, String, Long) => Seq[String],
       evLaw: Boolean = false)
-
-  /** Highest batchId in a checkpoint's commit log (−1 if none): the
-    * on-disk truth of how far a query actually drained. */
-  private def lastCommitted(ckpt: String): Long =
-    Option(new java.io.File(s"$ckpt/commits").listFiles()).toSeq.flatten
-      .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).foldLeft(-1L)(math.max)
 
   private def sortedRows(s: SparkSession, path: String): Seq[String] = {
     val df = s.read.option("recursiveFileLookup", "true").parquet(path)
@@ -70,47 +65,14 @@ object ReplayFuzz {
     val spark = GraftSession.build(cpus)
     val S = ops.Streaming
 
-    val fams = Seq(
-      Fam("mv", "stream_mv",
-        (s, d, b, f) => S.runStreamMv(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("theta", "stream_theta",
-        (s, d, b, f) => S.runStreamTheta(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("topk", "stream_topk",
-        (s, d, b, f) => S.runStreamTopk(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("skyline", "stream_skyline",
-        (s, d, b, f) => S.runStreamSkyline(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("hist", "rfz_hist",
-        (s, d, b, f) =>
-          S.runStreamHist(s, d, s"$b/v", s"$b/ckpt", "rfz_hist", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("hourly", "rfz_hourly",
-        (s, d, b, f) =>
-          S.runStreamHourly(s, d, s"$b/v", s"$b/ckpt", "rfz_hourly", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("cells", "rfz_cells",
-        (s, d, b, f) =>
-          S.runStreamCells(s, d, s"$b/v", s"$b/ckpt", "rfz_cells", f),
-        (s, b, last) => sortedRows(s, s"$b/v/v$last")),
-      Fam("markov", "stream_markov",
-        (s, d, b, f) => S.runStreamMarkov(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/mv_v$last"), evLaw = true),
-      Fam("seq", "stream_seq",
-        (s, d, b, f) => S.runStreamSeq(s, d, s"$b/v", s"$b/ckpt", f),
-        (s, b, last) => sortedRows(s, s"$b/v/mv_v$last"), evLaw = true),
-      Fam("sdi", "sdi",
-        (s, d, b, f) => {
-          S.runStreamDedupIncremental(s, d, s"$b/idx", s"$b/res",
-            s"$b/ckpt", f)
-          // The drained-to batch is EVIDENCE from the checkpoint's
-          // commit log, never fabricated from the argument (ADVICE
-          // r15: the old `f - 1` return made the completeness check
-          // vacuous for this family).
-          lastCommitted(s"$b/ckpt")
-        },
+    val fams = S.folds.map(f => Fam(f.tag,
+        (s, d, b, files) => S.runFold(s, d, f, b, files),
+        (s, b, last) => sortedRows(s, s"$b/v$last"))) ++ Seq(
+      Fam("stream_markov", S.runStreamMarkov,
+        (s, b, last) => sortedRows(s, s"$b/mv_v$last"), evLaw = true),
+      Fam("stream_seq", S.runStreamSeq,
+        (s, b, last) => sortedRows(s, s"$b/mv_v$last"), evLaw = true),
+      Fam("sdi", S.runStreamDedupIncremental,
         (s, b, _) => sortedRows(s, s"$b/res")))
 
     val root = s"${Tables.scratchRoot}/replayfuzz"
@@ -126,11 +88,11 @@ object ReplayFuzz {
       val fb = rnd.nextInt(files)
       val twice = rnd.nextInt(4) == 0
       val fb2 = if (twice) fb + rnd.nextInt(files - fb) else -1
-      val label = s"#$i ${fam.name} files=$files crash@$fb" +
+      val label = s"#$i ${fam.tag} files=$files crash@$fb" +
         (if (twice) s" then @$fb2" else "")
       try {
-        val cleanRows = clean.getOrElseUpdate((fam.name, files), {
-          val b = wipe(s"$root/clean_${fam.name}_f$files")
+        val cleanRows = clean.getOrElseUpdate((fam.tag, files), {
+          val b = wipe(s"$root/clean_${fam.tag}_f$files")
           val last = fam.run(spark, sfDir, b, files)
           require(last == files - 1,
             s"clean run drained to $last, expected ${files - 1}")
@@ -158,7 +120,7 @@ object ReplayFuzz {
           s"post-resume state differs from clean run " +
             s"(${got.length} vs ${cleanRows.length} rows)")
         if (fam.evLaw) {
-          val stored = spark.read.parquet(s"$b/v/ev").count()
+          val stored = spark.read.parquet(s"$b/ev").count()
           require(stored == corpusRows,
             s"append-only law broken: $stored event rows for a " +
               s"$corpusRows-row corpus")
@@ -168,8 +130,7 @@ object ReplayFuzz {
       } catch {
         case e: Throwable =>
           // A scenario whose injected fault never fired leaves the seam
-          // armed; disarm so it cannot contaminate later scenarios
-          // (ADVICE r15).
+          // armed; disarm so it cannot contaminate later scenarios.
           S.Faults.disarm()
           failures += s"$label: ${e.getMessage}"
           System.err.println(s"[replayfuzz] FAIL $label: ${e.getMessage}")

@@ -33,9 +33,13 @@ object Tables {
 
   /** Row count of a parquet-backed DataFrame, summed from its files'
     * footers: no Spark job, for sizing a write from a scratch artifact. */
-  def parquetRows(s: SparkSession, df: DataFrame): Long = {
+  def parquetRows(s: SparkSession, df: DataFrame): Long =
+    parquetRows(s, df.inputFiles.toSeq: _*)
+
+  /** Row count of parquet `files`, summed from their footers. */
+  def parquetRows(s: SparkSession, files: String*): Long = {
     val conf = s.sparkContext.hadoopConfiguration
-    df.inputFiles.iterator.map { f =>
+    files.iterator.map { f =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f), conf))

@@ -393,7 +393,7 @@ object Functions {
     // identity and the PKCS#5 ciphertext length law, both plaintext-
     // derivable. The law is over UTF-8 BYTES (octet_length of the
     // encoded text), not characters — length(text) would silently
-    // diverge on any non-ASCII document (ADVICE r7).
+    // diverge on any non-ASCII document.
     "fn_crypto" ->
       """SELECT doc_id, true AS roundtrip_ok,
                 ((octet_length(encode(text)) // 16) + 1) * 16 AS ct_len

@@ -1382,8 +1382,8 @@ object Lake {
     // agg_hll_merge gate output (audit ON) = exact witness + corridor
     // boolean: DuckDB independently recomputes the exact distinct, and
     // the TRUE pin asserts the merged sketch landed within 5% of it —
-    // a drifting sketch flips the boolean and fails the hash (r14
-    // judge item #6: no_oracle → checked). Numeric tolerance + merge
+    // a drifting sketch flips the boolean and fails the hash, so the
+    // key is checked, not rows-only. Numeric tolerance + merge
     // equality stay pinned in LakeSpec on the audit-off estimates.
     "agg_hll_merge" ->
       """SELECT o_orderpriority,

@@ -1957,7 +1957,7 @@ object Llm {
     * never a bare CAST: double→int CAST truncates in Spark but rounds
     * half-even in DuckDB), so the gate exact-hashes. A degenerate
     * all-zero vector gives scale = 0 and floor(0/0) = NaN codes whose
-    * handling DIVERGES between engines (ADVICE r11) — the scale is
+    * handling DIVERGES between engines — the scale is
     * nullif-guarded on both sides, so zero vectors degrade identically
     * to NULL scale/codes. */
   private def embedQuantize: Q = (s, d) => {

@@ -1564,11 +1564,10 @@ object Pipeline {
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val fu = scala.concurrent.Future(leg("uniform", raw))
       val fc = scala.concurrent.Future(leg("clustered", clusteredBase))
-      // Await BOTH legs unboundedly before rethrowing either failure
-      // (ADVICE r16): the old hard 600 s timeout made larger SFs fail
-      // where they previously just ran longer, and a first-leg throw
-      // left the second future running detached with its failure
-      // swallowed. ready (not result) on each leg first, so no leg is
+      // Await BOTH legs unboundedly before rethrowing either failure:
+      // a hard timeout makes a larger SF fail where it would only run
+      // longer, and a first-leg throw would leave the second future
+      // running detached with its failure swallowed. ready (not result) on each leg first, so no leg is
       // still in flight when a failure propagates.
       import scala.concurrent.duration.Duration
       scala.concurrent.Await.ready(fu, Duration.Inf)

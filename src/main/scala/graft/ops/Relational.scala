@@ -1944,15 +1944,14 @@ object Relational {
     * and Adaptive Query Execution detects the oversized shuffle
     * partition at runtime and splits it across tasks (plan shows
     * `skew=true`). The frame is built on a [[graft.GraftSession.scoped]]
-    * session with lowered thresholds ([[skewAqeConfs]]; AQE decides at
-    * execution time, so every action on the frame runs under them) — at
-    * cluster scale the defaults (256 MB partitions) do this unprompted.
-    * Salting remains the portable fallback; AQE is the zero-code-change
-    * path. Broadcast is disabled on that session so the join actually
-    * shuffles. */
-  private[graft] def skewJoinFrame(s: SparkSession, d: String,
-      threshold: String = "64KB"): DataFrame = {
-    val ks = scoped(s, skewAqeConfs(threshold): _*)
+    * session with thresholds sized to the input ([[skewAqeConfs]]; AQE
+    * decides at execution time, so every action on the frame runs under
+    * them) — at cluster scale the defaults (256 MB partitions) do this
+    * unprompted. Salting remains the portable fallback; AQE is the
+    * zero-code-change path. Broadcast is disabled on that session so
+    * the join actually shuffles. */
+  private[graft] def skewJoinFrame(s: SparkSession, d: String): DataFrame = {
+    val ks = scoped(s, skewAqeConfs(parquetRows(s, s"$d/orders.parquet")): _*)
     // fanOut matters for the MECHANISM here, not just CPU: AQE splits a
     // skewed reduce partition at map-output-block granularity, so a
     // single-split parquet file (one mapper) makes the hot partition one
@@ -1968,13 +1967,18 @@ object Relational {
       .groupBy("grp")
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
   }
-  /** Skew thresholds scale with the fixture: 64KB suits the sf0.01+
-    * dirs the driver runs; the PlanSpec mechanism pin at sf0.001 passes
-    * "2KB". (Cluster defaults are 256MB / 64MB — the demonstration only
+  /** Skew thresholds from the orders row count: one byte per row.
+    * The hot key's shuffle partition holds half the rows at ~10
+    * compressed bytes each, about 5× the row count in bytes, so it is
+    * skewed at every scale and splits into several advisory-sized
+    * pieces. A fixed size cannot do that: Spark keeps a skewed
+    * partition whole unless it exceeds the split target by more than
+    * 1.2×, and with 64KB the sf0.01 hot partition (~75KB) did not.
+    * (Cluster defaults are 256MB / 64MB — the demonstration only
     * shrinks the numbers, not the rule.) */
-  private def skewAqeConfs(bytes: String) = Seq(
-    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> bytes,
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> bytes,
+  private def skewAqeConfs(orderRows: Long) = Seq(
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> orderRows.toString,
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> orderRows.toString,
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
   private def joinSkewAqe: Q = (s, d) => skewJoinFrame(s, d).orderBy("grp")
@@ -2498,7 +2502,7 @@ object Relational {
     * The power sums ride DECIMAL (↔ DuckDB's native HUGEINT windowed
     * sum): in 64-bit longs n·Σc² − (Σc)² overflows once 24-hour count
     * sums pass ~3×10⁹ — and overflow DIVERGES, Spark wrapping silently
-    * (non-ANSI) where DuckDB raises (ADVICE r11). Exact at any SF the
+    * (non-ANSI) where DuckDB raises. Exact at any SF the
     * 38-digit headroom admits (Σc to ~10¹⁸). */
   private def tsBollinger: Q = (s, d) => {
     val dec20 = org.apache.spark.sql.types.DecimalType(20, 0)
@@ -3527,9 +3531,8 @@ object Relational {
     * is NOT correctly rounded — measured: ~0.7% of random 54-100-bit
     * values, ~26% of rounding midpoints — which is why the un-centered
     * N·Sxy − Sx·Sy form at ~4N⁴ would silently diverge). ρ is then
-    * ONE shared IEEE chain. r15: the oracle's former BIGINT cast
-    * raised loudly past N³ ≈ 2⁶³ (~sf0.7, the r15 sf1 leg's one
-    * oracle-error row). r16 (ADVICE): the widened cast now routes
+    * ONE shared IEEE chain. The oracle cannot cast to BIGINT, which
+    * raises past N³ ≈ 2⁶³ (~sf0.7); the widened cast routes
     * HUGEINT → VARCHAR → DOUBLE — DuckDB's direct int128→double is a
     * composed upper·2⁶⁴+lower double chain that DOUBLE-ROUNDS (probe:
     * 131 / 20,092 random-plus-midpoint 54–100-bit values misround),

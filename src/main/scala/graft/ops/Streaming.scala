@@ -80,8 +80,8 @@ object Streaming {
     * adjacent (an event precisely `gap` after its predecessor joins the
     * same session — merge condition is start <= previous end, both
     * empirically pinned by RelationalSpec), so the oracle's new-session
-    * predicate is strictly `>`. (ADVICE r1 suggested `>=`; the pinned
-    * experiment shows `>` is the faithful boundary.) */
+    * predicate is strictly `>`, not `>=`: the pinned experiment shows
+    * `>` is the faithful boundary. */
   private def winSession: Q = (s, d) =>
     evWithTs(s, d)
       .groupBy(session_window(col("ts_t"), "30 minutes").as("w"), col("user_id"))
@@ -146,8 +146,8 @@ object Streaming {
     }
     /** Clear a pending fault that never fired — a fuzz scenario whose
       * injection site was never reached must not leave the seam armed
-      * for a later scenario (ADVICE r15: one failed scenario would
-      * otherwise cascade). */
+      * for a later scenario, or one failed scenario cascades into the
+      * next. */
     private[graft] def disarm(): Unit = synchronized {
       armed = None
     }
@@ -202,12 +202,27 @@ object Streaming {
     * keeps pruning effective while each bucket stays splittable). */
   private[graft] val evBuckets = 8L
 
+  /** The one way a stream gets a session of its own: a
+    * [[graft.GraftSession.scoped]] clone with `confs`, plus `s`'s
+    * StreamingQueryListeners, which Spark does not copy into a clone,
+    * so a stream started here still reports to them (Metrics' window).
+    * Touching the clone's `streams` registers a StreamingQueryListenerBus
+    * on the context's listener bus that Spark never removes, so this
+    * copy lives here and not in `scoped`: a frame-only scoped session
+    * leaves no bus behind. */
+  private[graft] def streamSession(s: SparkSession,
+      confs: (String, String)*): SparkSession = {
+    val c = scoped(s, confs: _*)
+    s.streams.listListeners().foreach(l => c.streams.addListener(l))
+    c
+  }
+
   /** A session for stateful streams: `parts` shuffle partitions, so
     * `parts` state stores. A stream built on it runs its micro-batches
     * under that width; the caller's session is unchanged. */
   private def stateSession(s: SparkSession,
       parts: Int = statePartitions): SparkSession =
-    scoped(s, "spark.sql.shuffle.partitions" -> parts.toString)
+    streamSession(s, "spark.sql.shuffle.partitions" -> parts.toString)
 
   /** The session for the data-scaled foreachBatch RECOMPUTE loops
     * (stream_seq / stream_markov / stream_dedup_incremental / the
@@ -222,7 +237,7 @@ object Streaming {
     * matters when the bytes are tiny. State partitioning stays 8 for
     * the per-batch join width (see [[stateSession]]). */
   private def recomputeSession(s: SparkSession): SparkSession =
-    scoped(s, "spark.sql.files.minPartitionNum" -> "1",
+    streamSession(s, "spark.sql.files.minPartitionNum" -> "1",
       "spark.sql.shuffle.partitions" -> "8")
 
   /** The session for the TINY-FOLD foreachBatch loops (state ≤ a few
@@ -236,7 +251,7 @@ object Streaming {
     * streaming bodies (stream_seq / stream_markov / sdi / the corpus
     * pipeline) keep AQE — their per-batch joins are the workload. */
   private def foldSession(s: SparkSession): SparkSession =
-    scoped(s, "spark.sql.shuffle.partitions" -> "2",
+    streamSession(s, "spark.sql.shuffle.partitions" -> "2",
       "spark.sql.adaptive.enabled" -> "false")
 
   /** Staged-file count for the REGISTERED incremental-fold keys: 2
@@ -451,7 +466,7 @@ object Streaming {
     * a first AvailableNow run drains 4 staged files and STOPS; two
     * more files land; a SECOND start() against the SAME checkpoint
     * processes ONLY the new files (the source's file log remembers),
-    * continuing the batchId sequence so the [[streamMv]]-style
+    * continuing the batchId sequence so the [[mvFold]]-style
     * version-merge folds across the restart boundary. Per-run
     * processed-row counts are written as audit artifacts
     * (QueriesSpec pins run 2 = exactly the late files' rows); the
@@ -463,28 +478,20 @@ object Streaming {
     new java.io.File(src).mkdirs()
     val ev = events(s, d)
       .select(col("event_id"), col("event_type"), dec(col("value")).as("v"))
-    // One staging pass per call (r16): the old per-mod loop re-scanned
-    // the 100k-row events table once PER SLICE (6 scans per
-    // invocation); a single filtered scan split round-robin (r17)
-    // writes the same rows in exactly mods.size files. File→batch
-    // composition may differ, which the fold is provably independent
-    // of (shared batch oracle; the spec audits ROW counts per run).
+    // One filtered scan per run, split round-robin into exactly
+    // mods.size files. A hash split on the mod value gives no
+    // one-slice-per-file guarantee (murmur3 puts two of run 1's four
+    // mod values in one partition: 4 slices → 3 files), and the
+    // multi-batch run the restart test needs would rest on that. The
+    // fold is batch-boundary-independent (shared batch oracle) and the
+    // spec audits per-RUN row totals, so files need only be COUNTED:
+    // keyless round-robin fills every partition deterministically
+    // (sortBeforeRepartition pins the row→partition map), and the
+    // require fails loudly if a partitioner change merges files.
     def stage(mods: Seq[Int]): Unit = {
       def nFiles = Option(new java.io.File(src)
         .listFiles((_, n) => n.endsWith(".parquet"))).fold(0)(_.length)
       val before = nFiles
-      // ROUND-ROBIN split into exactly mods.size files (ADVICE r16):
-      // the old repartition(n, pmod(...)) hash split gave no
-      // one-slice-per-partition guarantee — murmur3 in fact collides
-      // two of the four run-1 mod values TODAY (4 slices → 3 files,
-      // measured), so the multi-batch-per-run decomposition the
-      // restart test exercises rested on a hash accident. The fold is
-      // batch-boundary-independent (shared batch oracle) and the spec
-      // audits per-RUN row totals, so files never needed to be
-      // value-aligned — only COUNTED: keyless round-robin fills every
-      // partition deterministically (sortBeforeRepartition pins the
-      // row→partition map), and the assert fails loudly if a
-      // partitioner change ever merges files again.
       ev.where(pmod(col("event_id"), lit(6))
           .isin(mods.map(m => java.lang.Long.valueOf(m.toLong)): _*))
         .repartition(mods.size)
@@ -493,11 +500,12 @@ object Streaming {
       require(added == mods.size,
         s"stream_resume staging: expected ${mods.size} files, got $added")
     }
-    // Each run folds into the same versions with the stream_mv step,
-    // continuing the batch id sequence across the restart.
+    // Each run folds into the same versions `root/v<b>` with the
+    // stream_mv step, continuing the batch id sequence across the
+    // restart.
     def run(runName: String): Long = {
       val ss = stateSession(s)
-      val step = foldStep(ss, s"$root/versions", "stream_resume")(
+      val step = foldStep(ss, root, "stream_resume")(
         _.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum(col("v")).as("tot")),
         sumCountTotal)
@@ -517,7 +525,7 @@ object Streaming {
     stage(0 to 3)
     run("run1")
     stage(4 to 5)
-    mvResult(s, s"$root/versions/v${run("run2")}")
+    mvResult(s.read.parquet(s"$root/v${run("run2")}"))
   }
 
   /** stream_mv / stream_resume state merge: counts and exact totals
@@ -527,10 +535,9 @@ object Streaming {
 
   /** stream_mv / stream_resume output: the folded state as
     * (event_type, n, total_value). */
-  private def mvResult(s: SparkSession, version: String): DataFrame =
-    s.read.parquet(version)
-      .select(col("event_type"), col("n"),
-        round(col("tot"), 2).cast("double").as("total_value"))
+  private def mvResult(v: DataFrame): DataFrame =
+    v.select(col("event_type"), col("n"),
+      round(col("tot"), 2).cast("double").as("total_value"))
       .orderBy("event_type")
 
   /** STATE-STORE INTROSPECTION — Spark 4's `statestore` data source
@@ -619,7 +626,7 @@ object Streaming {
     val sp = s
     import sp.implicits._
     // the stateSession width, with RocksDB state stores
-    val st = readEventStream(scoped(s,
+    val st = readEventStream(streamSession(s,
         "spark.sql.shuffle.partitions" -> statePartitions.toString,
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"), d)
@@ -701,366 +708,192 @@ object Streaming {
     * batch_id partition (dynamic partition overwrite), so a retried
     * micro-batch replaces its previous attempt instead of double-writing
     * — exactly-once output from an at-least-once trigger (R19 sink +
-    * R20 read-back verification; append mode here would be at-least-once
-    * only, ADVICE r1). */
+    * R20 read-back verification; an append-mode sink would give
+    * at-least-once output only). */
   private def streamSink: Q = (s, d) => {
-    val out = streamDir("stream_sink/out")
+    val root = streamDir("stream_sink")
     val st = readEventStream(stateSession(s), d)
       .select("event_id", "event_type", "value")
-    drain(st, streamDir("stream_sink/ckpt")) { (batch, b) =>
+    drain(st, s"$root/ckpt") { (batch, b) =>
       batch.withColumn("batch_id", lit(b))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(out)
+        .partitionBy("batch_id").parquet(s"$root/out")
     }
-    s.read.parquet(out)
+    s.read.parquet(s"$root/out")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum2(col("value")).as("total_value"))
       .orderBy("event_type")
   }
 
-  /** STREAMING incremental materialized-view maintenance — the
-    * Materialize/Delta-Live-Tables shape, and mv_incremental's
-    * streaming twin: each micro-batch is aggregated to ALGEBRAIC
-    * partials (count + exact decimal sum per key) and folded into a
-    * persisted MV as MV' = MV ⊕ agg(batch) — per-batch work is
-    * O(|batch| + |keys|), and the MV table is the ONLY state (no
-    * streaming state store at all: cheaper than update-mode
-    * aggregation, which keeps every key in the store AND re-emits it).
-    * Each merge writes a NEW version dir keyed by batch id and reads
-    * the previous one — never overwriting what it reads, and a retried
-    * batch overwrites its own version (idempotent, exactly-once
-    * output). The source is staged into 4 files drained 1 per
-    * micro-batch, so ≥4 real merges run. Final MV must equal the batch
-    * aggregate over all events — that equality is the oracle. */
-  private def streamMv: Q = (s, d) => {
-    val mvRoot = streamDir("stream_mv/versions")
-    val last = runStreamMv(s, d, mvRoot, streamDir("stream_mv/ckpt"))
-    mvResult(s, s"$mvRoot/v$last")
+  // ------------------------------------------------- algebraic folds
+
+  /** One algebraic streaming state: v(b) = merge(v(b−1) ∪ part(batch)),
+    * v(0) = part(batch 0). Each shape is a MERGEABLE summary — its fold
+    * over any batching equals the batch answer — so state stays
+    * bounded (by k, a value domain or a grid, never by rows), per-batch
+    * work is O(|batch| + |state|), no streaming state store is kept, and
+    * every key over it shares its batch twin's oracle. `source` is
+    * staged once per dataset ([[staged]] as `stream_<tag>`, `files`
+    * batches by default) and streamed back with the DDL `schema`; the
+    * fault point is `<tag>:<b>`. */
+  private[graft] case class Fold(tag: String,
+      source: (SparkSession, String) => DataFrame, schema: String,
+      part: DataFrame => DataFrame, merge: DataFrame => DataFrame,
+      files: Int = regFiles)
+
+  /** A fold of counts on a domain-bounded key — every column of the
+    * staged source: counts(A ∪ B) = counts(A) + counts(B), map-side
+    * combined, so per-batch shuffle rows and state are domain-sized
+    * (which is why the state write's coalesce(1) is harmless). */
+  private def countFold(tag: String, schema: String, cnt: String)(
+      source: (SparkSession, String) => DataFrame): Fold = {
+    val keys = StructType.fromDDL(schema).fieldNames.toSeq.map(col)
+    Fold(tag, source, schema,
+      _.groupBy(keys: _*).agg(count(lit(1)).as(cnt)),
+      _.groupBy(keys: _*).agg(sum(col(cnt)).as(cnt)))
   }
 
-  /** The stream_mv run loop with caller-owned dirs: the registered
-    * query wipes fresh dirs per execution; the replay spec calls this
-    * twice on the SAME dirs (crash, then resume from the checkpoint).
-    * Returns the last batch id committed by THIS invocation. */
-  private[graft] def runStreamMv(s: SparkSession, d: String,
-      mvRoot: String, ckpt: String, files: Int = 4): Long = {
-    // files defaults to 4 here (not regFiles): QueriesSpec pins the
-    // registered stream_mv at ≥4 versions.
-    val src = staged("stream_mv", d, files) {
-      events(s, d).select(col("event_type"), col("value"))
-    }
+  /** Counts and exact decimal totals per event type: the streaming twin
+    * of mv_incremental, MV' = MV ⊕ agg(batch), with the MV as the only
+    * state (update-mode aggregation would keep every key in a store AND
+    * re-emit it). 4 files: QueriesSpec pins ≥ 4 versions. */
+  private val mvFold = Fold("mv",
+    (s, d) => events(s, d).select(col("event_type"), col("value")),
+    "event_type STRING, value DOUBLE",
+    _.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("tot")),
+    sumCountTotal, files = 4)
+
+  private val thetaK = 64
+
+  /** KMV sketch: the `thetaK` smallest 52-bit md5 hashes of distinct
+    * user_ids, sketch' = kSmallest(sketch ∪ kSmallest(batch)) — the KMV
+    * mergeability law, so the final sketch IS the batch sketch
+    * (agg_theta's streaming twin) in `thetaK` longs forever. */
+  private val thetaFold = Fold("theta",
+    (s, d) => events(s, d).select(col("user_id")), "user_id BIGINT",
+    _.select(col("user_id")).distinct()
+      .select(conv(substring(md5(col("user_id").cast("string")),
+        1, 13), 16, 10).cast("long").as("h"))
+      .orderBy("h").limit(thetaK),
+    _.select("h").distinct().orderBy("h").limit(thetaK))
+
+  /** Bounded top-k leaderboard: any global top-k row is in its own
+    * batch's top-k, so topk(state ∪ topk(batch)) is the batch top-k
+    * over all rows, each batch a bounded-heap TakeOrderedAndProject. */
+  private val topkFold = {
+    val top: DataFrame => DataFrame =
+      _.orderBy(col("n_chars").desc, col("doc_id")).limit(25)
+    Fold("topk",
+      (s, d) => t(s, d, "documents").select(col("doc_id"), col("n_chars")),
+      "doc_id BIGINT, n_chars BIGINT", top, top)
+  }
+
+  /** Pareto frontier via the shared [[Relational.skylineOf]] kernel:
+    * skyline(A ∪ B) = skyline(skyline(A) ∪ skyline(B)) — a globally
+    * non-dominated point survives every inner skyline, and a dominated
+    * one dies at the first merge where a dominator coexists (dominance
+    * is transitive). 4 files: QueriesSpec pins ≥ 4 versions. */
+  private val skylineFold = Fold("skyline", Relational.skylineInput,
+    "p_brand STRING, p_partkey BIGINT, cents BIGINT, size BIGINT",
+    Relational.skylineOf, Relational.skylineOf, files = 4)
+
+  /** The (l_returnflag, q) value histogram: ≤ 3 flags × 50 quantities,
+    * the pre-image any rank statistic re-derives from. */
+  private val histFold = countFold("hist", "l_returnflag STRING, q BIGINT", "c") {
+    (s, d) => t(s, d, "lineitem")
+      .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
+  }
+
+  /** The (event_type, hr) hourly grid: grid-sized (≤ 744 hours a series
+    * for the fixture month; retention-bounded in production). Round-
+    * robin staging puts every hour in every batch, so the fold's
+    * arrival-order independence is exercised, not assumed. */
+  private val hourlyFold = countFold("hourly", "event_type STRING, hr BIGINT", "cnt") {
+    (s, d) => events(s, d)
+      .select(col("event_type"), expr("ts_us DIV 3600000000").as("hr"))
+  }
+
+  /** The (l_returnflag, l_linestatus) contingency cells: ≤ 6 rows. */
+  private val cellsFold = countFold("cells",
+      "l_returnflag STRING, l_linestatus STRING", "o") {
+    (s, d) => t(s, d, "lineitem").select(col("l_returnflag"), col("l_linestatus"))
+  }
+
+  /** Every fold shape; ReplaySpec and ReplayFuzz crash-replay each. */
+  private[graft] val folds: Seq[Fold] = Seq(mvFold, thetaFold, topkFold,
+    skylineFold, histFold, hourlyFold, cellsFold)
+
+  /** The runner of every [[Fold]]: stage its source as `files` batches,
+    * then drain it on a [[foldSession]] through [[foldStep]], with the
+    * checkpoint at `root/ckpt` and state versions at `root/v<b>`. A call
+    * on a root a crashed run left resumes it from the checkpoint.
+    * Returns the last batch id of this invocation. */
+  private[graft] def runFold(s: SparkSession, d: String, f: Fold,
+      root: String, files: Int): Long = {
+    val src = staged(s"stream_${f.tag}", d, files)(f.source(s, d))
     val fs = foldSession(s)
-    drain(fileStream(fs, src, StructType.fromDDL(
-        "event_type STRING, value DOUBLE")), ckpt)(
-      foldStep(fs, mvRoot, "stream_mv")(
-        _.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("tot")),
-        sumCountTotal))
+    drain(fileStream(fs, src, StructType.fromDDL(f.schema)), s"$root/ckpt")(
+      foldStep(fs, root, f.tag)(f.part, f.merge))
   }
 
-  /** STREAMING KMV/THETA SKETCH maintenance — agg_theta's streaming
-    * twin and the "approximate distinct over an unbounded stream"
-    * shape: each micro-batch contributes the k smallest 52-bit md5
-    * hashes of its own distinct user_ids, folded into a persisted
-    * ≤ 64-row sketch as sketch' = kSmallest(sketch ∪ kSmallest(batch))
-    * — per-batch work is O(|batch| + k), state is 64 longs FOREVER (no
-    * streaming state store, no growth with cardinality), and the fold
-    * is exactly the KMV mergeability law, so the final sketch is
-    * PROVABLY equal to the batch sketch over all events — which is the
-    * oracle (exact-hash, estimate included: exact-integer numerator,
-    * one IEEE division). Versions are batchId-keyed dirs read at
-    * batchId−1 (the [[streamMv]] exactly-once discipline: a replayed
-    * batch re-reads its own predecessor and overwrites its own
-    * output). Output: one row — estimate, k-th hash, sketch size, and
-    * (only with `audit = true`, the registry key, so the gate-SF
-    * oracle checks it) the exact distinct count — the full-corpus
-    * distinct the sketch replaces; `audit = false` is the production
-    * plan, which touches nothing but the 64-row sketch after the
-    * fold. */
-  private def streamTheta: Q = (s, d) => streamThetaPlan(s, d, audit = true)
+  /** A finalizer: (session, dataset, last folded state) → key output. */
+  private[graft] type Fin = (SparkSession, String, DataFrame) => DataFrame
 
-  private[graft] def streamThetaPlan(s: SparkSession, d: String,
-      audit: Boolean): DataFrame = {
-    val root = streamDir("stream_theta/versions")
-    val last = runStreamTheta(s, d, root, streamDir("stream_theta/ckpt"))
-    val k = 64
-    val scale = 1L << 52
-    val sk = s.read.parquet(s"$root/v$last")
+  /** KMV estimate, k-th hash and sketch size; with `audit` (the
+    * registry key, so the oracle checks it) also the exact distinct
+    * count the sketch replaces. Bench's production row passes
+    * `audit = false`, which touches nothing but the sketch. */
+  private def thetaOf(audit: Boolean): Fin = (s, d, sk) => {
     val base = sk.agg(max("h").as("kth"), count(lit(1)).as("n_sketch"))
     val est =
-      (lit((k - 1) * scale).cast("double") / col("kth")).as("est_users")
+      (lit((thetaK - 1) * (1L << 52)).cast("double") / col("kth")).as("est_users")
     if (!audit) base.select(est, col("kth"), col("n_sketch"))
-    else {
-      val exact = events(s, d).select(col("user_id")).distinct()
-        .agg(count(lit(1)).as("exact_users"))
-      base.crossJoin(exact)
-        .select(est, col("kth"), col("n_sketch"), col("exact_users"))
-    }
+    else base.crossJoin(events(s, d).select(col("user_id")).distinct()
+        .agg(count(lit(1)).as("exact_users")))
+      .select(est, col("kth"), col("n_sketch"), col("exact_users"))
   }
 
-  /** The stream_theta run loop with caller-owned dirs (see
-    * [[runStreamMv]]). Returns the last batch id of this invocation. */
-  private[graft] def runStreamTheta(s: SparkSession, d: String,
-      root: String, ckpt: String, files: Int = regFiles): Long = {
-    val k = 64
-    val src = staged("stream_theta", d, files) {
-      events(s, d).select(col("user_id"))
-    }
-    val fs = foldSession(s)
-    drain(fileStream(fs, src, StructType.fromDDL("user_id BIGINT")), ckpt)(
-      foldStep(fs, root, "stream_theta")(
-        _.select(col("user_id")).distinct()
-          .select(conv(substring(md5(col("user_id").cast("string")),
-            1, 13), 16, 10).cast("long").as("h"))
-          .orderBy("h").limit(k),
-        _.select("h").distinct().orderBy("h").limit(k)))
+  /** The ten fold keys: each is a fold and the finalizer of its last
+    * state. Keys sharing a fold keep the algebraic PRE-IMAGE and
+    * finalize late with the batch key's own finalizer — which is how
+    * stream_rsi and stream_drawdown stay exact although neither
+    * statistic is algebraic (a diff or running peak spans batches). */
+  private[graft] val foldKeys: Seq[(String, Fold, Fin)] = Seq(
+    ("stream_mv", mvFold, (_, _, v) => mvResult(v)),
+    ("stream_theta", thetaFold, thetaOf(audit = true)),
+    ("stream_topk", topkFold,
+      (_, _, v) => v.orderBy(col("n_chars").desc, col("doc_id"))),
+    ("stream_skyline", skylineFold,
+      (_, _, v) => v.orderBy("p_brand", "cents", "p_partkey")),
+    ("stream_mode", histFold,
+      (_, _, v) => Relational.modeOf(v).orderBy("l_returnflag")),
+    ("stream_winsorized", histFold,
+      (_, _, v) => Relational.winsorizedOf(v).orderBy("l_returnflag")),
+    ("stream_rsi", hourlyFold, (_, _, v) => Relational.rsiOf(v)),
+    ("stream_drawdown", hourlyFold, (_, _, v) => Relational.drawdownOf(v)),
+    ("stream_chisq", cellsFold,
+      (_, _, v) => Relational.chisqReport(Relational.chisqEnrich(v))),
+    ("stream_cramersv", cellsFold,
+      (_, _, v) => Relational.cramersvReport(Relational.chisqEnrich(v))))
+
+  /** A fold key's query: a fresh run under `stream/<key>`, then `fin`
+    * over its last state. */
+  private def foldQuery(key: String, f: Fold, fin: Fin): Q = (s, d) => {
+    val root = streamDir(key)
+    fin(s, d, s.read.parquet(s"$root/v${runFold(s, d, f, root, f.files)}"))
   }
 
-  /** STREAMING SKYLINE maintenance — the Pareto frontier over an
-    * unbounded catalog stream, the third algebraic-state fold next to
-    * [[streamTopk]] (top-k) and [[streamTheta]] (KMV): frontiers are
-    * MERGEABLE — skyline(A ∪ B) = skyline(skyline(A) ∪ skyline(B)) —
-    * because a globally non-dominated point is non-dominated in every
-    * subset containing it (it survives both inner skylines), while a
-    * dominated point dies at the first merge where any dominator
-    * coexists (dominance is transitive, so dominators that are
-    * themselves later dominated leave a dominator behind). Per batch:
-    * fold state' = skyline(state ∪ skyline(batch)) via the SHARED
-    * [[Relational.skylineOf]] kernel; state is frontier-sized forever.
-    * Shares win_skyline's oracle — the streamed fold must equal the
-    * batch frontier exactly. Versions batchId-keyed (the streamMv
-    * exactly-once discipline) with the Faults crash-resume seam. */
-  private def streamSkyline: Q = (s, d) => {
-    val root = streamDir("stream_skyline/versions")
-    val last = runStreamSkyline(s, d, root, streamDir("stream_skyline/ckpt"))
-    s.read.parquet(s"$root/v$last")
-      .orderBy("p_brand", "cents", "p_partkey")
-  }
-
-  /** The stream_skyline run loop with caller-owned dirs (see
-    * [[runStreamMv]]). Returns the last batch id of this invocation. */
-  private[graft] def runStreamSkyline(s: SparkSession, d: String,
-      root: String, ckpt: String, files: Int = 4): Long = {
-    // files defaults to 4 (not regFiles): QueriesSpec pins ≥4 versions.
-    val src = staged("stream_skyline", d, files)(Relational.skylineInput(s, d))
-    val fs = foldSession(s)
-    drain(fileStream(fs, src, StructType.fromDDL(
-        "p_brand STRING, p_partkey BIGINT, cents BIGINT, size BIGINT")), ckpt)(
-      foldStep(fs, root, "stream_skyline")(
-        Relational.skylineOf, Relational.skylineOf))
-  }
-
-  /** STREAMING BOUNDED TOP-K maintenance — the leaderboard shape over
-    * an unbounded stream: each micro-batch contributes its OWN top-k
-    * rows (a per-batch TakeOrderedAndProject — bounded heaps, never a
-    * batch sort), folded into a persisted ≤ k-row state as
-    * state' = topk(state ∪ topk(batch)). Top-k is mergeable exactly
-    * like the KMV sketch ([[streamTheta]]): any global top-k row is
-    * necessarily in its own batch's top-k, so the fold provably equals
-    * the batch top-k over ALL rows — which is the oracle (exact-hash:
-    * integer ordering on (n_chars DESC, doc_id), no floats anywhere).
-    * State is k rows FOREVER; per-batch work O(|batch| + k). Versions
-    * are batchId-keyed dirs read at batchId−1 (the [[streamMv]]
-    * exactly-once discipline) with the Faults crash-resume seam. */
-  private def streamTopk: Q = (s, d) => {
-    val root = streamDir("stream_topk/versions")
-    val last = runStreamTopk(s, d, root, streamDir("stream_topk/ckpt"))
-    s.read.parquet(s"$root/v$last")
-      .orderBy(col("n_chars").desc, col("doc_id"))
-  }
-
-  /** The stream_topk run loop with caller-owned dirs (see
-    * [[runStreamMv]]). Returns the last batch id of this invocation. */
-  private[graft] def runStreamTopk(s: SparkSession, d: String,
-      root: String, ckpt: String, files: Int = regFiles): Long = {
-    val src = staged("stream_topk", d, files) {
-      t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-    }
-    val topk: DataFrame => DataFrame =
-      _.orderBy(col("n_chars").desc, col("doc_id")).limit(25)
-    val fs = foldSession(s)
-    drain(fileStream(fs, src, StructType.fromDDL(
-        "doc_id BIGINT, n_chars BIGINT")), ckpt)(
-      foldStep(fs, root, "stream_topk")(topk, topk))
-  }
-
-  /** STREAMING MODE maintenance — agg_mode's streaming twin and the
-    * fourth algebraic-state fold next to [[streamTopk]] / [[streamTheta]]
-    * / [[streamSkyline]]: counts on a BOUNDED value domain merge by
-    * addition (hist(A ∪ B) = hist(A) + hist(B) — the simplest mergeable
-    * summary there is), so state is the (group, value, count) histogram
-    * — domain-sized forever (≤ 3 flags × 50 quantities), never row-
-    * scaled — and the winner selection is [[Relational.modeOf]], the
-    * SAME finalizer as the batch key, which is why the streamed fold
-    * shares agg_mode's oracle verbatim. Versions batchId-keyed (the
-    * streamMv exactly-once discipline) with the Faults crash-resume
-    * seam. */
-  private def streamMode: Q = (s, d) => {
-    val root = streamDir("stream_mode/versions")
-    val last = runStreamHist(s, d, root, streamDir("stream_mode/ckpt"),
-      "stream_mode")
-    Relational.modeOf(s.read.parquet(s"$root/v$last"))
-      .orderBy("l_returnflag")
-  }
-
-  /** STREAMING WINSORIZED MEAN maintenance — agg_winsorized's streaming
-    * twin over the SAME mergeable histogram state as [[streamMode]]
-    * (one fold shape, two finalizers — exactly how a production MV
-    * layer amortizes robust statistics: the ≤150-row histogram answers
-    * any rank statistic after the fact). Percentile thresholds, clamps,
-    * and the mean re-derive per refresh from the folded counts via
-    * [[Relational.winsorizedOf]], so the streamed result shares
-    * agg_winsorized's oracle verbatim. */
-  private def streamWinsorized: Q = (s, d) => {
-    val root = streamDir("stream_winsorized/versions")
-    val last = runStreamHist(s, d, root, streamDir("stream_winsorized/ckpt"),
-      "stream_winsorized")
-    Relational.winsorizedOf(s.read.parquet(s"$root/v$last"))
-      .orderBy("l_returnflag")
-  }
-
-  /** The mergeable-count fold every histogram-shaped streaming twin
-    * shares (stream_mode/stream_winsorized via [[runStreamHist]],
-    * stream_rsi/stream_drawdown via [[runStreamHourly]],
-    * stream_chisq/stream_cramersv via [[runStreamCells]]): the
-    * [[foldStep]] with state' = state ⊎ counts(batch), a count-sum
-    * merge on the caller's DOMAIN-BOUNDED key (map-side combined;
-    * per-batch shuffle rows bounded by the domain, state frozen at
-    * domain size — which is why the state-write coalesce(1) is the
-    * O(1)-row exempt class, not the graph-checkpoint hazard). Returns
-    * the last batch id of this invocation. */
-  private[graft] def runStreamFold(s: SparkSession, root: String,
-      ckpt: String, tag: String, src: String, schema: StructType,
-      keys: Seq[String], cnt: String): Long = {
-    val fs = foldSession(s)
-    drain(fileStream(fs, src, schema), ckpt)(foldStep(fs, root, tag)(
-      _.groupBy(keys.map(col): _*).agg(count(lit(1)).as(cnt)),
-      _.groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))))
-  }
-
-  /** [[runStreamFold]] on the bounded (l_returnflag, q) value
-    * histogram — stream_mode/stream_winsorized's pre-image. */
-  private[graft] def runStreamHist(s: SparkSession, d: String,
-      root: String, ckpt: String, tag: String,
-      files: Int = regFiles): Long = {
-    val src = staged("stream_hist", d, files) {
-      t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
-    }
-    runStreamFold(s, root, ckpt, tag, src,
-      StructType.fromDDL("l_returnflag STRING, q BIGINT"),
-      Seq("l_returnflag", "q"), "c")
-  }
-
-  /** STREAMING RSI maintenance — ts_rsi's streaming twin over the
-    * MERGEABLE HOURLY GRID: hour counts merge by addition exactly like
-    * [[streamMode]]'s value histogram (grid(A ∪ B) = grid(A) +
-    * grid(B)), so state is the (event_type, hr, cnt) table — grid-
-    * sized (≤720 rows/series for the fixture month; retention-bounded
-    * in production, where hours past the analysis window age out),
-    * never row-scaled — and diffs/windows/division re-derive per
-    * refresh via [[Relational.rsiOf]], the SAME finalizer as the
-    * batch key, so the streamed fold shares ts_rsi's oracle verbatim.
-    * This matters precisely because RSI is NOT itself algebraic (a
-    * diff spans neighboring hours, possibly across batch boundaries)
-    * — the fold keeps the algebraic PRE-IMAGE and finalizes late, the
-    * stream_winsorized discipline applied to a time grid. */
-  private def streamRsi: Q = (s, d) => {
-    val root = streamDir("stream_rsi/versions")
-    val last = runStreamHourly(s, d, root, streamDir("stream_rsi/ckpt"),
-      "stream_rsi")
-    Relational.rsiOf(s.read.parquet(s"$root/v$last"))
-  }
-
-  /** STREAMING MAX-DRAWDOWN maintenance — ts_drawdown's streaming
-    * twin over the SAME mergeable hourly-grid state as [[streamRsi]]
-    * (one fold shape, two finalizers — the [[streamMode]] /
-    * [[streamWinsorized]] pairing on the time axis). The running
-    * peak is prefix-dependent, so again the grid is the algebraic
-    * pre-image and [[Relational.drawdownOf]] finalizes per refresh —
-    * result row-identical to batch ts_drawdown, oracle shared. */
-  private def streamDrawdown: Q = (s, d) => {
-    val root = streamDir("stream_drawdown/versions")
-    val last = runStreamHourly(s, d, root,
-      streamDir("stream_drawdown/ckpt"), "stream_drawdown")
-    Relational.drawdownOf(s.read.parquet(s"$root/v$last"))
-  }
-
-  /** [[runStreamFold]] on the (event_type, hr) hourly grid —
-    * stream_rsi/stream_drawdown's pre-image. Source batches split by
-    * event_id mod 4 — deliberately NOT time-ordered — so the fold's
-    * arrival-order independence (addition commutes) is exercised, not
-    * assumed; each mod-class is written as its OWN single file
-    * (4 bounded scratch writes — structural, where a sampled
-    * repartitionByRange could merge two classes under a skewed
-    * event_id draw and break the 4-batch replay contract), and only
-    * the two columns the fold consumes are persisted. */
-  private[graft] def runStreamHourly(s: SparkSession, d: String,
-      root: String, ckpt: String, tag: String,
-      files: Int = regFiles): Long = {
-    val src = Scratch.path(s"stream_hourly_src/f$files", d)
-    Scratch.once(src) {
-      val ev = events(s, d)
-        .select(col("event_type"), expr("ts_us DIV 3600000000").as("hr"),
-          pmod(col("event_id"), lit(files)).cast("int").as("part"))
-      (0 until files).foreach { i =>
-        ev.where(col("part") === i).drop("part").repartition(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(src)
-      }
-    }
-    runStreamFold(s, root, ckpt, tag, src,
-      StructType.fromDDL("event_type STRING, hr BIGINT"),
-      Seq("event_type", "hr"), "cnt")
-  }
-
-  /** STREAMING χ² maintenance — agg_chisq's streaming twin over the
-    * MERGEABLE CONTINGENCY CELLS (cells(A ∪ B) = cells(A) + cells(B),
-    * ≤6 rows of state forever — the smallest pre-image in the fold
-    * family): per refresh the marginal/expected/contribution algebra
-    * re-derives via [[Relational.chisqEnrich]] and the SAME
-    * [[Relational.chisqReport]] reporter as the batch key, so the
-    * streamed test statistic shares agg_chisq's oracle verbatim —
-    * an independence test maintained incrementally over an unbounded
-    * stream with six rows of state. */
-  private def streamChisq: Q = (s, d) => {
-    val root = streamDir("stream_chisq/versions")
-    val last = runStreamCells(s, d, root, streamDir("stream_chisq/ckpt"),
-      "stream_chisq")
-    Relational.chisqReport(
-      Relational.chisqEnrich(s.read.parquet(s"$root/v$last")))
-  }
-
-  /** STREAMING CRAMÉR'S V — agg_cramersv's streaming twin over the
-    * SAME ≤6-row contingency state as [[streamChisq]] (one fold, two
-    * finalizers — the [[streamMode]]/[[streamWinsorized]] pairing on
-    * the test-statistics family). */
-  private def streamCramersv: Q = (s, d) => {
-    val root = streamDir("stream_cramersv/versions")
-    val last = runStreamCells(s, d, root,
-      streamDir("stream_cramersv/ckpt"), "stream_cramersv")
-    Relational.cramersvReport(
-      Relational.chisqEnrich(s.read.parquet(s"$root/v$last")))
-  }
-
-  /** [[runStreamFold]] on the (l_returnflag, l_linestatus)
-    * contingency cells — stream_chisq/stream_cramersv's ≤6-row
-    * pre-image. */
-  private[graft] def runStreamCells(s: SparkSession, d: String,
-      root: String, ckpt: String, tag: String,
-      files: Int = regFiles): Long = {
-    val src = staged("stream_cells", d, files) {
-      t(s, d, "lineitem").select(col("l_returnflag"), col("l_linestatus"))
-    }
-    runStreamFold(s, root, ckpt, tag, src,
-      StructType.fromDDL("l_returnflag STRING, l_linestatus STRING"),
-      Seq("l_returnflag", "l_linestatus"), "o")
-  }
+  /** stream_theta with or without its exact-count audit. */
+  private[graft] def streamThetaPlan(s: SparkSession, d: String,
+      audit: Boolean): DataFrame =
+    foldQuery("stream_theta", thetaFold, thetaOf(audit))(s, d)
 
   /** STREAMING incremental SEQUENCE-PATTERN maintenance — seq_pattern's
     * streaming twin, and the interesting case of incremental MV logic:
     * the regex-over-path aggregate is NOT algebraic (a new event can
     * create or destroy a match anywhere in the user's path), so the MV
-    * can't fold deltas like [[streamMv]]. The incremental discipline
+    * can't fold deltas like [[mvFold]]. The incremental discipline
     * instead is CHANGED-KEYS-ONLY recompute: each micro-batch touches
     * only the users it contains — their raw (ts, ch) state is re-read
     * (semi-join on the batch's user set), their paths re-derived and
@@ -1079,15 +912,16 @@ object Streaming {
     * across batch dirs = corpus rows exactly) and the bucket-pruned
     * scan. */
   private def streamSeq: Q = (s, d) => {
-    val root = streamDir("stream_seq/versions")
-    val last = runStreamSeq(s, d, root, streamDir("stream_seq/ckpt"))
-    s.read.parquet(s"$root/mv_v$last").orderBy("user_id")
+    val root = streamDir("stream_seq")
+    s.read.parquet(s"$root/mv_v${runStreamSeq(s, d, root)}").orderBy("user_id")
   }
 
-  /** The stream_seq run loop with caller-owned dirs (see
-    * [[runStreamMv]]). Returns the last batch id of this invocation. */
+  /** The stream_seq run loop under `root` (checkpoint at `root/ckpt`):
+    * the registered query runs it on a fresh root; the replay specs run
+    * it twice on one root (crash, then resume from the checkpoint).
+    * Returns the last batch id of this invocation. */
   private[graft] def runStreamSeq(s: SparkSession, d: String,
-      root: String, ckpt: String, files: Int = 4): Long = {
+      root: String, files: Int = 4): Long = {
     // files defaults to 4 (not regFiles): QueriesSpec pins the
     // registered stream_seq at ≥4 MV versions and ≥4 batch dirs.
     // round-robin staging: arrival order ≠ time order
@@ -1105,7 +939,7 @@ object Streaming {
         (regexp_count(col("path"), lit("sv+c+p")) > 0).as("converted"))
     val rs = recomputeSession(s)
     drain(fileStream(rs, src, StructType.fromDDL(
-        "event_id BIGINT, user_id BIGINT, ts_us BIGINT, ch STRING")), ckpt)(
+        "event_id BIGINT, user_id BIGINT, ts_us BIGINT, ch STRING")), s"$root/ckpt")(
       recomputeStep(rs, root, "stream_seq", Seq("user_id", "ts_us", "ch"), mvOf))
   }
 
@@ -1129,9 +963,8 @@ object Streaming {
     * exactly. Exactly-once: event dir and MV version both batchId-
     * keyed (the stream_mv replay discipline + Faults seam). */
   private def streamMarkov: Q = (s, d) => {
-    val root = streamDir("stream_markov/versions")
-    val last = runStreamMarkov(s, d, root, streamDir("stream_markov/ckpt"))
-    val perUser = s.read.parquet(s"$root/mv_v$last")
+    val root = streamDir("stream_markov")
+    val perUser = s.read.parquet(s"$root/mv_v${runStreamMarkov(s, d, root)}")
     val trans = perUser.groupBy("prev_type", "next_type")
       .agg(sum(col("n")).as("n"))
     val tot = trans.groupBy("prev_type").agg(sum(col("n")).as("n_prev"))
@@ -1141,10 +974,9 @@ object Streaming {
       .orderBy("prev_type", "next_type")
   }
 
-  /** The stream_markov run loop with caller-owned dirs (see
-    * [[runStreamMv]]). Returns the last batch id of this invocation. */
+  /** The stream_markov run loop under `root` (see [[runStreamSeq]]). */
   private[graft] def runStreamMarkov(s: SparkSession, d: String,
-      root: String, ckpt: String, files: Int = regFiles): Long = {
+      root: String, files: Int = regFiles): Long = {
     val cols = Seq("event_id", "user_id", "ts_us", "event_type")
     // round-robin staging: arrival order ≠ time order
     val src = staged("stream_markov", d, files) {
@@ -1162,7 +994,7 @@ object Streaming {
     }
     val rs = recomputeSession(s)
     drain(fileStream(rs, src, StructType.fromDDL("event_id BIGINT, " +
-        "user_id BIGINT, ts_us BIGINT, event_type STRING")), ckpt)(
+        "user_id BIGINT, ts_us BIGINT, event_type STRING")), s"$root/ckpt")(
       recomputeStep(rs, root, "stream_markov", cols, countsOf))
   }
 
@@ -1185,18 +1017,17 @@ object Streaming {
     * dirs keyed by batchId (a replay overwrites its own output), and
     * each execution starts from a wiped streamDir. */
   private def streamDedupIncremental: Q = (s, d) => {
-    val resRoot = streamDir("sdi/res")
-    runStreamDedupIncremental(s, d, streamDir("sdi/idx"), resRoot,
-      streamDir("sdi/ckpt"))
-    s.read.option("recursiveFileLookup", "true").parquet(resRoot)
+    val root = streamDir("sdi")
+    runStreamDedupIncremental(s, d, root)
+    s.read.option("recursiveFileLookup", "true").parquet(s"$root/res")
       .orderBy("doc_id")
   }
 
-  /** The stream_dedup_incremental run loop with caller-owned dirs
-    * (see [[runStreamMv]]). */
+  /** The stream_dedup_incremental run loop under `root` (see
+    * [[runStreamSeq]]): index appends at `root/idx/b<b>`, decisions at
+    * `root/res/b<b>`. Returns the last batch id of this invocation. */
   private[graft] def runStreamDedupIncremental(s: SparkSession, d: String,
-      idxApp: String, resRoot: String, ckpt: String,
-      files: Int = regFiles): Unit = {
+      root: String, files: Int = regFiles): Long = {
     val sigT = Llm.minhashSigTable(s, d)
     // One-time stored artifacts (immutable per input dir): the base
     // index = band rows of the even half, and the staged new-doc
@@ -1213,7 +1044,7 @@ object Streaming {
     val rs = recomputeSession(s)
     val st = fileStream(rs, srcDir,
       StructType.fromDDL("doc_id BIGINT, text STRING"))
-    drain(st, ckpt) { (batch, batchId) =>
+    drain(st, s"$root/ckpt") { (batch, batchId) =>
       val sh = Llm.shingles(col("text"))
       // The signature subtree feeds three consumers (band rows,
       // the est join's b-side, the decision projection) — cache it
@@ -1226,7 +1057,7 @@ object Streaming {
       try {
         val newBands = Llm.bandRows(sigs)
         val prior = (0L until batchId).foldLeft(rs.read.parquet(baseIdx)) {
-          (acc, i) => acc.unionByName(rs.read.parquet(s"$idxApp/b$i"))
+          (acc, i) => acc.unionByName(rs.read.parquet(s"$root/idx/b$i"))
         }
         val probe = prior.unionByName(newBands)
           .select(col("doc_id").as("a_id"), col("sig").as("sig_a"),
@@ -1240,13 +1071,13 @@ object Streaming {
           // Per-batch outputs are kilobytes — one file each, not one
           // per shuffle partition.
           .coalesce(1)
-          .write.mode("overwrite").parquet(s"$resRoot/b$batchId")
+          .write.mode("overwrite").parquet(s"$root/res/b$batchId")
         // replay-spec seam: decisions written, index append missing —
         // a resumed replay must re-probe the PRE-batch index epoch
         // and overwrite both artifacts identically.
         Faults.maybeFail(s"sdi:$batchId")
         newBands.coalesce(1)
-          .write.mode("overwrite").parquet(s"$idxApp/b$batchId")
+          .write.mode("overwrite").parquet(s"$root/idx/b$batchId")
       } finally sigs.unpersist()
     }
   }
@@ -1277,13 +1108,14 @@ object Streaming {
     val srcDir = Scratch.path(s"spc_src/f$regFiles", d)
     stageIdOrdered(srcDir, regFiles, t(s, d, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("text")))
-    val digRoot = streamDir("spc/dig")
-    val stRoot = streamDir("spc/state")
+    val root = streamDir("spc")
+    val digRoot = s"$root/dig"
+    val stRoot = s"$root/state"
     val rs = recomputeSession(s)
     val st = fileStream(rs, srcDir,
       StructType.fromDDL("doc_id BIGINT, source STRING, lang STRING, " +
         "text STRING"))
-    val last = drain(st, streamDir("spc/ckpt")) { (batch, batchId) =>
+    val last = drain(st, s"$root/ckpt") { (batch, batchId) =>
       val toks = Pipeline.corpusToks(batch).persist()
       try {
         val funnelB = toks.groupBy("source").agg(
@@ -1455,7 +1287,7 @@ object Streaming {
     * empty.txt, so it flows through here. */
   private def streamIngestE2e: Q = (s, _) => {
     val fixture = Ingest.buildFixture()
-    val out = streamDir("stream_ingest_e2e/out")
+    val root = streamDir("stream_ingest_e2e")
     val ss = stateSession(s)
     val files = ss.readStream.format("graft.sources.RemoteFileSource")
       .option("urls", s"ftp://localhost:21$fixture")
@@ -1466,13 +1298,12 @@ object Streaming {
     // Prior-run sink manifest (R18 skip identity, as in batch ingest_e2e).
     val manifest = ss.createDataFrame(Seq(("dup_two.txt", 18L)))
       .toDF("file_name", "size")
-    drain(Ingest.pipeline(files, broadcast(manifest)),
-        streamDir("stream_ingest_e2e/ckpt")) { (batch, b) =>
-      batch.withColumn("batch_id", lit(b))
+    drain(Ingest.pipeline(files, broadcast(manifest)), s"$root/ckpt") {
+      (batch, b) => batch.withColumn("batch_id", lit(b))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(out)
+        .partitionBy("batch_id").parquet(s"$root/out")
     }
-    s.read.parquet(out)
+    s.read.parquet(s"$root/out")
       .groupBy("file_type")
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_bytes"),
         array_join(array_sort(collect_list(col("file_name"))), "|").as("names"))
@@ -1498,21 +1329,11 @@ object Streaming {
     "stream_join" -> streamJoin,
     "stream_enrich" -> streamEnrich,
     "stream_sink" -> streamSink,
-    "stream_mv" -> streamMv,
-    "stream_theta" -> streamTheta,
-    "stream_topk" -> streamTopk,
-    "stream_skyline" -> streamSkyline,
-    "stream_mode" -> streamMode,
-    "stream_winsorized" -> streamWinsorized,
-    "stream_rsi" -> streamRsi,
-    "stream_drawdown" -> streamDrawdown,
-    "stream_chisq" -> streamChisq,
-    "stream_cramersv" -> streamCramersv,
     "stream_markov" -> streamMarkov,
     "stream_seq" -> streamSeq,
     "stream_dedup_incremental" -> streamDedupIncremental,
     "pipeline_corpus_stream" -> streamPipelineCorpus,
-  )
+  ) ++ foldKeys.map { case (k, f, fin) => k -> foldQuery(k, f, fin) }
 
   val oracles: Map[String, String] = Map(
     // Mergeability law: the folded stream state must equal the batch

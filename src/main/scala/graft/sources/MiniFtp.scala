@@ -38,7 +38,7 @@ object MiniFtp {
 
   // One server (socket + acceptor thread) lives per served directory
   // for the JVM's life; stop them at exit so a long-lived driver does
-  // not leak listeners unbounded (ADVICE r6).
+  // not leak listening sockets unbounded.
   Runtime.getRuntime.addShutdownHook(new Thread(() => synchronized {
     servers.values.foreach(s => try s.stop() catch { case _: Exception => () })
   }, "mini-ftp-shutdown"))
@@ -228,7 +228,7 @@ class FtpSocketClient(host: String, port: Int, dir: String,
       cmd("TYPE I", 200)
       // Honor the URL's directory path on ANY server: without CWD a
       // real server rooting users above the target directory would
-      // list/fetch the wrong files (ADVICE r6). The loopback server is
+      // list/fetch the wrong files. The loopback server is
       // rooted at the directory already and acknowledges the no-op.
       if (dir.nonEmpty && dir != "/") cmd(s"CWD $dir", 250)
     }

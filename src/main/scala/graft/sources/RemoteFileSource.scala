@@ -118,7 +118,7 @@ class RemoteFileSource extends TableProvider {
     val urls = opts.get("urls").split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(urls.nonEmpty, "RemoteFileSource 'urls' option is empty")
     // Fault injection is namespaced `test.` so a stray production
-    // config key can't silently arm it (ADVICE r6); the bare legacy
+    // config key can't silently arm it; the bare legacy
     // name is rejected loudly rather than ignored.
     require(!opts.containsKey("chaosFailFirstFetches"),
       "option 'chaosFailFirstFetches' was renamed to " +
@@ -338,8 +338,7 @@ class RemoteMicroBatchStream(urls: Seq[String], numPartitions: Int,
         case None if endN > begin =>
           // A non-empty offset range with no admission record means the
           // graft-batches log was lost/corrupted during WAL replay —
-          // fail loudly instead of silently emitting zero rows
-          // (ADVICE r2).
+          // fail loudly instead of silently emitting zero rows.
           throw new IllegalStateException(
             s"no admission record for batch [$begin, $endN) in $batchDir — " +
               "checkpoint batch log missing or corrupt; cannot replay")
@@ -388,9 +387,9 @@ object FetchPolicy {
 /** A protocol-level PERMANENT failure (FTP 5xx, SSH auth rejection):
   * retrying the identical request can only fail identically, so
   * [[RemoteRetry]] rethrows it immediately instead of burning
-  * maxRetries×backoff per fetch and again at the listing level
-  * (ADVICE r6 — a missing file cost 4 attempts with exponential
-  * backoff twice over). */
+  * maxRetries×backoff per fetch and again at the listing level (a
+  * missing file would cost 4 attempts with exponential backoff twice
+  * over). */
 class PermanentProtocolException(msg: String) extends java.io.IOException(msg)
 
 object RemoteRetry {
@@ -405,13 +404,17 @@ object RemoteRetry {
     * logs each failed fetch, custom_logging.py analog); the final
     * failure propagates with the attempt count attached. */
   def withRetry[T](what: String, maxRetries: Int, backoffMs: Long)(f: => T): T = {
+    var result: Option[T] = None
     var attempt = 0
-    while (attempt < maxRetries) {
-      try return f
+    while (result.isEmpty) {
+      try result = Some(f)
       catch {
         case e: PermanentProtocolException =>
           graft.GraftLog.error(s"fetch failed permanently ($what): ${e.getMessage}")
           throw e
+        case e: Exception if attempt >= maxRetries =>
+          throw new java.io.IOException(
+            s"fetch failed ($what) after ${maxRetries + 1} attempts", e)
         case e: Exception =>
           observedRetries.incrementAndGet()
           graft.GraftLog.error(
@@ -425,15 +428,7 @@ object RemoteRetry {
           attempt += 1
       }
     }
-    try f
-    catch {
-      case e: PermanentProtocolException =>
-        graft.GraftLog.error(s"fetch failed permanently ($what): ${e.getMessage}")
-        throw e
-      case e: Exception =>
-        throw new java.io.IOException(
-          s"fetch failed ($what) after ${maxRetries + 1} attempts", e)
-    }
+    result.get
   }
 }
 

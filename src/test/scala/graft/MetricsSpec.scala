@@ -96,9 +96,9 @@ class MetricsSpec extends AnyFunSuite {
 
   test("a stream started on a scoped session reports to the window") {
     // Spark does not copy stream listeners into a cloned session;
-    // GraftSession.scoped does, so the window still sees the query
-    val r = withMetrics(_.measure(
-      streamed(GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "2"))))
+    // Streaming.streamSession does, so the window still sees the query
+    val r = withMetrics(_.measure(streamed(
+      ops.Streaming.streamSession(spark, "spark.sql.shuffle.partitions" -> "2"))))
     assert(r.ok, r.failure)
     assert(r.stream.map(_.queries) === Some(1L))
     assert(r.stream.exists(_.triggers >= 1))

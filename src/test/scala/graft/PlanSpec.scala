@@ -165,7 +165,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("join_skew_aqe splits the hot shuffle partition (skew=true in the final plan)") {
-    val df = graft.ops.Relational.skewJoinFrame(spark, sf, "2KB")
+    val df = graft.ops.Relational.skewJoinFrame(spark, sf)
     // collect() drives THIS QueryExecution (count() would execute a
     // separate one, leaving this plan un-finalized, isFinalPlan=false)
     df.collect()

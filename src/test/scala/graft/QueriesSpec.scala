@@ -83,9 +83,10 @@ class QueriesSpec extends AnyFunSuite {
     // produced one MV version per micro-batch — all 4 incremental
     // merges actually ran; fewer means the staging or the per-file
     // trigger regressed and the incremental path went unexercised.
+    // state versions are root/v<b>, next to the checkpoint root/ckpt
     val versions = new java.io.File(
-      s"${Tables.scratchRoot}/stream/stream_mv/versions").listFiles()
-    assert(versions != null && versions.count(_.getName.startsWith("v")) >= 4)
+      s"${Tables.scratchRoot}/stream/stream_mv").listFiles()
+    assert(versions != null && versions.count(_.getName.matches("v[0-9]+")) >= 4)
     val batch = Tables.events(spark, sf)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), Tables.dsum2(col("value")).as("total_value"))
@@ -100,7 +101,7 @@ class QueriesSpec extends AnyFunSuite {
     // 4 staged files, 1 per trigger → one MV version + one event batch
     // dir per micro-batch; fewer means the changed-keys-only
     // incremental path went unexercised.
-    val root = s"${Tables.scratchRoot}/stream/stream_seq/versions"
+    val root = s"${Tables.scratchRoot}/stream/stream_seq"
     val versions = new java.io.File(root).listFiles()
     assert(versions != null &&
       versions.count(_.getName.startsWith("mv_v")) >= 4)
@@ -119,8 +120,8 @@ class QueriesSpec extends AnyFunSuite {
     val perBatch = stored.groupBy("batch").count().collect()
       .map(r => r.getLong(1))
     assert(perBatch.length >= 4 && perBatch.sum === stored.count())
-    // User-bucketed layout + scan pruning (r10 judge item #5): each
-    // batch dir is sub-partitioned by pmod(user_id, evBuckets), and a
+    // User-bucketed layout + scan pruning: each batch dir is
+    // sub-partitioned by pmod(user_id, evBuckets), and a
     // touched-bucket read must prune at the SCAN — per-batch recompute
     // input is bounded by touched-bucket volume, never full history.
     val ubDirs = new java.io.File(s"$root/ev/batch=0").listFiles()
@@ -157,9 +158,9 @@ class QueriesSpec extends AnyFunSuite {
       "skyline(state ∪ skyline(batch)) must equal the batch frontier")
     // 4 staged files → ≥4 version dirs, and every intermediate state
     // is ITSELF a valid frontier (frontier-sized, never corpus-sized)
-    val root = s"${Tables.scratchRoot}/stream/stream_skyline/versions"
+    val root = s"${Tables.scratchRoot}/stream/stream_skyline"
     val versions = new java.io.File(root).listFiles()
-      .filter(_.getName.startsWith("v")).sortBy(_.getName)
+      .filter(_.getName.matches("v[0-9]+")).sortBy(_.getName)
     assert(versions.length >= 4)
     versions.foreach { v =>
       val st = spark.read.parquet(v.getPath)

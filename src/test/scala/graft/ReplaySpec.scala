@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Failure-injection pins for the exactly-once replay claims (round-9
-  * judge item): stream_mv / stream_seq / stream_dedup_incremental each
-  * document batchId-keyed idempotent replay — these specs PROVE it by
-  * killing the foreachBatch at the documented mid-write seam (first
-  * artifact of the batch written, batch uncommitted), restarting the
-  * query on the SAME dirs/checkpoint, and asserting the final state is
-  * row-identical to a clean run of the registered query. */
+/** Failure-injection pins for the exactly-once replay claims: every
+  * fold in `Streaming.folds`, stream_markov, stream_seq and
+  * stream_dedup_incremental each document batchId-keyed idempotent
+  * replay — these specs PROVE it by killing the foreachBatch at the
+  * documented mid-write seam (first artifact of the batch written,
+  * batch uncommitted), restarting the query on the SAME root and
+  * checkpoint, and asserting the final state is row-identical to a
+  * clean run of the registered query. */
 class ReplaySpec extends AnyFunSuite {
   import SharedSpark.{spark, sf}
 
@@ -20,206 +22,88 @@ class ReplaySpec extends AnyFunSuite {
     dir.getAbsolutePath
   }
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
   private def injected(t: Throwable): Boolean =
     t != null && (Option(t.getMessage).exists(_.contains("injected fault"))
       || injected(t.getCause))
 
-  test("stream_mv replay: crash after v-write before commit; resume is invisible") {
-    val clean = rows(SparkEntry.queries("stream_mv")(spark, sf))
-    val mvRoot = fresh("mv/versions")
-    val ckpt = fresh("mv/ckpt")
-    ops.Streaming.Faults.arm("stream_mv:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamMv(spark, sf, mvRoot, ckpt)
-    }
-    assert(injected(ex), ex.toString)
-    // the crash left v2 on disk (written) but the batch uncommitted
-    assert(new java.io.File(s"$mvRoot/v2").exists())
-    assert(!new java.io.File(s"$mvRoot/v3").exists())
-    val last = ops.Streaming.runStreamMv(spark, sf, mvRoot, ckpt)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val resumed = rows(spark.read.parquet(s"$mvRoot/v$last")
-      .select(col("event_type"), col("n"),
-        round(col("tot"), 2).cast("double").as("total_value"))
-      .orderBy("event_type"))
-    assert(resumed === clean)
-  }
+  /** What a fold's state write is called in its test's name. */
+  private val stateWord = Map("mv" -> "v", "theta" -> "sketch",
+    "skyline" -> "frontier", "hourly" -> "grid", "cells" -> "cell")
 
-  test("stream_theta replay: crash after sketch-write before commit; resume is invisible") {
-    val clean = rows(SparkEntry.queries("stream_theta")(spark, sf))
-    val root = fresh("theta/versions")
-    val ckpt = fresh("theta/ckpt")
-    ops.Streaming.Faults.arm("stream_theta:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamTheta(spark, sf, root, ckpt, files = 4)
-    }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamTheta(spark, sf, root, ckpt, files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    // identical final SKETCH ⇒ identical estimate row (recompute the
-    // registered output shape from the resumed sketch)
-    val k = 64
-    val scale = 1L << 52
-    val exact = Tables.events(spark, sf).select(col("user_id"))
-      .distinct().agg(count(lit(1)).as("exact_users"))
-    val resumed = rows(spark.read.parquet(s"$root/v$last")
-      .agg(max("h").as("kth"), count(lit(1)).as("n_sketch"))
-      .crossJoin(exact)
-      .select((lit((k - 1) * scale).cast("double") / col("kth"))
-        .as("est_users"), col("kth"), col("n_sketch"), col("exact_users")))
-    assert(resumed === clean)
-    // bounded-state law: the sketch never exceeds k rows
-    assert(spark.read.parquet(s"$root/v$last").count() <= k.toLong)
-  }
+  /** Bounded-state laws beyond resume == clean, per fold tag. */
+  private val laws: Map[String, DataFrame => Unit] = Map(
+    // the sketch never exceeds k rows
+    "theta" -> (v => assert(v.count() <= 64L)),
+    // the leaderboard never exceeds k rows
+    "topk" -> (v => assert(v.count() <= 25L)),
+    // the histogram is the batch histogram exactly (mergeability), and
+    // its size is the value DOMAIN, never row count
+    "hist" -> { v =>
+      val batch = ops.Relational.quantityHist(spark, sf)
+      assert(rows(v.orderBy("l_returnflag", "q")) ===
+        rows(batch.orderBy("l_returnflag", "q")))
+      assert(v.count() === batch.count())
+      assert(v.count() <= 150L)
+    },
+    // the folded grid IS the batch hourly grid (addition merges commute
+    // across any split), and its size is grid-bounded, never row-scaled
+    "hourly" -> { v =>
+      val batch = ops.Relational.hourlyGrid(spark, sf)
+      assert(rows(v.orderBy("event_type", "hr")) ===
+        rows(batch.orderBy("event_type", "hr")))
+      assert(v.count() === batch.count())
+      assert(v.count() <= 5L * 744)
+    },
+    // the folded cells ARE the batch contingency table, and state is
+    // domain-bounded (3 flags × 2 statuses)
+    "cells" -> { v =>
+      val batch = ops.Relational.contingencyOf(spark, sf)
+      assert(rows(v.orderBy("l_returnflag", "l_linestatus")) ===
+        rows(batch.orderBy("l_returnflag", "l_linestatus")))
+      assert(v.count() <= 6L)
+    })
 
-  test("stream_topk replay: crash after topk-write before commit; resume is invisible") {
-    val clean = rows(SparkEntry.queries("stream_topk")(spark, sf))
-    val root = fresh("topk/versions")
-    val ckpt = fresh("topk/ckpt")
-    ops.Streaming.Faults.arm("stream_topk:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamTopk(spark, sf, root, ckpt, files = 4)
+  // One crash-replay test per fold: every key over it must resume, off
+  // one injected crash, to its clean registered output.
+  for (f <- ops.Streaming.folds) {
+    val keys = ops.Streaming.foldKeys.filter(_._2 == f)
+    val name = s"${keys.map(_._1).mkString("/")} replay: crash after " +
+      s"${stateWord.getOrElse(f.tag, f.tag)}-write before commit" +
+      (if (keys.size == 1) "; resume is invisible" else "")
+    test(name) {
+      val clean = keys.map { case (k, _, _) => rows(SparkEntry.queries(k)(spark, sf)) }
+      val root = fresh(f.tag)
+      ops.Streaming.Faults.arm(s"${f.tag}:2")
+      val ex = intercept[Exception] {
+        ops.Streaming.runFold(spark, sf, f, root, files = 4)
+      }
+      assert(injected(ex), ex.toString)
+      // the crash left v2 on disk (written) but the batch uncommitted
+      assert(new java.io.File(s"$root/v2").exists())
+      assert(!new java.io.File(s"$root/v3").exists())
+      val last = ops.Streaming.runFold(spark, sf, f, root, files = 4)
+      assert(last === 3L, s"resume should finish the 4-file drain, got $last")
+      val v = spark.read.parquet(s"$root/v$last")
+      val resumed = keys.map { case (_, _, fin) => rows(fin(spark, sf, v)) }
+      assert(resumed === clean)
+      laws.get(f.tag).foreach(_(v))
     }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamTopk(spark, sf, root, ckpt, files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val resumed = rows(spark.read.parquet(s"$root/v$last")
-      .orderBy(col("n_chars").desc, col("doc_id")))
-    assert(resumed === clean)
-    // bounded-state law: the leaderboard never exceeds k rows
-    assert(spark.read.parquet(s"$root/v$last").count() <= 25L)
-  }
-
-  test("stream_skyline replay: crash after frontier-write before commit; resume is invisible") {
-    val clean = rows(SparkEntry.queries("stream_skyline")(spark, sf))
-    val root = fresh("skyline/versions")
-    val ckpt = fresh("skyline/ckpt")
-    ops.Streaming.Faults.arm("stream_skyline:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamSkyline(spark, sf, root, ckpt, files = 4)
-    }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamSkyline(spark, sf, root, ckpt, files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val resumed = rows(spark.read.parquet(s"$root/v$last")
-      .orderBy("p_brand", "cents", "p_partkey"))
-    assert(resumed === clean)
-  }
-
-  test("stream_mode/stream_winsorized replay: crash after hist-write before commit") {
-    // One fold, two finalizers: the shared histogram state must resume
-    // to the exact batch histogram, so BOTH keys' outputs equal their
-    // clean runs off one injected crash.
-    val cleanMode = rows(SparkEntry.queries("stream_mode")(spark, sf))
-    val cleanWins = rows(SparkEntry.queries("stream_winsorized")(spark, sf))
-    val root = fresh("hist/versions")
-    val ckpt = fresh("hist/ckpt")
-    ops.Streaming.Faults.arm("hist:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamHist(spark, sf, root, ckpt, "hist", files = 4)
-    }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamHist(spark, sf, root, ckpt, "hist", files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val hist = spark.read.parquet(s"$root/v$last")
-    val resumedMode = rows(ops.Relational.modeOf(hist)
-      .orderBy("l_returnflag"))
-    assert(resumedMode === cleanMode)
-    val resumedWins = rows(ops.Relational.winsorizedOf(hist)
-      .orderBy("l_returnflag"))
-    assert(resumedWins === cleanWins)
-    // bounded-state laws: the histogram is the batch histogram exactly
-    // (mergeability), and its size is the value DOMAIN, never row count
-    val batchHist = ops.Relational.quantityHist(spark, sf)
-    assert(rows(hist.orderBy("l_returnflag", "q")) ===
-      rows(batchHist.orderBy("l_returnflag", "q")))
-    assert(hist.count() === batchHist.count())
-    assert(hist.count() <= 150L)
-  }
-
-  test("stream_rsi/stream_drawdown replay: crash after grid-write before commit") {
-    // The hourly-grid fold shares the histogram discipline on the time
-    // axis: resume must land on the exact batch grid, so both
-    // finalizers equal their clean runs off one injected crash.
-    val cleanRsi = rows(SparkEntry.queries("stream_rsi")(spark, sf))
-    val cleanDd = rows(SparkEntry.queries("stream_drawdown")(spark, sf))
-    val root = fresh("hourly/versions")
-    val ckpt = fresh("hourly/ckpt")
-    ops.Streaming.Faults.arm("hourly:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamHourly(spark, sf, root, ckpt, "hourly", files = 4)
-    }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamHourly(spark, sf, root, ckpt, "hourly", files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val grid = spark.read.parquet(s"$root/v$last")
-    assert(rows(ops.Relational.rsiOf(grid)) === cleanRsi)
-    assert(rows(ops.Relational.drawdownOf(grid)) === cleanDd)
-    // grid-state laws: the folded grid IS the batch hourly grid
-    // (addition merges commute across the event_id-mod-4 split), and
-    // its size is grid-bounded, never row-scaled
-    val batchGrid = ops.Relational.hourlyGrid(spark, sf)
-    assert(rows(grid.orderBy("event_type", "hr")) ===
-      rows(batchGrid.orderBy("event_type", "hr")))
-    assert(grid.count() === batchGrid.count())
-    assert(grid.count() <= 5L * 744)
-  }
-
-  test("stream_chisq/stream_cramersv replay: crash after cell-write before commit") {
-    // The contingency fold keeps ≤6 rows of state; resume must land on
-    // the exact batch cells, so both finalizers equal their clean runs
-    // off one injected crash.
-    val cleanChi = rows(SparkEntry.queries("stream_chisq")(spark, sf))
-    val cleanV = rows(SparkEntry.queries("stream_cramersv")(spark, sf))
-    val root = fresh("cells/versions")
-    val ckpt = fresh("cells/ckpt")
-    ops.Streaming.Faults.arm("cells:2")
-    val ex = intercept[Exception] {
-      ops.Streaming.runStreamCells(spark, sf, root, ckpt, "cells", files = 4)
-    }
-    assert(injected(ex), ex.toString)
-    assert(new java.io.File(s"$root/v2").exists())
-    assert(!new java.io.File(s"$root/v3").exists())
-    val last = ops.Streaming.runStreamCells(spark, sf, root, ckpt, "cells", files = 4)
-    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
-    val cells = spark.read.parquet(s"$root/v$last")
-    assert(rows(ops.Relational.chisqReport(
-      ops.Relational.chisqEnrich(cells))) === cleanChi)
-    assert(rows(ops.Relational.cramersvReport(
-      ops.Relational.chisqEnrich(cells))) === cleanV)
-    // cell-state laws: the folded cells ARE the batch contingency
-    // table, and state is domain-bounded (3 flags × 2 statuses)
-    val batchCells = ops.Relational.contingencyOf(spark, sf)
-    assert(rows(cells.orderBy("l_returnflag", "l_linestatus")) ===
-      rows(batchCells.orderBy("l_returnflag", "l_linestatus")))
-    assert(cells.count() <= 6L)
   }
 
   test("stream_markov replay: crash between event-dir write and MV write") {
     val clean = rows(SparkEntry.queries("stream_markov")(spark, sf))
-    val root = fresh("markov/versions")
-    val ckpt = fresh("markov/ckpt")
+    val root = fresh("markov")
     ops.Streaming.Faults.arm("stream_markov:2")
     val ex = intercept[Exception] {
-      ops.Streaming.runStreamMarkov(spark, sf, root, ckpt, files = 4)
+      ops.Streaming.runStreamMarkov(spark, sf, root, files = 4)
     }
     assert(injected(ex), ex.toString)
     assert(new java.io.File(s"$root/ev/batch=2").exists())
     assert(!new java.io.File(s"$root/mv_v2").exists())
-    val last = ops.Streaming.runStreamMarkov(spark, sf, root, ckpt, files = 4)
+    val last = ops.Streaming.runStreamMarkov(spark, sf, root, files = 4)
     assert(last === 3L, s"resume should finish the 4-file drain, got $last")
     // rebuild the registered output shape from the resumed per-user MV
     val perUser = spark.read.parquet(s"$root/mv_v$last")
@@ -238,17 +122,16 @@ class ReplaySpec extends AnyFunSuite {
 
   test("stream_seq replay: crash between event-dir write and MV write") {
     val clean = rows(SparkEntry.queries("stream_seq")(spark, sf))
-    val root = fresh("seq/versions")
-    val ckpt = fresh("seq/ckpt")
+    val root = fresh("seq")
     ops.Streaming.Faults.arm("stream_seq:2")
     val ex = intercept[Exception] {
-      ops.Streaming.runStreamSeq(spark, sf, root, ckpt)
+      ops.Streaming.runStreamSeq(spark, sf, root)
     }
     assert(injected(ex), ex.toString)
-    // the judge's exact scenario: ev/batch=2 written, mv_v2 missing
+    // the event dir of batch 2 is written, its MV version is not
     assert(new java.io.File(s"$root/ev/batch=2").exists())
     assert(!new java.io.File(s"$root/mv_v2").exists())
-    val last = ops.Streaming.runStreamSeq(spark, sf, root, ckpt)
+    val last = ops.Streaming.runStreamSeq(spark, sf, root)
     assert(last === 3L)
     val resumed = rows(spark.read.parquet(s"$root/mv_v$last")
       .orderBy("user_id"))
@@ -264,19 +147,19 @@ class ReplaySpec extends AnyFunSuite {
 
   test("stream_dedup_incremental replay: crash between decisions and index append") {
     val clean = rows(SparkEntry.queries("stream_dedup_incremental")(spark, sf))
-    val idx = fresh("sdi/idx")
-    val res = fresh("sdi/res")
-    val ckpt = fresh("sdi/ckpt")
+    val root = fresh("sdi")
+    val (idx, res) = (s"$root/idx", s"$root/res")
     ops.Streaming.Faults.arm("sdi:2")
     val ex = intercept[Exception] {
-      ops.Streaming.runStreamDedupIncremental(spark, sf, idx, res, ckpt, files = 4)
+      ops.Streaming.runStreamDedupIncremental(spark, sf, root, files = 4)
     }
     assert(injected(ex), ex.toString)
     // decisions for batch 2 written, its index append missing: the
     // replay must re-probe the PRE-batch index epoch (b0, b1 only)
     assert(new java.io.File(s"$res/b2").exists())
     assert(!new java.io.File(s"$idx/b2").exists())
-    ops.Streaming.runStreamDedupIncremental(spark, sf, idx, res, ckpt, files = 4)
+    val last = ops.Streaming.runStreamDedupIncremental(spark, sf, root, files = 4)
+    assert(last === 3L, s"resume should finish the 4-file drain, got $last")
     val resumed = rows(spark.read
       .option("recursiveFileLookup", "true").parquet(res)
       .orderBy("doc_id"))

@@ -101,12 +101,17 @@ class RewriteActionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("join_skew_aqe's frame keeps its skew thresholds through a noop write") {
-    // the thresholds sized for this fixture, as PlanSpec's pin uses
-    val plans = executed(actions.head._2(
-      ops.Relational.skewJoinFrame(spark, sf, "2KB").orderBy("grp")))
-    assert(plans.exists(_.toString.contains("skew=true")),
-      "no plan executed by the noop write split a skewed partition:\n" +
-        plans.mkString("\n"))
+    // the key sizes its thresholds from the input, so it splits the hot
+    // partition at both scales (the sf0.01 leg is skipped where that
+    // dataset is absent)
+    val sf001 = SharedSpark.sfDir("0.01")
+    if (sf001.isEmpty) info("sf0.01 absent: its leg is skipped")
+    for (d <- sf +: sf001.toSeq) {
+      val plans = executed(actions.head._2(SparkEntry.queries("join_skew_aqe")(spark, d)))
+      assert(plans.exists(_.toString.contains("skew=true")),
+        s"$d: no plan executed by the noop write split a skewed partition:\n" +
+          plans.mkString("\n"))
+    }
   }
 
   test("a key's MV never rewrites another key's plan") {

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails the suite if the Python RISK_KEYS caps drift from the Scala
   * constants they mirror, if session setup grows a second owner next to
   * GraftSession and GraftExtensions, if a foreachBatch loop appears
-  * outside Streaming.drain, if a round checkpoint is written outside
+  * outside Streaming.drain, if an algebraic fold is run outside
+  * Streaming.runFold, if a round checkpoint is written outside
   * Graph.fixpoint, if a listener is registered outside graft.Metrics,
   * if a one-time artifact is keyed or a catalog table saved outside
   * graft.Scratch, if an archive is exploded outside Ingest.members, if
@@ -91,6 +92,29 @@ class ToolsLockstepSpec extends AnyFunSuite {
       clones.mkString("\n"))
   }
 
+  /** The top-level member of `object Streaming` enclosing each line of
+    * ops/Streaming.scala that calls `fn` (its own `def` excluded). */
+  private def streamingCallers(fn: String): Seq[String] = {
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val|lazy val) (\w+).*""".r
+    scalaLines("src/main/scala/graft/ops/Streaming.scala")
+      .foldLeft(("", Seq.empty[String])) { case ((cur, acc), (_, _, l)) =>
+        val owner = l match { case member(name) => name; case _ => cur }
+        val call = l.contains(fn) && !l.contains(s"def $fn") &&
+          !l.trim.startsWith("*") && !l.trim.startsWith("//")
+        (owner, if (call) acc :+ owner else acc)
+      }._2
+  }
+
+  test("algebraic folds have one runner: Streaming.runFold") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    // a new fold is a row of Streaming.folds, not another runner
+    assert(streamingCallers("foldSession(") === Seq("runFold"),
+      "add a row to Streaming.folds instead of a fold runner")
+    assert(streamingCallers("foldStep(").sorted === Seq("runFold", "streamResume"),
+      "add a row to Streaming.folds instead of a fold runner")
+  }
+
   test("micro-batch loops have one owner: Streaming.drain") {
     assume(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
@@ -115,9 +139,9 @@ class ToolsLockstepSpec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
     val regs = Seq("addSparkListener(", "listenerManager.register(", "streams.addListener(")
       .flatMap(hits("src/main", _, _.endsWith("/graft/Metrics.scala")))
-    // the one exception: GraftSession.scoped copies the parent's stream
-    // listeners into its clone, which Spark does not do
-    assert(regs.size === 1 && regs.head.contains("/graft/GraftSession.scala:") &&
+    // the one exception: Streaming.streamSession copies the parent's
+    // stream listeners into its clone, which Spark does not do
+    assert(regs.size === 1 && regs.head.contains("/graft/ops/Streaming.scala:") &&
       regs.head.contains("s.streams.listListeners().foreach(l => c.streams.addListener(l))"),
       "measure through graft.Metrics; register no listener elsewhere:\n" +
       regs.mkString("\n"))
@@ -163,7 +187,8 @@ class ToolsLockstepSpec extends AnyFunSuite {
   test("comments under src/main give reasons, not review-round history") {
     assume(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
-    val history = "round[- ][0-9]+|r[0-9]+ (ADVICE|judge)".r
+    val history =
+      "round[- ][0-9]+|r[0-9]+ (ADVICE|judge)|ADVICE r[0-9]+|r[0-9]+ \\(ADVICE\\)|judge item".r
     val found = scalaLines("src/main").collect {
       case (f, n, l) if history.findFirstIn(l).isDefined => s"$f:$n: ${l.trim}"
     }
