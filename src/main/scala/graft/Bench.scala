@@ -6,9 +6,9 @@ import org.apache.spark.sql.GraftSqlBridge
   * total seconds over SparkEntry.queries at SPARK_GRAFT_SF_DIR. */
 object Bench {
   @volatile private var calSink: Long = 0L
-  /** Effective sweeper count of the last memory calibration (ADVICE
-    * r15: visible in the JSON so a heap-capped calibration is never
-    * mistaken for a full-fan-out one). */
+  /** Effective sweeper count of the last memory calibration (visible
+    * in the JSON so a heap-capped calibration is never mistaken for a
+    * full-fan-out one). */
   @volatile private var calibMemEffCount: Int = 0
 
   /** Fixed single-thread CPU calibration: per-key
@@ -36,8 +36,8 @@ object Bench {
     (1 to 3).map(_ => once()).min
   }
 
-  /** Memory-bandwidth calibration under full thread fan-out (r14, for
-    * the dedup_ngram bimodality attribution): [[calibrateMs]] is
+  /** Memory-bandwidth calibration under full thread fan-out (for the
+    * dedup_ngram bimodality attribution): [[calibrateMs]] is
     * register-only and measured the SLOW box as FASTER (gate 144 ms vs
     * builder 167 ms) while the same box did 4–5× the task CPU on the
     * inverted-index keys — which are memory-bound (byte hashing,
@@ -51,8 +51,8 @@ object Bench {
     * calib_mem_ms has named the dedup_ngram divergence. */
   private def calibrateMemMs(threads: Int): Long = {
     val n = (32 << 20) / 8 // 32 MiB of longs per thread
-    // Bound calibration memory independently of SPARK_GRAFT_CPUS (r14
-    // ADVICE): threads × 32 MiB live across all 3 passes is 1 GiB at
+    // Bound calibration memory independently of SPARK_GRAFT_CPUS:
+    // threads × 32 MiB live across all 3 passes is 1 GiB at
     // the 32-thread cap — fine under the bench's fixed 12g heap, an
     // OOM / full-GC hazard on a smaller -Xmx. Cap the sweepers at
     // heapMb/128 (≤ ¼ of the heap in arrays); the probe measures
@@ -61,8 +61,8 @@ object Bench {
     // axis (and on the 12g bench heap the cap never binds: 96 > 32).
     val heapMb = (Runtime.getRuntime.maxMemory() >> 20).toInt
     val eff = math.max(1, math.min(threads, heapMb / 128))
-    // Record the effective sweeper count in the bench JSON (ADVICE
-    // r15): when the heap cap binds, calib_mem_ms is measured at less
+    // Record the effective sweeper count in the bench JSON: when the
+    // heap cap binds, calib_mem_ms is measured at less
     // than session parallelism and the two-axis normalization against
     // the full-fan-out reference would silently skew — the record
     // makes a capped calibration visible.
@@ -102,9 +102,9 @@ object Bench {
     * jobs/tasks, 2-8× task CPU" analysis, now one number). */
   private val CalibRefMs = 149.0
 
-  /** r14 gate-box memory-bandwidth reference ([[calibrateMemMs]] read
-    * 21 ms on the BENCH_r14 box of record). The r14 variance analysis
-    * proved core speed and loaded bandwidth are INDEPENDENT axes
+  /** Gate-box memory-bandwidth reference ([[calibrateMemMs]] read
+    * 21 ms on the BENCH_r14 box of record). Its variance analysis
+    * showed core speed and loaded bandwidth are INDEPENDENT axes
     * (equal calib_ms, 3–5× calib_mem_ms across windows), so the
     * headline normalization is two-axis:
     * memory-bound keys (the plan-probe set — the inverted-index dedup
@@ -200,7 +200,7 @@ object Bench {
     val planProbe = Set("dedup_ngram", "dedup_containment",
       "dedup_minhash_recall", "dedup_semantic", "graph_pagerank")
     val metrics = Metrics.attach(spark)
-    // Per-trial memory-bandwidth spot probe (r14): two CONSECUTIVE
+    // Per-trial memory-bandwidth spot probe: two CONSECUTIVE
     // same-box full runs showed graph_pagerank at 5.3× the task CPU
     // with zero GC and an identical plan, and the run-level
     // calib_mem_ms read 42 vs 24 ms — the box's effective memory
@@ -210,7 +210,7 @@ object Bench {
     // (~3–10 ms, outside the timed window): the resulting per-trial
     // series shows whether the box was slow WHEN a given key ran —
     // the per-key analog of calib_mem_ms, and the direct test of the
-    // environment hypothesis for the r13 dedup_ngram bimodality.
+    // environment hypothesis for the dedup_ngram bimodality.
     val memProbeArr = new Array[Long]((32 << 20) / 8)
     java.util.Arrays.fill(memProbeArr, 1L)
     def memProbeMs(): Long = {
@@ -230,7 +230,7 @@ object Bench {
     val detail = scala.collection.mutable.ArrayBuffer.empty[String]
     // Keys that ran at least one streaming query (observed, not
     // name-matched): their subtotal is ~80% trigger/commit machinery
-    // (the r14 listener decomposition), so the contract line reports
+    // (graft.Metrics' listener decomposition), so the contract line reports
     // it alongside the total — the streaming-floor-excluded remainder
     // is the contention-comparable batch number.
     val streamKeys = scala.collection.mutable.Set.empty[String]
@@ -293,8 +293,8 @@ object Bench {
 
     // Standalone re-measure: the slowest keys run
     // again in a FRESH JVM (same flags, classpath, env; a suite of
-    // one), so the in-suite vs standalone divergence the r10/r11
-    // verdicts hand-attributed (stream_tws: 13.5 s in a 301-query JVM
+    // one), so the in-suite vs standalone divergence that was once
+    // attributed by hand (stream_tws: 13.5 s in a 301-query JVM
     // vs 1.87 s alone) is MEASURED in every BENCH file. Headline map
     // untouched — these are detail rows. SPARK_GRAFT_STANDALONE=N
     // overrides; default 5 on a full run, 0 on a filtered run (a
@@ -318,7 +318,7 @@ object Bench {
         // per-key path; its per-trial attribution rows (task_ms /
         // task_gc_ms / driver_ms / scratch_ms / …) are folded into THIS
         // run's detail under the #standalone name, so an in-suite vs
-        // standalone inversion (pipeline_corpus_stream r12: 17.0 s
+        // standalone inversion (pipeline_corpus_stream once read 17.0 s
         // alone vs 5.2 s in-suite) is attributable from one BENCH file.
         val childFull = s"target/bench_standalone_$key.json"
         // A stale per-key file from a PRIOR run must never be folded in
@@ -352,8 +352,8 @@ object Bench {
         if (standalone >= 0) try {
           val txt = new String(java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(childFull)), "UTF-8")
-          // Depth-1 brace matcher: r14 detail rows can carry ONE level
-          // of nested objects ("stream":{...}) — the old [^}]* cut the
+          // Depth-1 brace matcher: detail rows can carry ONE level of
+          // nested objects ("stream":{...}), and a [^}]* would cut the
           // row at the first inner brace, folding invalid JSON.
           val rowRe = ("\\{\"q\":\"" + java.util.regex.Pattern.quote(key) +
             "\",\"trial\":(?:[^{}]|\\{[^{}]*\\})*\\}").r

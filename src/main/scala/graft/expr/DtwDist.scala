@@ -1,10 +1,9 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native DTW alignment distance over two `ARRAY<BIGINT>` series — the
   * kernel under ts_dtw's template scan.
@@ -32,23 +31,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * non-null count sums by construction).
   */
 case class DtwDist(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayArgs {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-
-  private def isLongArray(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"dtw_dist requires (ARRAY<BIGINT>, ARRAY<BIGINT>), got " +
-          s"(${left.dataType}, ${right.dataType})")
 
   override def nullSafeEval(a: Any, b: Any): Any =
     DtwDist.dtw(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

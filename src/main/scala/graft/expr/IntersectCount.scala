@@ -1,10 +1,9 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Distinct-intersection COUNT of two ASC-SORTED `ARRAY<BIGINT>` via a
   * zero-allocation merge walk — the per-candidate-pair kernel of
@@ -30,23 +29,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (IntersectCountSpec pins all of it against the built-in).
   */
 case class IntersectCountSorted64(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayArgs {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-
-  private def isLongArray(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"isect_count_s64 requires (ARRAY<BIGINT>, ARRAY<BIGINT>), got " +
-          s"(${left.dataType}, ${right.dataType})")
 
   override def nullSafeEval(a: Any, b: Any): Any =
     java.lang.Long.valueOf(IntersectCountSorted64.count(

@@ -477,24 +477,12 @@ object Ingest {
   private def mmDecode: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").option("pathGlobFilter", "img_*")
-      .load(Media.dir)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("content"))
-      .as[(String, Array[Byte])]
+    Media.load(s, "img_").as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (name, bytes) =>
           val (w, h, luma) = Media.decodeLuma(bytes)
-          var sum = 0L
-          var rolling = 1125899906842597L
-          var i = 0
-          while (i < luma.length) {
-            sum += luma(i)
-            rolling = rolling * 31 + luma(i)
-            i += 1
-          }
-          (name, w, h, sum / luma.length, rolling)
+          val (mean, hash) = Media.lumaDigest(luma)
+          (name, w, h, mean, hash)
         }
       }
       .toDF("file_name", "width", "height", "mean_luma", "luma_hash")
@@ -533,24 +521,12 @@ object Ingest {
   private def mmFrames: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").option("pathGlobFilter", "vid_*")
-      .load(Media.dir)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("content"))
-      .as[(String, Array[Byte])]
+    Media.load(s, "vid_").as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>
         Media.decodeGifFrames(bytes).iterator.zipWithIndex.map {
           case ((w, h, luma), k) =>
-            var sum = 0L
-            var rolling = 1125899906842597L
-            var i = 0
-            while (i < luma.length) {
-              sum += luma(i)
-              rolling = rolling * 31 + luma(i)
-              i += 1
-            }
-            (name, k.toLong, w, h, sum / luma.length, rolling)
+            val (mean, hash) = Media.lumaDigest(luma)
+            (name, k.toLong, w, h, mean, hash)
         }
       }
       .toDF("file_name", "frame_idx", "width", "height", "mean_luma", "luma_hash")
@@ -569,12 +545,7 @@ object Ingest {
   private def mmAudio: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").option("pathGlobFilter", "aud_*")
-      .load(Media.dir)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("content"))
-      .as[(String, Array[Byte])]
+    Media.load(s, "aud_").as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>
         val pcm = Media.decodeAudio(bytes)
         val win = 1000
@@ -628,12 +599,7 @@ object Ingest {
   private def mmResize: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    s.read.format("binaryFile").option("pathGlobFilter", "img_*")
-      .load(Media.dir)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("content"))
-      .as[(String, Array[Byte])]
+    Media.load(s, "img_").as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (name, bytes) =>
           val side = 16

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Scratch
 import graft.Tables._
+import graft.ops.Pipeline.{entryLit, nearest, roundedGrid, shiftedGrid}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -355,7 +356,7 @@ object Llm {
       newDocs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     // est feeds TWO consumers (candidate counts + the best-partner
-    // window) and each re-ran the whole band-probe join — the r17
+    // window) and each would re-run the whole band-probe join — a
     // stage profile showed the probe subtree duplicated per batch in
     // stream_dedup_incremental (~0.5-0.7 s task × 2 per batch). One
     // lineage cut runs it once; rows unchanged (guide §5, the
@@ -657,9 +658,9 @@ object Llm {
     * difference (`array_except` builds an OpenHashSet over the
     * covered side) keeps the uncovered positions in order, O(tokens +
     * k·dup-starts), with O(1) `element_at` lookups mapping survivors
-    * back to tokens. The r14 per-token `exists` over the starts array
-    * was the engine's only super-linear per-row lambda (O(tokens ×
-    * dup-starts): a long, heavily self-duplicated document went
+    * back to tokens. A per-token `exists` over the starts array would
+    * be a super-linear per-row lambda (O(tokens ×
+    * dup-starts): a long, heavily self-duplicated document goes
     * quadratic in one projection — the text_winnow class); LlmSpec
     * pins the rewrite bit-identical to that formulation. Further
     * pins: flagged windows' tokens are all removed, survivors are an
@@ -715,15 +716,11 @@ object Llm {
   private def dedupPhash: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    val hashes = s.read.format("binaryFile").option("pathGlobFilter", "img_*")
-      .load(graft.ops.Media.dir)
-      .select(element_at(split(col("path"), "/"), -1).as("img_id"),
-        col("content"))
-      .as[(String, Array[Byte])]
+    val hashes = Media.load(s, "img_").as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (name, bytes) =>
-          val (w, h, luma) = graft.ops.Media.decodeLuma(bytes)
-          (name, graft.ops.Media.ahash(w, h, luma))
+          val (w, h, luma) = Media.decodeLuma(bytes)
+          (name, Media.ahash(w, h, luma))
         }
       }
       .toDF("img_id", "phash")
@@ -809,8 +806,8 @@ object Llm {
     // f(b) occurrences of b contributes f(b)) and Σ n_bigrams = Σ_b
     // f(b) — identical exact integers, so the threshold action scans
     // the O(charset²) artifact instead of re-exploding the corpus
-    // (r14: the old scored.agg().head re-ran the bigram explode + probe
-    // a second time — half of this key's steady-state task CPU).
+    // (a scored.agg().head would re-run the bigram explode + probe a
+    // second time — half of this key's steady-state task CPU).
     val g = model.agg(sum(col("f") * col("f")), sum(col("f"))).head
     val half = 0.5 * (g.getLong(0).toDouble / g.getLong(1))
     scored
@@ -918,8 +915,8 @@ object Llm {
     }
     // Doc sizes are consumed THREE times below (the scored join, the
     // broadcast partner side, the final left join) and each consumer
-    // re-ran the full postings scan + agg (r17 profile: 2 × ~3 s of
-    // the warm trial's task time was this duplicate). One row per doc
+    // would re-run the full postings scan + agg (graft.Profile: 2 × ~3 s
+    // of the warm trial's task time). One row per doc
     // — its own train-once artifact (guide §2.4).
     val sizes = Scratch.table(s, Scratch.path("containment_sizes", d)) {
       sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -936,17 +933,17 @@ object Llm {
     // and the join back lands on the same sh_h hash partitioning the
     // pair self-join needs. Row set identical by construction: a row
     // survives iff its shingle's group count is in [2, dfCap].
-    // r14: the capped postings checkpoint to scratch (path keyed by the
-    // df cap — LlmSpec's capped≡uncapped pin runs other caps through
-    // the same plan); without the artifact the pair kernel re-ran the
+    // The capped postings checkpoint to scratch (path keyed by the df
+    // cap — LlmSpec's capped≡uncapped pin runs other caps through the
+    // same plan); without the artifact the pair kernel would re-run the
     // df agg + join-back lineage (the dedup_ngram stage-profile finding,
-    // same family). Since r17 the kernel reads gk exactly once.
+    // same family). The kernel reads gk exactly once.
     val gk = Scratch.table(s, Scratch.path(s"containment_gk_$dfCap", d)) {
       val dfTab = sh.groupBy("sh_h").agg(count(lit(1)).as("df"))
         .where(col("df") >= 2 && col("df") <= dfCap)
       sh.join(dfTab.select("sh_h"), Seq("sh_h"))
     }
-    // Pair generation as GROUP-THEN-COMBINE instead of the r16 a⋈b
+    // Pair generation as GROUP-THEN-COMBINE instead of an a⋈b
     // self-join (guide §2.4/§2.3) — see [[containmentSymPairs]] for
     // the kernel and its equivalence argument.
     val sym = containmentSymPairs(s, gk, floor)
@@ -972,14 +969,14 @@ object Llm {
   }
 
   /** Symmetric shared-shingle pair counts (doc_id, partner, inter ≥
-    * floor) over capped postings `gk` (doc_id, sh_h). r17 kernel: the
-    * old a⋈b self-join scanned + shuffled the postings twice and paid
+    * floor) over capped postings `gk` (doc_id, sh_h). An a⋈b
+    * self-join would scan + shuffle the postings twice and pay
     * the join machinery to rediscover rows sharing a shingle —
     * information one groupBy already has (guide §2.4/§2.3). The
     * combine stage is COMPUTE-bound with a guaranteed ~dfCap² output
     * amplification per group, but AQE sizes the post-agg stage by its
     * input BYTES (1.6 MB at sf0.1 → ONE task doing 2.7 s of pair
-    * generation — the dedup_fuzzy r16 pathology), so the groupBy rides
+    * generation — the dedup_fuzzy pathology), so the groupBy rides
     * a user-numbered repartition at the session shuffle width (one
     * exchange total; AQE does not coalesce REPARTITION_BY_NUM; the
     * width is the session's scale knob, not a local[32] constant).
@@ -1000,8 +997,8 @@ object Llm {
     * shingle group exactly once per (row_a, row_b) combination —
     * i.e. multiplicity cnt(x)·cnt(y) per direction — and the double
     * explode over the group list with doc_id ≠ partner enumerates
-    * precisely that. LlmSpec pins the equivalence against the r16
-    * join shape directly. */
+    * precisely that. LlmSpec pins the equivalence against the self-join
+    * shape directly. */
   private[graft] def containmentSymPairs(s: SparkSession, gk: DataFrame,
       floor: Long): DataFrame =
     gk.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
@@ -1116,9 +1113,7 @@ object Llm {
   private def simMmr: Q = (s, d) => {
     val k = 8
     val base = t(s, d, "embeddings").select(col("vec_id"),
-      transform(col("embedding"),
-        e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
-        .as("qarr"))
+      roundedGrid(col("embedding")).as("qarr"))
     val qv = base.where(col("vec_id") === 0).head.getSeq[Long](1).toArray
     val relCol = aggregate(
       zip_with(col("qarr"), array(qv.map(lit): _*), (a, b) => a * b),
@@ -1241,10 +1236,10 @@ object Llm {
     * ~60 ms of task time (BENCH detail: 4 jobs, 4 tasks) is the
     * per-JOB planning/analysis floor of a 4-job query at sf0.1 task
     * sizes — a CONSTANT, not data-scaled (the gram explode and joins
-    * grow with the corpus; job count does not). The r11 in-suite
-    * 2.9 s reading was suite-JVM aging on top of that constant — now
-    * measured per round by Bench's `driver_ms` + `#standalone` detail
-    * rows instead of inferred. */
+    * grow with the corpus; job count does not). An in-suite 2.9 s
+    * reading was suite-JVM aging on top of that constant — Bench's
+    * `driver_ms` + `#standalone` detail rows measure it instead of
+    * inferring it. */
   private def dedupBloom: Q = (s, d) => {
     val m = 4096L
     val toks = split(col("text"), " ")
@@ -1319,9 +1314,7 @@ object Llm {
     val rounds = 40
     val scaleBits = 40
     val base = t(s, d, "embeddings").select(col("vec_id"),
-      transform(col("embedding"),
-        e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
-        .as("qarr"))
+      roundedGrid(col("embedding")).as("qarr"))
     val cells = base
       .select(col("qarr"), posexplode(col("qarr")).as(Seq("i", "qi")))
       .select(col("i"), col("qi"), posexplode(col("qarr")).as(Seq("j", "qj")))
@@ -1503,8 +1496,8 @@ object Llm {
     // Train-once artifact (the dedupContainment discipline): the gk
     // build below reads these postings TWICE (its df hash-agg and its
     // join-back side) — checkpointing to scratch parquet keeps the
-    // explode+hash a single pass (measured at sf10 in r11: the double
-    // compute held the old wall while GC stayed).
+    // explode+hash a single pass (measured at sf10: the double compute
+    // held the wall while GC stayed).
     // The gram kernel is the native [[graft.expr.NgramHashes]] pass:
     // the old
     // explode(array_distinct(transform(…substring…))) + xxhash64 chain
@@ -1540,7 +1533,7 @@ object Llm {
     // spillable, map-side-combined — and grams above the cap never
     // reach the join at all. Same row set by construction.
     //
-    // r14 CPU fix, two parts (per-stage attribution, graft.Profile: the full
+    // CPU shape, two parts (per-stage attribution, graft.Profile: the full
     // query cost 35 task-CPU-seconds at sf0.1 where its stages summed
     // to ~14 run once):
     // (a) the (source, lang, gram_h) key folds to ONE xxhash64 — the
@@ -1610,7 +1603,7 @@ object Llm {
     * merge walk over value-sorted copies of the two full (distinct)
     * shingle arrays — work ∝ candidates × doc size, not Σdf², and
     * zero per-pair allocation (array_intersect's per-pair hash set +
-    * output array was 53% task GC on the r12 build trial). 27.5 s →
+    * output array measured 53% task GC on a build trial). 27.5 s →
     * ~2 s
     * at sf1; LlmSpec pins prefix-filter ≡ naive-join row identity at
     * both gate SFs. Oracle: pinned VALUES from the independent
@@ -1656,8 +1649,8 @@ object Llm {
       // .IntersectCountSorted64]]): same count as
       // size(array_intersect(ghs_a, ghs_b)) — IntersectCountSpec pins
       // the equivalence — without ArrayIntersect's per-pair hash set +
-      // materialized intersection array (53% task GC on the r12 build
-      // trial under a fat suite heap).
+      // materialized intersection array (53% task GC on a build trial
+      // under a fat suite heap).
       cand
         .join(docArr.select(col("doc_id").as("a_id"),
           col("ghss").as("ghs_a")), Seq("a_id"))
@@ -1776,26 +1769,21 @@ object Llm {
     * (the synthetic embeddings carry no planted near-identical pairs,
     * so τ sits at the top of the observed similarity range to keep the
     * decision path exercised); a vector with no such neighbor is the
-    * group keeper. Scale shape: assignment is a broadcast of k seed
-    * vectors + per-row argmin (no shuffle of embeddings for it); the
-    * pair join is EQUI on the cluster id with per-cluster candidate
-    * sets; decisions join back on vec_id. */
+    * group keeper. Scale shape: assignment is a per-row
+    * [[Pipeline.nearest]] argmin over the k seed vectors as literals (no
+    * join, no shuffle of embeddings for it); the pair join is EQUI on
+    * the cluster id with per-cluster candidate sets; decisions join
+    * back on vec_id. */
   private def dedupSemantic: Q = (s, d) => {
     val kSeeds = 8
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .withColumn("qv", transform(col("emb"),
-        x => floor((x + lit(1.0d)) * 1000000).cast("long")))
-    val seeds = e.where(col("vec_id") < kSeeds)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"))
-    val aw = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-    val clustered = e.crossJoin(broadcast(seeds))
-      .withColumn("dist",
-        aggregate(zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x))
-      .withColumn("rn", row_number().over(aw))
-      .where(col("rn") === 1)
-      .select(col("vec_id"), col("emb"), col("cid"))
+      .withColumn("qv", shiftedGrid(col("emb")))
+    val seeds = entryLit(e.where(col("vec_id") < kSeeds)
+      .select(col("vec_id"), col("qv")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq)
+    val clustered = e
+      .select(col("vec_id"), col("emb"), nearest(col("qv"), seeds).as("cid"))
       .withColumn("nrm", norm(col("emb")))
     val a = clustered.select(col("vec_id").as("a_id"), col("cid"),
       col("emb").as("ea"), col("nrm").as("na"))
@@ -2202,8 +2190,8 @@ object Llm {
     // Train-once artifact: the variant postings feed the df aggregate
     // AND the join-back (plus both self-join sides through `variants`)
     // — checkpoint so the deletion-neighborhood explode runs ONCE
-    // (without this the r11 bounded-df split recomputed it per
-    // consumer: sf10 measured 25 → 78 s on pure duplicate work).
+    // (without this the bounded-df split recomputes it per consumer:
+    // sf10 measured 25 → 78 s on pure duplicate work).
     val raw = Scratch.table(s, Scratch.path("fuzzy_vh", d)) {
       c.select(col("c_custkey"),
         explode(array_union(array(name), deletions)).as("v"))

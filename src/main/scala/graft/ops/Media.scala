@@ -3,6 +3,8 @@ package graft.ops
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, File}
 import javax.imageio.ImageIO
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, split}
 
 /** Deterministic media fixture + REAL image decode kernels for the
   * mm_* family and dedup_phash.
@@ -127,6 +129,28 @@ object Media {
         new File(d, s"aud_$i.wav")): Unit
     }
     d.getAbsolutePath
+  }
+
+  /** The fixture files whose names start with `prefix`, as
+    * (file_name, content) rows: one binaryFile scan over [[dir]]. */
+  def load(s: SparkSession, prefix: String): DataFrame =
+    s.read.format("binaryFile").option("pathGlobFilter", s"$prefix*").load(dir)
+      .select(element_at(split(col("path"), "/"), -1).as("file_name"),
+        col("content"))
+
+  /** (mean, hash) of a luma plane: the integer floor mean and the
+    * polynomial rolling hash h·31 + l from 1125899906842597 (wrapping
+    * Long arithmetic, as tools/mm_oracle.py mirrors it). */
+  def lumaDigest(luma: Array[Int]): (Long, Long) = {
+    var sum = 0L
+    var rolling = 1125899906842597L
+    var i = 0
+    while (i < luma.length) {
+      sum += luma(i)
+      rolling = rolling * 31 + luma(i)
+      i += 1
+    }
+    (sum / luma.length, rolling)
   }
 
   /** Write an animated GIF (the one MULTI-FRAME codec in the stock

@@ -124,8 +124,8 @@ object Pipeline {
     * support floor is the usual noise bound. */
   private def textCooc: Q = (s, d) => {
     // fanOut: the windowed pair generation is the CPU kernel and the
-    // single-file gate fixture otherwise runs it in ONE task (r16
-    // profile: 0.86 s single-task stage); no-op at scale.
+    // single-file gate fixture otherwise runs it in ONE task (a
+    // 0.86 s single-task stage in graft.Profile); no-op at scale.
     val base = graft.Tables.fanOut(t(s, d, "documents"))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val n2 = size(col("toks"))
@@ -298,7 +298,7 @@ object Pipeline {
     val bk = 1024L
     // fanOut: the single-file gate fixture otherwise runs the bigram
     // explode + per-bigram md5 (the CPU-dense kernel) in ONE task
-    // (r16 profile: 0.9 s + 0.6 s single-task stages); no-op at scale.
+    // (0.9 s + 0.6 s single-task stages in graft.Profile); no-op at scale.
     // localCheckpoint: `inst` feeds BOTH the hash-bucket model counts
     // and the per-doc score join — checkpoint so the md5 kernel runs
     // once, not per consumer (guide §5).
@@ -356,19 +356,14 @@ object Pipeline {
   private def sampleKcenter: Q = (s, d) => {
     val k = 8
     val base = t(s, d, "embeddings").select(col("vec_id"),
-      transform(col("embedding"),
-        e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
-        .as("qarr"))
+      roundedGrid(col("embedding")).as("qarr"))
     val first = base.orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("qarr")).head
     var cen = Vector(
       (1, first.getLong(0), 0L, first.getSeq[Long](1).toArray))
     for (r <- 2 to k) {
       val mind = cen.map { case (_, _, _, arr) =>
-        aggregate(
-          zip_with(col("qarr"), array(arr.map(lit): _*),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v)
+        sqDist(col("qarr"), array(arr.map(lit): _*))
       }.reduce((a, b) => least(a, b))
       val pick = base.select(col("vec_id"), col("qarr"), mind.as("mind"))
         .orderBy(col("mind").desc, col("vec_id")).limit(1).head
@@ -771,25 +766,7 @@ object Pipeline {
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    // The 8 centroid vectors are coordinator METADATA (every k-means
-    // driver holds them): collected once and inlined as literals, so
-    // cell assignment is a pure projection fused into the scan — no
-    // join, no window, no shuffle of the (8×-expanded) corpus. Ties
-    // break (cos DESC, cid ASC) via the (negcos, cid) struct sort.
-    val centArr = array(
-      e.where(col("vec_id").isin(ivfCentroidIds: _*))
-        .select(col("vec_id"), col("emb"), col("nrm"))
-        .collect().sortBy(_.getLong(0)).map { r =>
-          struct(lit(r.getLong(0)).as("cid"),
-            array(r.getSeq[Double](1).map(lit): _*).as("cemb"),
-            lit(r.getDouble(2)).as("cnrm"))
-        }.toSeq: _*)
-    // NaN cosines (zero-norm vectors) sort LAST here — a garbage vector
-    // should not win a cell assignment. (The corpus has no zero norms;
-    // noted because a window DESC formulation would rank NaN first.)
-    val scored = sort_array(transform(centArr, c =>
-      struct((dot(col("emb"), c("cemb")) / (col("nrm") * c("cnrm")) * -1)
-        .as("negcos"), c("cid").as("cid"))))
+    val scored = ranked(e)
     val cells = e
       .select(col("vec_id"), col("emb"), col("nrm"),
         element_at(scored, 1)("cid").as("cell"))
@@ -1053,21 +1030,18 @@ object Pipeline {
 
   /** K-means training (Lloyd iterations) — the job that TRAINS
     * sim_ann_ivf's coarse quantizer instead of assuming centroids:
-    * k=8, 3 iterations, entirely in DataFrame ops. Determinism uses
-    * the PageRank trick taken to vectors — every coordinate becomes a
-    * POSITIVE integer micro-unit (floor((x+1)·10⁶): one IEEE add, one
-    * IEEE multiply, one floor — each bit-identical in any engine), so
-    * distances are exact integer sums and the centroid update is
-    * integer floor-division (positive everywhere, where negatives
-    * would split Spark's truncating `div` from DuckDB's flooring
-    * `//`). The oracle unrolls the identical three iterations.
+    * k=8, 3 iterations of [[lloyd]] on the [[shiftedGrid]] (one
+    * subspace), entirely in DataFrame ops. Every coordinate is a
+    * POSITIVE integer micro-unit, so distances are exact integer sums
+    * and the centroid update is integer floor-division (positive
+    * everywhere, where negatives would split Spark's truncating `div`
+    * from DuckDB's flooring `//`). The oracle unrolls the identical
+    * three iterations.
     *
-    * Scale shape per iteration: assignment is a BROADCAST join of the
-    * k×d centroid table against the points (no point ever shuffles for
-    * it) + an argmin window partitioned by point; the update shuffles
-    * (cluster, dim) partial sums — map-side combined, O(k·d) final
-    * rows. Centroids checkpoint per iteration (8 rows) to cut lineage,
-    * exactly like graph_pagerank. Init = the k lowest vec_ids
+    * Scale shape per iteration: the k×d centroids ride into the plan as
+    * literals, so assignment is a map-side argmin (no point ever
+    * shuffles for it); the update shuffles (cluster, dim) partial sums —
+    * map-side combined, O(k·d) final rows. Init = the k lowest vec_ids
     * (deterministic; k-means++ would sample — RNG has no cross-engine
     * oracle). Empty clusters drop and stay dropped identically in both
     * engines. */
@@ -1075,54 +1049,20 @@ object Pipeline {
     val K = 8
     val Iters = 3
     val pts = t(s, d, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"),
-        x => floor((x.cast("double") + 1.0d) * 1000000.0d).cast("long"))
-        .as("p"))
+      .select(col("vec_id"), lit(0).as("sub"),
+        shiftedGrid(col("embedding")).as("v"))
       // 5 consumers (seed collect + 3 Lloyd passes + report): checkpoint
       // the micro-unit projection once (guide §5)
       .localCheckpoint()
-    // Centroid state is 8×64 longs — driver control plane. Carrying it
-    // as LITERALS makes each Lloyd iteration ONE job: a map-side
-    // (dist, cl) argmin (bit-identical to the r15 crossJoin + window
-    // rn=1 tie-break) feeding a single partial-agg exchange of
-    // ≤ K×64 mean rows; the r15 shape paid a broadcast build, a
-    // full-width window shuffle and a parquet write+read per
-    // iteration (guide §2.4).
-    def bestCl(cent: Seq[(Long, Seq[Long])]): Column =
-      element_at(sort_array(transform(
-        array(cent.map { case (cl, cp) =>
-          struct(lit(cl).as("cl"), array(cp.map(lit): _*).as("cp"))
-        }: _*),
-        c => struct(aggregate(
-          zip_with(col("p"), c("cp"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v).as("dist"), c("cl").as("cl")))),
-        1)("cl")
-    var cent: Seq[(Long, Seq[Long])] = pts.where(col("vec_id") < K)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
-    var assigned: org.apache.spark.sql.DataFrame = null
-    for (_ <- 1 to Iters) {
-      assigned = pts.withColumn("cl", bestCl(cent))
-        .select(col("vec_id"), col("p"), col("cl"))
-      cent = assigned
-        .select(col("cl"), posexplode(col("p")).as(Seq("dim", "v")))
-        .groupBy("cl", "dim")
-        .agg(expr("sum(v) div count(1)").as("c"))
-        .collect()
-        .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
-        .groupBy(_._1).toSeq
-        .map { case (cl, rows) =>
-          (cl, rows.map(_._2).sortBy(_._1).map(_._2).toSeq)
-        }
-        .sortBy(_._1)
-    }
+    val (prev, cent) = lloyd(pts, 0L until K, Iters)
     // Report the LAST iteration: per-cluster population + id digest
     // from the assignment that produced the final centroids, plus the
     // final centroid's first coordinate (integer micro-units).
     val c0 = element_at(
-      map(cent.flatMap { case (cl, cp) => Seq(lit(cl), lit(cp.head)) }: _*),
+      map(cent.flatMap { case (cl, _, cp) => Seq(lit(cl), lit(cp.head)) }: _*),
       col("cl"))
-    assigned.groupBy("cl")
+    pts.select(col("vec_id"), nearest(col("v"), entries(prev)).as("cl"))
+      .groupBy("cl")
       .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_digest"))
       .select(col("cl").as("cluster"), col("n"), col("id_digest"),
         c0.as("c0"))
@@ -1158,95 +1098,157 @@ object Pipeline {
   private val pqSeedIds = Seq(11L, 29L, 47L, 83L, 97L, 131L, 151L, 173L)
   private val pqIters = 3
 
-  /** Train the PQ codebook with [[pqIters]] Lloyd iterations over the
-    * sub-vector table `sv` (vec_id, sub, v: array<long>). Returns the
-    * codebook as a driver Seq (cid, sub, cv) — ≤ 8×4 rows of bounded
-    * control-plane state, like the IVF centroid list. Each iteration is
-    * ONE distributed job: the codebook state rides into the plan as a
-    * LITERAL array (the simAnnIvf centroid convention), so assignment
-    * is a map-side argmin — no broadcast exchange, no (vec_id, sub)
-    * shuffle — and the means collapse map-side to ≤ 8×4×16 partial rows
-    * before the single exchange (r16 guide §2.4/§2.3: the r15 shape
-    * paid 3 exchanges + a broadcast build per iteration to re-derive
-    * state that was driver-collected anyway). */
-  private def pqTrainCodebook(sv: DataFrame): Seq[(Long, Int, Seq[Long])] = {
-    var cb: Seq[(Long, Int, Seq[Long])] = sv
-      .where(col("vec_id").isin(pqSeedIds: _*))
-      .select(col("vec_id"), col("sub"), col("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
-      .sortBy(x => (x._2, x._1)).toSeq
-    for (_ <- 1 to pqIters) {
-      cb = sv
-        .withColumn("cid", pqBestCid(cb))
-        .select(col("cid"), col("sub"),
-          posexplode(col("v")).as(Seq("dim", "pv")))
-        .groupBy("cid", "sub", "dim")
-        .agg(expr("sum(pv) div count(1)").as("cv"))
-        .collect()
-        .map(r => ((r.getLong(0), r.getInt(1)), (r.getInt(2), r.getLong(3))))
-        .groupBy(_._1).toSeq
-        .map { case ((cid, sub), rows) =>
-          (cid, sub, rows.map(_._2).sortBy(_._1).map(_._2).toSeq)
-        }
-        .sortBy(x => (x._2, x._1))
-    }
-    cb
-  }
-
-  /** Trained codebook as a TRAIN-ONCE index artifact (r17): the PQ
-    * codebook is index-build state — FAISS trains it once and serves
-    * every query from it, exactly like the ivfpq cells/probes scratch
-    * tables two paragraphs down. Before this, ml_pq, sim_ann_ivfpq
-    * and sim_ann_recall's uniform leg each re-ran the IDENTICAL
-    * 4-collect Lloyd chain (seed + 3 iterations, each a full
-    * sub-vector pass) on every invocation and every bench trial.
-    * Keyed by (dataset, regime tag); ≤ 8×4 rows of exact longs, so
-    * the artifact IS the training result bit-for-bit. Per-process
-    * scratch — a fresh JVM retrains (no cross-run persistence); the
-    * bench's scratch_ms attributes the trial-1 build. `sv` is by-name:
-    * a warm hit never evaluates it. */
+  /** Trained codebook as a TRAIN-ONCE index artifact: the PQ codebook
+    * is index-build state — FAISS trains it once and serves every query
+    * from it, exactly like the ivfpq cells/probes scratch tables below.
+    * ml_pq, sim_ann_ivfpq and sim_ann_recall's uniform leg train on the
+    * same sub-vector table, so they share one artifact instead of each
+    * re-running the 4-collect Lloyd chain (seed + 3 iterations, each a
+    * full sub-vector pass) on every invocation. Keyed by (dataset,
+    * regime tag); ≤ 8×4 rows of exact longs, so the artifact IS the
+    * training result bit-for-bit. Per-process scratch — a fresh JVM
+    * retrains (no cross-run persistence); the bench's scratch_ms
+    * attributes the first build. */
   private def pqCodebookCached(s: SparkSession, d: String, tag: String,
-      sv: => DataFrame): Seq[(Long, Int, Seq[Long])] = {
+      sv: DataFrame): Codebook = {
     import s.implicits._
     val t = Scratch.table(s, Scratch.path(s"ml/pq_cb_$tag", d)) {
-      pqTrainCodebook(sv).toDF("cid", "sub", "cv")
+      lloyd(sv, pqSeedIds, pqIters)._2.toDF("cid", "sub", "cv")
     }
     t.collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2)))
       .sortBy(x => (x._2, x._1)).toSeq
   }
 
-  /** The codebook as a literal expression: per-subspace entry arrays,
-    * indexed by the row's `sub`. */
-  private def pqCbLit(cb: Seq[(Long, Int, Seq[Long])]): Column =
-    array((0 until pqSub).map { sub =>
-      array(cb.filter(_._2 == sub).sortBy(_._1).map { case (cid, _, cv) =>
-        struct(lit(cid).as("cid"), array(cv.map(lit): _*).as("cv"))
-      }: _*)
+  /* Vector toolkit: the one owner of each primitive the embedding keys
+   * share — the two integer grids, squared L2, the nearest-entry
+   * argmin, the Lloyd trainer, the IVF cell ranking and the PQ coder. */
+
+  /** The shifted micro-unit grid floor((x+1)·10⁶) of an embedding: one
+    * IEEE add, one IEEE multiply, one floor — bit-identical in any
+    * engine — and NON-NEGATIVE on [-1, 1] coordinates, so Lloyd means
+    * floor-divide identically in Spark, DuckDB and python. */
+  private[ops] def shiftedGrid(c: Column): Column =
+    transform(c, x => floor((x.cast("double") + 1.0d) * 1000000.0d).cast("long"))
+
+  /** The rounded micro-unit grid floor(x·10⁶+0.5) of an embedding: the
+    * nearest signed micro-unit, one IEEE chain. */
+  private[ops] def roundedGrid(c: Column): Column =
+    transform(c, x => floor(x.cast("double") * 1e6 + lit(0.5)).cast("long"))
+
+  /** Exact squared L2 of two grid vectors: the native
+    * [[graft.expr.SqDistI64]] kernel (one static call, no per-element
+    * lambda; VectorOpsSpec pins it to the higher-order fold, nulls,
+    * length mismatches and overflow included). */
+  private def sqDist(a: Column, b: Column): Column =
+    call_function("sqdist_i64", a, b)
+
+  /** (id, grid vector) entries as a literal array<struct<id, cv>>. */
+  private[ops] def entryLit(es: Seq[(Long, Seq[Long])]): Column =
+    array(es.map { case (id, cv) =>
+      struct(lit(id).as("id"), array(cv.map(lit): _*).as("cv"))
     }: _*)
 
-  private def pqSqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
+  /** Id of the entry nearest to `v`: the (dist, id) lexicographic argmin
+    * over `entries`, an array<struct<id, cv>> — a map-side projection
+    * with no join and no exchange. */
+  private[ops] def nearest(v: Column, entries: Column): Column =
+    element_at(sort_array(transform(entries,
+      e => struct(sqDist(v, e("cv")).as("dist"), e("id").as("id")))), 1)("id")
 
-  /** Map-side nearest-entry id for a sub-vector row (sub, v): the
-    * (dist, cid) lexicographic argmin over the literal codebook —
-    * bit-identical to the r15 `min(struct(dist, cid))` aggregate,
-    * with zero exchange. */
-  private def pqBestCid(cb: Seq[(Long, Int, Seq[Long])]): Column =
-    element_at(sort_array(transform(
-      element_at(pqCbLit(cb), col("sub") + 1),
-      e => struct(pqSqDist(col("v"), e("cv")).as("dist"),
-        e("cid").as("cid")))), 1)("cid")
+  /** A codebook: (id, subspace, centroid) rows of driver state. */
+  private type Codebook = Seq[(Long, Int, Seq[Long])]
 
-  /** Per-query asymmetric distance table rows, map-side: explode the
-    * query row's subspace codebook entries to (sub, code, qd). */
-  private def pqDtabCol(cb: Seq[(Long, Int, Seq[Long])]): Column =
-    explode(transform(element_at(pqCbLit(cb), col("sub") + 1),
-      e => struct(e("cid").as("code"),
-        pqSqDist(col("qv"), e("cv")).as("qd"))))
+  /** The entries of the row's subspace `sub` in `cb`, as a literal. */
+  private def entries(cb: Codebook): Column =
+    element_at(array((0 to cb.map(_._2).max).map(sub =>
+      entryLit(cb.filter(_._2 == sub).sortBy(_._1).map(e => (e._1, e._3)))): _*),
+      col("sub") + 1)
 
-  /** The [[pqTrainCodebook]] Lloyd loop unrolled to DuckDB CTEs over
+  /** Lloyd k-means over `rows` (vec_id, sub, v: array<bigint>), one
+    * codebook per subspace `sub`. The seeds are the rows whose vec_id
+    * is in `seeds`; each iteration assigns every row its [[nearest]]
+    * entry and replaces each entry by the elementwise `sum div count`
+    * mean of its rows (floor division over the non-negative
+    * [[shiftedGrid]], identical in every engine); empty entries drop
+    * and stay dropped. The codebook rides into each iteration as a
+    * literal, so an iteration is ONE job whose means collapse map-side
+    * to ≤ entries×dims partial rows before the single exchange. Returns
+    * (the codebook the last iteration assigned by, the final codebook):
+    * the first gives the assignment the final means were taken over. */
+  private def lloyd(rows: DataFrame, seeds: Seq[Long],
+      iters: Int): (Codebook, Codebook) = {
+    def ordered(cb: Iterable[(Long, Int, Seq[Long])]): Codebook =
+      cb.toSeq.sortBy(x => (x._2, x._1))
+    val seed = ordered(rows.where(col("vec_id").isin(seeds: _*))
+      .select(col("vec_id"), col("sub"), col("v"))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2))))
+    (1 to iters).foldLeft((seed, seed)) { case ((_, cb), _) =>
+      (cb, ordered(rows
+        .withColumn("cid", nearest(col("v"), entries(cb)))
+        .select(col("cid"), col("sub"), posexplode(col("v")).as(Seq("dim", "pv")))
+        .groupBy("cid", "sub", "dim")
+        .agg(expr("sum(pv) div count(1)").as("cv"))
+        .collect()
+        .groupBy(r => (r.getLong(0), r.getInt(1)))
+        .map { case ((cid, sub), rs) =>
+          (cid, sub, rs.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq)
+        }))
+    }
+  }
+
+  /** IVF cell ranking of each row of `base` (vec_id, emb, nrm): the
+    * [[ivfCentroidIds]] vectors are coordinator METADATA (every k-means
+    * driver holds them), collected once and inlined as literals, so the
+    * ranking is a pure projection fused into the scan — no join, no
+    * window, no shuffle of the (8×-expanded) corpus. Sorted by
+    * (−cosine, cid): element 1 is the row's cell, the first nprobe its
+    * probes. NaN cosines (zero-norm vectors) sort LAST — a garbage
+    * vector should not win a cell; a window DESC formulation would rank
+    * NaN first. */
+  private def ranked(base: DataFrame): Column = {
+    val cents = base.where(col("vec_id").isin(ivfCentroidIds: _*))
+      .select(col("vec_id"), col("emb"), col("nrm"))
+      .collect().sortBy(_.getLong(0)).map { r =>
+        struct(lit(r.getLong(0)).as("cid"),
+          array(r.getSeq[Double](1).map(lit): _*).as("cemb"),
+          lit(r.getDouble(2)).as("cnrm"))
+      }
+    sort_array(transform(array(cents.toSeq: _*), c =>
+      struct((dot(col("emb"), c("cemb")) / (col("nrm") * c("cnrm")) * -1)
+        .as("negcos"), c("cid").as("cid"))))
+  }
+
+  /** The PQ coder over grid rows `pts` (vec_id, p): 4 sub-vectors per
+    * row, the `tag` codebook ([[pqCodebookCached]]), then
+    *   - `enc` (vec_id, sub, code): each sub-vector's [[nearest]] entry;
+    *   - `dtab` (qid, sub, code, qd): per probe query (vec_id < 5), the
+    *     exact sub-distance to every entry of its subspace — the
+    *     asymmetric distance table, 4×8 ints per query, map-side. */
+  private def pqCode(s: SparkSession, d: String, tag: String,
+      pts: DataFrame): (DataFrame, DataFrame) = {
+    val subs = array((0 until pqSub).map(i =>
+      struct(lit(i).as("sub"),
+        slice(col("p"), i * pqSubDim + 1, pqSubDim).as("v"))): _*)
+    val sv = pts.select(col("vec_id"), explode(subs).as("x"))
+      .select(col("vec_id"), col("x.sub").as("sub"), col("x.v").as("v"))
+      // 5 consumers (3 Lloyd passes + encode + dtab): checkpoint the
+      // tiny sub-vector table once instead of re-scanning + re-exploding
+      // the embeddings per pass (guide §5: cheap lineage cut, in-query).
+      .localCheckpoint()
+    val cb = pqCodebookCached(s, d, tag, sv)
+    val enc = sv.select(col("vec_id"), col("sub"),
+      nearest(col("v"), entries(cb)).as("code"))
+    val dtab = sv.where(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("sub"),
+        explode(transform(entries(cb), e => struct(e("id").as("code"),
+          sqDist(col("v"), e("cv")).as("qd")))).as("x"))
+      .select(col("qid"), col("sub"), col("x.code").as("code"),
+        col("x.qd").as("qd"))
+    (enc, dtab)
+  }
+
+  /** The [[lloyd]] PQ training unrolled to DuckDB CTEs over
     * the sub-vector table `sp` (vec_id, sub, dim, pv): identical
     * seeds, (dist, cid) argmin assignment, and `sum // count` means
     * (floor ≡ Spark's `div` on the non-negative micro-unit grid).
@@ -1273,31 +1275,8 @@ object Pipeline {
 
   private def mlPq: Q = (s, d) => {
     val pts = t(s, d, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"),
-        x => floor((x.cast("double") + 1.0d) * 1000000.0d).cast("long"))
-        .as("p"))
-    val subs = array((0 until pqSub).map(i =>
-      struct(lit(i).as("sub"),
-        slice(col("p"), i * pqSubDim + 1, pqSubDim).as("v"))): _*)
-    val sv = pts.select(col("vec_id"), explode(subs).as("x"))
-      .select(col("vec_id"), col("x.sub").as("sub"), col("x.v").as("v"))
-      // 5 consumers (3 Lloyd passes + encode + dtab): checkpoint the
-      // tiny sub-vector table once instead of re-scanning + re-exploding
-      // the embeddings per pass (guide §5: cheap lineage cut, in-query).
-      .localCheckpoint()
-    val cb = pqCodebookCached(s, d, "raw", sv)
-    // Encode: nearest codebook entry per (vector, subspace) — the
-    // map-side literal argmin (bit-identical to the r15 join+min(struct)
-    // chain, minus its broadcast build and (vec_id, sub) exchange).
-    val enc = sv.select(col("vec_id"), col("sub"),
-      pqBestCid(cb).as("code"))
-    // Per-query subspace distance tables (4×8 exact ints per query),
-    // map-side over the 20 query sub-vector rows.
-    val dtab = sv.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
-      .select(col("qid"), col("sub"), pqDtabCol(cb).as("x"))
-      .select(col("qid"), col("sub"), col("x.code").as("code"),
-        col("x.qd").as("qd"))
+      .select(col("vec_id"), shiftedGrid(col("embedding")).as("p"))
+    val (enc, dtab) = pqCode(s, d, "raw", pts)
     val w = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
     enc.join(broadcast(dtab), Seq("sub", "code"))
       .where(col("vec_id") =!= col("qid"))
@@ -1325,17 +1304,7 @@ object Pipeline {
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", norm(col("emb")))
-    val centArr = array(
-      e.where(col("vec_id").isin(ivfCentroidIds: _*))
-        .select(col("vec_id"), col("emb"), col("nrm"))
-        .collect().sortBy(_.getLong(0)).map { r =>
-          struct(lit(r.getLong(0)).as("cid"),
-            array(r.getSeq[Double](1).map(lit): _*).as("cemb"),
-            lit(r.getDouble(2)).as("cnrm"))
-        }.toSeq: _*)
-    val scored = sort_array(transform(centArr, c =>
-      struct((dot(col("emb"), c("cemb")) / (col("nrm") * c("cnrm")) * -1)
-        .as("negcos"), c("cid").as("cid"))))
+    val scored = ranked(e)
     // The cell map and probe list are INDEX-BUILD artifacts (computed
     // once when the index is built, reused by every query) — they
     // materialize like any index, which also gives the later
@@ -1349,28 +1318,9 @@ object Pipeline {
           explode(transform(slice(scored, 1, ivfNprobe), x => x("cid")))
             .as("cell"))
     }
-    // fine side: PQ codes + per-query distance tables (mlPq verbatim)
-    val pts = t(s, d, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"),
-        x => floor((x.cast("double") + 1.0d) * 1000000.0d).cast("long"))
-        .as("p"))
-    val subs = array((0 until pqSub).map(i =>
-      struct(lit(i).as("sub"),
-        slice(col("p"), i * pqSubDim + 1, pqSubDim).as("v"))): _*)
-    val sv = pts.select(col("vec_id"), explode(subs).as("x"))
-      .select(col("vec_id"), col("x.sub").as("sub"), col("x.v").as("v"))
-      // 5 consumers (3 Lloyd passes + encode + dtab): checkpoint the
-      // tiny sub-vector table once instead of re-scanning + re-exploding
-      // the embeddings per pass (guide §5: cheap lineage cut, in-query).
-      .localCheckpoint()
-    val cb = pqCodebookCached(s, d, "raw", sv)
-    val enc = sv.select(col("vec_id"), col("sub"),
-      pqBestCid(cb).as("code"))
-    val dtab = sv.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
-      .select(col("qid"), col("sub"), pqDtabCol(cb).as("x"))
-      .select(col("qid"), col("sub"), col("x.code").as("code"),
-        col("x.qd").as("qd"))
+    // fine side: PQ codes + per-query distance tables, mlPq's coder
+    val (enc, dtab) = pqCode(s, d, "raw", t(s, d, "embeddings")
+      .select(col("vec_id"), shiftedGrid(col("embedding")).as("p")))
     // compose: candidates restricted to probed cells, scored on codes
     val cand = cells.join(broadcast(probes), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
@@ -1409,7 +1359,7 @@ object Pipeline {
     *     top-10 — the metric PQ approximates — so its misses compound
     *     BOTH loss sources: the probe-set boundary and code
     *     distortion. Codebooks are TRAINED per regime by
-    *     [[pqTrainCodebook]]: the index sees the data it serves,
+    *     [[lloyd]]: the index sees the data it serves,
     *     exactly as in production.
     * The IVF ranking inside the candidate set is the exact cosine, so
     * an IVF miss is PURELY the probe-set boundary: a true neighbor
@@ -1429,9 +1379,7 @@ object Pipeline {
     val raw = t(s, d, "embeddings")
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"),
-        transform(col("embedding"),
-          x => floor((x.cast("double") + 1.0d) * 1000000.0d).cast("long"))
-          .as("p"))
+        shiftedGrid(col("embedding")).as("p"))
     val nVec = raw.count()
     val nc = math.max(8L, nVec / 11L)
     val anchors = raw.where(col("vec_id") < nc)
@@ -1452,17 +1400,7 @@ object Pipeline {
     // cosine on the grid-as-double (self-consistent fixture).
     def leg(regime: String, base0: DataFrame): DataFrame = {
       val base = base0.withColumn("nrm", norm(col("emb")))
-      val centArr = array(
-        base.where(col("vec_id").isin(ivfCentroidIds: _*))
-          .select(col("vec_id"), col("emb"), col("nrm"))
-          .collect().sortBy(_.getLong(0)).map { r =>
-            struct(lit(r.getLong(0)).as("cid"),
-              array(r.getSeq[Double](1).map(lit): _*).as("cemb"),
-              lit(r.getDouble(2)).as("cnrm"))
-          }.toSeq: _*)
-      val scored = sort_array(transform(centArr, c =>
-        struct((dot(col("emb"), c("cemb")) / (col("nrm") * c("cnrm")) * -1)
-          .as("negcos"), c("cid").as("cid"))))
+      val scored = ranked(base)
       val cells = base
         .select(col("vec_id"), col("emb"), col("nrm"), col("p"),
           element_at(scored, 1)("cid").as("cell"))
@@ -1485,14 +1423,11 @@ object Pipeline {
         .select(col("qid"), col("vec_id"), col("cell"),
           (dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")))
             .as("cos"),
-          call_function("sqdist_i64", col("qp"), col("p")).as("l2"))
-        // (r17 note: checkpointing this PRE-PARTITIONED by qid so the
-        // four downstream rank windows skip their exchange was tried
-        // and does NOT work — under AQE the checkpointed RDD reports
-        // UnknownPartitioning(0) (measured in the plan dump), so every
-        // window re-exchanges regardless. The remaining exchanges are
-        // required clusterings; the wall win came from the train-once
-        // codebook artifact instead.)
+          sqDist(col("qp"), col("p")).as("l2"))
+        // Not pre-partitioned by qid: under AQE a checkpointed RDD
+        // reports UnknownPartitioning(0), so the four rank windows below
+        // re-exchange regardless; those exchanges are required
+        // clusterings.
         .localCheckpoint()
       val wCos = Window.partitionBy("qid")
         .orderBy(col("cos").desc, col("vec_id"))
@@ -1509,24 +1444,11 @@ object Pipeline {
         .where(col("rn") <= 10).select(col("qid"), col("nprobe"),
           col("vec_id"))
       // IVFPQ: asymmetric code distance of the candidates over the
-      // regime-trained codebook ([[mlPq]]/[[simAnnIvfpq]] machinery).
-      val subs = array((0 until pqSub).map(i =>
-        struct(lit(i).as("sub"),
-          slice(col("p"), i * pqSubDim + 1, pqSubDim).as("v"))): _*)
-      val sv = base0.select(col("vec_id"), explode(subs).as("x"))
-        .select(col("vec_id"), col("x.sub").as("sub"), col("x.v").as("v"))
-        .localCheckpoint()
-      // regime-trained, but the uniform leg's sub-vector table is the
-      // raw mlPq/simAnnIvfpq one row-for-row — share its artifact
-      val cb = pqCodebookCached(s, d,
-        if (regime == "uniform") "raw" else regime, sv)
-      val enc = sv.select(col("vec_id"), col("sub"),
-        pqBestCid(cb).as("code"))
-      val dtab = sv.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("sub"), col("v").as("qv"))
-        .select(col("qid"), col("sub"), pqDtabCol(cb).as("x"))
-        .select(col("qid"), col("sub"), col("x.code").as("code"),
-          col("x.qd").as("qd"))
+      // regime-trained codebook ([[pqCode]]). The uniform leg's
+      // sub-vector table is the raw mlPq/simAnnIvfpq one row-for-row,
+      // so it shares their artifact.
+      val (enc, dtab) = pqCode(s, d,
+        if (regime == "uniform") "raw" else regime, base0)
       val wAdcN = Window.partitionBy("qid", "nprobe")
         .orderBy(col("adist"), col("vec_id"))
       val pqTop = cand.select(col("qid"), col("nprobe"), col("vec_id"))
@@ -1810,9 +1732,7 @@ object Pipeline {
     * heap/vote/tie logic is unchanged. */
   private def mlKnn: Q = (s, d) => {
     val base = t(s, d, "embeddings").select(col("vec_id"), col("label"),
-      transform(col("embedding"),
-        e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
-        .as("qarr"))
+      roundedGrid(col("embedding")).as("qarr"))
     // Bounded probe batch (≤100): the broadcast side must not grow with
     // the corpus — at 100× the corpus the batch is the same 100 probes
     // and total work stays ∝ |train|. A no-op at the sf0.01 gate
@@ -1824,8 +1744,8 @@ object Pipeline {
     // The train side round-robins across defaultParallelism before the
     // broadcast join: the map-side topk_pairs partial can only
     // parallelize across input partitions, and the embeddings table is
-    // one input split locally (few small files), which serialized the
-    // whole candidate product through ~1 task in r12. The exchange
+    // one input split locally (few small files), which would serialize
+    // the whole candidate product through ~1 task. The exchange
     // moves each compact (vec_id, label, qarr) row exactly once — the
     // volume the scan already read, never the candidate product — and
     // at 100 TB, where the scan is already thousands of splits, AQE is
@@ -1833,14 +1753,12 @@ object Pipeline {
     val train = base
       .where(pmod(col("vec_id"), lit(10)) =!= 0 || col("vec_id") >= 1000)
       .repartition(s.sparkContext.defaultParallelism)
-    // Per-pair distance via the native [[graft.expr.SqDistI64]] kernel:
-    // bit-identical to the aggregate(zip_with(qarr, parr, (a,b) =>
-    // (a-b)*(a-b)), 0L, _+_) fold it replaced (VectorOpsSpec pins it),
-    // but ONE static call per pair with a primitive loop — the HOF
-    // chain evaluated an interpreted per-element lambda per candidate
-    // pair inside the heap aggregate's score.eval after CollapseProject
-    // (the r12 2.1 → 14.2 s regression).
-    val dist = call_function("sqdist_i64", col("qarr"), col("parr"))
+    // Per-pair distance via [[sqDist]]: ONE static call per pair with a
+    // primitive loop. A higher-order fold here would evaluate an
+    // interpreted per-element lambda per candidate pair inside the heap
+    // aggregate's score.eval after CollapseProject (measured 2.1 →
+    // 14.2 s on this key).
+    val dist = sqDist(col("qarr"), col("parr"))
     val nn = train.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("true_label"),
         (-dist).cast("double").as("neg_dist"),
@@ -1951,9 +1869,7 @@ object Pipeline {
     val dim = 64
     val base = t(s, d, "embeddings").select(
       when(col("label") >= 5, 1L).otherwise(-1L).as("y"),
-      transform(col("embedding"),
-        e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long"))
-        .as("qarr"))
+      roundedGrid(col("embedding")).as("qarr"))
     val n = base.count()
     require(BigInt(rounds) * n * 1000000L * dim * 1000000L <
       BigInt(Long.MaxValue),
@@ -2004,9 +1920,7 @@ object Pipeline {
     val hist = t(s, d, "embeddings")
       .select(
         when(col("label") >= 5, 1L).otherwise(0L).as("y"),
-        posexplode(transform(col("embedding"),
-          e => floor(e.cast("double") * 1e6 + lit(0.5)).cast("long")))
-          .as(Seq("j", "q")))
+        posexplode(roundedGrid(col("embedding"))).as(Seq("j", "q")))
       .select(col("j").cast("long").as("j"),
         expr("(q + 1000000L) DIV 125000").as("b"), col("y"))
       .groupBy("j", "b")
@@ -2102,11 +2016,9 @@ object Pipeline {
         .agg(sum("y").as("pos"), count(lit(1)).as("tot"))
     def scoreSplits(h: DataFrame, nodeGrid: DataFrame,
         part: Seq[String]): DataFrame = stumpSplits(h, nodeGrid, part)
-    val q = (e: Column) =>
-      floor(e.cast("double") * 1e6 + lit(0.5)).cast("long")
     val base1 = t(s, d, "embeddings")
       .select(when(col("label") >= 5, 1L).otherwise(0L).as("y"),
-        posexplode(transform(col("embedding"), q)).as(Seq("j0", "qv")))
+        posexplode(roundedGrid(col("embedding"))).as(Seq("j0", "qv")))
       .select(col("y"), col("j0").cast("long").as("j"),
         expr("(qv + 1000000L) DIV 125000").as("b"))
     val grid = s.range(dim).select(col("id").as("j"))
@@ -2118,7 +2030,7 @@ object Pipeline {
     val base2 = t(s, d, "embeddings")
       .select(when(col("label") >= 5, 1L).otherwise(0L).as("y"),
         when(expr(bucketSql(rj)) <= rs, 1L).otherwise(2L).as("node"),
-        posexplode(transform(col("embedding"), q)).as(Seq("j0", "qv")))
+        posexplode(roundedGrid(col("embedding"))).as(Seq("j0", "qv")))
       .select(col("node"), col("y"), col("j0").cast("long").as("j"),
         expr("(qv + 1000000L) DIV 125000").as("b"))
     val grid2 = s.range(2).select((col("id") + 1).as("node"))
@@ -2162,11 +2074,9 @@ object Pipeline {
   private def mlBoost: Q = (s, d) => {
     val dim = 64
     val buckets = 16
-    val q = (e: Column) =>
-      floor(e.cast("double") * 1e6 + lit(0.5)).cast("long")
     val base1 = t(s, d, "embeddings")
       .select(when(col("label") >= 5, 1L).otherwise(0L).as("y"),
-        posexplode(transform(col("embedding"), q)).as(Seq("j0", "qv")))
+        posexplode(roundedGrid(col("embedding"))).as(Seq("j0", "qv")))
       .select(col("y"), col("j0").cast("long").as("j"),
         expr("(qv + 1000000L) DIV 125000").as("b"))
     val grid = s.range(dim).select(col("id").as("j"))
@@ -2186,7 +2096,7 @@ object Pipeline {
         when(when(expr(bucketSql(rj)) <= rs, predL).otherwise(predR) =!=
           when(col("label") >= 5, 1L).otherwise(0L), 3L).otherwise(1L)
           .as("w"),
-        posexplode(transform(col("embedding"), q)).as(Seq("j0", "qv")))
+        posexplode(roundedGrid(col("embedding"))).as(Seq("j0", "qv")))
       .select(col("y"), col("w"), col("j0").cast("long").as("j"),
         expr("(qv + 1000000L) DIV 125000").as("b"))
     val h2 = base2.groupBy("j", "b")

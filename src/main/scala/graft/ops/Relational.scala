@@ -408,8 +408,8 @@ object Relational {
       // route the HLL buffers through the multi-distinct Expand, and
       // each expanded row then pays a full register-array merge —
       // ~16k registers × 3× the fact table, the quadratic-ish blowup
-      // the r15 sf1 Verify leg caught live (a 10-minute single task
-      // at sf1 for a query that is sub-second at the gate SF).
+      // a Verify run at sf1 showed (a 10-minute single task at sf1 for
+      // a query that is sub-second at the gate SF).
       val sk = base.agg(
         approx_count_distinct(col("l_partkey"), 0.01).as("ap"),
         approx_count_distinct(col("l_orderkey"), 0.01).as("ao"),
@@ -2278,7 +2278,7 @@ object Relational {
     * SizeBasedWindowFunction, so WindowExec must hold each priority
     * group (20% of orders) whole in one task's buffer to learn n
     * before emitting bucket 1 — measured 17.98 s / α_hi 1.05 at sf10
-    * vs agg_gini's 0.82 s on the SAME window shape (r10 verdict).
+    * vs agg_gini's 0.82 s on the SAME window shape.
     * Instead: the rank is a STREAMING row_number over the identical
     * total order ((cents, orderkey) — ties broken), computed on
     * SALT-RANGE-PARTITIONED slices (local rank + broadcast cumulative
@@ -2299,8 +2299,8 @@ object Relational {
     val cents = t(s, d, "orders")
       .select(col("o_orderpriority"), col("o_orderkey"),
         (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
-    // SALT-RANGE-PARTITIONED ranking (the knob the r10 scaladoc only
-    // documented — five priority values otherwise cap the rank sort at
+    // SALT-RANGE-PARTITIONED ranking (five priority values otherwise
+    // cap the rank sort at
     // 5-way parallelism, the whole sf10 cost): range-partition the
     // (priority, cents, orderkey) TOTAL ORDER across default
     // parallelism so every core sorts a slice; the global per-group
@@ -2420,9 +2420,9 @@ object Relational {
       .select(col("event_type"), col("h1"), col("h2"),
         ((col("c2") - col("c1")).cast("double") /
           (col("h2") - col("h1")).cast("double")).as("slope"))
-    // Median slope via percentile_disc (r16): the old full-row window
+    // Median slope via percentile_disc: a full-row window
     // sort ((slope, h1, h2) over n² pair rows, ONE task per event
-    // type) existed only to pick the rank-⌈n/2⌉ row, and the output
+    // type) would exist only to pick the rank-⌈n/2⌉ row, and the output
     // emits just the slope VALUE — so the (h1, h2) tie-break never
     // reaches the result and percentile_disc(0.5) (smallest value with
     // cume ≥ 0.5 = the multiset's ⌈n/2⌉-th value, duplicates and all)
@@ -2753,7 +2753,7 @@ object Relational {
     val obs = new org.apache.spark.sql.Observation("graft_acct")
     // fanOut BEFORE observe: the single-file gate fixture otherwise
     // funnels the whole observed egress through ONE write task (~2 s
-    // single-threaded; r16 profile: 6 tasks / 4 jobs). At 100 TB the
+    // single-threaded; graft.Profile: 6 tasks / 4 jobs). At 100 TB the
     // scan arrives pre-split and this is a no-op; the observed metrics
     // are associative (counts + exact decimal sum),
     // partition-independent. (Fan-out first — fanOut's .rdd partition
@@ -3341,7 +3341,7 @@ object Relational {
     * list_reduce) — a plain double sum() would accumulate in
     * partition-merge order, and the 6-decimal guard can flip when a
     * value lands within ~1e-12 of a 0.5e-6 rounding boundary under a
-    * different partitioning (r12 advice). */
+    * different partitioning. */
   private def aggEntropy: Q = (s, d) => {
     val hist = t(s, d, "part")
       .groupBy(col("p_brand"), col("p_type"))

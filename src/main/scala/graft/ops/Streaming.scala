@@ -1246,7 +1246,7 @@ object Streaming {
   private def streamMedia: Q = (s, _) => {
     val sp = s
     import sp.implicits._
-    val media = graft.ops.Media.dir
+    val media = Media.dir
     val st = stateSession(s).readStream.format("graft.sources.RemoteFileSource")
       .option("urls", s"ftp://localhost:21$media")
       .option("batchSize", "8")
@@ -1256,16 +1256,9 @@ object Streaming {
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (name, bytes) =>
-          val (w, h, luma) = graft.ops.Media.decodeLuma(bytes)
-          var sum = 0L
-          var rolling = 1125899906842597L
-          var i = 0
-          while (i < luma.length) {
-            sum += luma(i)
-            rolling = rolling * 31 + luma(i)
-            i += 1
-          }
-          (name, w, h, sum / luma.length, rolling)
+          val (w, h, luma) = Media.decodeLuma(bytes)
+          val (mean, hash) = Media.lumaDigest(luma)
+          (name, w, h, mean, hash)
         }
       }
       .toDF("file_name", "width", "height", "mean_luma", "luma_hash")

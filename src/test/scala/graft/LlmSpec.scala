@@ -670,6 +670,25 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  test("dedup_semantic cluster is the nearest seed on the shifted grid") {
+    // driver-side argmin of (squared L2, seed id) over the vec_id < 8
+    // seeds, each coordinate on the floor((x+1)·10⁶) grid
+    val grid = Tables.t(spark, sf, "embeddings").collect().map { r =>
+      r.getAs[Long]("vec_id") -> r.getSeq[Float](r.fieldIndex("embedding"))
+        .map(x => math.floor((x.toDouble + 1.0d) * 1e6).toLong).toSeq
+    }
+    val seeds = grid.filter(_._1 < 8).sortBy(_._1)
+    assert(seeds.length === 8)
+    def nearestSeed(v: Seq[Long]): Long = seeds.map { case (id, c) =>
+      (v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, id)
+    }.min._2
+    val want = grid.map { case (id, v) => id -> nearestSeed(v) }.toMap
+    val got = SparkEntry.queries("dedup_semantic")(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === want)
+    assert(want.values.toSet.size > 1, "the seeds must split the corpus")
+  }
+
   test("ml_quality_classifier recovers the generating rule's weight signs at >=90% accuracy") {
     val rows = SparkEntry.queries("ml_quality_classifier")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * if a one-time artifact is keyed or a catalog table saved outside
   * graft.Scratch, if an archive is exploded outside Ingest.members, if
   * main code sets session conf outside GraftSession.scoped, reads a
-  * graft conf key or plans a frame eagerly, or if a comment under
-  * src/main narrates a past review round.
+  * graft conf key or plans a frame eagerly, if an ops key re-writes an
+  * integer grid, a Lloyd update or a squared-L2 fold the Pipeline vector
+  * toolkit owns, or if a comment under src/main narrates a past review
+  * round.
   */
 class ToolsLockstepSpec extends AnyFunSuite {
   private lazy val py: String = {
@@ -184,13 +186,39 @@ class ToolsLockstepSpec extends AnyFunSuite {
       eager.mkString("\n"))
   }
 
+  test("vector primitives have one owner: the Pipeline vector toolkit") {
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("src/main/scala/graft/ops")), "run from the repo root")
+    // the shifted grid, the rounded grid and the Lloyd mean update are
+    // each written once (Pipeline.shiftedGrid, roundedGrid, lloyd)
+    for (lit <- Seq("1000000.0d", "1e6 + lit(0.5)", "div count(1)")) {
+      val uses = hits("src/main/scala/graft/ops", lit)
+      assert(uses.size === 1, s"use the Pipeline vector toolkit for `$lit`:\n" +
+        uses.mkString("\n"))
+    }
+    // squared L2 is the sqdist_i64 kernel (Pipeline.sqDist), never a fold
+    val folds = Seq("(a - b) * (a - b)", "(x - y) * (x - y)")
+      .flatMap(hits("src/main/scala/graft/ops", _))
+    assert(folds.isEmpty, "compute squared L2 with Pipeline.sqDist:\n" +
+      folds.mkString("\n"))
+  }
+
   test("comments under src/main give reasons, not review-round history") {
     assume(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get("src/main/scala/graft")), "run from the repo root")
     val history =
       "round[- ][0-9]+|r[0-9]+ (ADVICE|judge)|ADVICE r[0-9]+|r[0-9]+ \\(ADVICE\\)|judge item".r
+    // a round number is history in a comment; in oracle SQL (`FROM r16`)
+    // it is a CTE name
+    val roundRef = "\\br1[0-9]\\b".r
+    def comment(l: String): String = {
+      val t = l.trim
+      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) t
+      else "(?<!:)//.*".r.findFirstIn(l).getOrElse("")
+    }
     val found = scalaLines("src/main").collect {
-      case (f, n, l) if history.findFirstIn(l).isDefined => s"$f:$n: ${l.trim}"
+      case (f, n, l) if history.findFirstIn(l).isDefined ||
+          roundRef.findFirstIn(comment(l)).isDefined => s"$f:$n: ${l.trim}"
     }
     assert(found.isEmpty, "say what holds now, not which round asked for it:\n" +
       found.mkString("\n"))
